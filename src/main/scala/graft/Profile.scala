@@ -16,7 +16,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * the driver contract; it changes no query result.
   */
 object Profile {
-  private final class Agg extends SparkListener {
+  private[graft] final class Agg extends SparkListener {
     // per-callsite job histogram: which ACTIONS a harness runs and how
     // often — the finding of guide §1 profiling was that ingest-harness
     // wall time is (job count) × (fixed per-job cost), so the fix target
@@ -99,7 +99,7 @@ object Profile {
       }
     }
     def json(name: String, wallSec: Double): String =
-      s"""{"query":"$name","wall_sec":${f"$wallSec%.3f"},"jobs":${jobs.get},""" +
+      s"""{"query":${Jsons.quote(name)},"wall_sec":${f"$wallSec%.3f"},"jobs":${jobs.get},""" +
         s""""stages":${stages.get},"tasks":${tasks.get},""" +
         s""""task_time_sec":${f"${taskTimeMs.get / 1e3}%.3f"},""" +
         s""""gc_sec":${f"${gcMs.get / 1e3}%.3f"},""" +
@@ -108,6 +108,28 @@ object Profile {
         s""""shuffle_read_mb":${f"${shufReadB.get / 1e6}%.2f"},""" +
         s""""shuffle_write_mb":${f"${shufWriteB.get / 1e6}%.2f"},""" +
         s""""input_mb":${f"${inputB.get / 1e6}%.2f"}}"""
+
+    /** One line per action callsite, most jobs first. */
+    def callsiteLines: Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      byCallsite.asScala.toSeq
+        .sortBy { case (_, n) => -n.get }
+        .map { case (cs, n) =>
+          s"""{"callsite":${Jsons.quote(cs)},"n_jobs":${n.get}}""" }
+    }
+
+    /** One line per (SQL execution / stage name), the 20 costliest. */
+    def stageLines: Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      byStageName.asScala.toSeq
+        .sortBy { case (_, (_, ms)) => -ms.get }
+        .take(20)
+        .map { case (sn, (nt, ms)) =>
+          val mx = Option(maxTask.get(sn)).map(_.get).getOrElse(0L)
+          s"""{"stage":${Jsons.quote(sn)},"n_tasks":${nt.get},""" +
+            s""""task_sec":${f"${ms.get / 1e3}%.2f"},""" +
+            s""""max_task_sec":${f"${mx / 1e3}%.2f"}}""" }
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -162,19 +184,8 @@ object Profile {
           println(s"""{"codegen_compiles":${cgHist.getCount - cg0},""" +
             s""""codegen_mean_ms":${f"${cgHist.getSnapshot.getMean}%.1f"}}""")
           if (sys.env.contains("GRAFT_PROFILE_CALLSITES")) {
-            import scala.jdk.CollectionConverters._
-            agg.byCallsite.asScala.toSeq
-              .sortBy { case (_, n) => -n.get }
-              .foreach { case (cs, n) =>
-                println(s"""{"callsite":"$cs","n_jobs":${n.get}}""") }
-            agg.byStageName.asScala.toSeq
-              .sortBy { case (_, (_, ms)) => -ms.get }
-              .take(20)
-              .foreach { case (sn, (nt, ms)) =>
-                val mx = Option(agg.maxTask.get(sn)).map(_.get).getOrElse(0L)
-                println(s"""{"stage":"$sn","n_tasks":${nt.get},""" +
-                  s""""task_sec":${f"${ms.get / 1e3}%.2f"},""" +
-                  s""""max_task_sec":${f"${mx / 1e3}%.2f"}}""") }
+            agg.callsiteLines.foreach(println)
+            agg.stageLines.foreach(println)
           }
           for (dir <- explainDir; d <- df) {
             Files.createDirectories(Paths.get(dir))

@@ -9,8 +9,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * duplicate; explicit-schema validation is demonstrated in the parity
   * pipeline (see [[graft.jobs.BulkUpdateJob]]).
   *
-  * All reads are plain `spark.read.parquet`, so Catalyst column pruning and
-  * predicate pushdown reach the scan untouched.
+  * Reads go through [[Parquets.read]], not a plain `spark.read.parquet`:
+  * the footer schema is resolved on the driver and pinned with
+  * `.schema(...)`, so a table open starts no Spark job. The scan is the
+  * parquet relation `spark.read.parquet` would build, so Catalyst column
+  * pruning and predicate pushdown reach it untouched.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -18,7 +21,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquets.read(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")

@@ -2,7 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.GraftSession
+import graft.{GraftSession, Parquets}
 import graft.functions.TextFunctions
 import graft.obs.StageMetrics
 import graft.operators.{CorpusReport, Dedup, Sharding, TextQueries, TrainingData}
@@ -100,8 +100,8 @@ object CurateJob {
     val root = new org.apache.hadoop.fs.Path(outDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     DirManifest.head(fs, root).flatMap(_._2.extra.get(name)) match {
-      case Some(rel) => spark.read.parquet(s"$outDir/$rel")
-      case None => spark.read.parquet(s"$outDir/$name")
+      case Some(rel) => Parquets.read(spark, s"$outDir/$rel")
+      case None => Parquets.read(spark, s"$outDir/$name")
     }
   }
 
@@ -118,7 +118,7 @@ object CurateJob {
           cfg: CurateConfig = CurateConfig()): CurateSummary = {
     val path = if (new java.io.File(s"$docsPath/documents.parquet").exists())
       s"$docsPath/documents.parquet" else docsPath
-    val docs = spark.read.parquet(path)
+    val docs = Parquets.read(spark, path)
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
 
     // OUTPUT ROUTING — default ATOMIC: the four outputs land under one

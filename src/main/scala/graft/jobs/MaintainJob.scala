@@ -2,7 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.GraftSession
+import graft.{GraftSession, Parquets}
 import graft.operators.Sharding
 import graft.sinks.{Compaction, VersionCatalog}
 
@@ -127,7 +127,7 @@ object MaintainJob {
       else Compaction.compactPartitioned(spark, layoutDir, cfg.targetBytes)
     def layout() =
       if (manifested) Sharding.zReadManifested(spark, layoutDir)
-      else spark.read.parquet(layoutDir)
+      else Parquets.read(spark, layoutDir)
     // 2. measure (footer-stats scale; reopened through the physical path)
     def overlapSum(): Long = {
       val row = Sharding.layoutHealth(

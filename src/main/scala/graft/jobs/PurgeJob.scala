@@ -2,7 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.GraftSession
+import graft.{GraftSession, Parquets}
 import graft.operators.Purge
 import graft.sinks.{MergeSink, VersionCatalog}
 
@@ -93,7 +93,7 @@ object PurgeJob {
     val cfg = PurgeConfig.fromFlags(args.drop(1).toSeq)
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val s = run(spark, spark.read.parquet(args(0)), cfg)
+    val s = run(spark, Parquets.read(spark, args(0)), cfg)
     System.err.println(
       s"""{"stage":"purge","snapshot":${s.snapshotPurged.getOrElse(-1L)},""" +
         s""""index":${s.indexPurged.getOrElse(-1L)},""" +

@@ -2,7 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.GraftSession
+import graft.{GraftSession, Parquets}
 import graft.obs.StageMetrics
 import graft.operators.MergeQueries
 
@@ -62,7 +62,7 @@ object ScaleCurveJob {
 
   def run(spark: SparkSession, sfDir: String,
           factors: Seq[Int] = Seq(1, 3, 10)): Seq[Point] = {
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs0 = Parquets.read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val maxId = docs0.agg(max(col("doc_id"))).head().getLong(0)
     factors.flatMap { f =>
@@ -121,7 +121,7 @@ object ScaleCurveJob {
     * scanned. A slope ≫ 0 here means an ingest that re-reads itself. */
   def runDayCost(spark: SparkSession, sfDir: String,
                  factors: Seq[Int] = Seq(1, 3, 10)): Seq[Point] = {
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs0 = Parquets.read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val maxId = docs0.agg(max(col("doc_id"))).head().getLong(0)
     factors.flatMap { f =>
@@ -201,7 +201,7 @@ object ScaleCurveJob {
     * of them — day cost drops although the index only grew. */
   def runRebucketDemo(spark: SparkSession, sfDir: String,
                       factors: Seq[Int] = Seq(10)): Seq[Point] = {
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs0 = Parquets.read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val maxId = docs0.agg(max(col("doc_id"))).head().getLong(0)
     factors.flatMap { f =>
@@ -266,13 +266,13 @@ object ScaleCurveJob {
   def runFamilyDayCost(spark: SparkSession, sfDir: String,
                        factors: Seq[Int] = Seq(1, 3, 10)): Seq[Point] = {
     import graft.operators.{Dedup, Ivf, TextQueries}
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs0 = Parquets.read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
     val maxDoc = docs0.agg(max(col("doc_id"))).head().getLong(0)
-    val sup0 = spark.read.parquet(s"$sfDir/supplier.parquet")
+    val sup0 = Parquets.read(spark, s"$sfDir/supplier.parquet")
       .select(col("s_suppkey"), col("s_name"))
     val maxSup = sup0.agg(max(col("s_suppkey"))).head().getLong(0)
-    val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb0 = Parquets.read(spark, s"$sfDir/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("v"))
     val maxVec = emb0.agg(max(col("id"))).head().getLong(0)
     // SHORT name tag (not repTag): the verify is quadratic Levenshtein
@@ -394,7 +394,7 @@ object ScaleCurveJob {
     import graft.operators.TextQueries
     import graft.sinks.ManifestMergeSink
     import graft.functions.TextFunctions
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs0 = Parquets.read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"), col("lang"))
     val maxDoc = docs0.agg(max(col("doc_id"))).head().getLong(0)
     // disjoint token namespaces per replica (the runFamilyDayCost

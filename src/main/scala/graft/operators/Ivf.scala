@@ -5,7 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Parquets, Tables}
 import graft.functions.VectorFunctions._
 
 /** IVF (inverted-file) approximate nearest neighbors — the coarse-
@@ -430,7 +430,7 @@ object Ivf {
         throw new IllegalStateException(
           s"no committed drift baseline at $path — call snapshotListMeans " +
             "when the index is built (refit maintains it)"))
-      val baseline = collectMeans(spark.read.parquet(s"$path/$meansDir0"))
+      val baseline = collectMeans(Parquets.read(spark, s"$path/$meansDir0"))
       val idx = graft.sinks.DirManifest.read(spark, path, st)
       val current = collectMeans(listMeansFrame(idx))
       def l2(a: Array[Double], b: Array[Double]): Double =
@@ -481,8 +481,8 @@ object Ivf {
       val refreshed =
         if (written.isEmpty) keptBaseline
         else keptBaseline.unionByName(listMeansFrame(
-          spark.read.option("basePath", s"$path/$gen")
-            .parquet(written.values.map(d => s"$path/$d").toSeq: _*)))
+          Parquets.read(spark, written.values.map(d => s"$path/$d").toSeq,
+            Map("basePath" -> s"$path/$gen"))))
       val meansDir = s"m-${tok()}"
       refreshed.coalesce(1).write.mode("overwrite")
         .parquet(s"$path/$meansDir")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Parquets, Tables}
 import graft.sinks.MergeSink
 
 /** Oracle-checkable projection of the merge/upsert semantics over the
@@ -121,7 +121,7 @@ object MergeQueries {
       .agg(min(col("doc_id")).as("doc_id"))
     val fresh =
       if (fs.exists(new org.apache.hadoop.fs.Path(target)))
-        uniq.join(spark.read.parquet(target).select(col("content_hash")),
+        uniq.join(Parquets.read(spark, target).select(col("content_hash")),
           Seq("content_hash"), "left_anti")
       else uniq
     // fresh is groupBy(content_hash)-keyed (± an anti-join) — one row
@@ -174,7 +174,7 @@ object MergeQueries {
         val touched = graft.Sparks.distinctLongs(uniq,
           pmod(xxhash64(col("content_hash")), lit(nBuckets.toLong))).toArray
         uniq.join(
-          spark.read.parquet(target)
+          Parquets.read(spark, target)
             .filter(col("pb").isin(touched.map(java.lang.Long.valueOf): _*))
             .select(col("content_hash")),
           Seq("content_hash"), "left_anti")
@@ -307,7 +307,7 @@ object MergeQueries {
         docs.filter(col("doc_id") > cut)
           .union(docs.filter(col("doc_id") % 5 === 0)))
         .foreach(day => dedupIngestPartitioned(spark, target, day, nBuckets = 16))
-      spark.read.parquet(target)
+      Parquets.read(spark, target)
         .select(col("content_hash"), col("doc_id").as("survivor_id"))
         .orderBy(col("content_hash"))
         .localCheckpoint(true) // materialize before the snapshot dir dies
@@ -365,7 +365,7 @@ object MergeQueries {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     neardupIngestCore(spark, new IndexStore {
       def exists: Boolean = fs.exists(path) && fs.listStatus(path).nonEmpty
-      def read(): DataFrame = spark.read.parquet(target)
+      def read(): DataFrame = Parquets.read(spark, target)
       def merge(updates: DataFrame, fields: Seq[String]): MergeSink.MergeStats =
         // derive output is key-unique by construction (anti-joined
         // inserts ∪ remapped index rows) — skip the fold window
@@ -1092,7 +1092,7 @@ object MergeQueries {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val exists = fs.exists(path) && fs.listStatus(path).nonEmpty
     val indexOpt =
-      if (exists) Some(spark.read.parquet(target).localCheckpoint(true))
+      if (exists) Some(Parquets.read(spark, target).localCheckpoint(true))
       else None
     // derive output is key-unique (anti-joined inserts ∪ remapped
     // registry rows) — skip the fold window
@@ -1249,7 +1249,7 @@ object MergeQueries {
         sup.filter(col("s_suppkey") > cut)
           .union(sup.filter(col("s_suppkey") % 5 === 0)))
         .foreach(day => entityIngest(spark, target, day, "s_suppkey", "s_name"))
-      spark.read.parquet(target)
+      Parquets.read(spark, target)
         .select(col("key_id"), col("name"), col("entity_id"))
         .orderBy(col("key_id"))
         .localCheckpoint(true) // materialize before the scratch dir dies
@@ -1293,7 +1293,7 @@ object MergeQueries {
         s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
       try q.awaitTermination()
       finally { if (q.isActive) q.stop() }
-      spark.read.parquet(registry)
+      Parquets.read(spark, registry)
         .select(col("key_id"), col("name"), col("entity_id"))
         .orderBy(col("key_id"))
         .localCheckpoint(true) // materialize before the scratch dir dies
@@ -1343,7 +1343,7 @@ object MergeQueries {
       val stats = Compaction.compactPartitioned(spark, path, targetBytes = 64L << 20)
       require(stats.nCompacted == nBuckets && stats.filesAfter == nBuckets,
         s"compaction did not converge: $stats")
-      spark.read.parquet(path)
+      Parquets.read(spark, path)
         .select(col("doc_id"), col("lang"), col("content_hash"))
         .orderBy(col("doc_id"))
         .localCheckpoint(true) // materialize before the scratch dir is deleted
@@ -1839,7 +1839,7 @@ object MergeQueries {
       MergeSink.mergeIntoPartitionedBucketed(spark, tblPB, day2, "doc_id", f2,
         nParts = 4, nBuckets = 2)
       Seq(
-        "full" -> spark.read.parquet(full),
+        "full" -> Parquets.read(spark, full),
         // mixed footers after an in-place evolution: the snapshot's
         // schema MANIFEST is the authority (one tiny file read; no
         // per-footer scan, no inference lottery)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Parquets, Tables}
 
 /** Deterministic global shuffle + balanced sharding — the step a
   * pretraining run performs between curation and packing: break any
@@ -56,7 +56,7 @@ object Sharding {
     shuffled.repartition(nShards, col("shard"))
       .sortWithinPartitions(col("shard"), col("bucket"), col(idCol))
       .write.mode("overwrite").partitionBy("shard").parquet(path)
-    docs.sparkSession.read.parquet(path)
+    Parquets.read(docs.sparkSession, path)
       .withColumn("shard", col("shard").cast("long"))
   }
 
@@ -211,7 +211,7 @@ object Sharding {
         .sortWithinPartitions(col("file_id"), col("zkey"), col("doc_id"))
         .write.mode("overwrite").partitionBy("file_id")
         .parquet(s"$base/zorder")
-      spark.read.parquet(s"$base/zorder")
+      Parquets.read(spark, s"$base/zorder")
         .select(col("doc_id"), col("qb"), col("lb"), col("zkey"),
           col("file_id").cast("long").as("file_id"))
         .orderBy(col("file_id"), col("zkey"), col("doc_id"))
@@ -285,7 +285,7 @@ object Sharding {
         .sortWithinPartitions(col("file_id"), col("zkey"), col("doc_id"))
         .write.mode("overwrite").partitionBy("file_id")
         .parquet(s"$base/zorder4")
-      spark.read.parquet(s"$base/zorder4")
+      Parquets.read(spark, s"$base/zorder4")
         .select(col("doc_id"), col("gb"), col("sb"), col("lb"), col("qb"),
           col("zkey"), col("file_id").cast("long").as("file_id"))
         .orderBy(col("file_id"), col("zkey"), col("doc_id"))
@@ -350,7 +350,7 @@ object Sharding {
         df.repartition(col("file_id"))
           .sortWithinPartitions(col("file_id"), col("zkey"), col("doc_id"))
           .write.mode(mode).partitionBy("file_id").parquet(path)
-      def reopened(): DataFrame = spark.read.parquet(path)
+      def reopened(): DataFrame = Parquets.read(spark, path)
         .select(col("doc_id"), col("zkey"), col("file_id").cast("long").as("file_id"))
       // phase 1: day 1, clustered
       write(zOrderLayout(m.filter(col("doc_id") <= cut), "doc_id", "qb", "lb",
@@ -457,7 +457,7 @@ object Sharding {
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("file_id="))
       .map(_.getPath.getName.stripPrefix("file_id=").toLong).toSet
     val health = layoutHealth(
-      spark.read.parquet(path).select(col("zkey"), col("file_id")))
+      Parquets.read(spark, path).select(col("zkey"), col("file_id")))
     val flagged = health.filter(col("overlap_cnt") > 0)
       .select(col("file_id").cast("long"))
       .collect().map(_.getLong(0)).toSet // ≤ |files| — footer-stats scale
@@ -465,7 +465,7 @@ object Sharding {
     // transitive closure over receiving files (see scaladoc): promote any
     // existing file a rewrite-set row would land in
     def cutIdsOf(ids: Set[Long]): Set[Long] =
-      spark.read.parquet(path)
+      Parquets.read(spark, path)
         .filter(col("file_id").isin(ids.toSeq.map(java.lang.Long.valueOf): _*))
         .select(expr(s"zkey * $nFiles div $zSpace").as("cid"))
         .distinct().collect().map(_.getLong(0)).toSet
@@ -475,7 +475,7 @@ object Sharding {
       frontier = (cutIdsOf(frontier) intersect existing) diff rewrite
       rewrite ++= frontier
     }
-    val rows = spark.read.parquet(path)
+    val rows = Parquets.read(spark, path)
       .filter(col("file_id").isin(rewrite.toSeq.map(java.lang.Long.valueOf): _*))
       .drop("file_id")
       .withColumn("file_id", expr(s"zkey * $nFiles div $zSpace"))
@@ -539,7 +539,7 @@ object Sharding {
         .filter(col("zkey") < OptZCap)
         .withColumn("file_id", lit(ZFiles.toLong)), "append")
       optimizeFlagged(spark, path, ZFiles, 1L << (2 * ZBits))
-      spark.read.parquet(path)
+      Parquets.read(spark, path)
         .select(col("doc_id"), col("qb"), col("lb"), col("zkey"),
           col("file_id").cast("long").as("file_id"))
         .orderBy(col("file_id"), col("zkey"), col("doc_id"))
@@ -852,7 +852,7 @@ object Sharding {
     * maintenance pass touched data. */
   def refreshStatsManifest(spark: SparkSession, path: String,
                            statsCols: Seq[String]): Unit =
-    refreshStatsManifestFrom(spark.read.parquet(path), path, statsCols)
+    refreshStatsManifestFrom(Parquets.read(spark, path), path, statsCols)
 
   /** [[refreshStatsManifest]] with the layout given as a frame — the
     * form the manifested layout uses ([[zReadManifested]] reconstructs
@@ -886,14 +886,14 @@ object Sharding {
     * id list — ≤ |files| longs, the [[optimizeFlagged]] budget. */
   def skippingScan(spark: SparkSession, path: String, predCol: String,
                    lo: Column, hi: Column): SkipScan = {
-    val stats = spark.read.parquet(statsPath(path))
+    val stats = Parquets.read(spark, statsPath(path))
       .select(col("file_id"), col(s"min_$predCol"), col(s"max_$predCol"))
       .localCheckpoint(true) // one metadata read feeds both counts
     val filesTotal = stats.count()
     val keep = stats
       .filter(col(s"max_$predCol") >= lo && col(s"min_$predCol") <= hi)
       .select(col("file_id")).collect().map(_.getLong(0)).toSeq
-    val rows = spark.read.parquet(path)
+    val rows = Parquets.read(spark, path)
       .filter(col("file_id").isin(keep.map(java.lang.Long.valueOf): _*))
       .filter(col(predCol) >= lo && col(predCol) <= hi)
     SkipScan(rows, keep.size.toLong, filesTotal)
@@ -908,7 +908,7 @@ object Sharding {
                              predCol: String, lo: Column,
                              hi: Column): SkipScan = {
     import graft.sinks.DirManifest
-    val stats = spark.read.parquet(statsPath(path))
+    val stats = Parquets.read(spark, statsPath(path))
       .select(col("file_id"), col(s"min_$predCol"), col(s"max_$predCol"))
       .localCheckpoint(true) // one metadata read feeds both counts
     val filesTotal = stats.count()
@@ -1035,7 +1035,7 @@ object Sharding {
       docs.repartition(col("file_id"))
         .sortWithinPartitions(col("file_id"), col("doc_id"))
         .write.mode("overwrite").partitionBy("file_id").parquet(path)
-      val reopened = spark.read.parquet(path)
+      val reopened = Parquets.read(spark, path)
       val index = bloomFileIndex(reopened, "file_id", "doc_id")
         .localCheckpoint(true) // metadata-scale; feeds probe + total
       val filesTotal = index.select(col("file_id")).distinct().count()
@@ -1062,7 +1062,7 @@ object Sharding {
         .collect().map(_.getLong(0)).toSeq // ≤ |files| — metadata scale
       val perKey = cand.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_candidates"))
-      val rows = spark.read.parquet(path)
+      val rows = Parquets.read(spark, path)
         .filter(col("file_id").isin(candFiles.map(java.lang.Long.valueOf): _*))
         .join(broadcast(keys), Seq("doc_id"))
         .select(col("doc_id"), col("lang"), col("n_chars"),

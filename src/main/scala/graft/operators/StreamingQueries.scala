@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import graft.Tables
+import graft.{Parquets, Tables}
 import graft.streaming.EventStreams
 
 /** Batch entries for the time-windowed transformations in
@@ -398,7 +398,7 @@ object StreamingQueries {
         (t, s) => MergeSink.MergeStats(t.nMatched + s.nMatched,
           t.nModified + s.nModified, t.nUpserted + s.nUpserted)
       }
-      spark.read.parquet(target)
+      Parquets.read(spark, target)
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("user_id")).as("n_users"),
           sum(when(col("event_type").isNotNull, 1L).otherwise(0L)).as("n_typed"),
@@ -469,7 +469,7 @@ object StreamingQueries {
       drain(s"$base/arrivals1", schema1, s"$base/ckpt1", Seq("lang", "n_chars"))
       drain(s"$base/arrivals2", schema2, s"$base/ckpt2",
         Seq("lang", "n_chars", "flag"))
-      spark.read.parquet(target)
+      Parquets.read(spark, target)
         .select(col("doc_id"), col("lang"), col("n_chars"), col("flag"))
         .orderBy(col("doc_id"))
         .localCheckpoint(true) // materialize before the snapshot dir dies

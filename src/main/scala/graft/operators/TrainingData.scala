@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Parquets, Tables}
 import graft.functions.TextFunctions
 
 /** Training-data pipeline operators the reference's ETL never needed but a
@@ -517,7 +517,7 @@ object TrainingData {
       .select(col(partCol), col("shard"), col("pack_id"), col(orderCol),
         col("seg_start"), col("seg_end"), col("pack_off"))
     segs.write.mode("overwrite").partitionBy(partCol, "shard").parquet(path)
-    val re = docs.sparkSession.read.parquet(path)
+    val re = Parquets.read(docs.sparkSession, path)
     // partition discovery re-infers directory-key types (shard comes back
     // int, a numeric partCol would too); cast back to the INPUT frame's
     // type — hardcoding string here would silently retype a numeric

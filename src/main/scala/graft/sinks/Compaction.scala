@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.Parquets
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -73,7 +74,7 @@ object Compaction {
         // target count, then swap the directory in one rename
         val tmp = new Path(dir.getParent, dir.getName + ".__compact_tmp")
         fs.delete(tmp, true)
-        spark.read.parquet(dir.toString)
+        Parquets.read(spark, dir.toString)
           .repartition(desired)
           .write.mode("overwrite").parquet(tmp.toString)
         // drop the marker so the swapped dir holds data files only

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.Parquets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -111,15 +112,14 @@ object DirManifest {
     require(dirs.nonEmpty,
       s"no mapped dirs for partitions ${parts.getOrElse(Seq("<all>"))} at $root")
     val byGen = dirs.groupBy(_.split('/').head).toSeq.sortBy(_._1)
-    // schema inference runs a one-task Spark job per spark.read call
-    // (footer read) — profiling caught it as a fixed ~50 ms per
-    // generation per read. Infer ONCE from the first generation and
-    // pin the remaining generations to that schema (the layout guards
-    // require generations to agree; a disagreeing generation still
-    // fails loudly at unionByName on the column set).
+    // Later generations are pinned to the first generation's schema:
+    // that is the agreement guard. The union's schema comes from one
+    // footer by construction; a later generation is decoded against it,
+    // never re-inferred, so a generation the scan cannot convert fails
+    // the read instead of widening the union.
     val (g0, ds0) = byGen.head
-    val first = spark.read.option("basePath", s"$root/$g0")
-      .parquet(ds0.map(d => s"$root/$d"): _*)
+    val first = Parquets.read(spark, ds0.map(d => s"$root/$d"),
+      Map("basePath" -> s"$root/$g0"))
     byGen.tail.map { case (gen, ds) =>
       spark.read.option("basePath", s"$root/$gen").schema(first.schema)
         .parquet(ds.map(d => s"$root/$d"): _*)

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.Parquets
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -133,7 +134,7 @@ object LedgeredState {
   /** The committed state part as a frame, or None before first commit. */
   def readPart(spark: SparkSession, path: String, part: String): Option[DataFrame] =
     headState(spark, path)._2.flatMap(_.parts.get(part))
-      .map(d => spark.read.parquet(new Path(new Path(path), d).toString))
+      .map(d => Parquets.read(spark, new Path(new Path(path), d).toString))
 
   /** Publish `parts` plus the batchId-extended ledger in ONE commit-file
     * create. Part frames may read the previous committed state: its
@@ -226,7 +227,7 @@ object LedgeredState {
       path: String, st: Option[State]) {
     def part(name: String): Option[DataFrame] =
       st.flatMap(_.parts.get(name))
-        .map(d => spark.read.parquet(new Path(new Path(path), d).toString))
+        .map(d => Parquets.read(spark, new Path(new Path(path), d).toString))
   }
 
   /** CONTENTION-SAFE fold-and-commit: `derive` maps the committed state

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.Parquets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -231,7 +232,7 @@ object MergeSink {
       else collapseUpdates(updates.filter(col(key).isNotNull), key, fields, orderCol)
     val target =
       if (fs.exists(path) && fs.listStatus(path).nonEmpty)
-        spark.read.parquet(targetPath)
+        Parquets.read(spark, targetPath)
       else emptyTarget(spark, unique, key, fields, updatedAtCol)
 
     // One join execution total: the parquet write materializes the merge,

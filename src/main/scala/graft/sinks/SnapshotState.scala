@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.Parquets
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -77,7 +78,7 @@ object SnapshotState {
   /** The committed snapshot frame, or None before the first fold. */
   def read(spark: SparkSession, path: String): Option[DataFrame] =
     headDir(spark, path)._2
-      .map(d => spark.read.parquet(new Path(new Path(path), d).toString))
+      .map(d => Parquets.read(spark, new Path(new Path(path), d).toString))
 
   /** Fold-and-publish: `f` maps the CURRENT committed snapshot (None
     * before the first fold) to the next one; the result lands as a new
@@ -96,7 +97,7 @@ object SnapshotState {
     while (true) {
       val (seq, cur) = headDir(spark, path)
       val next = f(cur.map(d =>
-        spark.read.parquet(new Path(root, d).toString)))
+        Parquets.read(spark, new Path(root, d).toString)))
       val gen = s"g-${UUID.randomUUID().toString.take(8)}"
       next.write.mode("overwrite").parquet(new Path(root, gen).toString)
       try {

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.Parquets
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -192,7 +193,7 @@ object VersionCatalog {
     * was written. Throws on a version the head commit does not carry
     * (never committed, or vacuumed). */
   def readVersion(spark: SparkSession, path: String, n: Long): DataFrame =
-    spark.read.parquet(
+    Parquets.read(spark,
       new Path(new Path(path), entryOf(spark, path, n).dir).toString)
 
   /** PURGE ACROSS RETAINED VERSIONS — time travel must forget too: a
@@ -229,7 +230,7 @@ object VersionCatalog {
       val rewritten = entries.sortBy(_.version).map { e =>
         val obsBefore = Observation()
         val obsAfter = Observation()
-        val kept = spark.read.parquet(new Path(root, e.dir).toString)
+        val kept = Parquets.read(spark, new Path(root, e.dir).toString)
           .observe(obsBefore, count(lit(1)).as("n"))
           .join(broadcast(uniq), Seq(key), "left_anti")
           .observe(obsAfter, count(lit(1)).as("n"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Parquets
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -165,7 +166,7 @@ object EventStreams {
     * entries it is compared against (q41). */
   def readEventFixtureStream(spark: SparkSession, dir: String,
                              fileName: String = "events.parquet"): DataFrame = {
-    val physicalTs = spark.read.parquet(s"$dir/$fileName").schema("ts").dataType
+    val physicalTs = Parquets.read(spark, s"$dir/$fileName").schema("ts").dataType
     val rawSchema = StructType(eventSchema.map {
       case f if f.name == "ts" => f.copy(dataType = physicalTs)
       case f => f
