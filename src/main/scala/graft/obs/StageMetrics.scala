@@ -49,21 +49,14 @@ object StageMetrics {
 
   /** Runs `body` with a registered stage listener; returns the result and
     * the stage events observed during it (listener removed afterwards).
-    * `waitForEvents` drains the async listener bus before reading. */
+    * The listener bus is async, so it is drained before reading: every
+    * stage that completed inside `body` has been delivered by then. */
   def withStageMetrics[T](spark: SparkSession)(body: => T): (T, Seq[StageEvent]) = {
     val l = new Listener
     spark.sparkContext.addSparkListener(l)
     try {
       val r = body
-      // the listener bus is async (and private); poll until the event
-      // stream quiesces (no growth across a poll interval, max ~5 s)
-      var last = -1
-      var spins = 0
-      while (l.events.size != last && spins < 50) {
-        last = l.events.size
-        Thread.sleep(100)
-        spins += 1
-      }
+      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
       (r, l.events)
     } finally spark.sparkContext.removeSparkListener(l)
   }

@@ -231,7 +231,10 @@ object Audit {
     * active in both halves would double-count — but per-(day, user)
     * counts are, and both report columns derive from them exactly
     * (n_events = Σc, n_users = row count). State size = days ×
-    * active-users-per-day, type-bounded like the vocab family. */
+    * active-users-per-day, type-bounded like the vocab family. Row
+    * duplicates across batches are the upstream's to prevent — and are
+    * precisely what the HIGH detector exists to flag when they happen
+    * at day scale. */
   def anomalyIngest(spark: SparkSession, path: String, batch: DataFrame,
                     tsCol: Column, userCol: Column, batchId: String): Boolean = {
     import graft.sinks.LedgeredState
@@ -297,15 +300,16 @@ object Audit {
   def q197AnomalyIngestSql: String = q107DayAnomalySql
 
   /** q198: the q197 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingAnomaly]] — foreachBatch per landed
-    * file, Trigger.AvailableNow; the two parity files are each
-    * day-straddling, so the stream exercises the same adversarial
-    * grain). Oracle IS q107's — the anomaly family's triple closes. */
+    * ([[graft.streaming.StreamingFold]] — one micro-batch per landed
+    * file; the two parity files are each day-straddling, so the stream
+    * exercises the same adversarial grain). The delivery monitor that
+    * flags a source going dark or a duplicating upstream WHILE the day
+    * lands. Oracle IS q107's — the anomaly family's triple closes. */
   def q198StreamAnomaly(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
     import graft.sinks.LedgeredState
+    import graft.streaming.{EventStreams, StreamingFold}
     val base = java.nio.file.Files.createTempDirectory("graft_q198_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -313,18 +317,13 @@ object Audit {
       val srcDir = s"$base/arrivals"
       val statePath = s"$base/anomaly_state"
       val v = anomalyFixture(spark, dir)
-      fs.mkdirs(new Path(srcDir))
-      Seq(v.filter(col("event_id") % 2 === 0L),
-          v.filter(col("event_id") % 2 =!= 0L))
-        .zipWithIndex.foreach { case (d, i) =>
-          d.coalesce(1).write.parquet(s"$base/stage_$i")
-          val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-          fs.rename(part, new Path(s"$srcDir/half_$i.parquet"))
-        }
-      val q = graft.streaming.StreamingAnomaly.start(spark, srcDir, statePath,
-        s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamingFold.land(v.filter(col("event_id") % 2 === 0L), srcDir, "half_0.parquet")
+      StreamingFold.land(v.filter(col("event_id") % 2 =!= 0L), srcDir, "half_1.parquet")
+      StreamingFold.drain(StreamingFold.files(spark, EventStreams.eventSchema, srcDir),
+          s"$base/ckpt", "stream_anomaly") { (batch, batchId) =>
+        StreamingFold.applied(anomalyIngest(spark, statePath, batch,
+          col("ts"), col("user_id"), s"batch_$batchId"))
+      }
       anomaliesFromState(LedgeredState.readPart(spark, statePath, "day_user").get)
         .localCheckpoint(true) // materialize before the state dir dies
     } finally {
@@ -626,14 +625,14 @@ object Audit {
   def q162HistIngestSql: String = q161HistQuantilesSql
 
   /** q163: the q162 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingHist]] — foreachBatch per landed day
-    * file, Trigger.AvailableNow; disjoint day files, the additive-state
-    * input contract) — q87's pattern for the distribution ledger.
-    * Oracle IS q161's. */
+    * ([[graft.streaming.StreamingFold]] — one micro-batch per landed day
+    * file; disjoint day files, the additive-state input contract) —
+    * q87's pattern for the distribution ledger. Oracle IS q161's. */
   def q163StreamHist(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q163_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -644,17 +643,17 @@ object Audit {
         .select(col("doc_id"), col("lang"),
           round(col("quality") * 10000).cast("long").as("qe4"))
       val cut = m.agg(max(col("doc_id"))).head().getLong(0) / 2
-      fs.mkdirs(new Path(srcDir))
       Seq(m.filter(col("doc_id") <= cut), m.filter(col("doc_id") > cut))
         .zipWithIndex.foreach { case (d, i) =>
-          d.coalesce(1).write.parquet(s"$base/stage_$i")
-          val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-          fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
+          StreamingFold.land(d, srcDir, s"day_$i.parquet")
         }
-      val q = graft.streaming.StreamingHist.start(spark, srcDir, statePath,
-        s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      val scored = StructType(Seq(StructField("doc_id", LongType),
+        StructField("lang", StringType), StructField("qe4", LongType)))
+      StreamingFold.drain(StreamingFold.files(spark, scored, srcDir),
+          s"$base/ckpt", "stream_hist") { (batch, batchId) =>
+        StreamingFold.applied(histIngest(spark, statePath, batch,
+          "lang", col("qe4"), s"batch_$batchId"))
+      }
       histQuantiles(graft.sinks.LedgeredState.readPart(spark, statePath, "counts").get, QuantPs)
         .withColumnRenamed("stratum", "lang")
         .orderBy(col("lang"), col("p_e4"))
@@ -851,7 +850,9 @@ object Audit {
     * The incremental path requires a NUMERIC key (state stores the
     * offender as a BIGINT so min merges exactly; the batch path stays
     * string-generic). Both parts commit atomically with the q110
-    * batchId ledger. */
+    * batchId ledger. Row duplicates across batches are the upstream's
+    * to prevent for the additive Check counts — though the Unique
+    * rule's per-key counts CATCH such a duplicate, which is its job. */
   def contractIngest(spark: SparkSession, path: String, batch: DataFrame,
                      batchId: String, keyCol: String,
                      rules: Seq[ContractRule]): Boolean = {
@@ -972,15 +973,15 @@ object Audit {
   def q189ContractsIngestSql: String = q186ContractsSql
 
   /** q190: the q189 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingContracts]] — foreachBatch per landed
-    * day file, Trigger.AvailableNow; disjoint day files, the
-    * additive-state input contract) — q163's harness for the release
-    * contract. Oracle IS q186's. */
+    * ([[graft.streaming.StreamingFold]] — one micro-batch per landed
+    * day file; disjoint day files, the additive-state input contract) —
+    * q163's harness for the release contract: the monitor a publisher
+    * runs WHILE a release lands instead of after. Oracle IS q186's. */
   def q190StreamContracts(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
     import graft.sinks.LedgeredState
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q190_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -989,18 +990,16 @@ object Audit {
       val statePath = s"$base/contract_state"
       val docs = Tables.documents(spark, dir)
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      fs.mkdirs(new Path(srcDir))
       Seq(docs.filter(col("doc_id") <= cut), docs.filter(col("doc_id") > cut))
         .zipWithIndex.foreach { case (d, i) =>
-          d.coalesce(1).write.parquet(s"$base/stage_$i")
-          val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-          fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
+          StreamingFold.land(d, srcDir, s"day_$i.parquet")
         }
-      val q = graft.streaming.StreamingContracts.start(spark, srcDir,
-        statePath, s"$base/ckpt", docContractRules(spark, dir),
-        trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      val rules = docContractRules(spark, dir)
+      StreamingFold.drain(StreamingFold.files(spark, StreamingFold.docSchema, srcDir),
+          s"$base/ckpt", "stream_contracts") { (batch, batchId) =>
+        StreamingFold.applied(contractIngest(spark, statePath, batch,
+          s"batch_$batchId", "doc_id", rules))
+      }
       contractReportFromState(
         LedgeredState.readPart(spark, statePath, "agg_rules"),
         LedgeredState.readPart(spark, statePath, "key_counts"))

@@ -227,23 +227,29 @@ object Cdc {
     * means a crash leaves either the pre- or the post-batch state, both
     * of which the replay handles. Additive state (q85) needs the
     * explicit ledger because it has no identity to guard on; keyed
-    * last-writer state carries its own. */
+    * last-writer state carries its own — and it absorbs upstream
+    * re-delivered ROWS in a later batch too, which a ledger cannot.
+    * The soundness condition is day-ordered delivery: an
+    * older-than-watermark change for an unseen key would be wrongly
+    * dropped, so batches must arrive in change-time order — which a CDC
+    * tap (binlog reader, debezium-style) naturally produces. */
   def cdcIngest(spark: SparkSession, path: String, batch: DataFrame): Unit =
     graft.sinks.SnapshotState.fold(spark, path) { cur =>
       foldCdcBatch(cur.getOrElse(emptySnapshot(spark)), batch)
     }
 
   /** q122: the SAME fold behind a REAL file stream
-    * ([[graft.streaming.StreamingCdc]] — one micro-batch per landed day
-    * file, Trigger.AvailableNow, the q87/q112 harness shape). Day files
-    * 2 and 3 RE-DELIVER a slice of the prior day (q121's harness), so
-    * the watermark guard is exercised under streaming delivery too.
-    * Final snapshot minus tombstones must equal q115's batch answer —
-    * oracle shared verbatim. */
+    * ([[graft.streaming.StreamingFold]] — one micro-batch per landed day
+    * file, landed in day order as [[cdcIngest]] requires; the q87/q112
+    * harness shape). Day files 2 and 3 RE-DELIVER a slice of the prior
+    * day (q121's harness), so the watermark guard is exercised under
+    * streaming delivery too. Final snapshot minus tombstones must equal
+    * q115's batch answer — oracle shared verbatim. */
   def q122StreamCdc(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types._
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q122_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -258,16 +264,18 @@ object Cdc {
           .unionByName(log.filter(day <= 10 && col("event_id") % 7 === 0)),
         log.filter(day > 20)
           .unionByName(log.filter(day > 10 && day <= 20 && col("event_id") % 7 === 0)))
-      fs.mkdirs(new Path(srcDir))
       days.zipWithIndex.foreach { case (d, i) =>
-        d.coalesce(1).write.parquet(s"$base/stage_$i")
-        val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-        fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
+        StreamingFold.land(d, srcDir, s"day_$i.parquet")
       }
-      val q = graft.streaming.StreamingCdc.start(spark, srcDir, statePath,
-        s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      val changeSchema = StructType(Seq(
+        StructField("user_id", LongType), StructField("ts", TimestampType),
+        StructField("event_id", LongType), StructField("op", StringType),
+        StructField("status", StringType), StructField("amount", DoubleType)))
+      StreamingFold.drain(StreamingFold.files(spark, changeSchema, srcDir),
+          s"$base/ckpt", "stream_cdc") { (batch, _) =>
+        cdcIngest(spark, statePath, batch)
+        Nil
+      }
       graft.sinks.SnapshotState.read(spark, statePath).get
         .filter(col("op") =!= "D")
         .select(col("user_id"), col("last_ts"), col("last_event_id"),

@@ -283,16 +283,16 @@ object CorpusReport {
   }
 
   /** q87: the report ledger driven by a REAL file stream
-    * ([[graft.streaming.StreamingReport]], one micro-batch per landed
-    * day file, Trigger.AvailableNow) — q85's state fold behind
-    * Structured Streaming's delivery. The harness lands two disjoint
-    * day files (additive state's input contract: no upstream row
-    * duplicates — the q85 scaladoc's honest caveat; sink-side batch
-    * replays ARE absorbed by the batchId ledger). Final state must
-    * equal one batch aggregation of the whole corpus — q85's oracle. */
+    * ([[graft.streaming.StreamingFold]], one micro-batch per landed
+    * day file) — q85's state fold behind Structured Streaming's
+    * delivery. The harness lands two disjoint day files (additive
+    * state's input contract: no upstream row duplicates — the q85
+    * scaladoc's honest caveat; sink-side batch replays ARE absorbed by
+    * the batchId ledger). Final state must equal one batch aggregation
+    * of the whole corpus — q85's oracle. */
   def q87StreamReport(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q87_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(base.toString).getFileSystem(conf)
@@ -302,18 +302,16 @@ object CorpusReport {
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      fs.mkdirs(new org.apache.hadoop.fs.Path(srcDir))
       Seq(docs.filter(col("doc_id") <= cut), docs.filter(col("doc_id") > cut))
         .zipWithIndex.foreach { case (d, i) =>
-          d.coalesce(1).write.parquet(s"$base/stage_$i")
-          val part = fs.globStatus(
-            new org.apache.hadoop.fs.Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-          fs.rename(part, new org.apache.hadoop.fs.Path(s"$srcDir/day_$i.parquet"))
+          StreamingFold.land(d, srcDir, s"day_$i.parquet")
         }
-      val q = graft.streaming.StreamingReport.start(spark, srcDir, statePath,
-        s"$base/ckpt", Seq("lang", "source"), trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamingFold.drain(StreamingFold.files(spark,
+          StreamingFold.docColumns("doc_id", "lang", "source", "text"), srcDir),
+          s"$base/ckpt", "stream_report") { (batch, batchId) =>
+        StreamingFold.applied(reportIngest(spark, statePath, batch,
+          s"batch_$batchId", "text", Seq("lang", "source")))
+      }
       graft.sinks.LedgeredState.readPart(spark, statePath, "report").get
         .select(col("lang"), col("source"), col("n_docs"), col("total_tokens"),
           col("min_tokens"), col("max_tokens"),

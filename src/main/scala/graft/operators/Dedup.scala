@@ -205,7 +205,9 @@ object Dedup {
     *    df drift because ANY pigeonhole-sized gram subset is sound;
     *  - `pairs` (inner_id, outer_id, containment): the accumulated
     *    relation — the operator's OUTPUT as state, so a replayed batch
-    *    is a true no-op (pairs commit with the ledger).
+    *    is a true no-op (pairs commit with the ledger: it can neither
+    *    re-probe nor re-emit). A doc_id re-said in a LATER batch is the
+    *    upstream's to prevent: it would double its postings.
     *
     * Per batch: within-batch pairs run the exact prefix-filter join
     * ([[containmentPairs]]'s internals on the batch projection); cross

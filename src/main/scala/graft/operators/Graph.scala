@@ -123,7 +123,10 @@ object Graph {
     * replay; PARTIAL re-deliveries inside a batch are dropped by the
     * per-user watermark (rows at or before the stored frontier), so
     * already-counted transitions can never double-fold into the additive
-    * weights. (Contrast q129/q132, whose monotone states need neither.)
+    * weights. Day order per user is the soundness condition: an event
+    * older than the user's frontier is indistinguishable from a
+    * re-delivery and is dropped — a log tailer naturally delivers in
+    * order. (Contrast q129/q132, whose monotone states need neither.)
     *
     * Scale: per-batch cost is the batch's own window sort plus a
     * frontier join keyed on user — state touched is |users| + |distinct
@@ -219,15 +222,14 @@ object Graph {
   def q137GraphIngestSql: String = q133PageRankSql
 
   /** q139: the q137 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingGraph]] — foreachBatch per landed day
-    * file, Trigger.AvailableNow), with day 2's file RE-DELIVERING a
-    * slice of day 1 that the per-user watermark must drop (the q122
-    * harness shape). Ranks from the streamed edge snapshot; oracle IS
-    * q133's, verbatim. */
+    * ([[graft.streaming.StreamingFold]] — one micro-batch per landed day
+    * file), with day 2's file RE-DELIVERING a slice of day 1 that the
+    * per-user watermark must drop (the q122 harness shape). Ranks from
+    * the streamed edge snapshot; oracle IS q133's, verbatim. */
   def q139StreamGraph(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.{EventStreams, StreamingFold}
     val base = java.nio.file.Files.createTempDirectory("graft_q139_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -242,16 +244,14 @@ object Graph {
         d1,
         ev.filter(col("ts") > lit(cut))
           .unionByName(d1.filter(col("event_id") % 5 === 0))) // re-delivery
-      fs.mkdirs(new Path(srcDir))
       days.zipWithIndex.foreach { case (d, i) =>
-        d.coalesce(1).write.parquet(s"$base/stage_$i")
-        val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-        fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
+        StreamingFold.land(d, srcDir, s"day_$i.parquet")
       }
-      val q = graft.streaming.StreamingGraph.start(spark, srcDir, statePath,
-        s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamingFold.drain(StreamingFold.files(spark, EventStreams.eventSchema, srcDir),
+          s"$base/ckpt", "stream_graph") { (batch, batchId) =>
+        StreamingFold.applied(
+          graphIngest(spark, statePath, batch, s"stream_$batchId"))
+      }
       pageRank(graft.sinks.LedgeredState.readPart(spark, statePath, "edges").get, PrRounds)
         .orderBy(col("pr_micro").desc, col("page"))
         .localCheckpoint(true) // materialize before the state dir dies

@@ -415,8 +415,8 @@ object MergeQueries {
 
   /** [[neardupIngest]] against the MANIFEST-POINTER index
     * ([[graft.sinks.ManifestMergeSink]]) — the DEFAULT layout for new
-    * pipelines, q68's primary gate, and [[graft.streaming
-    * .StreamingNeardup]]'s target: the index publishes through one
+    * pipelines, q68's primary gate, and the q72/q233 streams' target
+    * ([[graft.streaming.StreamingFold]]): the index publishes through one
     * commit-file create (rename-free, object-store-safe, atomic across
     * every bucket the batch touched) and the probe/merge IO stays
     * touched-bucket-bounded exactly like the partitioned swap form.
@@ -1260,16 +1260,17 @@ object MergeQueries {
   }
 
   /** q129: the q127 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingEntity]] — foreachBatch per landed day
-    * file, Trigger.AvailableNow), with day 2's file RE-DELIVERING a
-    * slice of day 1 (the q122 harness shape). Ledger-free AND
-    * order-free: the registry's anti-join absorbs replays, and the
-    * component-min invariant needs no delivery-order guarantee. Same
-    * oracle as q127, verbatim. */
+    * ([[graft.streaming.StreamingFold]] — one micro-batch per landed day
+    * file), with day 2's file RE-DELIVERING a slice of day 1 (the q122
+    * harness shape). Ledger-free AND order-free: the registry's
+    * anti-join drops any already-seen id, so replays and re-deliveries
+    * fold to no-ops, and the component-min invariant needs no
+    * delivery-order guarantee (FuzzyJoinSpec proves order invisibility
+    * directly). Same oracle as q127, verbatim. */
   def q129StreamEntity(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q129_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -1283,16 +1284,16 @@ object MergeQueries {
         sup.filter(col("id") <= cut),
         sup.filter(col("id") > cut)
           .unionByName(sup.filter(col("id") % 5 === 0)))
-      fs.mkdirs(new Path(srcDir))
       days.zipWithIndex.foreach { case (d, i) =>
-        d.coalesce(1).write.parquet(s"$base/stage_$i")
-        val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-        fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
+        StreamingFold.land(d, srcDir, s"day_$i.parquet")
       }
-      val q = graft.streaming.StreamingEntity.start(spark, srcDir, registry,
-        s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      val recordSchema = StructType(Seq(
+        StructField("id", LongType), StructField("name", StringType)))
+      StreamingFold.drain(StreamingFold.files(spark, recordSchema, srcDir),
+          s"$base/ckpt", "stream_entity") { (batch, _) =>
+        val st = entityIngest(spark, registry, batch, "id", "name")
+        Seq("matched" -> st.nMatched, "upserted" -> st.nUpserted)
+      }
       Parquets.read(spark, registry)
         .select(col("key_id"), col("name"), col("entity_id"))
         .orderBy(col("key_id"))
@@ -1617,19 +1618,26 @@ object MergeQueries {
   /** q172: the change-feed consumer STREAMED — the catalog family's
     * taxonomy closes (q166 batch lifecycle → q171 incremental replay →
     * this): three versions commit with a NOTIFICATION marker landed per
-    * commit, [[graft.streaming.StreamingFeed]] drives
-    * [[feedConsumerIngest]] one marker per micro-batch (bootstrap from
-    * v1, then drift-sized feed replays to v2, v3), and the final
-    * derived snapshot must equal v3 ROW-FOR-ROW with the cursor at 3 —
-    * same oracle shape as q171's replay section. A fourth, REPLAYED
-    * marker is landed for the head version to exercise the at-least-once
-    * path in-gate (its batch must no-op via the state ledger, not
-    * double-apply). */
+    * commit (the object-store event-notification shape),
+    * [[graft.streaming.StreamingFold]] drives [[feedConsumerIngest]]
+    * one marker per micro-batch (bootstrap from v1, then drift-sized
+    * feed replays to v2, v3), and the final derived snapshot must equal
+    * v3 ROW-FOR-ROW with the cursor at 3 — same oracle shape as q171's
+    * replay section. A fourth, REPLAYED marker is landed for the head
+    * version to exercise the at-least-once path in-gate (its batch must
+    * no-op via the state ledger, not double-apply).
+    *
+    * Markers are at-least-once and unordered, so the consumer keys on
+    * the CATALOG's latest version, never the marker's payload: a stale
+    * or replayed marker finds latest ≤ cursor (or its batch already in
+    * the state ledger) and no-ops, and a marker that arrives ahead of a
+    * lost sibling still advances the cursor through every pending
+    * version, because the feed reads ALL steps past the cursor. */
   def q172StreamFeed(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import graft.sinks.{LedgeredState, VersionCatalog}
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q172_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -1637,16 +1645,12 @@ object MergeQueries {
       val cat = s"$base/catalog"
       val notify = s"$base/notify"
       val statePath = s"$base/derived"
-      fs.mkdirs(new Path(notify))
       val ss = spark; import ss.implicits._
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .localCheckpoint(true) // feeds all three version frames
-      def land(v: Long, tag: String): Unit = {
-        Seq(v).toDF("version").coalesce(1).write.parquet(s"$base/stage_$tag")
-        val part = fs.globStatus(new Path(s"$base/stage_$tag/part-*.parquet"))(0).getPath
-        fs.rename(part, new Path(s"$notify/commit_$tag.parquet"))
-      }
+      def land(v: Long, tag: String): Unit =
+        StreamingFold.land(Seq(v).toDF("version"), notify, s"commit_$tag.parquet")
       VersionCatalog.commit(spark, cat,
         docs.select(col("doc_id"), col("lang"), col("n_chars").as("c")))
       land(1L, "v1")
@@ -1664,11 +1668,16 @@ object MergeQueries {
               col("n_chars").as("c"))))
       land(3L, "v3")
       land(3L, "v3_replayed") // at-least-once: must no-op via the ledger
-      val q = graft.streaming.StreamingFeed.start(spark, notify, cat,
-        statePath, s"$base/ckpt", "doc_id", Seq("lang", "c"),
-        trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamingFold.drain(StreamingFold.files(spark,
+          StructType(Seq(StructField("version", LongType))), notify),
+          s"$base/ckpt", "stream_feed") { (batch, _) =>
+        // the marker's content is only a wake-up; the catalog is the
+        // authority for what is pending
+        batch.count()
+        val advanced = feedConsumerIngest(spark, cat, statePath, "doc_id",
+          Seq("lang", "c"))
+        Seq("advanced" -> (if (advanced) 1L else 0L))
+      }
       val snap = LedgeredState.readPart(spark, statePath, "snapshot").get
       val cursor = LedgeredState.readPart(spark, statePath, "cursor")
         .get.head().getLong(0)
@@ -2365,20 +2374,23 @@ object MergeQueries {
       |ORDER BY v""".stripMargin
 
   /** q220: EXACTLY-ONCE STREAMING MERGE — the doc_id-parity halves land
-    * as files, a REAL stream
-    * ([[graft.streaming.StreamingMergeManifested]], foreachBatch per
-    * file, Trigger.AvailableNow) merges each micro-batch under its
+    * as files, a REAL stream ([[graft.streaming.StreamingFold]], one
+    * micro-batch per file) merges each micro-batch under its
     * (pipeline, batchId) txn token, then BOTH batches are replayed
     * through the same token path (the restart scenario foreachBatch's
     * at-least-once contract allows) and must be byte-level no-ops: zero
-    * merge stats, zero new commits. The oracle is the full corpus
-    * merged once, plus a commit-count row — a double-applied batch
-    * fails row-level (duplicate updatedAt bumps don't surface, but a
-    * re-upsert after a purge would; the commit count pins the rest). */
+    * merge stats, zero new commits. The token rides the commit file
+    * with the bucket mapping, so a replay finds its mark at the head
+    * without writing a byte, and a replayed instance RACING the original
+    * loses the commit CAS, finds its own token at the new head, and
+    * no-ops the same way. The oracle is the full corpus merged once,
+    * plus a commit-count row — a double-applied batch fails row-level
+    * (duplicate updatedAt bumps don't surface, but a re-upsert after a
+    * purge would; the commit count pins the rest). */
   def q220ExactlyOnceMerge(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
-      import org.apache.spark.sql.streaming.Trigger
       import graft.sinks.{CommitLog, ManifestMergeSink}
+      import graft.streaming.StreamingFold
       val base = java.nio.file.Files.createTempDirectory("graft_q220_")
       val conf = spark.sparkContext.hadoopConfiguration
       val fs = new Path(base.toString).getFileSystem(conf)
@@ -2387,21 +2399,17 @@ object MergeQueries {
         val target = s"$base/snap"
         val docs = Tables.documents(spark, dir)
           .select(col("doc_id"), length(col("text")).cast("long").as("len"))
-        fs.mkdirs(new Path(srcDir))
         val halves = Seq(docs.filter(col("doc_id") % 2 === 0L),
           docs.filter(col("doc_id") % 2 =!= 0L))
         halves.zipWithIndex.foreach { case (d, i) =>
-          d.coalesce(1).write.parquet(s"$base/stage_$i")
-          val part = fs.globStatus(
-            new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-          fs.rename(part, new Path(s"$srcDir/half_$i.parquet"))
+          StreamingFold.land(d, srcDir, s"half_$i.parquet")
         }
-        val q = graft.streaming.StreamingMergeManifested.start(spark,
-          srcDir, target, s"$base/ckpt", docs.schema, "doc_id", Seq("len"),
-          nBuckets = 16, pipelineId = "p1",
-          trigger = Some(Trigger.AvailableNow()))
-        try q.awaitTermination()
-        finally { if (q.isActive) q.stop() }
+        StreamingFold.drain(StreamingFold.files(spark, docs.schema, srcDir),
+            s"$base/ckpt", "stream_merge") { (batch, batchId) =>
+          val st = ManifestMergeSink.mergeIntoManifested(spark, target,
+            batch, "doc_id", Seq("len"), 16, txn = Some(("p1", batchId)))
+          Seq("matched" -> st.nMatched, "upserted" -> st.nUpserted)
+        }
         val committed = CommitLog.seqs(fs, new Path(target)).size
         // the restart replay: both batch tokens re-applied directly —
         // each must no-op without writing a byte or a commit
@@ -2822,12 +2830,16 @@ object MergeQueries {
       |ORDER BY sect, k""".stripMargin
 
   /** q224: the q222 consumer loop behind a REAL stream
-    * ([[graft.streaming.StreamingCdcApply]]): the source table's
-    * `_commits` directory is tailed as a file stream — the commit log
-    * doubling as the change-notification channel — and each landed
-    * commit triggers an apply of the span between the replica's
-    * watermark (a txn token in the replica's own commit) and the source
-    * head. Run 1 bootstraps from the v1 snapshot; the source then takes
+    * ([[graft.streaming.StreamingFold]] over the source's `_commits`
+    * directory as a text stream, one commit file per micro-batch): the
+    * commit log doubles as the change-notification channel — each
+    * commit is one immutable file, no side queue needed — and each
+    * landed commit triggers [[graft.streaming.StreamingCdcApply.applyOnce]]
+    * of the span between the replica's watermark (a txn token in the
+    * replica's own commit) and the source head. The batch content is
+    * only the notification; the apply reads its span from the logs, and
+    * the notification stream itself moves only kilobyte commit files.
+    * Run 1 bootstraps from the v1 snapshot; the source then takes
     * an update wave and a purge wave; run 2 (same checkpoint) catches
     * up in ONE atomic commit — deletes, upserts, and the watermark
     * through [[graft.sinks.ManifestMergeSink.applyChangesManifested]],
@@ -2838,9 +2850,9 @@ object MergeQueries {
     * + both protocol counts. */
   def q224StreamCdcApply(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
-      import org.apache.spark.sql.streaming.Trigger
+      import org.apache.spark.sql.types.{StringType, StructField, StructType}
       import graft.sinks.{CommitLog, ManifestMergeSink}
-      import graft.streaming.StreamingCdcApply
+      import graft.streaming.{StreamingCdcApply, StreamingFold}
       val base = java.nio.file.Files.createTempDirectory("graft_q224_")
       val fs = new Path(base.toString)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2853,13 +2865,14 @@ object MergeQueries {
         ManifestMergeSink.mergeIntoManifested(spark, src,
           docs.filter(col("doc_id") <= cut), "doc_id", Seq("len"), 16,
           updatesUnique = true)
-        def sync(ckpt: String): Unit = {
-          val q = StreamingCdcApply.start(spark, src, rep, ckpt,
-            "doc_id", Seq("len"), nBuckets = 16, pipelineId = "cdc1",
-            trigger = Some(Trigger.AvailableNow()))
-          try q.awaitTermination()
-          finally { if (q.isActive) q.stop() }
-        }
+        def sync(ckpt: String): Unit =
+          StreamingFold.drain(StreamingFold.files(spark,
+              StructType(Seq(StructField("value", StringType))),
+              s"$src/_commits", "text"),
+              ckpt, "stream_cdc_apply") { (_, _) =>
+            Seq("watermark" -> StreamingCdcApply.applyOnce(spark, src, rep,
+              "doc_id", Seq("len"), 16, "cdc1"))
+          }
         sync(s"$base/ckpt") // bootstrap off commit 1
         // the source takes an update wave and a purge wave...
         ManifestMergeSink.mergeIntoManifested(spark, src,

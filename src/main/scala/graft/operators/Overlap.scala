@@ -227,15 +227,17 @@ object Overlap {
     "TRUE AS union_ok", "TRUE AS matches_batch,\n  TRUE AS union_ok")
 
   /** q160: the q159 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingSketch]] — foreachBatch per landed day
-    * file, Trigger.AvailableNow), files landed in reversed day order
-    * with a re-delivered slice — both absorbed by the monotone merge
-    * (the q142/q151 streamed-monotone-state pattern). Oracle IS
+    * ([[graft.streaming.StreamingFold]] — one micro-batch per landed day
+    * file), files landed in reversed day order with a re-delivered
+    * slice — both absorbed by the monotone merge (the q142/q151
+    * streamed-monotone-state pattern); the snapshot's overlap
+    * fingerprint is current after every micro-batch. Oracle IS
     * q159's. */
   def q160StreamSketch(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q160_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -246,20 +248,20 @@ object Overlap {
         concat(lit("d:"), col("doc_id")).as("key"), col("doc_id"))
       val a = docs.filter(col("doc_id") % 3 =!= 0)
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      fs.mkdirs(new Path(srcDir))
       Seq(
         a.filter(col("doc_id") > cut), // reversed day order
         a.filter(col("doc_id") <= cut)
           .unionByName(a.filter(col("doc_id") % 5 === 0)))
         .zipWithIndex.foreach { case (d, i) =>
-          d.coalesce(1).write.parquet(s"$base/stage_$i")
-          val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-          fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
+          StreamingFold.land(d, srcDir, s"day_$i.parquet")
         }
-      val q = graft.streaming.StreamingSketch.start(spark, srcDir, statePath,
-        s"$base/ckpt", "key", K, trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      val keySchema = StructType(Seq(
+        StructField("key", StringType), StructField("doc_id", LongType)))
+      StreamingFold.drain(StreamingFold.files(spark, keySchema, srcDir),
+          s"$base/ckpt", "stream_sketch") { (batch, _) =>
+        sketchIngest(spark, statePath, batch, "key", K)
+        Nil
+      }
       ingestedGateRow(spark, dir, statePath)
     } finally {
       fs.delete(new Path(base.toString), true)

@@ -190,46 +190,46 @@ object Purge {
        |ORDER BY sect, version, doc_id""".stripMargin
 
   /** q178: the purge QUEUE streamed — deletion requests land as marker
-    * files (each a parquet of doc_ids), [[graft.streaming.StreamingPurge]]
+    * files (each a parquet of doc_ids), [[graft.streaming.StreamingFold]]
     * drives [[MergeSink.purgePartitioned]] one request per micro-batch,
     * and a REPLAYED duplicate of the first request is landed in-gate:
     * purge idempotence (absent keys rewrite identical content) is the
     * at-least-once contract here — no ledger needed, unlike the
-    * additive-state sinks. Final snapshot = documents minus both
-    * request sets, row-level exact. */
+    * additive-state sinks, and order is immaterial because purge sets
+    * compose by union. Per batch, cost ∝ the buckets the request's keys
+    * hash to. Final snapshot = documents minus both request sets,
+    * row-level exact. */
   def q178StreamPurge(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
       import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      import graft.streaming.StreamingFold
       val base = java.nio.file.Files.createTempDirectory("graft_q178_")
       val conf = spark.sparkContext.hadoopConfiguration
       val fs = new Path(base.toString).getFileSystem(conf)
       try {
         val snap = s"$base/snap"
         val queue = s"$base/queue"
-        fs.mkdirs(new Path(queue))
         val docs = Tables.documents(spark, dir)
           .select(col("doc_id"), col("lang"), col("n_chars"))
           .localCheckpoint(true) // feeds the ingest and the request sets
         MergeSink.mergeIntoPartitioned(spark, snap, docs, "doc_id",
           Seq("lang", "n_chars"), NBuckets)
-        def land(ids: DataFrame, tag: String): Unit = {
-          ids.coalesce(1).write.parquet(s"$base/stage_$tag")
-          val part = fs.globStatus(
-            new Path(s"$base/stage_$tag/part-*.parquet"))(0).getPath
-          fs.rename(part, new Path(s"$queue/req_$tag.parquet"))
-        }
+        def land(ids: DataFrame, tag: String): Unit =
+          StreamingFold.land(ids, queue, s"req_$tag.parquet")
         land(docs.filter(col("doc_id") % PurgeMod === 0L)
           .select(col("doc_id")), "a")
         land(docs.filter(col("doc_id") % 11L === 0L)
           .select(col("doc_id")), "b")
         land(docs.filter(col("doc_id") % PurgeMod === 0L)
           .select(col("doc_id")), "a_replayed") // idempotence exercised
-        val q = graft.streaming.StreamingPurge.start(spark, queue, snap,
-          s"$base/ckpt", "doc_id", NBuckets,
-          trigger = Some(Trigger.AvailableNow()))
-        try q.awaitTermination()
-        finally { if (q.isActive) q.stop() }
+        StreamingFold.drain(StreamingFold.files(spark,
+            StructType(Seq(StructField("doc_id", LongType))), queue),
+            s"$base/ckpt", "stream_purge") { (batch, _) =>
+          val st = MergeSink.purgePartitioned(spark, snap, batch, "doc_id",
+            NBuckets)
+          Seq("purged" -> st.nPurged, "buckets" -> st.nBucketsTouched.toLong)
+        }
         MergeSink.readPartitioned(spark, snap)
           .select(col("doc_id"), col("lang"), col("n_chars").as("c"))
           .orderBy(col("doc_id"))

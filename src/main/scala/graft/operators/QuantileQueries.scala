@@ -337,12 +337,14 @@ object QuantileQueries {
   def q211KllByTypeIngestSql: String = q210KllByTypeSql
 
   /** q212: the q211 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingKllByGroup]] — foreachBatch per landed
-    * parity file, Trigger.AvailableNow). Oracle IS q210's — the
-    * per-stratum continuous-quantile triple closes. */
+    * ([[graft.streaming.StreamingFold]] — one micro-batch per landed
+    * parity file). Per-stratum tail dashboards (per-event-type latency,
+    * per-language loss) read the snapshot sketches instead of
+    * re-scanning the corpus. Oracle IS q210's — the per-stratum
+    * continuous-quantile triple closes. */
   def q212StreamKllByType(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
-      import org.apache.spark.sql.streaming.Trigger
+      import graft.streaming.{EventStreams, StreamingFold}
       val base = java.nio.file.Files.createTempDirectory("graft_q212_")
       val conf = spark.sparkContext.hadoopConfiguration
       val fs = new Path(base.toString).getFileSystem(conf)
@@ -350,20 +352,13 @@ object QuantileQueries {
         val srcDir = s"$base/arrivals"
         val statePath = s"$base/kll_state"
         val ev = Tables.events(spark, dir)
-        fs.mkdirs(new Path(srcDir))
-        Seq(ev.filter(col("event_id") % 2 === 0L),
-            ev.filter(col("event_id") % 2 =!= 0L))
-          .zipWithIndex.foreach { case (d, i) =>
-            d.coalesce(1).write.parquet(s"$base/stage_$i")
-            val part = fs.globStatus(
-              new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-            fs.rename(part, new Path(s"$srcDir/half_$i.parquet"))
-          }
-        val q = graft.streaming.StreamingKllByGroup.start(spark, srcDir,
-          statePath, s"$base/ckpt", groupCol = "event_type",
-          valueCol = "value", trigger = Some(Trigger.AvailableNow()))
-        try q.awaitTermination()
-        finally { if (q.isActive) q.stop() }
+        StreamingFold.land(ev.filter(col("event_id") % 2 === 0L), srcDir, "half_0.parquet")
+        StreamingFold.land(ev.filter(col("event_id") % 2 =!= 0L), srcDir, "half_1.parquet")
+        StreamingFold.drain(StreamingFold.files(spark, EventStreams.eventSchema, srcDir),
+            s"$base/ckpt", "stream_kll_by_group") { (batch, batchId) =>
+          StreamingFold.applied(kllIngestByGroup(spark, statePath, batch,
+            "event_type", "value", s"batch_$batchId"))
+        }
         kllBandReportByGroup(ev, "event_type", "value",
             kllByGroupFromState(spark, statePath))
           .localCheckpoint(true) // materialize before the state dir dies
@@ -373,12 +368,13 @@ object QuantileQueries {
   def q212StreamKllByTypeSql: String = q210KllByTypeSql
 
   /** q207: the q206 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingKll]] — foreachBatch per landed
-    * parity file, Trigger.AvailableNow). Oracle IS q205's — the
+    * ([[graft.streaming.StreamingFold]] — one micro-batch per landed
+    * parity file). Tail-latency/loss dashboards read the snapshot
+    * sketch instead of re-scanning the corpus. Oracle IS q205's — the
     * continuous-quantile triple closes. */
   def q207StreamKll(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
-      import org.apache.spark.sql.streaming.Trigger
+      import graft.streaming.{EventStreams, StreamingFold}
       val base = java.nio.file.Files.createTempDirectory("graft_q207_")
       val conf = spark.sparkContext.hadoopConfiguration
       val fs = new Path(base.toString).getFileSystem(conf)
@@ -386,20 +382,13 @@ object QuantileQueries {
         val srcDir = s"$base/arrivals"
         val statePath = s"$base/kll_state"
         val ev = Tables.events(spark, dir)
-        fs.mkdirs(new Path(srcDir))
-        Seq(ev.filter(col("event_id") % 2 === 0L),
-            ev.filter(col("event_id") % 2 =!= 0L))
-          .zipWithIndex.foreach { case (d, i) =>
-            d.coalesce(1).write.parquet(s"$base/stage_$i")
-            val part = fs.globStatus(
-              new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-            fs.rename(part, new Path(s"$srcDir/half_$i.parquet"))
-          }
-        val q = graft.streaming.StreamingKll.start(spark, srcDir, statePath,
-          s"$base/ckpt", valueCol = "value",
-          trigger = Some(Trigger.AvailableNow()))
-        try q.awaitTermination()
-        finally { if (q.isActive) q.stop() }
+        StreamingFold.land(ev.filter(col("event_id") % 2 === 0L), srcDir, "half_0.parquet")
+        StreamingFold.land(ev.filter(col("event_id") % 2 =!= 0L), srcDir, "half_1.parquet")
+        StreamingFold.drain(StreamingFold.files(spark, EventStreams.eventSchema, srcDir),
+            s"$base/ckpt", "stream_kll") { (batch, batchId) =>
+          StreamingFold.applied(
+            kllIngest(spark, statePath, batch, "value", s"batch_$batchId"))
+        }
         kllBandReport(values(spark, dir), "value",
             kllFromState(spark, statePath))
           .localCheckpoint(true) // materialize before the state dir dies

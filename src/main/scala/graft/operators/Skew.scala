@@ -285,40 +285,33 @@ object Skew {
   def q201SkewIngestSql: String = q195SkewReportSql
 
   /** q202: the q201 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingSkew]] — foreachBatch per landed
-    * parity file, Trigger.AvailableNow). Oracle IS q195's — the skew
+    * ([[graft.streaming.StreamingFold]] — one micro-batch per landed
+    * parity file, ledgered by batchId). Oracle IS q195's — the skew
     * monitor's batch/incremental/streamed triple closes. */
   def q202StreamSkew(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
     import graft.sinks.LedgeredState
+    import graft.streaming.{EventStreams, StreamingFold}
     val base = java.nio.file.Files.createTempDirectory("graft_q202_")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(base.toString).getFileSystem(conf)
     try {
       val srcDir = s"$base/arrivals"
       val statePath = s"$base/skew_state"
       val ev = Tables.events(spark, dir)
-      fs.mkdirs(new Path(srcDir))
-      Seq(ev.filter(col("event_id") % 2 === 0L),
-          ev.filter(col("event_id") % 2 =!= 0L))
-        .zipWithIndex.foreach { case (d, i) =>
-          d.coalesce(1).write.parquet(s"$base/stage_$i")
-          val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-          fs.rename(part, new Path(s"$srcDir/half_$i.parquet"))
-        }
-      val q = graft.streaming.StreamingSkew.start(spark, srcDir, statePath,
-        s"$base/ckpt", keyCol = "user_id",
-        trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamingFold.land(ev.filter(col("event_id") % 2 === 0L), srcDir, "half_0.parquet")
+      StreamingFold.land(ev.filter(col("event_id") % 2 =!= 0L), srcDir, "half_1.parquet")
+      StreamingFold.drain(StreamingFold.files(spark, EventStreams.eventSchema, srcDir),
+          s"$base/ckpt", "stream_skew") { (batch, batchId) =>
+        StreamingFold.applied(
+          skewIngest(spark, statePath, batch, "user_id", s"batch_$batchId"))
+      }
       skewReportFromCounts(
           LedgeredState.readPart(spark, statePath, "key_counts").get,
           SkewTopN, SkewTarget)
         .localCheckpoint(true) // materialize before the state dir dies
     } finally {
-      fs.delete(new Path(base.toString), true)
+      val p = new Path(base.toString)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -334,7 +334,7 @@ object StreamingQueries {
       |FROM events e JOIN customer c ON e.user_id = c.c_custkey""".stripMargin
 
   /** q46: the external-sink path under the driver's gate — stream the
-    * events fixture through [[graft.streaming.StreamingMerge]]'s
+    * events fixture through [[graft.streaming.StreamingFold]]'s
     * `foreachBatch` → [[graft.sinks.MergeSink.mergeInto]] into a parquet
     * snapshot, then gate on what DuckDB can recompute from the fixture.
     * This is the reference's own pipeline shape (mongo.py:103-163: bulk
@@ -358,6 +358,13 @@ object StreamingQueries {
     * stats are keyed by batchId (last-write-wins), so a foreachBatch
     * replay cannot double-count the totals.
     *
+    * A replayed batch re-merges, which is SAFE because the merge is
+    * idempotent on data — re-applying an update set leaves the snapshot
+    * unchanged (MergeSinkSpec "merge idempotence"); only the observed
+    * counts and `updatedAt` stamps reflect the replay. That mirrors the
+    * reference's unordered retry-free writes (mongo.py:107,139), where
+    * re-running a batch re-upserts the same documents.
+    *
     * Fixture invariants this gate leans on (true of the driver-generated
     * events tables; re-verify if the fixture is ever regenerated):
     * `event_id` is unique (each key decided in exactly one micro-batch);
@@ -368,9 +375,8 @@ object StreamingQueries {
     * rather than assuming the invariant. */
   def q46StreamMerge(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.sinks.MergeSink
-    import graft.streaming.StreamingMerge
+    import graft.streaming.StreamingFold
     val basePath = java.nio.file.Files.createTempDirectory("graft_q46_")
     val base = basePath.toString
     try {
@@ -388,11 +394,12 @@ object StreamingQueries {
       val src = EventStreams.readEventFixtureStream(spark, dir)
         .select(col("event_id"), col("user_id"),
           lit(null).cast("string").as("event_type"), col("value"))
-      val q = StreamingMerge.start(src, target, s"$base/ckpt", key, fields,
-        trigger = Some(Trigger.AvailableNow()),
-        onStats = (id, s) => { perBatch.put(id, s); () })
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamingFold.drain(src, s"$base/ckpt", "stream_merge") { (batch, batchId) =>
+        val s = MergeSink.mergeInto(spark, target, batch, key, fields)
+        perBatch.put(batchId, s)
+        Seq("n_matched" -> s.nMatched, "n_modified" -> s.nModified,
+          "n_upserted" -> s.nUpserted)
+      }
       import scala.jdk.CollectionConverters._
       val st = perBatch.values.asScala.foldLeft(MergeSink.MergeStats(0L, 0L, 0L)) {
         (t, s) => MergeSink.MergeStats(t.nMatched + s.nMatched,
@@ -421,7 +428,7 @@ object StreamingQueries {
     * source schema is fixed at query start, so a new column arrives as
     * a RESTARTED stream (the upgraded nightly job) whose batches carry
     * the wider schema. Run 1 drains day 1 (lang, n_chars) through
-    * [[graft.streaming.StreamingMerge]] into the snapshot; run 2 — new
+    * [[graft.streaming.StreamingFold]] into the snapshot; run 2 — new
     * arrivals dir, new checkpoint, wider field list — drains day 2
     * (every third document, now carrying `flag`). The merge sink's
     * evolution (q154's [[graft.sinks.MergeSink.evolvedFields]]) absorbs
@@ -435,9 +442,9 @@ object StreamingQueries {
   def q157StreamEvolution(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
-    import graft.streaming.StreamingMerge
+    import graft.sinks.MergeSink
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q157_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -447,25 +454,20 @@ object StreamingQueries {
         .select(col("doc_id"), col("lang"), col("n_chars"))
       val day2 = docs.filter(col("doc_id") % 3 === 0)
         .withColumn("flag", col("doc_id") % 7)
-      def land(df: DataFrame, arrivals: String, stage: String): Unit = {
-        fs.mkdirs(new Path(arrivals))
-        df.coalesce(1).write.parquet(stage)
-        val part = fs.globStatus(new Path(s"$stage/part-*.parquet"))(0).getPath
-        fs.rename(part, new Path(s"$arrivals/day.parquet"))
-      }
-      land(docs, s"$base/arrivals1", s"$base/stage1")
-      land(day2, s"$base/arrivals2", s"$base/stage2")
+      StreamingFold.land(docs, s"$base/arrivals1", "day.parquet")
+      StreamingFold.land(day2, s"$base/arrivals2", "day.parquet")
       val schema1 = StructType(Seq(StructField("doc_id", LongType),
         StructField("lang", StringType), StructField("n_chars", LongType)))
       val schema2 = schema1.add(StructField("flag", LongType))
       def drain(arrivals: String, schema: StructType, ckpt: String,
-                fields: Seq[String]): Unit = {
-        val src = spark.readStream.schema(schema).parquet(arrivals)
-        val q = StreamingMerge.start(src, target, ckpt, "doc_id", fields,
-          trigger = Some(Trigger.AvailableNow()))
-        try q.awaitTermination()
-        finally { if (q.isActive) q.stop() }
-      }
+                fields: Seq[String]): Unit =
+        // each run's arrivals are one file: the stream needs no file cap
+        StreamingFold.drain(spark.readStream.schema(schema).parquet(arrivals),
+            ckpt, "stream_merge") { (batch, _) =>
+          val s = MergeSink.mergeInto(spark, target, batch, "doc_id", fields)
+          Seq("n_matched" -> s.nMatched, "n_modified" -> s.nModified,
+            "n_upserted" -> s.nUpserted)
+        }
       drain(s"$base/arrivals1", schema1, s"$base/ckpt1", Seq("lang", "n_chars"))
       drain(s"$base/arrivals2", schema2, s"$base/ckpt2",
         Seq("lang", "n_chars", "flag"))
@@ -495,11 +497,11 @@ object StreamingQueries {
 
   /** q72: STREAMING near-dup ingest — q68's nightly pipeline run as a
     * Structured Streaming job. The corpus arrives as a parquet FILE
-    * stream (`maxFilesPerTrigger=1`, so each staged arrival file is its
+    * stream (one file per trigger, so each staged arrival file is its
     * own micro-batch) and every micro-batch runs
     * [[MergeQueries.neardupIngest]] through `foreachBatch` against the
     * persistent signature index — the same batch-only-sink bridge as
-    * [[graft.streaming.StreamingMerge]] (q46). The second arrival file
+    * q46 ([[graft.streaming.StreamingFold]]). The second arrival file
     * RE-DELIVERS every 5th document (at-least-once upstream), and
     * foreachBatch replays would re-deliver whole batches: both are
     * absorbed by the ingest's anti-join, so the gate certifies the
@@ -516,8 +518,7 @@ object StreamingQueries {
     * collision neighborhood regardless of corpus size. */
   def q72StreamNeardup(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.StreamingNeardup
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q72_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(base.toString).getFileSystem(conf)
@@ -527,24 +528,22 @@ object StreamingQueries {
       val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       // gate-harness split probe (one scalar), q65/q68 precedent
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      fs.mkdirs(new org.apache.hadoop.fs.Path(srcDir))
       Seq(
         docs.filter(col("doc_id") <= cut),
         docs.filter(col("doc_id") > cut)
           .union(docs.filter(col("doc_id") % 5 === 0)))
         .zipWithIndex.foreach { case (d, i) =>
-          // stage each arrival as ONE parquet file the source can
-          // micro-batch; coalesce(1) is harness (real arrivals come as
-          // whatever files the upstream lands)
-          d.coalesce(1).write.parquet(s"$base/stage_$i")
-          val part = fs.globStatus(
-            new org.apache.hadoop.fs.Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-          fs.rename(part, new org.apache.hadoop.fs.Path(s"$srcDir/day_$i.parquet"))
+          // one parquet file per arrival is harness (real arrivals come
+          // as whatever files the upstream lands)
+          StreamingFold.land(d, srcDir, s"day_$i.parquet")
         }
-      val q = StreamingNeardup.start(spark, srcDir, target, s"$base/ckpt",
-        trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamingFold.drain(StreamingFold.files(spark,
+          StreamingFold.docColumns("doc_id", "text"), srcDir),
+          s"$base/ckpt", "stream_neardup") { (batch, _) =>
+        val s = MergeQueries.neardupIngestManifested(spark, target, batch,
+          "doc_id", "text", 16)
+        Seq("n_matched" -> s.nMatched, "n_upserted" -> s.nUpserted)
+      }
       graft.sinks.ManifestMergeSink.readManifested(spark, target)
         .select(col("doc_id"), col("survivor_id"))
         .orderBy(col("doc_id"))
@@ -559,16 +558,16 @@ object StreamingQueries {
   val q72StreamNeardupSql: String = MergeQueries.q68IncrNeardupSql
 
   /** q233: the SCOPE-SHARDED stream — q72's harness against
-    * [[graft.streaming.StreamingNeardup.startScoped]] (arrivals carry
-    * `lang`, probes join on (lang, chunk, cval)); the final index must
+    * [[MergeQueries.neardupIngestScopedManifested]] per micro-batch
+    * (arrivals carry `lang`, the index stores it, probes join on
+    * (lang, chunk, cval)); the final index must
     * equal WITHIN-SCOPE batch clustering of the whole corpus, q229's
     * oracle verbatim. The continuous face of the 100 TB ingest shape:
     * a micro-batch's collision neighborhood is bounded by the scopes
     * it touches, not the corpus. */
   def q233StreamScopedNeardup(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.StreamingNeardup
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q233_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(base.toString).getFileSystem(conf)
@@ -578,22 +577,20 @@ object StreamingQueries {
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"), col("lang"))
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      fs.mkdirs(new org.apache.hadoop.fs.Path(srcDir))
       Seq(
         docs.filter(col("doc_id") <= cut),
         docs.filter(col("doc_id") > cut)
           .union(docs.filter(col("doc_id") % 5 === 0)))
         .zipWithIndex.foreach { case (d, i) =>
-          d.coalesce(1).write.parquet(s"$base/stage_$i")
-          val part = fs.globStatus(
-            new org.apache.hadoop.fs.Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-          fs.rename(part, new org.apache.hadoop.fs.Path(s"$srcDir/day_$i.parquet"))
+          StreamingFold.land(d, srcDir, s"day_$i.parquet")
         }
-      val q = StreamingNeardup.startScoped(spark, srcDir, target,
-        s"$base/ckpt", scopeCol = "lang",
-        trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamingFold.drain(StreamingFold.files(spark,
+          StreamingFold.docColumns("doc_id", "text", "lang"), srcDir),
+          s"$base/ckpt", "stream_neardup_scoped") { (batch, _) =>
+        val s = MergeQueries.neardupIngestScopedManifested(spark, target,
+          batch, "doc_id", "text", "lang", 16)
+        Seq("n_matched" -> s.nMatched, "n_upserted" -> s.nUpserted)
+      }
       graft.sinks.ManifestMergeSink.readManifested(spark, target)
         .select(col("doc_id"), col("lang"), col("survivor_id"))
         .orderBy(col("doc_id"))

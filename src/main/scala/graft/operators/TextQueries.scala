@@ -215,7 +215,10 @@ object TextQueries {
     *    exactly one part carried the gram, so max(owner) is its owner;
     *    any larger sum nulls it. A doc can thus LOSE novelty when a
     *    later batch re-says its gram — the correct semantics (novelty
-    *    is a corpus-relative signal, not a doc-local one).
+    *    is a corpus-relative signal, not a doc-local one), which is
+    *    also why row duplicates across batches are the upstream's to
+    *    prevent: the additive state cannot tell a duplicate row from a
+    *    genuine second occurrence, by design.
     *  - `doc_grams` (doc_id, n_grams): each doc's distinct-gram count
     *    (static per doc; summed defensively in the fold).
     *
@@ -297,15 +300,14 @@ object TextQueries {
   def q188NoveltyIngestSql: String = q187NoveltySql
 
   /** q191: the q188 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingNovelty]] — foreachBatch per landed
-    * day file, Trigger.AvailableNow; disjoint day files, the
-    * additive-state input contract) — q163's harness for the novelty
-    * index. Oracle IS q187's. */
+    * ([[graft.streaming.StreamingFold]] — one micro-batch per landed
+    * day file; disjoint day files, the additive-state input contract) —
+    * q163's harness for the novelty index. Oracle IS q187's. */
   def q191StreamNovelty(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
     import graft.sinks.LedgeredState
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q191_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -314,17 +316,15 @@ object TextQueries {
       val statePath = s"$base/novelty_state"
       val docs = Tables.documents(spark, dir)
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      fs.mkdirs(new Path(srcDir))
       Seq(docs.filter(col("doc_id") <= cut), docs.filter(col("doc_id") > cut))
         .zipWithIndex.foreach { case (d, i) =>
-          d.coalesce(1).write.parquet(s"$base/stage_$i")
-          val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-          fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
+          StreamingFold.land(d, srcDir, s"day_$i.parquet")
         }
-      val q = graft.streaming.StreamingNovelty.start(spark, srcDir,
-        statePath, s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamingFold.drain(StreamingFold.files(spark, StreamingFold.docSchema, srcDir),
+          s"$base/ckpt", "stream_novelty") { (batch, batchId) =>
+        StreamingFold.applied(
+          noveltyIngest(spark, statePath, batch, s"batch_$batchId"))
+      }
       noveltyFromState(
         LedgeredState.readPart(spark, statePath, "gram_df").get,
         LedgeredState.readPart(spark, statePath, "doc_grams").get, docs)
@@ -461,16 +461,16 @@ object TextQueries {
        |WHERE c >= ${ContainT} ORDER BY inner_id, outer_id""".stripMargin
 
   /** q193: the q192 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingContainment]] — foreachBatch per
-    * landed day file, Trigger.AvailableNow; disjoint day files, and the
-    * replay protection is the LEDGER+pairs atomic commit, exercised by
-    * the incremental gate). Oracle IS q183's — the containment family's
+    * ([[graft.streaming.StreamingFold]] — one micro-batch per landed day
+    * file; disjoint day files, and the replay protection is the
+    * LEDGER+pairs atomic commit, exercised by the incremental gate).
+    * Oracle IS q183's — the containment family's
     * batch/incremental/streamed triple closes. */
   def q193StreamContainment(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
     import graft.sinks.LedgeredState
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q193_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -479,18 +479,16 @@ object TextQueries {
       val statePath = s"$base/contain_state"
       val docs = Tables.documents(spark, dir)
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      fs.mkdirs(new Path(srcDir))
       Seq(docs.filter(col("doc_id") <= cut), docs.filter(col("doc_id") > cut))
         .zipWithIndex.foreach { case (d, i) =>
-          d.coalesce(1).write.parquet(s"$base/stage_$i")
-          val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-          fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
+          StreamingFold.land(d, srcDir, s"day_$i.parquet")
         }
-      val q = graft.streaming.StreamingContainment.start(spark, srcDir,
-        statePath, s"$base/ckpt", n = ContainN, threshold = ContainT,
-        blockCol = Some("source"), trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamingFold.drain(StreamingFold.files(spark, StreamingFold.docSchema, srcDir),
+          s"$base/ckpt", "stream_containment") { (batch, batchId) =>
+        StreamingFold.applied(Dedup.containmentIngest(spark, statePath,
+          batch, "doc_id", "text", ContainN, ContainT, Some("source"),
+          s"batch_$batchId"))
+      }
       LedgeredState.readPart(spark, statePath, "pairs").get
         .orderBy(col("inner_id"), col("outer_id"))
         .localCheckpoint(true) // materialize before the state dir dies
@@ -1876,15 +1874,15 @@ object TextQueries {
   def q110VocabIngestSql: String = q109VocabOovSql
 
   /** q112: the vocabulary ledger driven by a REAL file stream
-    * ([[graft.streaming.StreamingVocab]], one micro-batch per landed
-    * day file, Trigger.AvailableNow) — q110's state fold behind
-    * Structured Streaming's delivery, exactly as q87 is to q85. The
+    * ([[graft.streaming.StreamingFold]], one micro-batch per landed
+    * day file) — q110's state fold behind Structured Streaming's
+    * delivery, exactly as q87 is to q85, landing the same columns. The
     * harness lands two disjoint day files; the final snapshot-derived
     * coverage report must equal the whole-corpus batch answer — q109's
     * oracle, verbatim. */
   def q112StreamVocab(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q112_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(base.toString).getFileSystem(conf)
@@ -1894,18 +1892,16 @@ object TextQueries {
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      fs.mkdirs(new org.apache.hadoop.fs.Path(srcDir))
       Seq(docs.filter(col("doc_id") <= cut), docs.filter(col("doc_id") > cut))
         .zipWithIndex.foreach { case (d, i) =>
-          d.coalesce(1).write.parquet(s"$base/stage_$i")
-          val part = fs.globStatus(
-            new org.apache.hadoop.fs.Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-          fs.rename(part, new org.apache.hadoop.fs.Path(s"$srcDir/day_$i.parquet"))
+          StreamingFold.land(d, srcDir, s"day_$i.parquet")
         }
-      val q = graft.streaming.StreamingVocab.start(spark, srcDir, statePath,
-        s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamingFold.drain(StreamingFold.files(spark,
+          StreamingFold.docColumns("doc_id", "lang", "source", "text"), srcDir),
+          s"$base/ckpt", "stream_vocab") { (batch, batchId) =>
+        StreamingFold.applied(vocabIngest(spark, statePath, batch,
+          s"batch_$batchId", "lang", "text"))
+      }
       coverageFromTypeCounts(graft.sinks.LedgeredState.readPart(spark, statePath, "counts").get, VocabSize)
         .localCheckpoint(true) // materialize before the state dir is deleted
     } finally {

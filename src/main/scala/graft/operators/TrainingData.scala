@@ -2092,16 +2092,17 @@ object TrainingData {
   def q132SampleIngestSql: String = q128WeightedSampleSql
 
   /** q142: the q132 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingSample]] — foreachBatch per landed day
-    * file, Trigger.AvailableNow), with day 2's file RE-DELIVERING a
-    * slice of day 1 and the files landed in REVERSED day order — both
-    * legal because the top-k state is replay-absorbing and order-free
-    * (the strongest streamed-ingest contract, shared with q129).
-    * Oracle IS q128's, verbatim. */
+    * ([[graft.streaming.StreamingFold]] — one micro-batch per landed day
+    * file), with day 2's file RE-DELIVERING a slice of day 1 and the
+    * files landed in REVERSED day order — both legal because the top-k
+    * state is replay-absorbing and order-free (the strongest
+    * streamed-ingest contract, shared with q129: the landing directory
+    * carries no ordering obligation at all). Oracle IS q128's,
+    * verbatim. */
   def q142StreamSample(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q142_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -2115,16 +2116,16 @@ object TrainingData {
         docs.filter(col("doc_id") > cut), // later half lands FIRST
         docs.filter(col("doc_id") <= cut)
           .unionByName(docs.filter(col("doc_id") % 5 === 0))) // re-delivery
-      fs.mkdirs(new Path(srcDir))
       days.zipWithIndex.foreach { case (d, i) =>
-        d.coalesce(1).write.parquet(s"$base/stage_$i")
-        val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-        fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
+        StreamingFold.land(d, srcDir, s"day_$i.parquet")
       }
-      val q = graft.streaming.StreamingSample.start(spark, srcDir, statePath,
-        s"$base/ckpt", WsK, WsSeed, trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamingFold.drain(StreamingFold.files(spark,
+          StreamingFold.docColumns("doc_id", "lang", "n_chars"), srcDir),
+          s"$base/ckpt", "stream_sample") { (batch, _) =>
+        sampleIngest(spark, statePath, batch, "doc_id", "n_chars",
+          Seq("lang"), WsK, WsSeed)
+        Nil
+      }
       readSampleState(spark, statePath)
         .withColumn("rank",
           row_number().over(Window.orderBy(col("qk").asc, col("doc_id"))))
@@ -2268,15 +2269,15 @@ object TrainingData {
   }
 
   /** q151: the q141 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingSkyline]] — foreachBatch per landed
-    * day file, Trigger.AvailableNow), files landed in REVERSED day
-    * order with a re-delivered slice — legal under the monotone-
-    * mergeable contract (the q142 harness applied to the frontier).
-    * Oracle IS q134's, verbatim. */
+    * ([[graft.streaming.StreamingFold]] — one micro-batch per landed
+    * day file), files landed in REVERSED day order with a re-delivered
+    * slice — legal under the monotone-mergeable contract (the q142
+    * harness applied to the frontier). Oracle IS q134's, verbatim. */
   def q151StreamSkyline(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+    import graft.streaming.StreamingFold
     val base = java.nio.file.Files.createTempDirectory("graft_q151_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -2290,16 +2291,18 @@ object TrainingData {
         m.filter(col("doc_id") > cut), // later half lands FIRST
         m.filter(col("doc_id") <= cut)
           .unionByName(m.filter(col("doc_id") % 5 === 0))) // re-delivery
-      fs.mkdirs(new Path(srcDir))
       days.zipWithIndex.foreach { case (d, i) =>
-        d.coalesce(1).write.parquet(s"$base/stage_$i")
-        val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
-        fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
+        StreamingFold.land(d, srcDir, s"day_$i.parquet")
       }
-      val q = graft.streaming.StreamingSkyline.start(spark, srcDir, statePath,
-        s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      val scoredSchema = StructType(Seq(
+        StructField("doc_id", LongType), StructField("lang", StringType),
+        StructField("quality", DoubleType), StructField("n_tokens", LongType)))
+      StreamingFold.drain(StreamingFold.files(spark, scoredSchema, srcDir),
+          s"$base/ckpt", "stream_skyline") { (batch, _) =>
+        skylineIngest(spark, statePath, batch, "doc_id", "quality",
+          "n_tokens", Seq("lang"))
+        Nil
+      }
       readSkylineState(spark, statePath)
         .select(col("doc_id"), col("lang"), col("quality"), col("n_tokens"))
         .orderBy(col("lang"), col("quality").desc, col("n_tokens").desc,

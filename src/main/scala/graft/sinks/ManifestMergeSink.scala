@@ -407,7 +407,7 @@ object ManifestMergeSink {
     *
     * `txn` (optional): a (pipelineId, batchId) idempotence token for
     * AT-LEAST-ONCE callers (a streaming foreachBatch replaying after a
-    * restart — [[graft.streaming.StreamingMergeManifested]]). The commit
+    * restart — q220 through [[graft.streaming.StreamingFold]]). The commit
     * records the pipeline's batch high-water mark; a merge whose batchId
     * is ≤ the recorded mark returns zero stats WITHOUT writing or
     * committing — the replay is a no-op, exactly once end to end. The

@@ -1,18 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.sinks.ManifestMergeSink
 
-/** CONTINUOUS replica maintenance off the change feed — the streaming
-  * face of the q222 consumer loop: the source table's `_commits`
-  * directory IS the stream (each commit is one immutable file — the
-  * commit log doubles as a change notification channel, no side queue
-  * needed), and every landed commit triggers an apply of
-  * [[ManifestMergeSink.changesBetween]] from the replica's watermark to
-  * the source head.
+/** CONTINUOUS replica maintenance off the change feed — the building
+  * block of the q222 consumer loop and of its streamed face (q224,
+  * which drains the source table's `_commits` directory through
+  * [[StreamingFold]]: each commit is one immutable file, so the commit
+  * log doubles as the change-notification channel). Every notification
+  * applies [[ManifestMergeSink.changesBetween]] from the replica's
+  * watermark to the source head.
   *
   * Delivery semantics — exactly once, in ONE commit per span: the
   * replica's applied watermark is the SOURCE COMMIT SEQ recorded as a
@@ -34,8 +32,7 @@ import graft.sinks.ManifestMergeSink
   * same reader contract every as-of consumer has.
   *
   * Scale: per apply, IO ∝ the span's repointed-bucket bytes (the
-  * changesBetween argument) + one replica merge bounded the same way;
-  * the notification stream itself moves only kilobyte commit files. */
+  * changesBetween argument) + one replica merge bounded the same way. */
 object StreamingCdcApply {
 
   /** One catch-up step: apply everything between the replica's watermark
@@ -75,7 +72,7 @@ object StreamingCdcApply {
 
   /** Apply the span from the replica's watermark to the EXPLICIT source
     * commit `toSeq` — one fenced commit (deletes + upserts + watermark
-    * together), the single building block both the streaming loop above
+    * together), the single building block both the streamed consumer
     * and a batch version-by-version consumer (q222) share. Exactly-once
     * by construction: a replay (watermark already ≥ `toSeq`) no-ops on
     * the metadata read alone — no data read, no commit; a duplicate
@@ -110,27 +107,5 @@ object StreamingCdcApply {
         updatesUnique = true)
     }
     toSeq
-  }
-
-  def start(spark: SparkSession, srcTable: String, replicaTable: String,
-            checkpointDir: String, key: String, fields: Seq[String],
-            nBuckets: Int, pipelineId: String,
-            maxFilesPerTrigger: Int = 1,
-            trigger: Option[Trigger] = None): StreamingQuery = {
-    val writer = spark.readStream
-      .schema(StructType(Seq(StructField("value", StringType))))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(s"$srcTable/_commits")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (_: Dataset[Row], batchId: Long) =>
-        // the batch content is just the notification; the apply reads
-        // its span from the logs directly
-        val wm = applyOnce(spark, srcTable, replicaTable, key, fields,
-          nBuckets, pipelineId)
-        println(s"""{"stage":"stream_cdc_apply","batch":$batchId,""" +
-          s""""watermark":$wm}""")
-      }
-    trigger.fold(writer)(writer.trigger).start()
   }
 }

@@ -158,18 +158,23 @@ class EventStreamsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_stream_merge").toString
     val in = MemoryStream[(String, java.lang.Double, java.lang.Double)]
     val updates = in.toDF().toDF("k", "f1", "f2")
-    val q = graft.streaming.StreamingMerge.start(
-      updates, s"$dir/snapshot", s"$dir/ckpt", "k", Seq("f1", "f2"))
-    try {
-      in.addData(("a", 1.0, 2.0), ("b", 3.0, 4.0))
-      q.processAllAvailable()
-      assert(spark.read.parquet(s"$dir/snapshot").count() == 2)
-      in.addData(("a", 9.0, null), ("c", 7.0, 7.0)) // update + insert, null-skip
-      q.processAllAvailable()
-      val snap = spark.read.parquet(s"$dir/snapshot").orderBy("k").collect()
-      assert(snap.map(_.getAs[String]("k")).toSeq == Seq("a", "b", "c"))
-      assert(snap(0).getAs[Double]("f1") == 9.0 && snap(0).getAs[Double]("f2") == 2.0)
-    } finally q.stop()
+    // each drain runs what is available now; the second resumes from the
+    // first's checkpoint, so it sees only the data added after it
+    def drain(): Unit =
+      graft.streaming.StreamingFold.drain(updates, s"$dir/ckpt", "stream_merge") {
+        (batch, _) =>
+          val s = graft.sinks.MergeSink.mergeInto(spark, s"$dir/snapshot",
+            batch, "k", Seq("f1", "f2"))
+          Seq("n_upserted" -> s.nUpserted)
+      }
+    in.addData(("a", 1.0, 2.0), ("b", 3.0, 4.0))
+    drain()
+    assert(spark.read.parquet(s"$dir/snapshot").count() == 2)
+    in.addData(("a", 9.0, null), ("c", 7.0, 7.0)) // update + insert, null-skip
+    drain()
+    val snap = spark.read.parquet(s"$dir/snapshot").orderBy("k").collect()
+    assert(snap.map(_.getAs[String]("k")).toSeq == Seq("a", "b", "c"))
+    assert(snap(0).getAs[Double]("f1") == 9.0 && snap(0).getAs[Double]("f2") == 2.0)
   }
 
   test("q46: streamed merge into a snapshot matches fixture-derived anchors") {

@@ -281,8 +281,7 @@ class MergePropsSpec extends SparkSpec {
   test("streaming near-dup ingest micro-batches per file and equals direct ingest") {
     import spark.implicits._
     import operators.MergeQueries
-    import graft.streaming.StreamingNeardup
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.StreamingFold
     val dir = java.nio.file.Files.createTempDirectory("graft_nd_stream_").toString
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -298,20 +297,19 @@ class MergePropsSpec extends SparkSpec {
         docs.filter(col("doc_id") % 2 === 1),
         docs.filter(col("doc_id") % 2 === 0)
           .union(docs.filter(col("doc_id") % 4 === 1)))
-      fs.mkdirs(new org.apache.hadoop.fs.Path(srcDir))
       days.zipWithIndex.foreach { case (d, i) =>
-        d.coalesce(1).write.parquet(s"$dir/stage_$i")
-        val part = fs.globStatus(
-          new org.apache.hadoop.fs.Path(s"$dir/stage_$i/part-*.parquet"))(0).getPath
-        fs.rename(part, new org.apache.hadoop.fs.Path(s"$srcDir/f_$i.parquet"))
+        StreamingFold.land(d, srcDir, s"f_$i.parquet")
       }
       val seen = new java.util.concurrent.ConcurrentHashMap[Long, Long]
-      val q = StreamingNeardup.start(spark, srcDir, target, s"$dir/ckpt",
-        trigger = Some(Trigger.AvailableNow()),
-        onStats = (id, s) => { seen.put(id, s.nUpserted); () })
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
-      // the STREAMING claim: maxFilesPerTrigger=1 delivered one
+      StreamingFold.drain(StreamingFold.files(spark,
+          StreamingFold.docColumns("doc_id", "text"), srcDir),
+          s"$dir/ckpt", "stream_neardup") { (batch, batchId) =>
+        val s = MergeQueries.neardupIngestManifested(spark, target, batch,
+          "doc_id", "text", 16)
+        seen.put(batchId, s.nUpserted)
+        Seq("n_upserted" -> s.nUpserted)
+      }
+      // the STREAMING claim: one file per trigger delivered one
       // micro-batch per staged file, not one big batch
       assert(seen.size == 2,
         s"expected 2 micro-batches, got ${seen.size}: $seen")

@@ -13,9 +13,23 @@ class ObsConfigSpec extends SparkSpec {
   test("stage listener captures per-stage events with durations for a real job") {
     val dir = Files.createTempDirectory("graft_obs").toString
     SyntheticSource.write(SyntheticSource.generate(spark, 200, 2, seed = 3), s"$dir/updates")
-    val (stats, stages) = StageMetrics.withStageMetrics(spark) {
-      BulkUpdateJob.run(spark, s"$dir/updates", s"$dir/collection", Some(2))
+    // an independent listener over the same body: once withStageMetrics
+    // returns, the bus is drained, so both have seen the same stages
+    val sc = spark.sparkContext
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val independent = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        seen.add(e.stageInfo.stageId)
     }
+    sc.addSparkListener(independent)
+    val (stats, stages) =
+      try StageMetrics.withStageMetrics(spark) {
+        BulkUpdateJob.run(spark, s"$dir/updates", s"$dir/collection", Some(2))
+      } finally sc.removeSparkListener(independent)
+    import scala.jdk.CollectionConverters._
+    assert(stages.map(_.stageId).toSet == seen.asScala.toSet,
+      s"returned ${stages.map(_.stageId).sorted}, listener saw ${seen.asScala.toSeq.sorted}")
     assert(stats.nUpserted == 200)
     assert(stages.nonEmpty, "a merge job must produce at least one stage event")
     assert(stages.forall(_.status == "success"))
