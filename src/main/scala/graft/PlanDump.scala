@@ -126,7 +126,8 @@ object PlanDump {
     }
 
     // --- r19: the merge fold on a key-unique update set ---------------
-    // BEFORE: collapseUpdates (Window + row_number over one exchange)
+    // BEFORE: collapseUpdates (one exchange, one sort, one Window holding
+    // every field's last-non-null and the row_number pick)
     // AFTER:  normalizeUnique (projection only) — the updatesUnique fast
     // path every induction derive / groupBy-keyed fold now takes
     {

@@ -1,8 +1,7 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import graft.{GraftConfig, GraftSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{GraftConfig, GraftSession, Jsons}
 import graft.obs.StageMetrics
 import graft.sinks.MergeSink
 import graft.sources.SyntheticSource
@@ -13,7 +12,11 @@ import graft.update.Statements
   * declared reference schema (schema-on-read validation, parquet.py:39),
   * builds upsert statements through the statement boundary (null-key /
   * empty-set guard ladder, mongo.py:28-100), and merges them into a keyed
-  * parquet snapshot with upsert semantics.
+  * parquet snapshot with upsert semantics. The sink reads columns, so
+  * the boundary hands it the statements in column form
+  * ([[Statements.widen]]: key, one double column per field, the order
+  * column) rather than as `(key, set_fields)` maps: scan → statements
+  * is one codegen'd filter + projection ahead of the fold's one sort.
   *
   * The reference's batch_size/concurrent_tasks knobs (mongo_update.py:26-42)
   * bounded rows-in-memory and write fan-out; in Spark both collapse into
@@ -36,32 +39,50 @@ object BulkUpdateJob {
           tolerant: Boolean = false,
           orderCol: Option[String] = None): MergeSink.MergeStats = {
     try {
-      val raw = spark.read.schema(SyntheticSource.schema).parquet(updatesPath)
-      val updates = numPartitions.fold(raw)(n => raw.repartition(n, raw(SyntheticSource.idColumn)))
-      // Statement boundary (reference mongo.py:28-100): null keys and
-      // all-null payload rows drop HERE, before the sink — then the (key,
-      // set_fields) statements widen back to sink columns. element_at on a
-      // missing map key yields null, which the merge's coalesce null-skips.
-      // an orderCol that IS a payload field is already in the statement
-      // output; only genuinely extra columns ride the passthrough
-      val extra = orderCol.filterNot(c =>
-        SyntheticSource.payloadFields.contains(c) || c == SyntheticSource.idColumn).toSeq
-      val stmts = Statements.build(updates, SyntheticSource.idColumn,
-        SyntheticSource.payloadFields, passthrough = extra)
-      val wide = stmts.select(
-        col("key").as(SyntheticSource.idColumn) +:
-        SyntheticSource.payloadFields.map(f => element_at(col("set_fields"), f).as(f)) ++:
-        extra.map(col): _*)
-      MergeSink.mergeInto(spark, targetPath, wide,
+      MergeSink.mergeInto(spark, targetPath,
+        statements(spark, updatesPath, numPartitions, orderCol),
         SyntheticSource.idColumn, SyntheticSource.payloadFields,
         orderCol = orderCol)
     } catch {
       case e: Exception if tolerant =>
-        System.err.println(
-          s"""{"stage":"update","status":"failed","error":"${e.getClass.getSimpleName}"}""")
+        System.err.println(failureLine(e))
         MergeSink.MergeStats(0, 0, 0)
     }
   }
+
+  /** The statement boundary (reference mongo.py:28-100) over the updates
+    * directory: null keys and all-null payload rows drop HERE, before the
+    * sink, and the kept rows are already in sink shape (key, double
+    * fields, `orderCol`); a null field is null-skipped by the merge's
+    * coalesce. */
+  private[graft] def statements(spark: SparkSession, updatesPath: String,
+                                numPartitions: Option[Int],
+                                orderCol: Option[String]): DataFrame = {
+    val raw = spark.read.schema(SyntheticSource.schema).parquet(updatesPath)
+    val updates = numPartitions.fold(raw)(n => raw.repartition(n, raw(SyntheticSource.idColumn)))
+    Statements.widen(updates, SyntheticSource.idColumn,
+      SyntheticSource.payloadFields, passthrough = orderCol.toSeq)
+  }
+
+  /** One `{"stage":"update","status":…}` event line; `fields` values are
+    * JSON literals, every string goes through [[Jsons.quote]]. */
+  private def eventLine(status: String, fields: (String, String)*): String =
+    (("stage" -> Jsons.quote("update")) +: ("status" -> Jsons.quote(status)) +: fields)
+      .map { case (k, v) => s"${Jsons.quote(k)}:$v" }
+      .mkString("{", ",", "}")
+
+  /** The tolerant path's error line: exception class and message. */
+  private[graft] def failureLine(e: Throwable): String =
+    eventLine("failed",
+      "error" -> Jsons.quote(e.getClass.getSimpleName),
+      "message" -> Option(e.getMessage).map(Jsons.quote).getOrElse("null"))
+
+  /** The job summary line: the merge's reference-shaped counts. */
+  private[graft] def summaryLine(stats: MergeSink.MergeStats): String =
+    eventLine("success",
+      "n_matched" -> stats.nMatched.toString,
+      "n_modified" -> stats.nModified.toString,
+      "n_upserted" -> stats.nUpserted.toString)
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: BulkUpdateJob <updatesPath> <targetPath> [numPartitions]")
@@ -74,7 +95,7 @@ object BulkUpdateJob {
     // per-stage structured events (reference log.py dict logs + per-slice
     // timings mongo.py:243-267), then the job summary line
     stages.foreach(e => println(e.toJson))
-    println(s"""{"stage":"update","status":"success","n_matched":${stats.nMatched},"n_modified":${stats.nModified},"n_upserted":${stats.nUpserted}}""")
+    println(summaryLine(stats))
     spark.stop()
   }
 }

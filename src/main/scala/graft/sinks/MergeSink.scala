@@ -25,7 +25,12 @@ import org.apache.spark.sql.functions._
   *     field); a set-oriented merge folds them explicitly instead:
   *     per field, the last non-null value in `orderCol` order wins, which
   *     reproduces sequential null-skip application when an arrival-order
-  *     column exists, and is deterministic when it doesn't.
+  *     column exists, and is deterministic when it doesn't. The fold is
+  *     ONE sort per merge ([[collapseUpdates]]). Tie rule: on rows tied
+  *     in `orderCol`, a plan sorting once per field could take different
+  *     fields from different tied rows in different orders; one sort
+  *     reads every field in the same order, and the order among the tied
+  *     rows is still unspecified.
   *
   * Scale design: the merge is one full-outer shuffle join on the key —
   * at cluster scale the target snapshot should be written bucketed by the
@@ -43,21 +48,40 @@ object MergeSink {
 
   /** Fold duplicate update keys: per payload field, the last non-null value
     * in `orderCol` order (reference applies per-row statements sequentially;
-    * mongo.py:60-63 + SURVEY §2A item 5). One shuffle on the key; the
-    * window and the subsequent merge join share that partitioning. */
+    * mongo.py:60-63 + SURVEY §2A item 5). Without `orderCol` the rows of a
+    * key are ordered by their field values, ascending field by field with
+    * nulls first (the order of `struct(fields)`), so the fold depends only
+    * on the rows, not on their arrival order.
+    *
+    * ONE sort, whatever the field count: the order is plain columns (the
+    * fields, or `orderCol` staged once as `__ord`), and every field's
+    * `last(f, ignoreNulls)` over the unbounded frame plus the `row_number`
+    * that picks one row per key are computed in one `select` over one
+    * partition/order spec — one Exchange on the key, one Sort, one Window.
+    * (Spark re-aliases an inline order expression such as `struct(fields)`
+    * per window expression, and windows ordered by different aliases
+    * cannot share a sort.) The merge join reuses the key partitioning and
+    * the key-prefixed sort order (plan-audited).
+    *
+    * Ties in `orderCol`: every field is read in the same order of the
+    * tied rows, so the fold equals sequential application in one order of
+    * them; which order that is stays unspecified. */
   def collapseUpdates(updates: DataFrame, key: String, fields: Seq[String],
                       orderCol: Option[String] = None): DataFrame = {
-    val ord: Column = orderCol.map(col).getOrElse(struct(fields.map(col): _*))
-    val w = Window.partitionBy(col(key)).orderBy(ord.asc)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val folded = fields.foldLeft(updates) { (df, f) =>
-      df.withColumn(s"__folded_$f", last(col(f), ignoreNulls = true).over(w))
-    }
-    val rn = row_number().over(Window.partitionBy(col(key)).orderBy(ord.desc))
-    folded
-      .withColumn("__rn", rn)
+    val staged = updates.select(
+      col(key) +: fields.map(col) ++: orderCol.map(c => col(c).as("__ord")).toSeq: _*)
+    val ord =
+      if (orderCol.isDefined) Seq("__ord") else if (fields.nonEmpty) fields else Seq(key)
+    val byOrd = Window.partitionBy(col(key)).orderBy(ord.map(col(_).asc): _*)
+    val whole = byOrd.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    // every row of a key carries the same folded values (unbounded
+    // frame), so the first row in sort order is as good as any
+    staged
+      .select(col(key) +:
+        fields.map(f => last(col(f), ignoreNulls = true).over(whole).as(f)) :+
+        row_number().over(byOrd).as("__rn"): _*)
       .filter(col("__rn") === 1)
-      .select(col(key) +: fields.map(f => col(s"__folded_$f").as(f)): _*)
+      .drop("__rn")
   }
 
   /** [[collapseUpdates]]'s fast path for callers whose update set is

@@ -11,7 +11,9 @@ import graft.sinks.MergeSink
   *  - idempotence: applying an update set twice equals applying it once;
   *  - null-skip never loses data: a stored non-null survives any update;
   *  - upsert count = |update keys ∉ target|;
-  *  - duplicate-key fold ≡ sequential per-row application. */
+  *  - duplicate-key fold ≡ sequential per-row application;
+  *  - without an order column the fold is a function of the row values
+  *    alone (a reference fold, whatever the arrival order). */
 class MergePropsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -96,6 +98,28 @@ class MergePropsSpec extends SparkSpec {
           ordered.flatMap(_._3.toList).lastOption)
       }.toSet
       assert(folded == expected, s"seed=$seed")
+    }
+  }
+
+  test("fold without orderCol equals the struct-order reference fold, under any row permutation") {
+    // without an order column the fold orders a key's rows by
+    // struct(fields) ascending (nulls first, field by field) and takes
+    // each field's last non-null value in that order
+    val nullsFirst: Ordering[Option[Double]] = Ordering.Option(Ordering.Double.TotalOrdering)
+    val structOrder: Ordering[(Option[Double], Option[Double])] =
+      Ordering.Tuple2(nullsFirst, nullsFirst)
+    for (seed <- 1L to 8L) {
+      val p = Gen.Parameters.default
+      val dups = rowsGen.pureApply(p, Seed(seed + 7000)) // duplicates allowed
+      val expected = dups.groupBy(_._1).map { case (k, rs) =>
+        val ordered = rs.sortBy(r => (r._2, r._3))(structOrder)
+        (k, ordered.flatMap(_._2.toList).lastOption, ordered.flatMap(_._3.toList).lastOption)
+      }.toSet
+      val rnd = new scala.util.Random(seed)
+      for (perm <- Seq(dups, dups.reverse, rnd.shuffle(dups))) {
+        val folded = snap(MergeSink.collapseUpdates(df(perm).repartition(3), "k", fields))
+        assert(folded == expected, s"seed=$seed rows=$perm")
+      }
     }
   }
 

@@ -68,6 +68,35 @@ class ObsConfigSpec extends SparkSpec {
     }
   }
 
+  test("the update job's failure and summary lines are valid JSON, hostile text included") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    val mapper = new ObjectMapper()
+    val msg = "no such path \"x\\y\"\n\tat line 2"
+    val fail = mapper.readTree(BulkUpdateJob.failureLine(new IllegalStateException(msg)))
+    assert(fail.get("stage").asText == "update" && fail.get("status").asText == "failed")
+    assert(fail.get("error").asText == "IllegalStateException")
+    assert(fail.get("message").asText == msg)
+    assert(mapper.readTree(BulkUpdateJob.failureLine(new RuntimeException()))
+      .get("message").isNull)
+    // the line the tolerant path really prints
+    val dir = Files.createTempDirectory("graft_tolerant_line").toString
+    val buf = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try BulkUpdateJob.run(spark, s"$dir/missing \"q\"", s"$dir/collection", None,
+      tolerant = true)
+    finally System.setErr(err)
+    val printed = buf.toString("UTF-8").linesIterator
+      .filter(_.startsWith("{\"stage\":\"update\"")).toSeq
+    assert(printed.size == 1, buf.toString("UTF-8"))
+    val j = mapper.readTree(printed.head)
+    assert(j.get("status").asText == "failed" && j.get("message").asText.contains("missing \"q\""),
+      printed.head)
+    val ok = mapper.readTree(BulkUpdateJob.summaryLine(graft.sinks.MergeSink.MergeStats(3, 2, 1)))
+    assert(ok.get("status").asText == "success" && ok.get("n_matched").asLong == 3 &&
+      ok.get("n_modified").asLong == 2 && ok.get("n_upserted").asLong == 1)
+  }
+
   test("GRAFT_MERGE_ORDER_COL flows through the statement boundary to the fold") {
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft_ordercol").toString

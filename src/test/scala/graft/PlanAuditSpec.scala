@@ -786,4 +786,51 @@ class PlanAuditSpec extends SparkSpec {
         s"the variant exchange must hash the scope key too:\n${plan(scoped)}")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
+
+  test("the upsert fold is ONE exchange, sort and window; the merge join reuses them (BulkUpdateJob)") {
+    import graft.jobs.BulkUpdateJob
+    import graft.sinks.MergeSink
+    import graft.sources.SyntheticSource
+    val dir = java.nio.file.Files.createTempDirectory("graft_fold_plan").toString
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      SyntheticSource.write(SyntheticSource.generate(spark, 200, 2, seed = 7,
+        nullFraction = 0.2), s"$dir/updates")
+      SyntheticSource.generate(spark, 400, 2, seed = 7)
+        .withColumn("updatedAt", to_timestamp(lit("2020-01-01 00:00:00")))
+        .write.parquet(s"$dir/target")
+      // physical operators by name at the start of a plan-tree line
+      def ops(df: DataFrame, op: String): Int =
+        s"(?m)^[\\s:+\\-*()0-9]*$op[ (]".r.findAllIn(plan(df)).length
+      def hashExchanges(df: DataFrame): Int =
+        "Exchange hashpartitioning".r.findAllIn(plan(df)).length
+      val fields = SyntheticSource.payloadFields
+      assert(fields.size == 5)
+      // the statement boundary widens with plain column expressions: no
+      // interpreted higher-order map round-trip per row
+      val stmts = BulkUpdateJob.statements(spark, s"$dir/updates", None, None)
+      assert(!plan(stmts).contains("map_filter") && !plan(stmts).contains("element_at"),
+        s"the update frame must not pack rows into a map:\n${plan(stmts)}")
+      // the fold: one shuffle on the key, one sort, one window for all
+      // five fields and the row pick
+      val folded = MergeSink.collapseUpdates(stmts, SyntheticSource.idColumn, fields)
+      assert(ops(folded, "Window") == 1 && ops(folded, "Sort") == 1 &&
+        hashExchanges(folded) == 1,
+        s"collapseUpdates must plan one Window, one Sort, one Exchange:\n${plan(folded)}")
+      // the merge join: broadcast disabled (a corpus-sized target never
+      // broadcasts), the update side arrives partitioned and sorted on
+      // the key — only the target side may add an exchange and a sort
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+      val target = Parquets.read(spark, s"$dir/target")
+      val (merged, _) = MergeSink.mergePlanObserved(target, folded,
+        SyntheticSource.idColumn, fields)
+      assert(hashExchanges(merged) == 2 && ops(merged, "Sort") <= 2 &&
+        ops(merged, "Window") == 1,
+        s"the join must reuse the fold's exchange and sort:\n${plan(merged)}")
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
 }
