@@ -27,6 +27,18 @@ object Sparks {
     perPartition.flatten.distinct.sorted.toSeq
   }
 
+  /** Whether `df` has no row, in ONE job over every partition with no
+    * LIMIT in the plan: each task answers whether its partition is empty
+    * after at most one row. `Dataset.isEmpty` plans a LIMIT, and LIMIT
+    * code names a JVM-global counter (`_limit_counter_N`), so every call
+    * generates new source and compiles new classes; an empty answer also
+    * costs it several jobs, as `executeTake` widens its partition scan.
+    * This plan generates the same source on every call, so a loop probing
+    * the same shape each round compiles it once. */
+  def isEmpty(df: DataFrame): Boolean =
+    df.queryExecution.toRdd.mapPartitions(it => Iterator(!it.hasNext))
+      .collect().forall(identity)
+
   /** PARALLELISM FLOOR for CPU-dense projections over NARROW scans
     * (optimization guide §2.5 "input skew: one huge unsplittable file …
     * otherwise repartition immediately after the read"): when the

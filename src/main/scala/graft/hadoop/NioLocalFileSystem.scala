@@ -1,12 +1,12 @@
 package graft.hadoop
 
-import java.io.OutputStream
+import java.io.{FileNotFoundException, OutputStream}
 import java.net.URI
-import java.nio.file.{Files, Paths}
-import java.nio.file.attribute.PosixFilePermission
+import java.nio.file.{Files, LinkOption, NoSuchFileException, Paths}
+import java.nio.file.attribute.{PosixFileAttributes, PosixFilePermission, PosixFilePermissions}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, FSLinkResolver, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.{FsAction, FsPermission}
 
 /** RawLocalFileSystem without the per-file process forks.
@@ -21,7 +21,23 @@ import org.apache.hadoop.fs.permission.{FsAction, FsPermission}
   *  - creates write with the process umask (permission = null → plain
   *    FileOutputStream, no chmod at all);
   *  - explicit setPermission calls go through java.nio
-  *    setPosixFilePermissions — a syscall, not a fork.
+  *    setPosixFilePermissions — a syscall, not a fork;
+  *  - link status (every FileContext rename asks for it, twice) comes
+  *    from an `lstat` through java.nio. The stock path forks `readlink`
+  *    on the path's `file:/…` string, which always fails, so it cost a
+  *    fork per call and never saw a symlink.
+  *
+  * PERMISSION CONTRACT — a deviation from `RawLocalFileSystem`: a
+  * permission passed to `create` is DROPPED. The file gets exactly the
+  * mode a plain `FileOutputStream` gets under the process umask, so a
+  * caller asking for a restricted mode (say 0600 for a secret) gets the
+  * umask default with no warning. Callers that need a mode must call
+  * `setPermission` after the create; that applies the user, group and
+  * other bits exactly, but not the sticky bit, which
+  * `PosixFilePermission` cannot express. Nothing in the engine writes
+  * restricted files: every local file it writes is data, a manifest or
+  * a checkpoint under the session's own dirs.
+  * `NioLocalFileSystemSpec` pins both halves.
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
 
@@ -53,6 +69,29 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
       PosixFilePermission.OTHERS_WRITE, PosixFilePermission.OTHERS_EXECUTE)
     Files.setPosixFilePermissions(Paths.get(pathToFile(p).getPath), perms)
   }
+
+  override def getFileLinkStatus(f: Path): FileStatus = {
+    val p = pathToFile(f).toPath
+    val attrs =
+      try Files.readAttributes(p, classOf[PosixFileAttributes], LinkOption.NOFOLLOW_LINKS)
+      catch { case _: NoSuchFileException =>
+        throw new FileNotFoundException(s"File $f does not exist") }
+    if (!attrs.isSymbolicLink) getFileStatus(f)
+    else {
+      // the link's own attributes (lstat), its target qualified as
+      // RawLocalFileSystem qualifies it
+      val qualified = makeQualified(f)
+      new FileStatus(attrs.size, false, 1, getDefaultBlockSize(f),
+        attrs.lastModifiedTime.toMillis, attrs.lastAccessTime.toMillis,
+        FsPermission.valueOf("-" + PosixFilePermissions.toString(attrs.permissions)),
+        attrs.owner.getName, attrs.group.getName,
+        FSLinkResolver.qualifySymlinkTarget(getUri, qualified, getLinkTarget(f)),
+        qualified)
+    }
+  }
+
+  override def getLinkTarget(f: Path): Path =
+    new Path(Files.readSymbolicLink(pathToFile(f).toPath).toString)
 }
 
 /** Local `file://` FileSystem without per-file chmod forks or checksum

@@ -830,12 +830,12 @@ object Dedup {
       // when the edge frames carry rich constraints (observed composing
       // this loop into the q103 media-ingest pipeline).
       // ONE action, not two: the union of both anti-joins is empty iff
-      // both are — halves the per-round convergence-probe job count
-      converged = nNext == nEdges && {
+      // both are — halves the per-round convergence-probe job count.
+      // Sparks.isEmpty, not Dataset.isEmpty: its LIMIT compiled new
+      // classes on every probe
+      converged = nNext == nEdges && graft.Sparks.isEmpty(
         next.join(edges, Seq("u", "v"), "left_anti")
-          .union(edges.join(next, Seq("u", "v"), "left_anti"))
-          .isEmpty
-      }
+          .union(edges.join(next, Seq("u", "v"), "left_anti")))
       edges = next
       nEdges = nNext
       it += 1

@@ -10,8 +10,8 @@ import graft.sinks.MergeSink
   * fixtures: `orders` is the target collection, an aggregate of `lineitem`
   * is the update set (plus synthetic unmatched keys to exercise inserts,
   * and a null status column to exercise null-skip). The timestamps are
-  * pinned so the result is deterministic; the production path stamps
-  * `current_timestamp()` (see [[graft.sinks.MergeSink.mergeInto]]).
+  * pinned so the result is deterministic; the production path stamps the
+  * merge's own instant (see [[graft.sinks.MergeSink.stampNow]]).
   */
 object MergeQueries {
 

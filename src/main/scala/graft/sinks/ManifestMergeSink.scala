@@ -334,6 +334,15 @@ object ManifestMergeSink {
     else spark.read.schema(st.schema).parquet(dirs: _*)
   }
 
+  /** [[MergeSink.dictionaryOptions]] for a merge generation, learned from
+    * the dirs it replaces: the touched buckets' dirs in `st`. */
+  private def dictionaryOptions(spark: SparkSession, root: Path,
+                                st: Option[ManifestState], touched: Seq[Long],
+                                key: String): Map[String, String] =
+    MergeSink.dictionaryOptions(spark.sparkContext.hadoopConfiguration,
+      st.toSeq.flatMap(s => touched.sorted.flatMap(s.mapping.get)).map(new Path(root, _)),
+      key)
+
   /** Read the whole snapshot with its committed schema (files written
     * before an evolution read null for the evolved columns — parquet's
     * missing-column semantics, pinned by the schema the commit carries). */
@@ -495,7 +504,8 @@ object ManifestMergeSink {
       // has a fragmented layout to repair.
       val toWrite = merged.withColumn("pb", pb(col(key), n))
       (if (distributeByBucket) toWrite.repartition(col("pb")) else toWrite)
-        .write.mode("overwrite").partitionBy("pb")
+        .write.options(dictionaryOptions(spark, root, st, touched, key))
+        .mode("overwrite").partitionBy("pb")
         .parquet(new Path(root, gdir).toString)
       val mySchema = merged.schema
       val touchedAtRead = touched.map(b =>
@@ -702,7 +712,8 @@ object ManifestMergeSink {
       // each bucket's rows land in exactly one file.
       merged.withColumn("pb", pb(col(key), n))
         .repartition(col("pb"))
-        .write.mode("overwrite").partitionBy("pb")
+        .write.options(dictionaryOptions(spark, root, st, touched, key))
+        .mode("overwrite").partitionBy("pb")
         .parquet(new Path(root, gdir).toString)
       val written = fs.listStatus(new Path(root, gdir))
         .filter(_.getPath.getName.startsWith("pb="))
