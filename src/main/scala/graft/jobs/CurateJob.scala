@@ -22,13 +22,13 @@ import graft.sinks.{CommitLog, DirManifest}
   * Writes four outputs under `<out>/`: `report` (the one-scan quality
   * dashboard), `funnel` (per-stage counts — the run's audit row),
   * `shards` (the shuffled corpus layout a loader streams), `packs`
-  * (the token-budget pack segments). By DEFAULT they publish
-  * ATOMICALLY: all four land in one immutable generation dir and flip
-  * together through a single commit-file create (read them back with
-  * [[readOutput]] — old out-dirs and `--legacy-dirs` runs fall back to
-  * the fixed subdirectories). Every decision is deterministic (seeded
-  * hashes), so a re-run reproduces the same outputs — the property
-  * that makes the nightly run idempotent.
+  * (the token-budget pack segments). They publish ATOMICALLY: all
+  * four land in one immutable generation dir and flip together
+  * through a single commit-file create (read them back with
+  * [[readOutput]] — out-dirs published before the commit-log
+  * migration fall back to the fixed subdirectories). Every decision is
+  * deterministic (seeded hashes), so a re-run reproduces the same
+  * outputs — the property that makes the nightly run idempotent.
   *
   * Scale shape: one corpus scan for the report; the filter chain is a
   * narrow map fused into the dedup scan; near-dup runs AFTER exact
@@ -39,7 +39,7 @@ import graft.sinks.{CommitLog, DirManifest}
   * a corpus engine owes its user.
   *
   * Usage: CurateJob <docsParquetDirOrFixtureDir> <outDir>
-  *        [--skip-<stage> ...] [--canonical-survivors] [--legacy-dirs]
+  *        [--skip-<stage> ...] [--canonical-survivors]
   */
 object CurateJob {
 
@@ -66,8 +66,7 @@ object CurateJob {
   final case class CurateConfig(repetition: Boolean = true, quality: Boolean = true,
                                 pii: Boolean = true, neardup: Boolean = true,
                                 sample: Boolean = true,
-                                canonicalSurvivors: Boolean = false,
-                                atomicPublish: Boolean = true)
+                                canonicalSurvivors: Boolean = false)
 
   object CurateConfig {
     def fromFlags(flags: Seq[String]): CurateConfig =
@@ -78,10 +77,9 @@ object CurateJob {
         case (c, "--skip-neardup")    => c.copy(neardup = false)
         case (c, "--skip-sample")     => c.copy(sample = false)
         case (c, "--canonical-survivors") => c.copy(canonicalSurvivors = true)
-        case (c, "--legacy-dirs")     => c.copy(atomicPublish = false)
         case (_, f) => throw new IllegalArgumentException(
           s"unknown flag '$f' (known: --skip-{repetition,quality,pii,neardup,sample}, " +
-            "--canonical-survivors, --legacy-dirs)")
+            "--canonical-survivors)")
       }
   }
 
@@ -89,10 +87,10 @@ object CurateJob {
   private val Outputs = Seq("report", "funnel", "shards", "packs")
 
   /** Read a published output (`report` / `funnel` / `shards` / `packs`)
-    * from a curate out-dir: resolves the commit-log head's pointer when
-    * the dir publishes atomically (the default), falls back to the
-    * legacy fixed subdirectory layout (`--legacy-dirs` runs, or
-    * pre-migration out-dirs) — readers migrate without a flag day. */
+    * from a curate out-dir: resolves the commit-log head's pointer, and
+    * falls back to the fixed subdirectory layout of out-dirs published
+    * before the commit-log migration — readers migrate without a flag
+    * day. */
   def readOutput(spark: SparkSession, outDir: String,
                  name: String): DataFrame = {
     require(Outputs.contains(name),
@@ -121,7 +119,7 @@ object CurateJob {
     val docs = Parquets.read(spark, path)
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
 
-    // OUTPUT ROUTING — default ATOMIC: the four outputs land under one
+    // OUTPUT ROUTING — ATOMIC: the four outputs land under one
     // immutable generation dir, invisible to readers until the single
     // commit-file create below flips them together (the commit-log
     // migration applied to the nightly run's PUBLISH step: a reader
@@ -130,22 +128,8 @@ object CurateJob {
     // generation instead of a half-overwritten out-dir — the exact
     // window mode("overwrite")'s delete-then-write leaves open, and on
     // an object store there is no rename to close it with).
-    // `--legacy-dirs` keeps the fixed-subdirectory compat layout.
     val gen = "g-" + java.util.UUID.randomUUID().toString.take(8)
-    def out(name: String): String =
-      if (cfg.atomicPublish) s"$outDir/$gen/$name" else s"$outDir/$name"
-    if (!cfg.atomicPublish) {
-      // a committed out-dir SHADOWS the fixed subdirectories: readers
-      // resolve the head's pointers first, so a --legacy-dirs run over
-      // it would write outputs readOutput silently ignores (serving
-      // the OLD atomic run's data forever) — refuse loudly instead
-      val root = new org.apache.hadoop.fs.Path(outDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(DirManifest.head(fs, root).isEmpty,
-        s"out-dir $outDir was published atomically (commit log present); " +
-          "a --legacy-dirs run here would be shadowed by the committed " +
-          "head pointers — use a fresh out-dir or drop --legacy-dirs")
-    }
+    def out(name: String): String = s"$outDir/$gen/$name"
 
     // one-scan dashboard over the INPUT corpus — the run's before picture
     CorpusReport.corpusReport(docs, "text", Seq("lang", "source"))
@@ -227,36 +211,34 @@ object CurateJob {
         "n_sampled", "n_shards", "n_segments")
       .write.mode("overwrite").parquet(out("funnel"))
 
-    if (cfg.atomicPublish) {
-      // ONE commit flips all four outputs; a CAS loser (two nightly
-      // runs racing the same out-dir) re-reads and repoints — last
-      // publisher wins per output, both generations retained until
-      // the vacuum margin passes
-      val root = new org.apache.hadoop.fs.Path(outDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      var attempt = 0
-      var done = false
-      while (!done) {
-        val head = DirManifest.head(fs, root)
-        val st = head.map(_._2).getOrElse(DirManifest.DmState(Map.empty))
-        try {
-          DirManifest.commitCas(fs, root, head.map(_._1).getOrElse(0L),
-            st.copy(extra = st.extra ++ Outputs.map(n => n -> s"$gen/$n")))
-          done = true
-        } catch {
-          case e: CommitLog.CommitConflictException =>
-            attempt += 1; if (attempt >= 20) throw e
-        }
+    // ONE commit flips all four outputs; a CAS loser (two nightly
+    // runs racing the same out-dir) re-reads and repoints — last
+    // publisher wins per output, both generations retained until
+    // the vacuum margin passes
+    val root = new org.apache.hadoop.fs.Path(outDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    var attempt = 0
+    var done = false
+    while (!done) {
+      val head = DirManifest.head(fs, root)
+      val st = head.map(_._2).getOrElse(DirManifest.DmState(Map.empty))
+      try {
+        DirManifest.commitCas(fs, root, head.map(_._1).getOrElse(0L),
+          st.copy(extra = st.extra ++ Outputs.map(n => n -> s"$gen/$n")))
+        done = true
+      } catch {
+        case e: CommitLog.CommitConflictException =>
+          attempt += 1; if (attempt >= 20) throw e
       }
-      // sweep superseded runs — with an AGE GRACE, because this vacuum
-      // runs beside possibly racing nightly runs: a concurrent run's
-      // generation between its write and its publish is
-      // indistinguishable from an orphan, and sweeping it would turn
-      // the loser's CAS repoint into dangling pointers. The grace
-      // bounds the protected window; genuinely crashed runs' orphans
-      // age past it and sweep on a later night.
-      DirManifest.vacuum(spark, outDir, minAgeMs = VacuumGraceMs)
     }
+    // sweep superseded runs — with an AGE GRACE, because this vacuum
+    // runs beside possibly racing nightly runs: a concurrent run's
+    // generation between its write and its publish is
+    // indistinguishable from an orphan, and sweeping it would turn
+    // the loser's CAS repoint into dangling pointers. The grace
+    // bounds the protected window; genuinely crashed runs' orphans
+    // age past it and sweep on a later night.
+    DirManifest.vacuum(spark, outDir, minAgeMs = VacuumGraceMs)
     summary
   }
 

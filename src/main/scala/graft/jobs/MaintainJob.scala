@@ -46,14 +46,15 @@ import graft.sinks.{Compaction, VersionCatalog}
   * standalone compaction is subsumed (optimize collapses rewritten
   * cells; the generation sweep reclaims superseded dirs), and the
   * zone-map manifest refreshes from the mapping-reconstructed frame.
-  * A plain rename-layout dir runs the legacy per-dir-swap night —
-  * the explicitly-chosen compat mode (`--legacy-renames` forces it;
-  * `--manifested` forces the commit-log night).
+  * A plain rename-layout dir (no `_commits`) runs the legacy
+  * per-dir-swap night. The layout decides; there is no flag, because
+  * forcing either night on the other layout is wrong: a rename night
+  * over a commit-log layout would read every generation dir raw and
+  * rewrite files the manifest pins.
   *
   * Usage: MaintainJob <layoutDir> <catalogDir>
   *        [--target-bytes N] [--max-overlap N] [--retain N]
   *        [--n-files N] [--z-space N] [--stats-cols a,b]
-  *        [--manifested | --legacy-renames]
   */
 object MaintainJob {
 
@@ -64,19 +65,12 @@ object MaintainJob {
                                    version: Long, vacuumed: Seq[Long],
                                    generationsSwept: Long = 0L)
 
-  /** `manifested = None` (the default) AUTO-DETECTS the layout: a
-    * commit-log (`_commits`) directory under `layoutDir` means the
-    * manifested night runs — so a migrated layout gets the rename-free
-    * path WITHOUT a flag, which is the migration contract (the
-    * commit-log layouts are the default; the rename layouts are the
-    * explicitly-chosen compat mode via `--legacy-renames`). */
   final case class MaintainConfig(targetBytes: Long = 128L << 20,
                                   maxOverlap: Long = 0L,
                                   retain: Int = 3,
                                   nFiles: Int = 8, // q138's ZFiles default
                                   zSpace: Long = 1L << 16,
-                                  statsCols: Seq[String] = Nil,
-                                  manifested: Option[Boolean] = None)
+                                  statsCols: Seq[String] = Nil)
 
   object MaintainConfig {
     def fromFlags(flags: Seq[String]): MaintainConfig = {
@@ -89,35 +83,25 @@ object MaintainJob {
         case "--z-space" :: v :: rest => parse(c.copy(zSpace = v.toLong), rest)
         case "--stats-cols" :: v :: rest =>
           parse(c.copy(statsCols = v.split(',').toSeq.filter(_.nonEmpty)), rest)
-        case "--manifested" :: rest => parse(c.copy(manifested = Some(true)), rest)
-        case "--legacy-renames" :: rest => parse(c.copy(manifested = Some(false)), rest)
         case f :: _ => throw new IllegalArgumentException(
           s"unknown flag '$f' (known: --target-bytes, --max-overlap, --retain, " +
-            "--n-files, --z-space, --stats-cols, --manifested, --legacy-renames)")
+            "--n-files, --z-space, --stats-cols)")
       }
       parse(MaintainConfig(), flags.toList)
     }
   }
 
-  /** A layout is manifested iff it publishes through a commit log. */
+  /** A layout is manifested iff it publishes through a commit log
+    * (a `_commits` directory under it): a migrated layout gets the
+    * rename-free night without a flag. */
   private def detectManifested(spark: SparkSession, layoutDir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(layoutDir, graft.sinks.CommitLog.Dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   def run(spark: SparkSession, layoutDir: String, catalogDir: String,
-          cfg0: MaintainConfig = MaintainConfig()): MaintainSummary = {
-    val cfg = cfg0
-    val manifested: Boolean =
-      cfg0.manifested.getOrElse(detectManifested(spark, layoutDir))
-    if (cfg0.manifested.contains(false) && detectManifested(spark, layoutDir))
-      throw new IllegalArgumentException(
-        s"layout at $layoutDir publishes through a commit log (_commits " +
-          "present); a --legacy-renames night here would read ALL " +
-          "generation dirs directly (duplicated rows from superseded " +
-          "generations) and compaction would rewrite files the manifest " +
-          "pins — silent corruption. Drop --legacy-renames (auto-detect " +
-          "runs the manifested night) or point at a legacy layout")
+          cfg: MaintainConfig = MaintainConfig()): MaintainSummary = {
+    val manifested = detectManifested(spark, layoutDir)
     // 1. compact fragmented partition directories (skip-aware). The
     //    MANIFESTED layout has no standalone compaction step: its
     //    optimize collapses every rewritten cell to one dir, and the

@@ -4,15 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftSession, Parquets}
 import graft.operators.Purge
-import graft.sinks.{MergeSink, VersionCatalog}
+import graft.sinks.{ManifestMergeSink, VersionCatalog}
 
 /** CLI: the DELETION-REQUEST run — right-to-be-forgotten as one
   * operation across every place a key lives, assembled from the
   * individually-gated operators (the MaintainJob composition pattern
   * applied to governance instead of storage health):
   *
-  *   1. PURGE the hash-partitioned snapshot (q176's
-  *      [[MergeSink.purgePartitioned]] — touched-bucket IO only);
+  *   1. PURGE the manifested snapshot (q176's
+  *      [[ManifestMergeSink.purgeManifested]] — touched-bucket IO only,
+  *      one commit);
   *   2. PURGE the exact-dedup index of rows whose SURVIVOR is in the
   *      request (q176's [[Purge.purgeDedupIndex]] — frees the slot so
   *      re-arrived content re-inserts instead of being suppressed);
@@ -28,11 +29,13 @@ import graft.sinks.{MergeSink, VersionCatalog}
   * shape); `--hash-col` names the content-hash column the INDEX purge
   * needs (the request must carry it when `--index` is given — the
   * purged docs' own hashes, which bound the index read to candidate
-  * buckets without an index scan).
+  * buckets without an index scan). The snapshot and the index are
+  * manifested layouts ([[ManifestMergeSink]]); each purge hashes under
+  * the bucket count its committed head carries, so no count is passed.
   *
   * Usage: PurgeJob <keysParquet> --key <col>
   *        [--snapshot dir] [--index dir --hash-col <col>]
-  *        [--catalog dir] [--n-buckets N]
+  *        [--catalog dir]
   */
 object PurgeJob {
 
@@ -40,8 +43,7 @@ object PurgeJob {
                                snapshot: Option[String] = None,
                                index: Option[String] = None,
                                hashCol: String = "content_hash",
-                               catalog: Option[String] = None,
-                               nBuckets: Int = 32)
+                               catalog: Option[String] = None)
 
   object PurgeConfig {
     def fromFlags(flags: Seq[String]): PurgeConfig = {
@@ -52,10 +54,9 @@ object PurgeJob {
         case "--index" :: v :: r => parse(c.copy(index = Some(v)), r)
         case "--hash-col" :: v :: r => parse(c.copy(hashCol = v), r)
         case "--catalog" :: v :: r => parse(c.copy(catalog = Some(v)), r)
-        case "--n-buckets" :: v :: r => parse(c.copy(nBuckets = v.toInt), r)
         case f :: _ => throw new IllegalArgumentException(
           s"unknown flag '$f' (known: --key, --snapshot, --index, " +
-            "--hash-col, --catalog, --n-buckets)")
+            "--hash-col, --catalog)")
       }
       val c = parse(PurgeConfig(), flags.toList)
       require(c.snapshot.nonEmpty || c.index.nonEmpty || c.catalog.nonEmpty,
@@ -71,16 +72,15 @@ object PurgeJob {
   def run(spark: SparkSession, keys: DataFrame,
           cfg: PurgeConfig): PurgeSummary = {
     val snap = cfg.snapshot.map { dir =>
-      MergeSink.purgePartitioned(spark, dir,
-        keys.select(col(cfg.key)), cfg.key, cfg.nBuckets).nPurged
+      ManifestMergeSink.purgeManifested(spark, dir,
+        keys.select(col(cfg.key)), cfg.key).nPurged
     }
     val idx = cfg.index.map { dir =>
       require(keys.columns.contains(cfg.hashCol),
         s"--index needs the request to carry '${cfg.hashCol}' " +
           "(the purged docs' content hashes)")
       Purge.purgeDedupIndex(spark, dir,
-        keys.select(col(cfg.hashCol), col(cfg.key).as("doc_id")),
-        cfg.nBuckets).nPurged
+        keys.select(col(cfg.hashCol), col(cfg.key).as("doc_id"))).nPurged
     }
     val cat = cfg.catalog.map { dir =>
       VersionCatalog.purge(spark, dir, keys.select(col(cfg.key)), cfg.key)

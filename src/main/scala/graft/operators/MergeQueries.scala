@@ -110,9 +110,8 @@ object MergeQueries {
     * commit-log layout, q65's primary gate): rename-free
     * (object-store-safe), publish atomic across all touched buckets,
     * and correct under concurrent writers (q209); the swap forms are
-    * explicitly-chosen COMPAT modes, still gated (q204 bucketed, q73
-    * partitioned, q83 part+bucketed) so unmigrated pipelines stay
-    * row-for-row correct. */
+    * explicitly-chosen COMPAT modes, still gated (q204 bucketed, q83
+    * part+bucketed) so unmigrated pipelines stay row-for-row correct. */
   def dedupIngest(spark: SparkSession, target: String,
                   batch: DataFrame): MergeSink.MergeStats = {
     val fs = new org.apache.hadoop.fs.Path(target)
@@ -151,45 +150,11 @@ object MergeQueries {
       Seq("doc_id"), nBuckets, updatesUnique = true)
   }
 
-  /** [[dedupIngest]] against a hash-PARTITIONED directory index — the
-    * bounded-IO layout ([[MergeSink.mergeIntoPartitioned]]): where the
-    * bucketed-table form removes the merge's target-side exchange but
-    * still rewrites the whole table, this form reads and rewrites ONLY
-    * the buckets the day's hashes touch. The anti-join probe prunes the
-    * same way — a hash's bucket is deterministic, so re-delivered keys
-    * can only collide inside the batch's own buckets (the same argument
-    * that prunes [[graft.operators.Ivf.ingest]]'s probe to the batch's
-    * lists). Per-day cost: batch groupBy + touched-bucket read +
-    * touched-bucket rewrite, independent of corpus size. */
-  def dedupIngestPartitioned(spark: SparkSession, target: String,
-                             batch: DataFrame,
-                             nBuckets: Int): MergeSink.MergeStats = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val uniq = batch.groupBy(col("content_hash"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .localCheckpoint(true) // probed for buckets, then anti-joined
-    val fresh =
-      if (fs.exists(new org.apache.hadoop.fs.Path(target))) {
-        val touched = graft.Sparks.distinctLongs(uniq,
-          pmod(xxhash64(col("content_hash")), lit(nBuckets.toLong))).toArray
-        uniq.join(
-          Parquets.read(spark, target)
-            .filter(col("pb").isin(touched.map(java.lang.Long.valueOf): _*))
-            .select(col("content_hash")),
-          Seq("content_hash"), "left_anti")
-      } else uniq
-    // fresh is groupBy(content_hash)-keyed (± an anti-join) — one row
-    // per key; skip the fold window
-    MergeSink.mergeIntoPartitioned(spark, target, fresh, "content_hash",
-      Seq("doc_id"), nBuckets, updatesUnique = true)
-  }
-
   /** [[dedupIngest]] against the COMPOSED partitioned+bucketed index
     * ([[MergeSink.mergeIntoPartitionedBucketed]]): the anti-join probe
     * prunes to the batch's `pd=` directories (a hash's directory is
-    * deterministic — re-delivered keys can only collide there, the q73
-    * argument) AND reads them bucketed on the key, so the probe and the
+    * deterministic — re-delivered keys can only collide there) AND
+    * reads them bucketed on the key, so the probe and the
     * merge both run with no exchange on the index side while touching
     * only the directories the day's hashes land in. */
   def dedupIngestPartBucketed(spark: SparkSession, table: String,
@@ -222,100 +187,89 @@ object MergeQueries {
   def q83IncrDedupPartBucketed(spark: SparkSession, dir: String): DataFrame = {
     val table = "graft_q83_idx_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    try {
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), md5(col("text")).as("content_hash"))
-      val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      // day 2 re-delivers every 5th document — q65's harness verbatim
-      Seq(
-        docs.filter(col("doc_id") <= cut),
-        docs.filter(col("doc_id") > cut)
-          .union(docs.filter(col("doc_id") % 5 === 0)))
-        .foreach(day => dedupIngestPartBucketed(spark, table, day,
-          nParts = 4, nBuckets = 8))
-      spark.table(table)
-        .select(col("content_hash"), col("doc_id").as("survivor_id"))
-        .orderBy(col("content_hash"))
-        .localCheckpoint(true) // materialize before the table is dropped
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
+    try
+      dedupDays(spark, dir)(day => dedupIngestPartBucketed(spark, table, day,
+        nParts = 4, nBuckets = 8))(spark.table(table))
+    finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   // def, not val: q65IncrDedupSql is declared below (object vals
   // initialize in order — a val here would capture null)
   def q83IncrDedupPartBucketedSql: String = q65IncrDedupSql
 
-  def q65IncrDedup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sinks.ManifestMergeSink
-    val base = java.nio.file.Files.createTempDirectory("graft_q65_")
-    try {
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), md5(col("text")).as("content_hash"))
-      // one-scalar probe to split the fixture into "days" — gate harness,
-      // not operator code (a real ingest receives its batches)
-      val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      // day 2 RE-DELIVERS every 5th document (same rows again) — the
-      // at-least-once upstream the anti-join exists for; without it the
-      // fixture's all-unique texts would leave the protection untested.
-      // Re-delivered rows are byte-identical, so the oracle (plain batch
-      // dedup) is unchanged.
-      // Routed through the MANIFESTED index (dedupIngestManifested) —
-      // the deployed DEFAULT since the commit-log migration: rename-free
-      // one-commit publish, object-store-safe, CAS-correct under
-      // concurrent writers (q209). The q28 precedent: gate through the
-      // layout you'd actually deploy. The swap layouts stay gated as
-      // explicit compat modes (q73 partitioned, q83 part+bucketed).
-      val target = s"$base/dedup_index"
-      Seq(
-        docs.filter(col("doc_id") <= cut),
-        docs.filter(col("doc_id") > cut)
-          .union(docs.filter(col("doc_id") % 5 === 0)))
-        .foreach(day => dedupIngestManifested(spark, target, day,
-          nBuckets = 16))
-      ManifestMergeSink.readManifested(spark, target)
-        .select(col("content_hash"), col("doc_id").as("survivor_id"))
-        .orderBy(col("content_hash"))
-        .localCheckpoint(true) // materialize before the snapshot dir dies
-    } finally {
+  /** The q65 day-split + re-delivery harness, shared by every exact
+    * incremental-dedup gate (q65, q73, q83, q204): the fixture split at
+    * half the max doc_id into two "days" (a one-scalar probe — gate
+    * harness, not operator code; a real ingest receives its batches),
+    * day 2 RE-DELIVERING every 5th document (same rows again) — the
+    * at-least-once upstream the anti-join exists for; without it the
+    * fixture's all-unique texts would leave the protection untested.
+    * Re-delivered rows are byte-identical, so the oracle (plain batch
+    * dedup, [[q65IncrDedupSql]]) is unchanged. `ingest` runs once per
+    * day; `index` reads the final index, which is materialized before
+    * the caller drops its storage. */
+  private def dedupDays(spark: SparkSession, dir: String)(
+      ingest: DataFrame => Any)(index: => DataFrame): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+      .select(col("doc_id"), md5(col("text")).as("content_hash"))
+    val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
+    Seq(
+      docs.filter(col("doc_id") <= cut),
+      docs.filter(col("doc_id") > cut)
+        .union(docs.filter(col("doc_id") % 5 === 0)))
+      .foreach(ingest)
+    index
+      .select(col("content_hash"), col("doc_id").as("survivor_id"))
+      .orderBy(col("content_hash"))
+      .localCheckpoint(true) // materialize before the index storage dies
+  }
+
+  /** A temp dir for one gate run, deleted after `body` (whose result
+    * must already be materialized). */
+  private def withTempDir[A](spark: SparkSession, prefix: String)(
+      body: String => A): A = {
+    val base = java.nio.file.Files.createTempDirectory(prefix)
+    try body(base.toString)
+    finally {
       val p = new org.apache.hadoop.fs.Path(base.toString)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
+
+  def q65IncrDedup(spark: SparkSession, dir: String): DataFrame =
+    // Routed through the MANIFESTED index (dedupIngestManifested) —
+    // the deployed DEFAULT since the commit-log migration: rename-free
+    // one-commit publish, object-store-safe, CAS-correct under
+    // concurrent writers (q209). The q28 precedent: gate through the
+    // layout you'd actually deploy. The swap layouts stay gated as
+    // explicit compat modes (q83 part+bucketed, q204 bucketed).
+    withTempDir(spark, "graft_q65_") { base =>
+      val target = s"$base/dedup_index"
+      dedupDays(spark, dir)(day =>
+        dedupIngestManifested(spark, target, day, nBuckets = 16))(
+        graft.sinks.ManifestMergeSink.readManifested(spark, target))
+    }
 
   val q65IncrDedupSql: String =
     """SELECT md5(text) AS content_hash, min(doc_id)::BIGINT AS survivor_id
       |FROM documents GROUP BY 1 ORDER BY content_hash""".stripMargin
 
   /** q73: the q65 day-split + re-delivery harness through the
-    * hash-PARTITIONED index layout ([[dedupIngestPartitioned]]) — the
-    * third physical form under the driver's gate, proving the
-    * bounded-IO merge (touched-bucket reads, touched-bucket rewrites,
-    * per-bucket directory swaps) preserves the exact first-arrival
-    * semantics of the full-rewrite forms. Same oracle as q65: the final
-    * index must equal batch dedup of the whole corpus row-for-row. */
-  def q73IncrDedupPart(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q73_")
-    try {
+    * hash-bucketed manifested index ([[dedupIngestManifested]]) at a
+    * different bucket count than q65's — the bounded-IO merge
+    * (touched-bucket reads, touched-bucket rewrites, one commit per
+    * day) preserves the exact first-arrival semantics of the
+    * full-rewrite forms. The `_part` in the gate's name is the
+    * hash-partitioned rename-swap layout it drove until that layout was
+    * retired (SCALE.md); gate names stay fixed. Same oracle as q65: the
+    * final index must equal batch dedup of the whole corpus row-for-row. */
+  def q73IncrDedupPart(spark: SparkSession, dir: String): DataFrame =
+    withTempDir(spark, "graft_q73_") { base =>
       val target = s"$base/dedup_index"
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), md5(col("text")).as("content_hash"))
-      val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      // day 2 re-delivers every 5th document — q65's harness verbatim
-      Seq(
-        docs.filter(col("doc_id") <= cut),
-        docs.filter(col("doc_id") > cut)
-          .union(docs.filter(col("doc_id") % 5 === 0)))
-        .foreach(day => dedupIngestPartitioned(spark, target, day, nBuckets = 16))
-      Parquets.read(spark, target)
-        .select(col("content_hash"), col("doc_id").as("survivor_id"))
-        .orderBy(col("content_hash"))
-        .localCheckpoint(true) // materialize before the snapshot dir dies
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(base.toString)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      dedupDays(spark, dir)(day =>
+        dedupIngestManifested(spark, target, day, nBuckets = 8))(
+        graft.sinks.ManifestMergeSink.readManifested(spark, target))
     }
-  }
 
   val q73IncrDedupPartSql: String = q65IncrDedupSql
 
@@ -1802,25 +1756,29 @@ object MergeQueries {
       |    t(sect, doc_id, status, lang, c))
       |ORDER BY sect, doc_id""".stripMargin
 
-  /** q154: MERGE-SINK SCHEMA EVOLUTION across all four physical layouts
+  /** q154: MERGE-SINK SCHEMA EVOLUTION across four physical layouts
     * — the nightly-ingest property a growing corpus eventually needs
     * (every real corpus adds a column): day 1 merges (lang, n_chars);
     * day 2's updates carry a NEW `flag` column for every third document.
     * The snapshot must evolve in place — touched rows carry the value,
     * day-1 rows read null — in the full-rewrite directory, the
-    * hash-partitioned directory (read via its persisted schema MANIFEST
-    * — [[graft.sinks.MergeSink.readPartitioned]] — so mixed footers
-    * never need a per-file mergeSchema scan; untouched buckets are NOT
-    * rewritten — pinned in MergeSinkSpec), the bucketed catalog table,
-    * and the composed
-    * partitioned+bucketed table (via ALTER TABLE ADD COLUMNS; the
-    * catalog schema reads null from pre-evolution files). The reference
+    * manifested hash-bucketed snapshot (the `partitioned` row: read
+    * under the schema its head commit carries —
+    * [[graft.sinks.ManifestMergeSink.readManifested]] — so mixed
+    * footers never need a per-file mergeSchema scan; untouched buckets
+    * are NOT rewritten — pinned in ManifestMergeSinkSpec), the bucketed
+    * catalog table, and the composed partitioned+bucketed table (via
+    * ALTER TABLE ADD COLUMNS; the catalog schema reads null from
+    * pre-evolution files). The `partitioned` row keeps its name: it
+    * drove a hash-partitioned rename-swap layout until that layout was
+    * retired for the manifested one (SCALE.md). The reference
     * hard-codes one fixed schema end to end (src/cli/generate_data.py:
     * 27-34, src/func/parquet.py:18-50) — Mongo would have absorbed the
     * new field silently; this gate proves the relational snapshot does
     * too, with identical rows from every layout. */
   def q154SchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
+    import graft.sinks.ManifestMergeSink
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .localCheckpoint(true) // feeds 8 merges across 4 layouts
@@ -1839,8 +1797,8 @@ object MergeQueries {
       MergeSink.mergeInto(spark, full, docs, "doc_id", f1)
       MergeSink.mergeInto(spark, full, day2, "doc_id", f2)
       val part = s"$base/part"
-      MergeSink.mergeIntoPartitioned(spark, part, docs, "doc_id", f1, nBuckets = 8)
-      MergeSink.mergeIntoPartitioned(spark, part, day2, "doc_id", f2, nBuckets = 8)
+      ManifestMergeSink.mergeIntoManifested(spark, part, docs, "doc_id", f1, nBuckets = 8)
+      ManifestMergeSink.mergeIntoManifested(spark, part, day2, "doc_id", f2, nBuckets = 8)
       MergeSink.mergeIntoBucketed(spark, tblB, docs, "doc_id", f1, nBuckets = 4)
       MergeSink.mergeIntoBucketed(spark, tblB, day2, "doc_id", f2, nBuckets = 4)
       MergeSink.mergeIntoPartitionedBucketed(spark, tblPB, docs, "doc_id", f1,
@@ -1849,10 +1807,10 @@ object MergeQueries {
         nParts = 4, nBuckets = 2)
       Seq(
         "full" -> Parquets.read(spark, full),
-        // mixed footers after an in-place evolution: the snapshot's
-        // schema MANIFEST is the authority (one tiny file read; no
-        // per-footer scan, no inference lottery)
-        "partitioned" -> MergeSink.readPartitioned(spark, part),
+        // mixed footers after an in-place evolution: the head commit's
+        // schema is the authority (no per-footer scan, no inference
+        // lottery)
+        "partitioned" -> ManifestMergeSink.readManifested(spark, part),
         "bucketed" -> spark.table(tblB),
         "partitioned_bucketed" -> spark.table(tblPB))
         .map { case (name, df) => df.select(lit(name).as("layout") +: outCols: _*) }
@@ -1948,13 +1906,13 @@ object MergeQueries {
       |ORDER BY sect, v""".stripMargin
 
   /** [[dedupIngest]] against the MANIFEST-POINTER snapshot
-    * ([[graft.sinks.ManifestMergeSink]]) — the fifth physical layout:
-    * bounded touched-bucket IO like the partitioned form, but publish
-    * is ONE commit-file create (no renames — object-store-safe, and
-    * safe under concurrent writers via the commit log's CAS). The
-    * anti-join probe prunes to the batch's buckets through the snapshot
-    * mapping (a hash's bucket is deterministic — re-delivered keys can
-    * only collide there, the q73 argument).
+    * ([[graft.sinks.ManifestMergeSink]]) — the default layout:
+    * bounded touched-bucket IO, and publish is ONE commit-file create
+    * (no renames — object-store-safe, and safe under concurrent writers
+    * via the commit log's CAS). The anti-join probe prunes to the
+    * batch's buckets through the snapshot mapping (a hash's bucket is
+    * deterministic — re-delivered keys can only collide there; the
+    * scan lists only those buckets' dirs, plan-audited).
     *
     * The anti-join runs INSIDE the merge's retry loop
     * (`recomputeUpdates`), derived against exactly the snapshot state
@@ -2002,23 +1960,10 @@ object MergeQueries {
     // catalog, not a temp dir); dropped in the finally
     val table = "graft_q204_idx_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    try {
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), md5(col("text")).as("content_hash"))
-      val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      // day 2 re-delivers every 5th document — q65's harness verbatim
-      Seq(
-        docs.filter(col("doc_id") <= cut),
-        docs.filter(col("doc_id") > cut)
-          .union(docs.filter(col("doc_id") % 5 === 0)))
-        .foreach(day => dedupIngestBucketed(spark, table, day, nBuckets = 8))
-      spark.table(table)
-        .select(col("content_hash"), col("doc_id").as("survivor_id"))
-        .orderBy(col("content_hash"))
-        .localCheckpoint(true) // materialize before the table is dropped
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
+    try
+      dedupDays(spark, dir)(day =>
+        dedupIngestBucketed(spark, table, day, nBuckets = 8))(spark.table(table))
+    finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   def q204IncrDedupBucketedCompatSql: String = q65IncrDedupSql
@@ -2546,6 +2491,21 @@ object MergeQueries {
       |  TRUE AS compact1_ok, TRUE AS compact2_targeted, TRUE AS noop_ok
       |FROM documents""".stripMargin
 
+  /** Whether `got` and `want` hold the same multiset of (`key`,
+    * `value`) rows, in ONE action: both sides tagged +1 / −1, unioned,
+    * and summed per distinct (key, value) row (grouping compares nulls
+    * as equal) — any non-zero sum is a row one side holds more often.
+    * A full-outer join on the key cannot see a duplicated key: every
+    * copy matches the same counterpart and no row mismatches. */
+  private[graft] def sameRows(got: DataFrame, want: DataFrame, key: String,
+                              value: String): Boolean = {
+    def side(df: DataFrame, sign: Long) =
+      df.select(col(key), col(value), lit(sign).as("__side"))
+    graft.Sparks.isEmpty(side(got, 1L).unionByName(side(want, -1L))
+      .groupBy(col(key), col(value)).agg(sum(col("__side")).as("__d"))
+      .filter(col("__d") =!= 0L))
+  }
+
   /** q222: CDC-APPLY — the change feed must be SUFFICIENT to maintain a
     * downstream replica, not merely descriptive. A second manifested
     * table bootstraps from the source's v1 snapshot, then advances
@@ -2572,25 +2532,13 @@ object MergeQueries {
       val rep = s"$base/replica"
       val pid = "q222"
       val seqs = versionedSnapshot(spark, dir, src)
-      def replicaMatches(atSeq: Long): Boolean = {
-        val want = ManifestMergeSink.readManifestedAt(spark, src, atSeq)
-          .select(col("doc_id").as("w_id"), col("len").as("w_len"))
-        val got = ManifestMergeSink.readManifested(spark, rep)
-          .select(col("doc_id").as("g_id"), col("len").as("g_len"))
-        // ONE action, one pass per side: doc_id is the merge key (unique
-        // on both sides), so multiset equality == zero full-outer
-        // mismatches — the two exceptAll probes each re-read both
-        // snapshots and ran their own job
-        got.join(want, col("g_id") === col("w_id"), "full_outer")
-          .filter(col("g_id").isNull || col("w_id").isNull ||
-            !(col("g_len") <=> col("w_len")))
-          .isEmpty
-      }
       var synced = 0L
       seqs.foreach { to =>
         StreamingCdcApply.applyTo(spark, src, rep, "doc_id", Seq("len"),
           nBuckets = 16, pipelineId = pid, toSeq = to)
-        if (replicaMatches(to)) synced += 1L
+        if (sameRows(ManifestMergeSink.readManifested(spark, rep),
+            ManifestMergeSink.readManifestedAt(spark, src, to), "doc_id", "len"))
+          synced += 1L
       }
       // crash-replay the final span: the watermark absorbs it — zero
       // reads, zero commits (the commit count below proves it)

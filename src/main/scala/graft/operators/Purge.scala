@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.sinks.MergeSink
+import graft.sinks.ManifestMergeSink
+import graft.sinks.ManifestMergeSink.PurgeStats
 
 /** KEY PURGE across a snapshot AND its derived state — the
   * right-to-be-forgotten operation a governed 100 TB corpus must run on
@@ -21,7 +22,7 @@ import graft.sinks.MergeSink
   * means: the engine no longer suppresses the content as "seen").
   *
   * IO contract end to end: the snapshot purge reads/rewrites only the
-  * buckets the purged KEYS hash to ([[MergeSink.purgePartitioned]]);
+  * buckets the purged KEYS hash to ([[ManifestMergeSink.purgeManifested]]);
   * the index purge prunes to the buckets the purged docs' HASHES hash
   * to — valid because a doomed row's hash is by construction the hash
   * of its purged survivor's text, so no doomed row can live outside a
@@ -29,45 +30,45 @@ import graft.sinks.MergeSink
   */
 object Purge {
 
-  // q176 parameters: purge set + re-ingested half, bucket count.
+  // q176 parameters: purge set + re-ingested half, first-commit bucket count.
   private val PurgeMod = 13L
   private val ReingestMod = 26L
   private val NBuckets = 8
 
-  /** Purge a dedup index ([[MergeQueries.dedupIngestPartitioned]]'s
+  /** Purge a dedup index ([[MergeQueries.dedupIngestManifested]]'s
     * layout) of every row whose survivor doc is in `purgedDocs`
     * (`(content_hash, doc_id)` of the purged documents). The candidate
-    * hashes prune the read to the doomed rows' buckets; the doc_id
-    * anti-condition picks exactly the survivor-purged rows. */
+    * hashes prune the read to the doomed rows' buckets under the head's
+    * bucket count; the doc_id condition picks exactly the
+    * survivor-purged rows, which [[ManifestMergeSink.purgeManifested]]
+    * then deletes in one commit. */
   def purgeDedupIndex(spark: SparkSession, indexPath: String,
-                      purgedDocs: DataFrame,
-                      nBuckets: Int): MergeSink.PurgeStats = {
-    val candidates = purgedDocs.select(col("content_hash")).distinct()
-      .localCheckpoint(true) // prunes the read, then feeds the doomed join
-    val pbs = candidates
-      .select(pmod(xxhash64(col("content_hash")), lit(nBuckets.toLong)).as("pb"))
-      .distinct().collect().map(_.getLong(0)) // ≤ nBuckets — driver-safe
+                      purgedDocs: DataFrame): PurgeStats = {
+    val (_, st) = ManifestMergeSink.headState(spark, indexPath).getOrElse(
+      throw new IllegalArgumentException(
+        s"no committed manifest snapshot at $indexPath"))
+    val pbs = ManifestMergeSink.bucketsOf(spark, indexPath,
+      purgedDocs.select(col("content_hash")), "content_hash", st.nBuckets)
     if (pbs.isEmpty)
-      return MergeSink.PurgeStats(0L, 0L, 0)
-    val doomed = MergeSink.readPartitioned(spark, indexPath)
-      .filter(col("pb").isin(pbs.map(java.lang.Long.valueOf): _*))
+      return PurgeStats(0L, 0L, 0)
+    val doomed = ManifestMergeSink.readStateBuckets(spark, indexPath, st, pbs)
       .join(broadcast(purgedDocs.select(col("doc_id")).distinct()),
         Seq("doc_id")) // survivor is purged
       .select(col("content_hash"))
-    MergeSink.purgePartitioned(spark, indexPath, doomed,
-      "content_hash", nBuckets)
+    ManifestMergeSink.purgeManifested(spark, indexPath, doomed, "content_hash")
   }
 
   /** q176: the purge lifecycle end to end — ingest all documents into a
-    * hash-partitioned snapshot AND its exact-dedup index; purge every
-    * 13th doc from both; re-ingest the even half of the purged docs,
-    * which must LAND again (snapshot rows back, index slots re-claimed
-    * — the forgetting proof); emit both final states. The oracle
-    * restates the whole lifecycle as set algebra over md5(text), so a
-    * row that survived the purge, a slot the index failed to free, or a
-    * re-ingest the stale index suppressed all fail the hash row-level. */
+    * manifested hash-bucketed snapshot AND its exact-dedup index; purge
+    * every 13th doc from both; re-ingest the even half of the purged
+    * docs, which must LAND again (snapshot rows back, index slots
+    * re-claimed — the forgetting proof); emit both final states. The
+    * oracle restates the whole lifecycle as set algebra over md5(text),
+    * so a row that survived the purge, a slot the index failed to free,
+    * or a re-ingest the stale index suppressed all fail the hash
+    * row-level. */
   def q176PurgeForget(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.MergeQueries.dedupIngestPartitioned
+    import graft.operators.MergeQueries.dedupIngestManifested
     val base = java.nio.file.Files.createTempDirectory("graft_q176_")
     val fs = new org.apache.hadoop.fs.Path(base.toString)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -78,30 +79,30 @@ object Purge {
         .select(col("doc_id"), col("lang"), col("n_chars"),
           md5(col("text")).as("content_hash"))
         .localCheckpoint(true) // feeds ingest, purge, and re-ingest
-      MergeSink.mergeIntoPartitioned(spark, snap,
+      ManifestMergeSink.mergeIntoManifested(spark, snap,
         docs.select(col("doc_id"), col("lang"), col("n_chars")),
         "doc_id", Seq("lang", "n_chars"), NBuckets)
-      dedupIngestPartitioned(spark, idx,
+      dedupIngestManifested(spark, idx,
         docs.select(col("content_hash"), col("doc_id")), NBuckets)
       // the purge
       val purged = docs.filter(col("doc_id") % PurgeMod === 0L)
-      val s1 = MergeSink.purgePartitioned(spark, snap,
-        purged.select(col("doc_id")), "doc_id", NBuckets)
+      val s1 = ManifestMergeSink.purgeManifested(spark, snap,
+        purged.select(col("doc_id")), "doc_id")
       require(s1.nPurged > 0, "fixture must exercise a non-empty purge")
       purgeDedupIndex(spark, idx,
-        purged.select(col("content_hash"), col("doc_id")), NBuckets)
+        purged.select(col("content_hash"), col("doc_id")))
       // the re-arrival: half the purged docs come back and must land
       val back = docs.filter(col("doc_id") % ReingestMod === 0L)
-      dedupIngestPartitioned(spark, idx,
+      dedupIngestManifested(spark, idx,
         back.select(col("content_hash"), col("doc_id")), NBuckets)
-      MergeSink.mergeIntoPartitioned(spark, snap,
+      ManifestMergeSink.mergeIntoManifested(spark, snap,
         back.select(col("doc_id"), col("lang"), col("n_chars")),
         "doc_id", Seq("lang", "n_chars"), NBuckets)
-      MergeSink.readPartitioned(spark, snap)
+      ManifestMergeSink.readManifested(spark, snap)
         .select(lit("snapshot").as("sect"), col("doc_id"),
           lit(null).cast("string").as("content_hash"),
           col("lang"), col("n_chars").as("c"))
-        .unionByName(MergeSink.readPartitioned(spark, idx)
+        .unionByName(ManifestMergeSink.readManifested(spark, idx)
           .select(lit("index").as("sect"), col("doc_id"), col("content_hash"),
             lit(null).cast("string").as("lang"),
             lit(null).cast("long").as("c")))
@@ -191,8 +192,9 @@ object Purge {
 
   /** q178: the purge QUEUE streamed — deletion requests land as marker
     * files (each a parquet of doc_ids), [[graft.streaming.StreamingFold]]
-    * drives [[MergeSink.purgePartitioned]] one request per micro-batch,
-    * and a REPLAYED duplicate of the first request is landed in-gate:
+    * drives [[ManifestMergeSink.purgeManifested]] one request per
+    * micro-batch (one commit each), and a REPLAYED duplicate of the
+    * first request is landed in-gate:
     * purge idempotence (absent keys rewrite identical content) is the
     * at-least-once contract here — no ledger needed, unlike the
     * additive-state sinks, and order is immaterial because purge sets
@@ -213,7 +215,7 @@ object Purge {
         val docs = Tables.documents(spark, dir)
           .select(col("doc_id"), col("lang"), col("n_chars"))
           .localCheckpoint(true) // feeds the ingest and the request sets
-        MergeSink.mergeIntoPartitioned(spark, snap, docs, "doc_id",
+        ManifestMergeSink.mergeIntoManifested(spark, snap, docs, "doc_id",
           Seq("lang", "n_chars"), NBuckets)
         def land(ids: DataFrame, tag: String): Unit =
           StreamingFold.land(ids, queue, s"req_$tag.parquet")
@@ -226,11 +228,10 @@ object Purge {
         StreamingFold.drain(StreamingFold.files(spark,
             StructType(Seq(StructField("doc_id", LongType))), queue),
             s"$base/ckpt", "stream_purge") { (batch, _) =>
-          val st = MergeSink.purgePartitioned(spark, snap, batch, "doc_id",
-            NBuckets)
+          val st = ManifestMergeSink.purgeManifested(spark, snap, batch, "doc_id")
           Seq("purged" -> st.nPurged, "buckets" -> st.nBucketsTouched.toLong)
         }
-        MergeSink.readPartitioned(spark, snap)
+        ManifestMergeSink.readManifested(spark, snap)
           .select(col("doc_id"), col("lang"), col("n_chars").as("c"))
           .orderBy(col("doc_id"))
           .localCheckpoint(true) // materialize before the temp dirs die

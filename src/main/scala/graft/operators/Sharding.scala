@@ -441,10 +441,10 @@ object Sharding {
     * Scale: the health report is footer-stats metadata (|files| rows);
     * the flagged set and closure are driver-side set algebra over
     * ≤ |files| longs (the touched-bucket budget of
-    * [[graft.sinks.MergeSink.mergeIntoPartitioned]]); data I/O is
+    * [[graft.sinks.ManifestMergeSink.mergeIntoManifested]]); data I/O is
     * proportional to the flagged files' bytes, never the layout's. The
     * per-directory delete+rename swap is [[graft.sinks.Compaction]]'s;
-    * like the partitioned merge, the swap is atomic per directory, not
+    * the swap is atomic per directory, not
     * across directories — a crash mid-swap re-converges on re-run
     * because the re-cut is a pure function of the surviving rows. */
   def optimizeFlagged(spark: SparkSession, path: String, nFiles: Int,

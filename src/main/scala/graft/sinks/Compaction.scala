@@ -6,17 +6,17 @@ import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction for partitioned parquet snapshots — the
   * maintenance pass every incremental-ingest layout eventually needs:
-  * [[MergeSink.mergeIntoPartitioned]] rewrites only touched buckets and
-  * [[graft.operators.MergeQueries.dedupIngest]] appends per batch, so a
+  * a partitioned layout whose writes touch a few directories per batch
+  * (q80's dated appends, the z-order layout) accretes files, so a
   * snapshot that absorbs N nightly batches accretes O(N) files per
   * partition directory. At 100 TB that is the classic small-file
   * problem: scan parallelism is fine (Spark coalesces splits), but
   * per-file open/footer costs, NameNode/listing pressure, and row-group
   * fragmentation all degrade with file count.
   *
-  * LEGACY-LAYOUT TOOL: this pass serves the rename-swap partitioned
-  * layouts (its per-directory swap is atomic per dir, not across dirs,
-  * and rename-dependent). Commit-log stores compact natively and
+  * LEGACY-LAYOUT TOOL: this pass serves the plain partitioned
+  * directory layouts (its per-directory swap is atomic per dir, not
+  * across dirs, and rename-dependent). Commit-log stores compact natively and
   * rename-free instead — [[graft.operators.Ivf.compactIndex]] for the
   * IVF index, a merge for [[ManifestMergeSink]] (each merge already
   * rewrites its touched buckets whole, so that layout never accretes
@@ -25,8 +25,8 @@ import org.apache.spark.sql.SparkSession
   * Scale design: compaction is per-PARTITION-DIRECTORY and skip-aware —
   * each `part=` directory whose file count exceeds its byte-derived
   * target (`ceil(bytes / targetBytes)`, min 1) is read, rewritten at
-  * the target file count, and swapped in with the same per-directory
-  * rename [[MergeSink.mergeIntoPartitioned]] uses; directories already
+  * the target file count, and swapped in with a per-directory
+  * [[MergeSink.atomicSwap]] rename; directories already
   * at their target are NOT touched (byte-identical afterwards — pinned
   * in CompactionSpec). Only fragmented directories pay I/O, the swap is
   * metadata-only renames with rollback (never a partially-written

@@ -7,25 +7,25 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** MANIFEST-POINTER merge snapshot — the fifth physical merge layout,
-  * and the one that survives rename-less object stores and concurrent
-  * writers.
+/** MANIFEST-POINTER merge snapshot — the default merge layout, and the
+  * one that survives rename-less object stores and concurrent writers.
   *
-  * [[MergeSink.mergeIntoPartitioned]] bounds per-merge IO to the
-  * touched hash buckets, but its publish step is N per-bucket directory
-  * renames: atomic per bucket, NOT across buckets (a crash mid-swap
-  * leaves a mixed snapshot), meaningless on S3 (no atomic rename), and
-  * last-writer-wins under concurrency. Here the same bounded data plane
-  * publishes through the [[CommitLog]] instead:
+  * Per-merge IO is bounded to the touched hash buckets
+  * (`pb = pmod(xxhash64(key), nBuckets)`), and the publish step is ONE
+  * [[CommitLog]] commit-file create, not N per-bucket directory renames
+  * (which would be atomic per bucket but not across buckets, impossible
+  * on S3, and last-writer-wins under concurrency; SCALE.md "Five
+  * physical merge layouts"):
   *
   * Layout — immutable objects only, zero renames:
   *  - `$target/g-<tok>/pb=<b>/` immutable parquet dirs: each merge
   *    writes its touched buckets as ONE new generation dir (its staging
   *    dir IS its final home — nothing moves);
   *  - `$target/_commits/<seq>` commit files, each carrying the full
-  *    snapshot state: payload schema (authoritative — the
-  *    [[MergeSink.readPartitioned]] manifest lesson), the bucket count,
-  *    and the bucket → data-dir mapping.
+  *    snapshot state: payload schema (authoritative: after an in-place
+  *    evolution the footers differ, and footer inference would read
+  *    whichever one it samples), the bucket count, and the bucket →
+  *    data-dir mapping.
   *
   * A merge: read head; read ONLY the touched buckets' dirs; merge
   * ([[MergeSink.mergePlanObserved]] — same semantics, same counts, same
@@ -53,9 +53,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * NO window in which readers see a mixed snapshot — the commit file
   * flips every touched bucket at once.
   *
-  * Scale: per-merge IO ∝ touched-bucket bytes (the
-  * mergeIntoPartitioned argument), publish is one tiny object write
-  * regardless of how many buckets changed, reads are schema-pinned
+  * Scale: per-merge IO ∝ touched-bucket bytes (a key's bucket is
+  * deterministic, so no match hides in an unread bucket), publish is
+  * one tiny object write regardless of how many buckets changed, reads
+  * are schema-pinned
   * pruned parquet scans of exactly the mapped dirs. Old generations'
   * only cost is unreclaimed space until vacuum. */
 object ManifestMergeSink {
@@ -597,6 +598,13 @@ object ManifestMergeSink {
 
   final case class ApplyStats(merge: MergeSink.MergeStats, nDeleted: Long)
 
+  /** Key-purge result: row counts over the TOUCHED buckets only (the
+    * untouched remainder is never read). */
+  final case class PurgeStats(nBefore: Long, nAfter: Long,
+                              nBucketsTouched: Int) {
+    def nPurged: Long = nBefore - nAfter
+  }
+
   /** The snapshot's recorded watermark for this pipeline moved while a
     * change span computed from the OLD watermark was in flight — the
     * span's base state is stale and applying it would skip work a
@@ -753,7 +761,7 @@ object ManifestMergeSink {
     * (purge must see the winner's rows). Idempotent under replay. */
   def purgeManifested(spark: SparkSession, target: String, keys: DataFrame,
                       key: String,
-                      maxRetries: Int = 20): MergeSink.PurgeStats = {
+                      maxRetries: Int = 20): PurgeStats = {
     val root = new Path(target)
     val fs = fsOf(spark, root)
     val uniq = keys.select(col(key)).filter(col(key).isNotNull)
@@ -765,7 +773,7 @@ object ManifestMergeSink {
           s"no committed manifest snapshot at $target"))
       val touched = graft.Sparks.distinctLongs(uniq, pb(col(key), st.nBuckets))
         .filter(st.mapping.contains)
-      if (touched.isEmpty) return MergeSink.PurgeStats(0L, 0L, 0)
+      if (touched.isEmpty) return PurgeStats(0L, 0L, 0)
       val obsBefore = Observation()
       val obsAfter = Observation()
       val kept = readDirs(spark, target, st, touched)
@@ -787,7 +795,7 @@ object ManifestMergeSink {
         CommitLog.tryAppend(fs, root, seq,
           render(ManifestState(st.schema, st.nBuckets, newMapping,
             st.txns)), isValid)
-        return MergeSink.PurgeStats(
+        return PurgeStats(
           obsBefore.get("n").asInstanceOf[Long],
           obsAfter.get("n").asInstanceOf[Long], touched.length)
       } catch {

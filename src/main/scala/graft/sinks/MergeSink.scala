@@ -187,16 +187,19 @@ object MergeSink {
     (plain :+ key).map(c => s"${ParquetOutputFormat.ENABLE_DICTIONARY}#$c" -> "false").toMap
   }
 
-  /** The merged snapshot as a lazy plan (no side effects): full-outer join
-    * + presence-aware per-field merge (see [[evolvedFields]]). `updates`
-    * must be unique per key (use [[collapseUpdates]] first). `fields`
-    * may include columns only one side carries. */
-  def mergePlan(target: DataFrame, updates: DataFrame, key: String,
-                fields: Seq[String], updatedAtCol: String = "updatedAt",
-                now: Column = stampNow()): DataFrame = {
-    val t = target.alias("t")
-    val u = updates.filter(col(key).isNotNull).alias("u")
-    val touched = col(s"u.$key").isNotNull
+  /** The full-outer key join every merge form runs: the target aliased
+    * `t`, the updates aliased `u` with null keys dropped (guard ladder). */
+  private def joinSides(target: DataFrame, updates: DataFrame,
+                        key: String): DataFrame =
+    target.alias("t").join(updates.filter(col(key).isNotNull).alias("u"),
+      col(s"t.$key") === col(s"u.$key"), "full_outer")
+
+  /** The merged row over [[joinSides]]: the key, the presence-aware
+    * per-field merge (see [[evolvedFields]]), and the stamp on touched
+    * rows. */
+  private def mergedRow(target: DataFrame, updates: DataFrame, key: String,
+                        fields: Seq[String], updatedAtCol: String,
+                        now: Column): Seq[Column] = {
     val inT = target.columns.toSet
     val inU = updates.columns.toSet
     val merged = fields.map { f =>
@@ -204,12 +207,42 @@ object MergeSink {
        else if (inU(f)) col(s"u.$f")
        else col(s"t.$f")).as(f)
     }
-    t.join(u, col(s"t.$key") === col(s"u.$key"), "full_outer")
-      .select(
-        coalesce(col(s"t.$key"), col(s"u.$key")).as(key) +:
-        merged :+
-        when(touched, now).otherwise(col(s"t.$updatedAtCol")).as(updatedAtCol): _*)
+    coalesce(col(s"t.$key"), col(s"u.$key")).as(key) +:
+      merged :+
+      when(col(s"u.$key").isNotNull, now)
+        .otherwise(col(s"t.$updatedAtCol")).as(updatedAtCol)
   }
+
+  /** The statement counts over [[joinSides]] as aggregates (0 on no
+    * rows): matched = keys in both; modified = matched rows where any
+    * update-side field lands a new value — a column the target doesn't
+    * have yet counts whenever the update value is non-null (the matched
+    * row gains a field; evolution IS a change); upserted = update keys
+    * absent from the target. */
+  private def countColumns(target: DataFrame, updates: DataFrame, key: String,
+                           fields: Seq[String]): Seq[Column] = {
+    val matched = col(s"t.$key").isNotNull && col(s"u.$key").isNotNull
+    val inT = target.columns.toSet
+    val changed = fields.filter(updates.columns.toSet).map { f =>
+      if (inT(f))
+        col(s"u.$f").isNotNull && (col(s"t.$f").isNull || col(s"u.$f") =!= col(s"t.$f"))
+      else col(s"u.$f").isNotNull
+    }.reduceOption(_ || _).getOrElse(lit(false))
+    def n(c: Column, name: String): Column =
+      coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L)).as(name)
+    Seq(n(matched, "n_matched"), n(matched && changed, "n_modified"),
+      n(col(s"t.$key").isNull, "n_upserted"))
+  }
+
+  /** The merged snapshot as a lazy plan (no side effects): full-outer join
+    * + presence-aware per-field merge (see [[evolvedFields]]). `updates`
+    * must be unique per key (use [[collapseUpdates]] first). `fields`
+    * may include columns only one side carries. */
+  def mergePlan(target: DataFrame, updates: DataFrame, key: String,
+                fields: Seq[String], updatedAtCol: String = "updatedAt",
+                now: Column = stampNow()): DataFrame =
+    joinSides(target, updates, key)
+      .select(mergedRow(target, updates, key, fields, updatedAtCol, now): _*)
 
   /** Merged snapshot + statement-level counts in ONE pass: the full-outer
     * join runs once, and the counts are collected as observed metrics
@@ -222,34 +255,10 @@ object MergeSink {
                         fields: Seq[String], updatedAtCol: String = "updatedAt",
                         now: Column = stampNow()): (DataFrame, Observation) = {
     val obs = Observation()
-    val t = target.alias("t")
-    val u = updates.filter(col(key).isNotNull).alias("u")
-    val matched = col(s"t.$key").isNotNull && col(s"u.$key").isNotNull
-    val inT = target.columns.toSet
-    val inU = updates.columns.toSet
-    // modified = any update-side field lands a new value; a column the
-    // target doesn't have yet counts whenever the update value is
-    // non-null (the matched row gains a field — evolution IS a change)
-    val changed = fields.filter(inU).map { f =>
-      if (inT(f))
-        col(s"u.$f").isNotNull && (col(s"t.$f").isNull || col(s"u.$f") =!= col(s"t.$f"))
-      else col(s"u.$f").isNotNull
-    }.reduceOption(_ || _).getOrElse(lit(false))
-    val touched = col(s"u.$key").isNotNull
-    val merged = fields.map { f =>
-      (if (inT(f) && inU(f)) coalesce(col(s"u.$f"), col(s"t.$f"))
-       else if (inU(f)) col(s"u.$f")
-       else col(s"t.$f")).as(f)
-    }
-    val observed = t.join(u, col(s"t.$key") === col(s"u.$key"), "full_outer")
-      .observe(obs,
-        coalesce(sum(when(matched, 1L).otherwise(0L)), lit(0L)).as("n_matched"),
-        coalesce(sum(when(matched && changed, 1L).otherwise(0L)), lit(0L)).as("n_modified"),
-        coalesce(sum(when(col(s"t.$key").isNull, 1L).otherwise(0L)), lit(0L)).as("n_upserted"))
-      .select(
-        coalesce(col(s"t.$key"), col(s"u.$key")).as(key) +:
-        merged :+
-        when(touched, now).otherwise(col(s"t.$updatedAtCol")).as(updatedAtCol): _*)
+    val counts = countColumns(target, updates, key, fields)
+    val observed = joinSides(target, updates, key)
+      .observe(obs, counts.head, counts.tail: _*)
+      .select(mergedRow(target, updates, key, fields, updatedAtCol, now): _*)
     (observed, obs)
   }
 
@@ -264,29 +273,14 @@ object MergeSink {
 
   /** Statement-level counts WITHOUT writing the merge (stats-only API —
     * runs the join for the counts alone; the write path uses
-    * [[mergePlanObserved]] so data + stats cost one join total):
-    * matched = keys in both; modified = matched rows where any field value
-    * actually changes under null-skip; upserted = update keys absent from
-    * the target. */
+    * [[mergePlanObserved]] so data + stats cost one join total). The
+    * reference the tests compare the observed counts against. */
   def mergeStats(target: DataFrame, updates: DataFrame, key: String,
                  fields: Seq[String]): MergeStats = {
-    val t = target.alias("t")
-    val u = updates.filter(col(key).isNotNull).alias("u")
-    val matched = col(s"t.$key").isNotNull && col(s"u.$key").isNotNull
-    val inT = target.columns.toSet
-    val changed = fields.filter(updates.columns.toSet).map { f =>
-      if (inT(f))
-        col(s"u.$f").isNotNull && (col(s"t.$f").isNull || col(s"u.$f") =!= col(s"t.$f"))
-      else col(s"u.$f").isNotNull
-    }.reduceOption(_ || _).getOrElse(lit(false))
-    val row = t.join(u, col(s"t.$key") === col(s"u.$key"), "full_outer")
-      .select(
-        sum(when(matched, 1L).otherwise(0L)).as("m"),
-        sum(when(matched && changed, 1L).otherwise(0L)).as("mod"),
-        sum(when(col(s"t.$key").isNull, 1L).otherwise(0L)).as("up"))
+    val row = joinSides(target, updates, key)
+      .select(countColumns(target, updates, key, fields): _*)
       .collect()(0)
-    def v(i: Int): Long = if (row.isNullAt(i)) 0L else row.getLong(i)
-    MergeStats(v(0), v(1), v(2))
+    MergeStats(row.getLong(0), row.getLong(1), row.getLong(2))
   }
 
   /** Empty first-run target with the key and payload types taken from the
@@ -340,225 +334,6 @@ object MergeSink {
       .mode("overwrite").parquet(tmp.toString)
     atomicSwap(fs, tmp, path, bak)
     statsOf(obs)
-  }
-
-  /** Partition-pruned merge — the third physical layout, for the cost
-    * neither sibling removes: [[mergeInto]] and [[mergeIntoBucketed]]
-    * both REWRITE the whole snapshot per merge (their swap is
-    * metadata-only, but the write behind it is corpus-sized).
-    * Here the snapshot lives partitioned by a stable hash bucket of the
-    * key (`pb = pmod(xxhash64(key), nBuckets)`), and a merge:
-    *
-    *  1. computes the distinct buckets the update keys TOUCH (≤ nBuckets
-    *     small longs — driver-safe by construction);
-    *  2. reads only those buckets of the snapshot (PartitionFilters
-    *     prune at the parquet source — a key's bucket is deterministic,
-    *     so no match can hide in an unread bucket);
-    *  3. merges ([[mergePlanObserved]] — same semantics, same counts)
-    *     and writes the touched buckets to a temp dir;
-    *  4. swaps ONLY those bucket directories into the snapshot
-    *     (per-bucket renames — [[atomicSwap]]'s metadata-only move,
-    *     scoped to what changed).
-    *
-    * Per-merge IO is proportional to the touched buckets' data, not the
-    * corpus: a nightly batch touching 50 of 4096 buckets reads and
-    * rewrites ~1.2% of a 100 TB snapshot. The trade, stated honestly:
-    * the swap is atomic per bucket, not across buckets — a crash
-    * mid-swap leaves some buckets new and some old (each internally
-    * consistent; re-running the merge converges, since the merge is
-    * idempotent on data). A transactional manifest layer is what fixes
-    * that window at scale; the directory contract here is the same one
-    * the reference accepts for its unordered bulk writes
-    * (mongo.py:107,139). Choose nBuckets so a single bucket's data fits
-    * a comfortable task set (corpus / nBuckets ≈ tens of GB). */
-  def mergeIntoPartitioned(spark: SparkSession, targetPath: String,
-                           updates: DataFrame, key: String,
-                           fields: Seq[String], nBuckets: Int,
-                           orderCol: Option[String] = None,
-                           updatedAtCol: String = "updatedAt",
-                           updatesUnique: Boolean = false): MergeStats = {
-    require(nBuckets >= 1, s"nBuckets=$nBuckets must be positive")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(targetPath)
-    val fs = path.getFileSystem(hconf)
-    def pb(c: Column): Column = pmod(xxhash64(c), lit(nBuckets.toLong))
-
-    // localCheckpoint: the folded update set is consumed twice (bucket
-    // probe + merge join) — without it the collapse window re-runs
-    val unique =
-      (if (updatesUnique) normalizeUnique(updates, key, fields)
-       else collapseUpdates(updates.filter(col(key).isNotNull), key,
-         fields, orderCol)).localCheckpoint(true)
-    val touched = graft.Sparks.distinctLongs(unique, pb(col(key)))
-      .toArray // ≤ nBuckets values — one exchange-free job
-    val exists = fs.exists(path) && fs.listStatus(path).nonEmpty
-    val target =
-      if (exists)
-        readPartitioned(spark, targetPath)
-          .filter(col("pb").isin(touched.map(java.lang.Long.valueOf): _*))
-          .drop("pb") // recomputed from the key on write
-      else emptyTarget(spark, unique, key, fields, updatedAtCol)
-    val (merged, obs) = mergePlanObserved(target, unique, key,
-      evolvedFields(target, key, fields, updatedAtCol), updatedAtCol)
-
-    val tmp = new Path(targetPath + ".__merge_tmp")
-    fs.delete(tmp, true)
-    merged.withColumn("pb", pb(col(key)))
-      .write.mode("overwrite").partitionBy("pb").parquet(tmp.toString)
-    fs.mkdirs(path)
-    // Persist the evolved schema BEFORE the bucket swaps: after an
-    // in-place evolution the snapshot has mixed parquet footers (touched
-    // pb= dirs carry the new column, untouched dirs don't), and footer
-    // inference — plain OR mergeSchema — is the wrong authority: plain
-    // read silently drops the evolved column depending on which footer
-    // Spark samples, and mergeSchema reads EVERY file's footer on every
-    // open (at 100 TB, a metadata scan per query). The manifest is the
-    // one-file authority [[readPartitioned]] reads instead. Ordering
-    // argument: manifest-then-buckets means a crash between them leaves
-    // a manifest advertising a column no file carries yet — an explicit-
-    // schema read returns null for it (exactly parquet's missing-column
-    // semantics, and the re-run converges); buckets-then-manifest would
-    // leave the OPPOSITE window, a stale manifest silently hiding
-    // already-written data.
-    writeSchemaManifest(fs, path, org.apache.spark.sql.types.StructType(
-      merged.schema.fields :+ org.apache.spark.sql.types.StructField(
-        "pb", org.apache.spark.sql.types.LongType, nullable = false)))
-    fs.listStatus(tmp).filter(_.getPath.getName.startsWith("pb="))
-      .foreach { st =>
-        val dest = new Path(path, st.getPath.getName)
-        fs.delete(dest, true)
-        require(fs.rename(st.getPath, dest),
-          s"partitioned merge swap failed: could not move ${st.getPath} to $dest")
-      }
-    fs.delete(tmp, true)
-    statsOf(obs)
-  }
-
-  /** The schema-manifest file a partitioned snapshot carries at its root
-    * (underscore-prefixed so Spark's file listing ignores it as data). */
-  private[graft] val SchemaManifestFile = "_graft_schema.json"
-
-  /** Atomically publish the snapshot's authoritative schema: write to a
-    * sibling temp file, rename into place. A crash between the delete
-    * and the rename leaves no manifest — [[readPartitioned]] then falls
-    * back to the mergeSchema union read, which is correct (just slower),
-    * so every window degrades to a safe read. */
-  private def writeSchemaManifest(fs: FileSystem, root: Path,
-                                  schema: org.apache.spark.sql.types.StructType): Unit = {
-    val tmp = new Path(root, SchemaManifestFile + ".__tmp")
-    val out = fs.create(tmp, true)
-    try out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dest = new Path(root, SchemaManifestFile)
-    fs.delete(dest, false)
-    require(fs.rename(tmp, dest),
-      s"schema manifest publish failed: could not move $tmp to $dest")
-  }
-
-  /** The committed manifest schema of a partitioned snapshot, if one has
-    * been published. */
-  private[graft] def readSchemaManifest(
-      fs: FileSystem, root: Path): Option[org.apache.spark.sql.types.StructType] = {
-    val dest = new Path(root, SchemaManifestFile)
-    if (!fs.exists(dest)) None
-    else {
-      val in = fs.open(dest)
-      val json =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    }
-  }
-
-  /** Read a [[mergeIntoPartitioned]] snapshot with its MANIFEST schema —
-    * the contract path-based consumers must use after any evolving merge:
-    * the manifest names every evolved column (pre-evolution files read
-    * null for columns they lack), costs one tiny file read instead of
-    * mergeSchema's every-footer scan, and is immune to plain footer
-    * inference's which-file-did-Spark-sample lottery. Snapshots written
-    * before the manifest existed (or a crash in the manifest's
-    * delete→rename window) fall back to the mergeSchema union read —
-    * correct on mixed footers, just metadata-expensive. */
-  def readPartitioned(spark: SparkSession, targetPath: String): DataFrame = {
-    val path = new Path(targetPath)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readSchemaManifest(fs, path) match {
-      case Some(schema) => spark.read.schema(schema).parquet(targetPath)
-      case None => spark.read.option("mergeSchema", "true").parquet(targetPath)
-    }
-  }
-
-  /** Key-purge result: row counts over the TOUCHED buckets only (the
-    * untouched remainder is never read). */
-  final case class PurgeStats(nBefore: Long, nAfter: Long,
-                              nBucketsTouched: Int) {
-    def nPurged: Long = nBefore - nAfter
-  }
-
-  /** DELETE every row whose `key` is in `keys` from a
-    * [[mergeIntoPartitioned]] snapshot — the right-to-be-forgotten /
-    * Delta-DELETE operation a governed corpus must run on demand.
-    *
-    * IO contract (the whole point at 100 TB): the key frame hashes to
-    * its buckets, ONLY those bucket dirs are read, anti-joined against
-    * the broadcast key set, and rewritten via the per-dir delete+rename
-    * swap [[mergeIntoPartitioned]] uses; every untouched bucket stays
-    * BYTE-identical (spec-pinned). A bucket whose rows are all purged
-    * produces no tmp dir and its target dir is deleted outright. Purge
-    * cost ∝ touched-bucket bytes, never snapshot size. The schema
-    * manifest is left untouched — a purge never changes the schema.
-    *
-    * Purging keys that are absent is a content-level no-op (the touched
-    * buckets are rewritten with identical rows — idempotent, so a purge
-    * REPLAY is always safe). Both row counts ride the single write
-    * action as [[Observation]]s, the mergePlanObserved discipline. */
-  def purgePartitioned(spark: SparkSession, targetPath: String,
-                       keys: DataFrame, key: String,
-                       nBuckets: Int): PurgeStats = {
-    require(nBuckets >= 1, s"nBuckets=$nBuckets must be positive")
-    val path = new Path(targetPath)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(path), s"purge target $targetPath does not exist")
-    def pb(c: Column): Column = pmod(xxhash64(c), lit(nBuckets.toLong))
-    // localCheckpoint: probed for buckets, then broadcast-anti-joined
-    val uniq = keys.select(col(key)).filter(col(key).isNotNull)
-      .distinct().localCheckpoint(true)
-    val touched = uniq.select(pb(col(key)).as("pb")).distinct()
-      .collect().map(_.getLong(0)) // ≤ nBuckets values — driver-safe
-    if (touched.isEmpty) return PurgeStats(0L, 0L, 0)
-    val obsBefore = Observation()
-    val obsAfter = Observation()
-    val kept = readPartitioned(spark, targetPath)
-      .filter(col("pb").isin(touched.map(java.lang.Long.valueOf): _*))
-      .drop("pb")
-      .observe(obsBefore, count(lit(1)).as("n"))
-      .join(broadcast(uniq), Seq(key), "left_anti")
-      .observe(obsAfter, count(lit(1)).as("n"))
-    val tmp = new Path(targetPath + ".__purge_tmp")
-    fs.delete(tmp, true)
-    kept.withColumn("pb", pb(col(key)))
-      .write.mode("overwrite").partitionBy("pb").parquet(tmp.toString)
-    touched.foreach { b =>
-      val dest = new Path(path, s"pb=$b")
-      val src = new Path(tmp, s"pb=$b")
-      fs.delete(dest, true)
-      if (fs.exists(src))
-        require(fs.rename(src, dest),
-          s"purge swap failed: could not move $src to $dest")
-    }
-    fs.delete(tmp, true)
-    PurgeStats(obsBefore.get("n").asInstanceOf[Long],
-      obsAfter.get("n").asInstanceOf[Long], touched.length)
-  }
-
-  /** [[purgePartitioned]] with the purge set given as plain values —
-    * the shape a deletion-request queue delivers. */
-  def purgePartitionedKeys(spark: SparkSession, targetPath: String,
-                           keyValues: Seq[Long], key: String,
-                           nBuckets: Int): PurgeStats = {
-    import spark.implicits._
-    purgePartitioned(spark, targetPath, keyValues.toDF(key), key, nBuckets)
   }
 
   /** The [[atomicSwap]] crash-window probe, shared by EVERY swap-backed
@@ -642,7 +417,7 @@ object MergeSink {
   /** The COMPOSED layout — partitioned by a coarse hash-directory key
     * AND bucketed by the merge key within each directory: the fourth
     * quadrant of SCALE.md's merge-layout table, taking the bounded IO
-    * of [[mergeIntoPartitioned]] (only touched `pd=` directories are
+    * of a hash-partitioned layout (only touched `pd=` directories are
     * read and rewritten) AND the exchange-free target join of
     * [[mergeIntoBucketed]] (a bucketed scan reports HashPartitioning on
     * the key regardless of which directories it pruned to, because each

@@ -126,4 +126,27 @@ class CdcSpec extends SparkSpec {
     assert(a.nonEmpty && a == b)
     assert(Cdc.q116Scd2History(spark, sf).count() > 0)
   }
+
+  test("replica check (q222): a duplicated key is out of sync, not matched twice") {
+    import graft.operators.MergeQueries.sameRows
+    def rows(r: (Long, Option[Long])*) = r.toDF("doc_id", "len")
+    val want = rows(1L -> Some(10L), 2L -> None, 3L -> Some(30L))
+    assert(sameRows(rows(3L -> Some(30L), 1L -> Some(10L), 2L -> None), want,
+      "doc_id", "len"), "equal rows in any order are in sync (null-safe)")
+    // one side holds a key twice: every copy matches the same counterpart
+    assert(!sameRows(rows(1L -> Some(10L), 1L -> Some(10L), 2L -> None,
+      3L -> Some(30L)), want, "doc_id", "len"))
+    assert(!sameRows(want, rows(1L -> Some(10L), 1L -> Some(10L), 2L -> None,
+      3L -> Some(30L)), "doc_id", "len"))
+    // equal row counts, each side duplicating a different key
+    assert(!sameRows(rows(1L -> Some(10L), 1L -> Some(10L), 3L -> Some(30L)),
+      rows(1L -> Some(10L), 3L -> Some(30L), 3L -> Some(30L)), "doc_id", "len"))
+    // the plain failures still show: a value, a missing and an extra key
+    assert(!sameRows(rows(1L -> Some(11L), 2L -> None, 3L -> Some(30L)), want,
+      "doc_id", "len"))
+    assert(!sameRows(rows(1L -> Some(10L), 2L -> None), want, "doc_id", "len"))
+    assert(!sameRows(rows(1L -> Some(10L), 2L -> None, 3L -> Some(30L),
+      4L -> None), want, "doc_id", "len"))
+    assert(sameRows(rows(), rows(), "doc_id", "len"))
+  }
 }

@@ -28,15 +28,15 @@ class CurateJobSpec extends SparkSpec {
       val s2 = CurateJob.run(spark, sf, s"$base/out2")
       assert(s2 == s, s"re-run must reproduce: $s vs $s2")
       // RE-PUBLISH to the SAME out-dir: the head flips to the new run's
-      // generation atomically; the legacy compat layout still reads
-      // via the fallback path
+      // generation atomically
       val s3 = CurateJob.run(spark, sf, s"$base/out")
       assert(s3 == s)
       assert(CurateJob.readOutput(spark, s"$base/out", "funnel")
         .head().getAs[Long]("n_sampled") == s.nSampled)
-      val legacy = CurateJob.run(spark, sf, s"$base/legacy",
-        CurateJob.CurateConfig(atomicPublish = false))
-      assert(legacy == s)
+      // an out-dir published before the commit-log migration (fixed
+      // subdirectories, no _commits) still reads via the fallback path
+      CurateJob.readOutput(spark, s"$base/out2", "shards")
+        .write.parquet(s"$base/legacy/shards")
       assert(CurateJob.readOutput(spark, s"$base/legacy", "shards")
         .count() == s.nSampled)
     } finally {
@@ -86,13 +86,6 @@ class CurateJobSpec extends SparkSpec {
         "the aged orphan generation must be swept")
       assert(CurateJob.readOutput(spark, out, "funnel")
         .head().getAs[Long]("n_sampled") == s.nSampled)
-      // a --legacy-dirs run over a COMMITTED out-dir is refused loudly:
-      // the head's pointers would shadow its fixed subdirectories
-      val e = intercept[IllegalArgumentException] {
-        CurateJob.run(spark, sf, out,
-          CurateJob.CurateConfig(atomicPublish = false))
-      }
-      assert(e.getMessage.contains("published atomically"), e.getMessage)
     } finally {
       val fs = new org.apache.hadoop.fs.Path(base.toString)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -106,8 +106,7 @@ class MaintainJobSpec extends SparkSpec {
       // any commit, so the retention margin never applies to it)
       grid.limit(1).write.parquet(s"$layout/g-crashed0/file_id=0")
       val s2 = MaintainJob.run(spark, layout, catalog,
-        MaintainJob.MaintainConfig(manifested = Some(true),
-          statsCols = Seq("zkey"), retain = 3))
+        MaintainJob.MaintainConfig(statsCols = Seq("zkey"), retain = 3))
       assert(s2.overlapBefore == 0 && s2.filesRewritten == 0 &&
         !s2.statsRefreshed)
       assert(s2.generationsSwept == 1L,
@@ -177,29 +176,6 @@ class MaintainJobSpec extends SparkSpec {
       assert(statsFile.getPath == statsFile2.getPath &&
         statsFile.getModificationTime == statsFile2.getModificationTime,
         "manifest file must be byte-level untouched on a healthy night")
-    } finally fsOf(base).delete(new Path(base.toString), true)
-  }
-
-  test("--legacy-renames on a commit-log layout is refused loudly") {
-    val base = java.nio.file.Files.createTempDirectory("graft_maint_guard_")
-    try {
-      val layout = s"$base/layout"
-      val grid = (for (a <- 0L until 8L; b <- 0L until 8L) yield (a, b))
-        .toDF("qb", "lb")
-        .withColumn("zkey", Sharding.zOrderKey(col("qb"), col("lb"), 8))
-        .withColumn("file_id", expr(s"zkey * 4 div ${1L << 16}"))
-      Sharding.zWriteManifested(spark, layout, grid, append = false)
-      // a legacy night over a manifested layout would read every
-      // generation dir raw and rewrite files the manifest pins —
-      // the guard refuses before any work (CurateJob's --legacy-dirs
-      // guard, mirrored)
-      val e = intercept[IllegalArgumentException] {
-        MaintainJob.run(spark, layout, s"$base/catalog",
-          MaintainJob.MaintainConfig(manifested = Some(false)))
-      }
-      assert(e.getMessage.contains("commit log"), e.getMessage)
-      assert(Sharding.zReadManifested(spark, layout).count() == 64L,
-        "the refused night must not have touched the layout")
     } finally fsOf(base).delete(new Path(base.toString), true)
   }
 }

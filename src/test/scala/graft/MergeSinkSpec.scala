@@ -246,64 +246,6 @@ class MergeSinkSpec extends SparkSpec {
     Seq(tbl, tmp).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
-  test("partitioned merge: same rows and counts as the full-rewrite merge") {
-    val dirP = Files.createTempDirectory("graft_merge_part").toString + "/idx"
-    val dirF = Files.createTempDirectory("graft_merge_full").toString + "/idx"
-    try {
-      // two rounds covering upsert, matched+modified, and null-skip
-      val r1 = df(Seq(("a", 1.0, 2.0), ("b", 3.0, 4.0), ("c", 5.0, 6.0)))
-      val r2 = df(Seq(("a", null, 9.0), ("d", 7.0, 8.0)))
-      val sP1 = MergeSink.mergeIntoPartitioned(spark, dirP, r1, "k", fields, 8)
-      val sF1 = MergeSink.mergeInto(spark, dirF, r1, "k", fields)
-      val sP2 = MergeSink.mergeIntoPartitioned(spark, dirP, r2, "k", fields, 8)
-      val sF2 = MergeSink.mergeInto(spark, dirF, r2, "k", fields)
-      assert(sP1 == sF1 && sP2 == sF2,
-        s"stats must agree: $sP1/$sF1, $sP2/$sF2")
-      def rows(d: String) = spark.read.parquet(d)
-        .select(col("k"), col("f1"), col("f2")) // updatedAt stamps differ
-        .collect().map(r => (r.getString(0), r.get(1), r.get(2))).toSet
-      assert(rows(dirP) == rows(dirF),
-        "the partitioned layout must hold the same merged rows")
-    } finally Seq(dirP, dirF).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p.getParent, true)
-    }
-  }
-
-  test("partitioned merge rewrites ONLY the buckets the update keys touch") {
-    val dir = Files.createTempDirectory("graft_merge_prune").toString + "/idx"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val nB = 8
-      // seed enough keys that every bucket is populated
-      val seed = df((1 to 64).map(i => (s"k$i",
-        java.lang.Double.valueOf(i.toDouble), java.lang.Double.valueOf(0.0))))
-      MergeSink.mergeIntoPartitioned(spark, dir, seed, "k", fields, nB)
-      def snapshot(): Map[String, Seq[(String, Long, Long)]] =
-        fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-          .filter(_.getPath.getName.startsWith("pb=")).map { d =>
-            d.getPath.getName ->
-              fs.listStatus(d.getPath).toSeq.map(f =>
-                (f.getPath.getName, f.getLen, f.getModificationTime))
-          }.toMap
-      val before = snapshot()
-      assert(before.size == nB, s"seed should populate all $nB buckets")
-      // one-key update: exactly one bucket's files may change
-      MergeSink.mergeIntoPartitioned(spark, dir,
-        df(Seq(("k1", 99.0, 99.0))), "k", fields, nB)
-      val after = snapshot()
-      val changed = before.keySet.filter(b => before(b) != after(b))
-      val touched = spark.range(1)
-        .select(pmod(xxhash64(lit("k1")), lit(nB.toLong))).head().getLong(0)
-      assert(changed == Set(s"pb=$touched"),
-        s"only k1's bucket may be rewritten; changed=$changed expected=pb=$touched")
-    } finally {
-      fs.delete(new org.apache.hadoop.fs.Path(dir).getParent, true)
-    }
-  }
-
   test("composed partitioned+bucketed merge: parity with full rewrite, untouched dirs intact") {
     val t = "graft_merge_pb_parity"
     val dirF = Files.createTempDirectory("graft_merge_pb_full").toString + "/idx"
@@ -399,55 +341,6 @@ class MergeSinkSpec extends SparkSpec {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p.getParent, true)
     }
-  }
-
-  test("schema evolution (partitioned): untouched buckets keep their day-1 files") {
-    val dir = Files.createTempDirectory("graft_evo_part").toString + "/idx"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val nB = 8
-      MergeSink.mergeIntoPartitioned(spark, dir,
-        df(Seq(("a", 1.0, 2.0), ("b", 3.0, 4.0))), "k", fields, nB)
-      def files(): Map[String, Seq[(String, Long, Long)]] =
-        fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-          .filter(_.getPath.getName.startsWith("pb=")).map { d =>
-            d.getPath.getName -> fs.listStatus(d.getPath).toSeq
-              .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
-          }.toMap
-      val before = files()
-      MergeSink.mergeIntoPartitioned(spark, dir, day2, "k", Seq("f3"), nB)
-      val after = files()
-      val aBucket = spark.range(1)
-        .select(pmod(xxhash64(lit("a")), lit(nB.toLong))).head().getLong(0)
-      val changed = before.keySet.filter(b => before(b) != after(b))
-      assert(changed == Set(s"pb=$aBucket"),
-        s"evolution must not rewrite day-1 buckets: changed=$changed")
-      // the contract read path is the persisted schema MANIFEST —
-      // readPartitioned, NOT a mergeSchema footer scan: touched dirs
-      // carry f3, untouched dirs read null for it
-      assertEvolved(MergeSink.readPartitioned(spark, dir)
-        .collect().map(r => r.getAs[String]("k") ->
-          ((r.getAs[Any]("f1"), r.getAs[Any]("f2"), r.getAs[Any]("f3")))).toMap)
-      // the manifest is the schema authority: the read plan's schema
-      // carries the evolved column WITHOUT any footer-merge inference
-      // (the file exists, and the analyzed scan lists f3 in its output)
-      assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "_graft_schema.json")),
-        "evolving merge must publish the schema manifest")
-      val reopened = MergeSink.readPartitioned(spark, dir)
-      assert(reopened.schema.fieldNames.contains("f3") &&
-        reopened.schema.fieldNames.contains("pb"),
-        s"manifest read must expose the evolved column: ${reopened.schema}")
-      val scan = reopened.queryExecution.executedPlan.toString
-      assert(scan.contains("f3"),
-        s"the scan's ReadSchema must carry the manifest's evolved column:\n$scan")
-      // and a manifest-less legacy snapshot still reads (mergeSchema
-      // fallback): deleting the manifest must not lose the column
-      fs.delete(new org.apache.hadoop.fs.Path(dir, "_graft_schema.json"), false)
-      assertEvolved(MergeSink.readPartitioned(spark, dir)
-        .collect().map(r => r.getAs[String]("k") ->
-          ((r.getAs[Any]("f1"), r.getAs[Any]("f2"), r.getAs[Any]("f3")))).toMap)
-    } finally fs.delete(new org.apache.hadoop.fs.Path(dir).getParent, true)
   }
 
   test("schema evolution (bucketed table): catalog schema evolves with the rewrite") {

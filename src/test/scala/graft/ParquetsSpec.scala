@@ -228,13 +228,7 @@ class ParquetsSpec extends SparkSpec {
         schemaLessReads(new String(Files.readAllBytes(f.toPath), "UTF-8"))
           .map { case (line, text) => (f.getPath, line, text) }
       }
-    // the one allowed exception: readPartitioned's pre-manifest snapshots
-    // need the union of every footer, which only mergeSchema gives
-    val (allowed, rest) = hits.partition { case (p, _, text) =>
-      p.endsWith("sinks/MergeSink.scala") && text.contains("\"mergeSchema\", \"true\"")
-    }
-    assert(allowed.size == 1, s"the mergeSchema fallback moved: $allowed")
-    assert(rest.isEmpty, "route these through graft.Parquets.read:\n" +
-      rest.map { case (p, l, t) => s"$p:$l: $t" }.mkString("\n"))
+    assert(hits.isEmpty, "route these through graft.Parquets.read:\n" +
+      hits.map { case (p, l, t) => s"$p:$l: $t" }.mkString("\n"))
   }
 }

@@ -241,21 +241,33 @@ class PlanAuditSpec extends SparkSpec {
 
   test("partitioned dedup index: the probe prunes to the batch's buckets at the scan (q73 layout)") {
     import spark.implicits._
+    import graft.sinks.ManifestMergeSink
     val dir = java.nio.file.Files.createTempDirectory("graft_pa_part").toString + "/idx"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
-      graft.sinks.MergeSink.mergeIntoPartitioned(spark, dir,
-        Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "content_hash")
-          .select(col("content_hash"), col("doc_id")),
-        "content_hash", Seq("doc_id"), nBuckets = 16)
-      // the per-day probe shape: index read filtered to the batch's
-      // bucket literals — must be directory pruning, not a row filter
-      val p = plan(spark.read.parquet(dir)
-        .filter(col("pb").isin(java.lang.Long.valueOf(3L), java.lang.Long.valueOf(7L)))
-        .select(col("content_hash")))
-      assert(p.contains("PartitionFilters: [pb"),
-        s"bucket probe must prune directories at the source:\n$p")
+      operators.MergeQueries.dedupIngestManifested(spark, dir,
+        (1L to 256L).map(i => (i, s"h$i")).toDF("doc_id", "content_hash"),
+        nBuckets = 16)
+      val (_, st) = ManifestMergeSink.headState(spark, dir).get
+      assert(st.mapping.size == 16, s"seed must populate every bucket: ${st.mapping}")
+      // the per-day probe shape (dedupIngestManifested's recompute): the
+      // index read for the batch's buckets — the scan's file index must
+      // be rooted at exactly those buckets' dirs, not a filtered full scan
+      val batch = Seq("h3", "h7").toDF("content_hash")
+      val touched = graft.Sparks.distinctLongs(batch,
+        pmod(xxhash64(col("content_hash")), lit(16L)))
+      val df = ManifestMergeSink.readStateBuckets(spark, dir, st, touched)
+        .select(col("content_hash"))
+      val roots = df.queryExecution.executedPlan.collectLeaves().collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.rootPaths.map(_.toString).toSet
+      }
+      val want = touched.map(b => new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(dir), st.mapping(b))).map(p =>
+        fs.makeQualified(p).toString).toSet
+      assert(roots == Seq(want),
+        s"bucket probe must list only the batch's bucket dirs: $roots vs $want")
     } finally {
       fs.delete(new org.apache.hadoop.fs.Path(dir).getParent, true)
     }

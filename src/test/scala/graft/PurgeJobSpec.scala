@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import graft.jobs.PurgeJob
 import graft.operators.MergeQueries
-import graft.sinks.{MergeSink, VersionCatalog}
+import graft.sinks.{ManifestMergeSink, VersionCatalog}
 
 /** The one-operation deletion run: all three purge targets forget, and
   * a replayed run is a counted no-op everywhere. */
@@ -24,10 +24,10 @@ class PurgeJobSpec extends SparkSpec {
         .toDF("doc_id", "text")
         .select($"doc_id", $"text", md5($"text").as("content_hash"))
         .localCheckpoint(true)
-      MergeSink.mergeIntoPartitioned(spark, snap,
-        docs.select($"doc_id", $"text"), "doc_id", Seq("text"), 4)
-      MergeQueries.dedupIngestPartitioned(spark, idx,
-        docs.select($"content_hash", $"doc_id"), 4)
+      ManifestMergeSink.mergeIntoManifested(spark, snap,
+        docs.select($"doc_id", $"text"), "doc_id", Seq("text"), nBuckets = 4)
+      MergeQueries.dedupIngestManifested(spark, idx,
+        docs.select($"content_hash", $"doc_id"), nBuckets = 4)
       VersionCatalog.commit(spark, cat, docs.select($"doc_id", $"text"))
       VersionCatalog.commit(spark, cat,
         docs.filter($"doc_id" <= 50L).select($"doc_id", $"text"))
@@ -36,15 +36,15 @@ class PurgeJobSpec extends SparkSpec {
         .select($"doc_id", $"content_hash")
       val cfg = PurgeJob.PurgeConfig.fromFlags(Seq(
         "--key", "doc_id", "--snapshot", snap, "--index", idx,
-        "--catalog", cat, "--n-buckets", "4"))
+        "--catalog", cat))
       val s = PurgeJob.run(spark, request, cfg)
       assert(s.snapshotPurged.contains(6L) && s.indexPurged.contains(6L),
         s"$s")
       assert(s.catalogPurged == Seq(1L -> 6L, 2L -> 5L), s"$s")
       val expect = (1L to 60L).filter(_ % 10 != 0).toSet
-      assert(MergeSink.readPartitioned(spark, snap)
+      assert(ManifestMergeSink.readManifested(spark, snap)
         .select($"doc_id").as[Long].collect().toSet == expect)
-      assert(MergeSink.readPartitioned(spark, idx)
+      assert(ManifestMergeSink.readManifested(spark, idx)
         .select($"doc_id").as[Long].collect().toSet == expect)
       assert(VersionCatalog.readVersion(spark, cat, 2L)
         .select($"doc_id").as[Long].collect().toSet ==
@@ -64,14 +64,17 @@ class PurgeJobSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       PurgeJob.PurgeConfig.fromFlags(Seq("--key", "doc_id")) // no target
     }
+    intercept[IllegalArgumentException] { // the count comes from the head
+      PurgeJob.PurgeConfig.fromFlags(Seq("--snapshot", "s", "--n-buckets", "4"))
+    }
     val base = java.nio.file.Files.createTempDirectory("graft_purgejob2_")
     try {
       val idx = s"$base/idx"
-      MergeQueries.dedupIngestPartitioned(spark, idx,
-        Seq(("h", 1L)).toDF("content_hash", "doc_id"), 2)
+      MergeQueries.dedupIngestManifested(spark, idx,
+        Seq(("h", 1L)).toDF("content_hash", "doc_id"), nBuckets = 2)
       intercept[IllegalArgumentException] {
         PurgeJob.run(spark, Seq(1L).toDF("doc_id"),
-          PurgeJob.PurgeConfig(index = Some(idx), nBuckets = 2))
+          PurgeJob.PurgeConfig(index = Some(idx)))
       }
     } finally fsOf(base).delete(new Path(base.toString), true)
   }

@@ -1,50 +1,64 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.hadoop.fs.Path
+import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
-import graft.sinks.MergeSink
+import graft.sinks.ManifestMergeSink
+import graft.sinks.ManifestMergeSink.PurgeStats
 
 /** Pins for the key purge beyond the q176 oracle gate: the IO contract
-  * (untouched buckets byte-identical), emptied-bucket removal, absent-key
-  * idempotence, and exact stats. */
+  * (untouched buckets byte-identical, the scan lists only the touched
+  * buckets' dirs), emptied-bucket removal, absent-key idempotence, and
+  * exact stats. */
 class PurgeSpec extends SparkSpec {
   import spark.implicits._
 
   private def fsOf(p: java.nio.file.Path) =
     new Path(p.toString).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def files(dir: String) = {
-    val p = new Path(dir)
+  private def mapping(snap: String): Map[Long, String] =
+    ManifestMergeSink.headState(spark, snap).get._2.mapping
+
+  /** (file name, length, mtime) of every data file under a bucket dir. */
+  private def files(snap: String, dir: String) = {
+    val p = new Path(snap, dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Map.empty[String, Long]
-    else fs.listStatus(p).filter(_.getPath.getName.startsWith("pb="))
-      .flatMap(d => fs.listStatus(d.getPath))
-      .map(st => st.getPath.toString -> st.getModificationTime).toMap
+    fs.listStatus(p).map(st =>
+      (st.getPath.getName, st.getLen, st.getModificationTime)).toSet
   }
+
+  private def bucketsOf(keys: Seq[Long], n: Int): Set[Long] =
+    keys.toDF("id").select(pmod(xxhash64($"id"), lit(n.toLong))).as[Long]
+      .collect().toSet
 
   test("purge rewrites only touched buckets; untouched files byte-identical") {
     val base = java.nio.file.Files.createTempDirectory("graft_purge1_")
     try {
       val snap = s"$base/snap"
       val rows = (1L to 200L).map(i => (i, s"v$i")).toDF("id", "payload")
-      MergeSink.mergeIntoPartitioned(spark, snap, rows, "id",
+      ManifestMergeSink.mergeIntoManifested(spark, snap, rows, "id",
         Seq("payload"), nBuckets = 8)
-      val before = files(snap)
+      val before = mapping(snap)
+      val beforeFiles = before.map { case (b, d) => b -> files(snap, d) }
       // purge 5 keys — they hash to a strict subset of the 8 buckets
       val keys = Seq(3L, 7L, 11L, 19L, 23L)
-      val touchedPb = keys
-        .toDF("id").select(pmod(xxhash64($"id"), lit(8L))).as[Long]
-        .collect().toSet
+      val touchedPb = bucketsOf(keys, 8)
       assert(touchedPb.size < 8, s"fixture must leave untouched buckets")
-      val st = MergeSink.purgePartitionedKeys(spark, snap, keys, "id", 8)
+      val st = ManifestMergeSink.purgeManifested(spark, snap, keys.toDF("id"), "id")
       assert(st.nPurged == 5 && st.nBucketsTouched == touchedPb.size, s"$st")
-      val after = files(snap)
-      val untouched = before.filter { case (f, _) =>
-        !touchedPb.exists(b => f.contains(s"pb=$b/")) }
-      untouched.foreach { case (f, m) =>
-        assert(after.get(f).contains(m), s"untouched file changed: $f") }
+      val after = mapping(snap)
+      before.keySet.filterNot(touchedPb).foreach { b =>
+        assert(after.get(b).contains(before(b)), s"untouched bucket $b repointed")
+        assert(files(snap, after(b)) == beforeFiles(b), s"untouched bucket $b changed")
+      }
+      touchedPb.foreach(b => assert(after(b) != before(b), s"bucket $b not rewritten"))
       // content: exactly the purged keys are gone
-      val got = MergeSink.readPartitioned(spark, snap)
+      val got = ManifestMergeSink.readManifested(spark, snap)
         .select($"id").as[Long].collect().toSet
       assert(got == (1L to 200L).toSet -- keys)
     } finally fsOf(base).delete(new Path(base.toString), true)
@@ -54,21 +68,46 @@ class PurgeSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("graft_purge4_")
     try {
       val snap = s"$base/snap"
-      MergeSink.mergeIntoPartitioned(spark, snap,
+      ManifestMergeSink.mergeIntoManifested(spark, snap,
         (1L to 100L).map(i => (i, s"v$i")).toDF("id", "payload"),
         "id", Seq("payload"), nBuckets = 8)
+      val dirs = mapping(snap)
+      assert(dirs.size == 8, s"seed must populate every bucket: $dirs")
       val keys = Seq(3L, 7L)
-      val touched = keys.toDF("id")
-        .select(pmod(xxhash64($"id"), lit(8L))).as[Long].collect().toSet
-      // the exact read shape purgePartitioned issues before the anti-join
-      val read = MergeSink.readPartitioned(spark, snap)
-        .filter($"pb".isin(touched.toSeq.map(java.lang.Long.valueOf): _*))
-      val parts = read.queryExecution.executedPlan.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.selectedPartitions.partitionCount
+      val touched = bucketsOf(keys, 8)
+      // every plan the purge executes, as the SQL listener receives it
+      val plans = ArrayBuffer.empty[SparkPlanInfo]
+      val sc = spark.sparkContext
+      ListenerBridge.waitUntilEmpty(sc)
+      val l = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart => plans.synchronized(plans += s.sparkPlanInfo)
+          case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+            plans.synchronized(plans += u.sparkPlanInfo)
+          case _ =>
+        }
       }
-      assert(parts == Seq(touched.size),
-        s"scan must select exactly the touched bucket dirs: $parts vs $touched")
+      sc.addSparkListener(l)
+      try {
+        ManifestMergeSink.purgeManifested(spark, snap, keys.toDF("id"), "id")
+        ListenerBridge.waitUntilEmpty(sc)
+      } finally sc.removeSparkListener(l)
+      def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+      // the snapshot's scans: a file index rooted under the snapshot
+      val locations = plans.toSeq.flatMap(nodes).flatMap(_.metadata.get("Location"))
+        .filter(_.contains(snap)).distinct
+      assert(locations.nonEmpty, s"the purge must scan the snapshot: $plans")
+      val PathCount = """\((\d+) paths?\)""".r.unanchored
+      locations.foreach { loc =>
+        loc match {
+          case PathCount(n) => assert(n.toInt == touched.size,
+            s"scan must list exactly the touched bucket dirs ($touched): $loc")
+          case _ => fail(s"no path count in the scan location: $loc")
+        }
+        // every path it names is a touched bucket's dir
+        dirs.filterNot { case (b, _) => touched(b) }.values.foreach(d =>
+          assert(!loc.contains(s"$snap/$d"), s"untouched dir $d scanned: $loc"))
+      }
     } finally fsOf(base).delete(new Path(base.toString), true)
   }
 
@@ -76,18 +115,21 @@ class PurgeSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("graft_purge2_")
     try {
       val snap = s"$base/snap"
-      MergeSink.mergeIntoPartitioned(spark,
+      ManifestMergeSink.mergeIntoManifested(spark,
         snap, (1L to 50L).map(i => (i, i * 10L)).toDF("id", "v"),
         "id", Seq("v"), nBuckets = 4)
-      val st = MergeSink.purgePartitionedKeys(spark, snap,
-        Seq(999L, 1000L), "id", 4)
+      val st = ManifestMergeSink.purgeManifested(spark, snap,
+        Seq(999L, 1000L).toDF("id"), "id")
       assert(st.nPurged == 0, s"$st")
-      val got = MergeSink.readPartitioned(spark, snap)
+      val got = ManifestMergeSink.readManifested(spark, snap)
         .select($"id", $"v").as[(Long, Long)].collect().toSet
       assert(got == (1L to 50L).map(i => (i, i * 10L)).toSet)
-      val empty = MergeSink.purgePartitioned(spark, snap,
-        spark.emptyDataset[Long].toDF("id"), "id", 4)
-      assert(empty == MergeSink.PurgeStats(0L, 0L, 0))
+      val seqs = ManifestMergeSink.commitSeqs(spark, snap)
+      val empty = ManifestMergeSink.purgeManifested(spark, snap,
+        spark.emptyDataset[Long].toDF("id"), "id")
+      assert(empty == PurgeStats(0L, 0L, 0))
+      assert(ManifestMergeSink.commitSeqs(spark, snap) == seqs,
+        "an empty purge set must not commit")
     } finally fsOf(base).delete(new Path(base.toString), true)
   }
 
@@ -96,20 +138,19 @@ class PurgeSpec extends SparkSpec {
     try {
       val snap = s"$base/snap"
       val rows = (1L to 64L).map(i => (i, s"p$i")).toDF("id", "payload")
-      MergeSink.mergeIntoPartitioned(spark, snap, rows, "id",
+      ManifestMergeSink.mergeIntoManifested(spark, snap, rows, "id",
         Seq("payload"), nBuckets = 4)
       // purge EVERY key of one bucket (and nothing else)
       val bucketOf = rows.select($"id",
         pmod(xxhash64($"id"), lit(4L)).as("pb")).as[(Long, Long)].collect()
       val victim = bucketOf.head._2
       val doomedIds = bucketOf.filter(_._2 == victim).map(_._1)
-      val st = MergeSink.purgePartitionedKeys(spark, snap,
-        doomedIds.toSeq, "id", 4)
+      val st = ManifestMergeSink.purgeManifested(spark, snap,
+        doomedIds.toSeq.toDF("id"), "id")
       assert(st.nPurged == doomedIds.length && st.nBucketsTouched == 1, s"$st")
-      val fs = fsOf(base)
-      assert(!fs.exists(new Path(s"$snap/pb=$victim")),
-        "fully-purged bucket dir must disappear")
-      val got = MergeSink.readPartitioned(spark, snap)
+      assert(!mapping(snap).contains(victim),
+        "fully-purged bucket must leave the mapping")
+      val got = ManifestMergeSink.readManifested(spark, snap)
         .select($"id").as[Long].collect().toSet
       assert(got == (1L to 64L).toSet -- doomedIds)
     } finally fsOf(base).delete(new Path(base.toString), true)
