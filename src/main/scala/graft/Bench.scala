@@ -2,8 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Per-round benchmark: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * emits one JSON metric line.
+/** Per-round benchmark: runs every SparkEntry query on GRAFT_SF_DIR, in lex
+  * order, and emits one JSON metric line.
   *
   * Measurement forces FULL materialization with a `noop`-format write: under
   * a bare `.count()` Catalyst prunes every unreferenced projection, so
@@ -11,11 +11,17 @@ import java.nio.file.{Files, Paths}
   * cost instead of their real compute. The noop sink evaluates every output
   * column and discards the rows — the honest per-query cost.
   *
-  * The metric line goes to stdout AND to a file (SPARK_GRAFT_BENCH_OUT,
-  * default /root/repo/BENCH.json) because sbt's log decoration around stdout
+  * The metric line goes to stdout AND to a file (GRAFT_BENCH_OUT, default
+  * [[GraftConfig.benchOut]]) because sbt's log decoration around stdout
   * made the driver's parse fail in round 1 (BENCH_r01.json "parsed": null).
   */
 object Bench {
+  /** One query's outcome: the median of its successful timed reps (None
+    * when every rep failed), the failed-rep count, the per-rep durations
+    * in run order and the JVM collector time across its timed reps. */
+  private[graft] final case class QueryResult(name: String,
+      median: Option[Double], nFailed: Int, repsSec: Seq[Double], gcMs: Long)
+
   def main(args: Array[String]): Unit = {
     val cfg = GraftConfig.fromEnv()
     val sfDir = cfg.sfDir
@@ -43,19 +49,8 @@ object Bench {
     // GRAFT_BENCH_ONLY narrows the run to named queries — for timing one
     // query in isolation while iterating (the full-alphabet run is the
     // driver's; a filtered run's totals are not comparable to it).
-    // GRAFT_BENCH_ORDER=reverse flips the run order: with run_pos +
-    // gc_sec in the artifact this is the controlled A/B that separates a
-    // plan regression (slow in both orders) from cumulative single-JVM
-    // pressure (slow only late in the run) — the r14 driver-run finding.
-    val lex = SparkEntry.queries.toSeq.sortBy(_._1)
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => cfg.benchOnly.isEmpty || cfg.benchOnly(name) }
-    val selected = cfg.benchOrder match {
-      case "reverse" => lex.reverse
-      case "lex" => lex
-      case other =>
-        System.err.println(s"[bench] unknown GRAFT_BENCH_ORDER=$other; using lex")
-        lex
-    }
     // cumulative JVM GC time (all collectors) — deltas attribute each
     // query's share of collector wall-clock during its TIMED reps
     def gcMillis(): Long = {
@@ -133,16 +128,41 @@ object Bench {
         if (sorted.isEmpty) None
         else if (sorted.size % 2 == 1) Some(sorted(sorted.size / 2))
         else Some((sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2)
-      (name, median, reps - durations.size, durations, gcDuringReps)
+      QueryResult(name, median, reps - durations.size, durations, gcDuringReps)
     }
-    val qs = results.map { case (k, v, _, _, _) =>
-      s"\"" + k + "\":" + v.map(_.toString).getOrElse("null")
-    }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, None, _, _, _) => "\"" + k + "\"" }
+    val nWarmed = selected.count { case (name, _) => needsWarmup(name) }
+    val json = metricLine(results, reps, cfg.benchMode, nWarmed, sfDir)
+    println(json)
+    // a GRAFT_BENCH_ONLY-filtered run is an iteration tool: its partial
+    // total must not clobber the canonical full-run artifact — honor an
+    // EXPLICIT output override, else stdout only
+    if (cfg.benchOnly.nonEmpty && selected.isEmpty)
+      System.err.println(s"[bench] GRAFT_BENCH_ONLY matched no queries: ${cfg.benchOnly}")
+    if (cfg.benchOnly.isEmpty || cfg.benchOutSet) {
+      val out = cfg.benchOut
+      try Files.writeString(Paths.get(out), json + "\n")
+      catch { case e: Throwable => System.err.println(s"[bench] write $out: ${e.getMessage}") }
+    }
+    spark.stop()
+  }
+
+  /** The metric line. Every string (query names, the fixture dir) goes
+    * through [[Jsons.quote]]. `"order"` is always `"lex"`: readers of
+    * earlier artifacts, which could also say `"reverse"`, still parse it. */
+  private[graft] def metricLine(results: Seq[QueryResult], reps: Int,
+                                mode: String, nWarmed: Int,
+                                sfDir: String): String = {
+    def obj(f: QueryResult => String): String =
+      results.map(r => Jsons.quote(r.name) + ":" + f(r)).mkString("{", ",", "}")
+    // Locale.ROOT: the f-interpolator honors the default locale, and a
+    // comma decimal separator would corrupt the JSON artifact
+    def sec(d: Double): String =
+      String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
+    val qs = obj(_.median.map(_.toString).getOrElse("null"))
+    val failed = results.filter(_.median.isEmpty).map(r => Jsons.quote(r.name))
       .mkString("[", ",", "]")
-    val flaky = results.collect { case (k, Some(_), nf, _, _) if nf > 0 =>
-      s"\"" + k + "\":" + nf
-    }.mkString("{", ",", "}")
+    val flaky = results.filter(r => r.median.isDefined && r.nFailed > 0)
+      .map(r => Jsons.quote(r.name) + ":" + r.nFailed).mkString("{", ",", "}")
     // attribution columns (the r14 finding — 16 tail-of-run queries ran
     // >2× slower in one environment at identical code): run_pos is each
     // query's 0-based position in THIS run's order, gc_sec its share of
@@ -150,46 +170,21 @@ object Bench {
     // artifacts can now separate "the plan regressed" (slow at any
     // position, little GC) from "the JVM was under cumulative pressure"
     // (slow only late, GC-dominated) without re-running anything.
-    val runPos = results.zipWithIndex.map { case ((k, _, _, _, _), i) =>
-      s"\"" + k + "\":" + i
-    }.mkString("{", ",", "}")
-    val gcSec = results.map { case (k, _, _, _, gcMs) =>
-      s"\"" + k + "\":" +
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(gcMs / 1e3))
-    }.mkString("{", ",", "}")
+    val runPos = results.zipWithIndex
+      .map { case (r, i) => Jsons.quote(r.name) + ":" + i }.mkString("{", ",", "}")
+    val gcSec = obj(r => sec(r.gcMs / 1e3))
     // per-rep durations IN RUN ORDER (not sorted): the artifact itself
     // must show run-to-run spread — a 2.6× swing between two runs of
     // identical code (the r12 q56/q68 finding) is invisible in a median,
     // and a reader diffing two BENCH artifacts needs to tell a plan
     // regression (all reps moved) from scheduler/GC noise (one rep
     // spiked) without re-running anything
-    val repsSec = results.map { case (k, _, _, ds, _) =>
-      // Locale.ROOT: the f-interpolator honors the default locale, and a
-      // comma decimal separator would corrupt the JSON artifact
-      s"\"" + k + "\":" + ds.map(d =>
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(d)))
-        .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val total = results.flatMap(_._2).sum
-    val nWarmed = selected.count { case (name, _) => needsWarmup(name) }
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""failed":$failed,"flaky":$flaky,"reps":$reps,"reps_sec":$repsSec,""" +
-        s""""run_pos":$runPos,"gc_sec":$gcSec,"order":"${cfg.benchOrder}",""" +
-        s""""mode":"${cfg.benchMode}","warmup_queries":$nWarmed,"sf":"$sfDir"}"""
-    println(json)
-    // a GRAFT_BENCH_ONLY-filtered run is an iteration tool: its partial
-    // total must not clobber the canonical full-run artifact the driver
-    // parses — honor an EXPLICIT output override, else stdout only
-    val explicitOut = sys.env.contains("GRAFT_BENCH_OUT") ||
-      sys.env.contains("SPARK_GRAFT_BENCH_OUT")
-    if (cfg.benchOnly.nonEmpty && selected.isEmpty)
-      System.err.println(s"[bench] GRAFT_BENCH_ONLY matched no queries: ${cfg.benchOnly}")
-    if (cfg.benchOnly.isEmpty || explicitOut) {
-      val out = cfg.benchOut
-      try Files.writeString(Paths.get(out), json + "\n")
-      catch { case e: Throwable => System.err.println(s"[bench] write $out: ${e.getMessage}") }
-    }
-    spark.stop()
+    val repsSec = obj(_.repsSec.map(sec).mkString("[", ",", "]"))
+    val total = results.flatMap(_.median).sum
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s""""failed":$failed,"flaky":$flaky,"reps":$reps,"reps_sec":$repsSec,""" +
+      s""""run_pos":$runPos,"gc_sec":$gcSec,"order":"lex",""" +
+      s""""mode":${Jsons.quote(mode)},"warmup_queries":$nWarmed,""" +
+      s""""sf":${Jsons.quote(sfDir)}}"""
   }
 }

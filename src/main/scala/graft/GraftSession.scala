@@ -8,18 +8,20 @@ import org.apache.spark.sql.SparkSession
   * partition coalescing), shuffle partitions sized to the local core count
   * rather than the 200 default (on a real cluster this would be set to
   * ~2-3x total cores via `--conf`), UTC session time zone for oracle parity.
+  * The core count comes from [[GraftConfig]] (`GRAFT_CPUS`, default 32);
+  * every other setting below is fixed.
   */
 object GraftSession {
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-              shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+  def builder(master: String = s"local[${GraftConfig.fromEnv().cpus}]",
+              shufflePartitions: Int = GraftConfig.fromEnv().cpus)
       : SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
       .withExtensions(new GraftExtensions) // native expressions as SQL fns
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true"))
+      // AQE on (see above): turning it off was measured slower
+      .config("spark.sql.adaptive.enabled", "true")
       // let AQE re-plan (coalesce) the stages under persist()ed frames —
       // the label-propagation/persist loops otherwise pin every round's
       // stages at the raw shuffle-partition count (guide §2.2: fewer,
@@ -40,17 +42,14 @@ object GraftSession {
       // and writes ONE data + ONE index file per map task at every
       // scale; Spark only prefers bypass below the 200-partition legacy
       // threshold, a heuristic tuned for pre-tungsten RDD shuffles.
-      // GRAFT_SHUFFLE_BYPASS_THRESHOLD restores the default for A/B.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("GRAFT_SHUFFLE_BYPASS_THRESHOLD", "2"))
+      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
       // Codegen class cache sized to the workload: the default 100
       // entries thrash under a 241-query suite (Profile counted 64-71
       // Janino recompiles PER RUN of a single ingest harness, ~10 ms
       // each, each blocking the first task of its stage), and evicted
       // entries also churn classloaders. Static conf — must be set at
       // session build. Sized to distinct plan count, not data scale.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE_ENTRIES", "4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // AQE coalesces post-shuffle partitions by BYTES; for CPU-dense
       // rows (exploded gram postings, gram-array verify kernels,
       // signature frames) the default 1 MB floor squeezes seconds of
@@ -61,18 +60,15 @@ object GraftSession {
       // totalBytes/parallelism and this floor is unreachable — it only
       // ever acts on small-byte/high-CPU stages, the exact case byte
       // heuristics misjudge.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // File listing for multi-dir reads (the DirManifest/ManifestMerge
       // per-generation basePath reads): below this many paths the
       // driver lists inline; above it Spark launches a DISTRIBUTED
       // LISTING JOB — profiling caught 47 such jobs (one per manifest
       // read, ~50 ms fixed cost each) in q213 alone, for directories a
       // local or HDFS driver lists in microseconds. 1024 keeps every
-      // fixture-scale read driver-side; object-store deployments (slow
-      // sequential LIST) should lower it back via the env override.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("GRAFT_PARALLEL_DISCOVERY_THRESHOLD", "1024"))
+      // fixture-scale listing inline.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
       // events.parquet carries TIMESTAMP(NANOS); read as long nanos and
       // truncate in Tables.events (Spark has no nanosecond timestamp type).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -8,11 +8,12 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 /** Measurement-only harness (optimization guide §1): runs named queries
   * under a SparkListener and reports where the time goes — job count,
   * task count, summed task time vs wall-clock (parallelism efficiency),
-  * shuffle bytes, GC — plus optionally dumps `.explain("formatted")` of
+  * shuffle bytes, GC, then one line per action callsite and per costliest
+  * stage — plus optionally dumps `.explain("formatted")` of
   * the returned frame to plans/<tag>/<query>_<suffix>.txt.
   *
   * Usage: runMain graft.Profile q68_incr_neardup[,q72_...] [explainDir]
-  * Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench. Never part of
+  * Env: GRAFT_SF_DIR / GRAFT_CPUS as in Bench. Never part of
   * the driver contract; it changes no query result.
   */
 object Profile {
@@ -165,10 +166,8 @@ object Profile {
             .METRIC_COMPILATION_TIME
           val cg0 = cgHist.getCount
           spark.sparkContext.addSparkListener(agg)
-          // under callsite attribution, leave the description unset so
-          // each SQL execution keeps its own action callsite
-          if (!sys.env.contains("GRAFT_PROFILE_CALLSITES"))
-            spark.sparkContext.setJobDescription(s"profile:$name")
+          // no job description: each SQL execution keeps its own action
+          // callsite for the stage lines below
           val t0 = System.nanoTime()
           val df =
             try { val d = fn(spark, cfg.sfDir)
@@ -176,17 +175,14 @@ object Profile {
             catch { case e: Throwable =>
               System.err.println(s"[profile] $name failed: ${e.getMessage}"); None }
           val wall = (System.nanoTime() - t0) / 1e9
-          spark.sparkContext.setJobDescription(null)
           // listener bus is async; drain before reading counters
           org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
           spark.sparkContext.removeSparkListener(agg)
           println(agg.json(name, wall))
           println(s"""{"codegen_compiles":${cgHist.getCount - cg0},""" +
             s""""codegen_mean_ms":${f"${cgHist.getSnapshot.getMean}%.1f"}}""")
-          if (sys.env.contains("GRAFT_PROFILE_CALLSITES")) {
-            agg.callsiteLines.foreach(println)
-            agg.stageLines.foreach(println)
-          }
+          agg.callsiteLines.foreach(println)
+          agg.stageLines.foreach(println)
           for (dir <- explainDir; d <- df) {
             Files.createDirectories(Paths.get(dir))
             Files.writeString(Paths.get(dir, s"$name.txt"),

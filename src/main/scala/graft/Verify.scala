@@ -5,10 +5,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cfg = GraftConfig.fromEnv()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cfg = GraftConfig.fromEnv(defaultCpus = 4)
     val spark = GraftSession
-      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
+      .builder(master = s"local[${cfg.cpus}]", shufflePartitions = cfg.cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -24,7 +24,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * `conv(substring(hex, 8c+1, 8), 16, 10)` == big-endian unsigned int of
   * bytes [4c, 4c+4) and `conv(substring(hex, 4c+1, 4), 16, 10)` ==
   * big-endian unsigned short of bytes [2c, 2c+2). Equivalence to the
-  * un-fused pipelines is pinned in DedupSpec / TextFunctionsSpec. */
+  * un-fused pipelines is pinned in DedupSpec / TextFunctionsSpec, null
+  * elements included.
+  *
+  * One deliberate divergence: a NULL input array gives a NULL signature
+  * (Spark's null-intolerant unary rule), where the minhash HOF forms give
+  * a non-null array of `numHashes` nulls (`transform(null)` feeds each
+  * `array_min` a null inside a non-null `array(...)`). A document with
+  * no tokens has no signature; `numHashes` null entries would instead
+  * hash to the same band key for every such document, making them all
+  * LSH candidates of each other. DedupSpec pins both sides. */
 object Md5Fused {
   private val mdLocal = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest =
@@ -127,7 +136,8 @@ object Md5Fused {
   * `array_min(transform(xxhash64(e), h => xxhash64(lit(i), h)))`
   * pipeline (per element ONE string hash, then k long re-hashes through
   * Spark's own XXH64 statics; a null element hashes like the XxHash64
-  * expression's skipped-null, i.e. the base hash stays at the seed). */
+  * expression's skipped-null, i.e. the base hash stays at the seed). A
+  * NULL array gives NULL, the one divergence (see [[Md5Fused]]). */
 case class MinhashXx(child: Expression, numHashes: Int)
     extends UnaryExpression {
   import org.apache.spark.sql.catalyst.expressions.XXH64
@@ -212,8 +222,8 @@ case class SimhashSig(child: Expression) extends UnaryExpression {
 
 /** Fused md5-chunked MinHash signature: array<string> elements →
   * array<bigint> of `numHashes` 16-bit minhash values — value-identical
-  * to [[graft.functions.TextFunctions.minhashSignatureMd5Chunked]]
-  * (see [[Md5Fused]]). */
+  * to [[graft.functions.TextFunctions.minhashSignatureMd5ChunkedHof]]
+  * except on a NULL array (see [[Md5Fused]]). */
 case class MinhashMd5Chunked(child: Expression, numHashes: Int)
     extends UnaryExpression {
   require(numHashes % 8 == 0, s"numHashes=$numHashes must be a multiple of 8")

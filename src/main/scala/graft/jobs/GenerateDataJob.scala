@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.GraftSession
+import graft.{GraftSession, Jsons}
 import graft.sources.SyntheticSource
 
 /** CLI: synthetic parquet generator (reference: src/cli/generate_data.py
@@ -10,6 +10,11 @@ import graft.sources.SyntheticSource
   * (reference defaults: 10 batches x 1000 rows, generate_data.py:104-117)
   */
 object GenerateDataJob {
+  /** The job's one JSON line; the output path is escaped. */
+  private[graft] def doneLine(nRows: Long, nFiles: Int, path: String): String =
+    s"""{"stage":"generate","status":"success","rows":$nRows,"files":$nFiles,""" +
+      s""""path":${Jsons.quote(path)}}"""
+
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse(sys.error("usage: GenerateDataJob <path> [nRows] [nFiles] [seed] [nullFraction]"))
     val nRows = args.lift(1).map(_.toLong).getOrElse(10000L)
@@ -19,7 +24,7 @@ object GenerateDataJob {
     val spark = GraftSession.getOrCreate()
     SyntheticSource.write(
       SyntheticSource.generate(spark, nRows, nFiles, seed, nullFraction), path)
-    println(s"""{"stage":"generate","status":"success","rows":$nRows,"files":$nFiles,"path":"$path"}""")
+    println(doneLine(nRows, nFiles, path))
     spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Jsons, Tables}
 import graft.operators.{Audit, CorpusReport}
 import graft.sinks.VersionCatalog
 
@@ -127,6 +127,19 @@ object ReleaseJob {
        |    NULL::BIGINT, NULL::BIGINT, true)
        |ORDER BY sect, k""".stripMargin
 
+  /** One contract rule's JSON line; the rule name is escaped. */
+  private[graft] def contractLine(rule: String, violations: Long,
+                                  pass: Boolean): String =
+    s"""{"stage":"contract","rule":${Jsons.quote(rule)},""" +
+      s""""violations":$violations,"pass":$pass}"""
+
+  /** The committed release's JSON line; rule names are escaped. */
+  private[graft] def committedLine(version: Long,
+                                   advisoryFailed: Seq[String]): String =
+    s"""{"stage":"release","status":"committed","version":$version,""" +
+      s""""advisory_failures":${advisoryFailed.map(Jsons.quote)
+        .mkString("[", ",", "]")}}"""
+
   /** CLI: `release <sfDir> <catalogPath>` — validate the documents
     * table's contract, refuse the release on any violation of a
     * BLOCKING rule (structural rules block; the advisory lang mix does
@@ -145,8 +158,8 @@ object ReleaseJob {
     val report = Audit.contractValidate(docs, "doc_id",
       Audit.docContractRules(spark, sfDir)).collect()
     report.foreach { r =>
-      println(s"""{"stage":"contract","rule":"${r.getAs[String]("rule")}",""" +
-        s""""violations":${r.getAs[Long]("n_violations")},"pass":${r.getAs[Boolean]("pass")}}""")
+      println(contractLine(r.getAs[String]("rule"), r.getAs[Long]("n_violations"),
+        r.getAs[Boolean]("pass")))
     }
     val blocking = report.filter(r =>
       !r.getAs[Boolean]("pass") && !advisory(r.getAs[String]("rule")))
@@ -160,8 +173,7 @@ object ReleaseJob {
       !r.getAs[Boolean]("pass") && advisory(r.getAs[String]("rule")))
       .map(_.getAs[String]("rule")).sorted
     val v = VersionCatalog.commit(spark, catalogPath, docs)
-    println(s"""{"stage":"release","status":"committed","version":$v,""" +
-      s""""advisory_failures":[${advisoryFailed.map(r => s""""$r"""").mkString(",")}]}""")
+    println(committedLine(v, advisoryFailed.toSeq))
     spark.stop()
   }
 }

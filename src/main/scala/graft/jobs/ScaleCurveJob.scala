@@ -350,16 +350,16 @@ object ScaleCurveJob {
         TextQueries.vocabIngestManifested(spark, path, dDay, 2L,
           "lang", "text", nBuckets = 64)
       }
-      // entity resolution (q127): supplier-name registry
+      // entity resolution (q127): the manifested supplier-name registry
       val supCorpus = ((0 until f).map(supReplica)
         .reduce(_ unionByName _)).localCheckpoint(true)
       val supDay = supReplica(f).localCheckpoint(true)
       val entity = timed("entity_day", supDay.count()) { path =>
-        MergeQueries.entityIngest(spark, path, supCorpus,
-          "s_suppkey", "s_name")
+        MergeQueries.entityIngestManifested(spark, path, supCorpus,
+          "s_suppkey", "s_name", nBuckets = 32)
       } { path =>
-        MergeQueries.entityIngest(spark, path, supDay,
-          "s_suppkey", "s_name")
+        MergeQueries.entityIngestManifested(spark, path, supDay,
+          "s_suppkey", "s_name", nBuckets = 32)
       }
       // IVF (q71): the centroid model fits once on the f× corpus; the
       // day is assigned by the same model and appended per list

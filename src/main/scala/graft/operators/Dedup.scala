@@ -949,7 +949,7 @@ object Dedup {
     * (id, sh_lo, sh_hi) with sh_lo/sh_hi from the md5-derived token
     * hashes' bit votes. Empty-token documents are dropped (no signal).
     * This is the frame a PERSISTENT signature index stores (see
-    * [[MergeQueries.neardupIngest]]) — signatures are the near-dup
+    * [[MergeQueries.neardupIngestManifested]]) — signatures are the near-dup
     * analog of q65's content hashes: tiny per doc, and sufficient to
     * probe any future batch without re-reading document text. */
   def simhashSignatures(df: DataFrame, idCol: String, textCol: String,
@@ -1097,7 +1097,7 @@ object Dedup {
     * [[simhashSignatures]] output, with DISJOINT id sets — or the same
     * frame twice plus an `id1 < id2` filter for batch-internal pairs):
     * one row per (probe id1, index id2) pair within `maxHamming`. The incremental-
-    * ingest probe ([[MergeQueries.neardupIngest]]): `probe` is the new
+    * ingest probe ([[MergeQueries.neardupIngestManifested]]): `probe` is the new
     * batch's signatures, `index` the persistent store's.
     *
     * Scale: same pigeonhole chunk join as [[simhashPairs]], but the big

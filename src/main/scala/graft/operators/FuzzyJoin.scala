@@ -85,7 +85,7 @@ object FuzzyJoin {
 
   /** ed<=1 candidate pairs BETWEEN two frames, both shaped (id, name)
     * with DISJOINT id sets: one row per qualifying (probe id1, index
-    * id2). The incremental-ingest probe ([[MergeQueries.entityIngest]])
+    * id2). The incremental-ingest probe ([[MergeQueries.entityIngestManifested]])
     * — [[Dedup.simhashCrossPairs]]'s role for the fuzzy-key family.
     * The governor caps INDEX-side variant buckets (the corpus-sized
     * side; at scale the index stores its variants pre-exploded and

@@ -83,9 +83,9 @@ object MergeQueries {
     *     has never seen survive (a matched hash must KEEP its original
     *     survivor, so this is an anti-join, not an upsert overwrite);
     *  3. merges the fresh hashes into the snapshot
-    *     ([[graft.sinks.MergeSink.mergeInto]] — the reference's own
-    *     bulk-upsert shape, here building a dedup INDEX instead of a
-    *     document store).
+    *     ([[dedupIngestManifested]] — the reference's own bulk-upsert
+    *     shape, here building a dedup INDEX instead of a document
+    *     store).
     *
     * Because days are id-ordered, first-arrival survivors coincide with
     * global min-doc_id survivors, so the final index must equal batch
@@ -97,44 +97,25 @@ object MergeQueries {
     * the index (co-located and exchange-free on the index side with the
     * bucketed-table variant, `mergeIntoBucketed`), exactly how a 100 TB
     * corpus dedups an incremental delivery without re-reading itself. */
-  /** One incremental-dedup ingest step (steps 1-3 of the q65 doc): the
-    * batch dedups itself, anti-joins the index, merges only never-seen
-    * hashes. A hash already in the index keeps its original survivor —
-    * arrival order decides, which is the production semantic (the first
-    * delivery of a document wins; later re-deliveries are the
-    * duplicates). Input must carry (`doc_id`, `content_hash`).
+  /** One incremental-dedup ingest step (steps 1-3 of the q65 doc)
+    * against a BUCKETED catalog-table index: the batch dedups itself,
+    * anti-joins the index, merges only never-seen hashes. A hash already
+    * in the index keeps its original survivor — arrival order decides,
+    * which is the production semantic (the first delivery of a document
+    * wins; later re-deliveries are the duplicates). Input must carry
+    * (`doc_id`, `content_hash`). The index is written
+    * `bucketBy(content_hash)` once, so the per-day anti-join and merge
+    * read the (large) index side pre-partitioned with NO exchange; only
+    * the day's batch shuffles.
     *
-    * LAYOUT CHOICE: this form and its bucketed/partitioned siblings
-    * publish through rename swaps — reference-faithful, single-writer,
-    * rename-dependent. The DEFAULT is [[dedupIngestManifested]] (the
-    * commit-log layout, q65's primary gate): rename-free
-    * (object-store-safe), publish atomic across all touched buckets,
-    * and correct under concurrent writers (q209); the swap forms are
-    * explicitly-chosen COMPAT modes, still gated (q204 bucketed, q83
-    * part+bucketed) so unmigrated pipelines stay row-for-row correct. */
-  def dedupIngest(spark: SparkSession, target: String,
-                  batch: DataFrame): MergeSink.MergeStats = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val uniq = batch.groupBy(col("content_hash"))
-      .agg(min(col("doc_id")).as("doc_id"))
-    val fresh =
-      if (fs.exists(new org.apache.hadoop.fs.Path(target)))
-        uniq.join(Parquets.read(spark, target).select(col("content_hash")),
-          Seq("content_hash"), "left_anti")
-      else uniq
-    // fresh is groupBy(content_hash)-keyed (± an anti-join) — one row
-    // per key; skip the fold window
-    MergeSink.mergeInto(spark, target, fresh, "content_hash", Seq("doc_id"),
-      updatesUnique = true)
-  }
-
-  /** [[dedupIngest]] against a BUCKETED catalog-table index — the 100 TB
-    * layout (SCALE.md): the index is written `bucketBy(content_hash)`
-    * once, so the per-day anti-join and merge read the (large) index
-    * side pre-partitioned with NO exchange; only the day's batch
-    * shuffles. Same semantics as the path-based form — first arrival
-    * keeps the survivor slot (anti-join, not upsert). */
+    * LAYOUT CHOICE: this form and its part+bucketed sibling publish
+    * through rename swaps — single-writer, rename-dependent. The
+    * DEFAULT is [[dedupIngestManifested]] (the commit-log layout, q65's
+    * primary gate): rename-free (object-store-safe), publish atomic
+    * across all touched buckets, and correct under concurrent writers
+    * (q209); the swap forms are explicitly-chosen COMPAT modes, still
+    * gated (q204 bucketed, q83 part+bucketed) so unmigrated pipelines
+    * stay row-for-row correct. */
   def dedupIngestBucketed(spark: SparkSession, table: String,
                           batch: DataFrame, nBuckets: Int): MergeSink.MergeStats = {
     val uniq = batch.groupBy(col("content_hash"))
@@ -150,7 +131,7 @@ object MergeQueries {
       Seq("doc_id"), nBuckets, updatesUnique = true)
   }
 
-  /** [[dedupIngest]] against the COMPOSED partitioned+bucketed index
+  /** [[dedupIngestBucketed]] against the COMPOSED partitioned+bucketed index
     * ([[MergeSink.mergeIntoPartitionedBucketed]]): the anti-join probe
     * prunes to the batch's `pd=` directories (a hash's directory is
     * deterministic — re-delivered keys can only collide there) AND
@@ -293,7 +274,7 @@ object MergeQueries {
     *  3. runs [[Dedup.connectedComponents]] over those edges ONLY —
     *     cost bounded by the batch's collision neighborhood, never the
     *     corpus;
-    *  4. merges into the snapshot ([[graft.sinks.MergeSink.mergeInto]]):
+    *  4. merges into the snapshot:
     *     new docs insert with survivor = their component min; existing
     *     rows whose cluster was merged into a smaller-id cluster (a new
     *     doc BRIDGED two old clusters, or an out-of-order arrival undercut
@@ -311,77 +292,18 @@ object MergeQueries {
     * Scale: the index never rewrites wholesale — the merge updates only
     * bridged clusters' rows (bounded by merge events) and appends the
     * batch; the probe join is bucketed-bounded (see
-    * [[Dedup.simhashCrossPairs]]); CC runs on the touched subgraph. */
-  def neardupIngest(spark: SparkSession, target: String, batch: DataFrame,
-                    idCol: String, textCol: String,
-                    maxHamming: Int = 3): MergeSink.MergeStats = {
-    val path = new org.apache.hadoop.fs.Path(target)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    neardupIngestCore(spark, new IndexStore {
-      def exists: Boolean = fs.exists(path) && fs.listStatus(path).nonEmpty
-      def read(): DataFrame = Parquets.read(spark, target)
-      def merge(updates: DataFrame, fields: Seq[String]): MergeSink.MergeStats =
-        // derive output is key-unique by construction (anti-joined
-        // inserts ∪ remapped index rows) — skip the fold window
-        MergeSink.mergeInto(spark, target, updates, "doc_id", fields,
-          updatesUnique = true)
-    }, Dedup.simhashSignatures(batch, idCol, textCol), maxHamming)
-  }
-
-  /** [[neardupIngestBucketed]] for PRE-COMPUTED signature batches — the
-    * entry point for signature sources other than word tokens (e.g.
-    * [[graft.multimodal.Media.byteGramSimhash]]'s byte-gram signatures
-    * over binary payloads): the index probe, star-edge survivor lookup,
-    * component merge, and bucketed store are all signature-source
-    * agnostic, exactly like [[Dedup.simhashPairsFromSigs]]. `batchSigs`
-    * must be shaped (id, sh_lo, sh_hi). */
-  def neardupIngestSigsBucketed(spark: SparkSession, table: String,
-                                batchSigs: DataFrame, nBuckets: Int,
-                                maxHamming: Int = 3): MergeSink.MergeStats =
-    neardupIngestCore(spark, new IndexStore {
-      def exists: Boolean = spark.catalog.tableExists(table)
-      def read(): DataFrame = spark.table(table)
-      def merge(updates: DataFrame, fields: Seq[String]): MergeSink.MergeStats =
-        // derive output is key-unique by construction (anti-joined
-        // inserts ∪ remapped index rows) — skip the fold window
-        MergeSink.mergeIntoBucketed(spark, table, updates, "doc_id", fields,
-          nBuckets, updatesUnique = true)
-      // the bucketed scan's partitioning IS the optimization — never
-      // flatten it into a checkpoint (see IndexStore.materializeOnce)
-      override def materializeOnce: Boolean = false
-    }, batchSigs, maxHamming)
-
-  /** [[neardupIngest]] against a BUCKETED catalog-table index — the
-    * 100 TB layout, [[dedupIngestBucketed]]'s argument applied to the
-    * signature store: with the index `bucketBy(doc_id)`, the re-delivery
-    * anti-join, the star-edge survivor lookup, and the merge itself all
-    * read the (corpus-sized) index side pre-partitioned with NO
-    * exchange; only batch-derived frames shuffle. The signature
-    * cross-probe is orthogonal to the layout either way — it joins on
-    * exploded simhash chunks, bounded by [[Dedup.simhashCrossPairs]]'s
-    * bucket cap, not by the index's key partitioning. */
-  def neardupIngestBucketed(spark: SparkSession, table: String,
-                            batch: DataFrame, idCol: String, textCol: String,
-                            nBuckets: Int,
-                            maxHamming: Int = 3): MergeSink.MergeStats =
-    neardupIngestSigsBucketed(spark, table,
-      Dedup.simhashSignatures(batch, idCol, textCol), nBuckets, maxHamming)
-
-  /** [[neardupIngest]] against the MANIFEST-POINTER index
-    * ([[graft.sinks.ManifestMergeSink]]) — the DEFAULT layout for new
-    * pipelines, q68's primary gate, and the q72/q233 streams' target
+    * [[Dedup.simhashCrossPairs]]); CC runs on the touched subgraph.
+    *
+    * Layout: the MANIFEST-POINTER index ([[graft.sinks.ManifestMergeSink]])
+    * — q68's gate and the q72/q233 streams' target
     * ([[graft.streaming.StreamingFold]]): the index publishes through one
     * commit-file create (rename-free, object-store-safe, atomic across
     * every bucket the batch touched) and the probe/merge IO stays
-    * touched-bucket-bounded exactly like the partitioned swap form.
-    * The swap-layout stores remain as explicitly-chosen compat modes
-    * ([[neardupIngest]]/[[neardupIngestBucketed]], gated by q103's
-    * media-sig family). Single-writer-per-pipeline discipline still
-    * applies to the neardup INDUCTION (the subgraph derivation runs
-    * outside the merge's CAS recompute seam — unlike
-    * [[dedupIngestManifested]]'s anti-join, which re-derives per
-    * attempt); what the layout adds is crash-atomicity and
-    * store-portability, not multi-writer convergence. */
+    * touched-bucket-bounded. The whole subgraph derivation runs inside
+    * the merge's CAS recompute seam ([[IndexStore.mergeDerived]]), so
+    * two racing writers converge to sequential semantics (q236). The
+    * bucketed catalog-table store ([[neardupIngestSigsBucketed]], gated
+    * by q103's media-sig family) is the one compat layout. */
   def neardupIngestManifested(spark: SparkSession, target: String,
                               batch: DataFrame, idCol: String,
                               textCol: String, nBuckets: Int,
@@ -393,7 +315,12 @@ object MergeQueries {
       beforePublish)
 
   /** [[neardupIngestManifested]] for PRE-COMPUTED signature batches —
-    * the manifested counterpart of [[neardupIngestSigsBucketed]]. */
+    * the entry point for signature sources other than word tokens (e.g.
+    * [[graft.multimodal.Media.byteGramSimhash]]'s byte-gram signatures
+    * over binary payloads): the index probe, star-edge survivor lookup,
+    * component merge, and store are all signature-source agnostic,
+    * exactly like [[Dedup.simhashPairsFromSigs]]. `batchSigs` must be
+    * shaped (id, sh_lo, sh_hi). */
   def neardupIngestSigsManifested(spark: SparkSession, target: String,
                                   batchSigs: DataFrame, nBuckets: Int,
                                   maxHamming: Int = 3,
@@ -401,6 +328,29 @@ object MergeQueries {
       : MergeSink.MergeStats =
     neardupIngestCore(spark, manifestedStore(spark, target, nBuckets,
       beforePublish), batchSigs, maxHamming)
+
+  /** [[neardupIngestSigsManifested]] against a BUCKETED catalog-table
+    * index — the 100 TB compat layout, [[dedupIngestBucketed]]'s
+    * argument applied to the signature store: with the index
+    * `bucketBy(doc_id)`, the re-delivery anti-join, the star-edge
+    * survivor lookup, and the merge itself all read the (corpus-sized)
+    * index side pre-partitioned with NO exchange; only batch-derived
+    * frames shuffle. The signature cross-probe is orthogonal to the
+    * layout either way — it joins on exploded simhash chunks, bounded by
+    * [[Dedup.simhashCrossPairs]]'s bucket cap, not by the index's key
+    * partitioning. Single-writer per pipeline (a rename-swap publish). */
+  def neardupIngestSigsBucketed(spark: SparkSession, table: String,
+                                batchSigs: DataFrame, nBuckets: Int,
+                                maxHamming: Int = 3): MergeSink.MergeStats =
+    neardupIngestCore(spark, new IndexStore {
+      def exists: Boolean = spark.catalog.tableExists(table)
+      def read(): DataFrame = spark.table(table)
+      def merge(updates: DataFrame, fields: Seq[String]): MergeSink.MergeStats =
+        // derive output is key-unique by construction (anti-joined
+        // inserts ∪ remapped index rows) — skip the fold window
+        MergeSink.mergeIntoBucketed(spark, table, updates, "doc_id", fields,
+          nBuckets, updatesUnique = true)
+    }, batchSigs, maxHamming)
 
   /** The manifested [[IndexStore]]: publish through
     * [[graft.sinks.ManifestMergeSink.mergeIntoManifested]] with the
@@ -471,11 +421,10 @@ object MergeQueries {
       Dedup.simhashSignatures(batch, idCol, textCol, carry = Seq(scopeCol)),
       maxHamming, scopeCols = Seq(scopeCol), maxBucketSize = maxBucketSize)
 
-  /** The three physical index layouts [[neardupIngestCore]] runs
-    * against: a plain parquet directory ([[neardupIngest]]), a bucketed
-    * catalog table ([[neardupIngestBucketed]]), or the manifested
-    * commit-log snapshot ([[neardupIngestManifested]], via
-    * [[mergeDerived]]'s CAS seam). */
+  /** The two physical index layouts [[neardupIngestCore]] runs
+    * against: a bucketed catalog table ([[neardupIngestSigsBucketed]])
+    * or the manifested commit-log snapshot ([[neardupIngestManifested]],
+    * via [[mergeDerived]]'s CAS seam). */
   private trait IndexStore {
     def exists: Boolean
     def read(): DataFrame
@@ -486,21 +435,11 @@ object MergeQueries {
       * exactly the snapshot the attempt CAS-checks — a losing writer
       * re-derives from the winner's head, so the induction converges to
       * sequential semantics under any interleave (q209's discipline,
-      * gated for near-dup by q236). None (the default) = swap layouts,
-      * single-writer per pipeline by contract: the core derives once
-      * against [[read]] and publishes through [[merge]]. */
+      * gated for near-dup by q236). None (the default) = the bucketed
+      * swap layout, single-writer per pipeline by contract: the core
+      * derives once against [[read]] and publishes through [[merge]]. */
     def mergeDerived(derive: Option[DataFrame] => DataFrame,
                      fields: Seq[String]): Option[MergeSink.MergeStats] = None
-    /** Whether the core should materialize [[read]]'s frame once per
-      * day (localCheckpoint) instead of re-reading it per reference.
-      * True for layouts whose read is an unkeyed parquet scan (plain,
-      * manifested — four scans become one). FALSE for the BUCKETED
-      * catalog table: a checkpoint discards the scan's bucketed output
-      * partitioning, so the doc_id-keyed anti-join and star lookup
-      * would exchange the corpus-sized index — exactly the shuffle the
-      * bucketing exists to remove (PlanAuditSpec pins that plan); its
-      * re-reads are co-located scans, the cheaper trade. */
-    def materializeOnce: Boolean = true
   }
 
   /** `scopeCols`: SCOPE columns carried by `batchSigs0` and stored in
@@ -526,7 +465,7 @@ object MergeQueries {
       .dropDuplicates("id") // within-batch re-delivery of identical rows
 
     // The TOUCHED-SUBGRAPH derivation as a pure function of the index
-    // snapshot. Swap layouts call it ONCE against [[IndexStore.read]]
+    // snapshot. The swap layout calls it ONCE against [[IndexStore.read]]
     // (single-writer-per-pipeline by contract); the manifested layout
     // runs it INSIDE the merge's CAS retry seam via
     // [[IndexStore.mergeDerived]] — re-derived per publish attempt
@@ -597,22 +536,19 @@ object MergeQueries {
     } // derive
 
     store.mergeDerived(derive, fields).getOrElse {
-      // swap layouts: ONE materialization of the index snapshot per day
-      // (store-layout dependent — see [[IndexStore.materializeOnce]]):
-      // the frame is referenced four times (re-delivery anti-join, cross
-      // probe, star-edge lookup, survivor remap) and each reference
-      // would otherwise re-resolve the head and re-scan the parquet
-      val indexOpt: Option[DataFrame] =
-        if (!store.exists) None
-        else if (store.materializeOnce) Some(store.read().localCheckpoint(true))
-        else Some(store.read())
-      store.merge(derive(indexOpt), fields)
+      // the bucketed swap layout: no checkpoint of the index — it would
+      // discard the scan's bucketed output partitioning, so the
+      // doc_id-keyed anti-join and star lookup would exchange the
+      // corpus-sized index (PlanAuditSpec pins that plan); its four
+      // re-reads are co-located scans, the cheaper trade
+      store.merge(derive(if (store.exists) Some(store.read()) else None),
+        fields)
     }
   }
 
   /** q68 gate: the q65 day-split + re-delivery harness applied to
-    * [[neardupIngest]]; the final index's (doc_id, survivor_id) must
-    * equal batch near-dup clustering of the WHOLE corpus row-for-row —
+    * [[neardupIngestManifested]]; the final index's (doc_id,
+    * survivor_id) must equal batch near-dup clustering of the WHOLE corpus row-for-row —
     * the oracle recomputes the q21/q52 shared pair CTEs and closes them
     * transitively, with unclustered docs surviving as themselves. */
   def q68IncrNeardup(spark: SparkSession, dir: String): DataFrame = {
@@ -1019,8 +955,8 @@ object MergeQueries {
       |FROM agg, tgt""".stripMargin
 
   /** INCREMENTAL ENTITY RESOLUTION against a persistent registry —
-    * [[neardupIngest]]'s induction applied to the fuzzy-KEY family
-    * (reference mongo.py:103-163's keyed upsert, surviving dirty keys):
+    * [[neardupIngestManifested]]'s induction applied to the fuzzy-KEY
+    * family (reference mongo.py:103-163's keyed upsert, surviving dirty keys):
     * the registry stores one row per seen record, (key_id, name,
     * entity_id), where entity_id is the min key over the record's
     * ed<=1-connected NAME component so far. Each batch:
@@ -1039,30 +975,16 @@ object MergeQueries {
     * The induction invariant (and its proof) is [[neardupIngestCore]]'s
     * verbatim with "simhash pair" replaced by "ed<=1 pair": the final
     * registry equals batch clustering of ALL names ingested so far,
-    * under any arrival order and any re-delivery pattern. */
-  def entityIngest(spark: SparkSession, target: String, batch: DataFrame,
-                   idCol: String, nameCol: String): MergeSink.MergeStats = {
-    val path = new org.apache.hadoop.fs.Path(target)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(path) && fs.listStatus(path).nonEmpty
-    val indexOpt =
-      if (exists) Some(Parquets.read(spark, target).localCheckpoint(true))
-      else None
-    // derive output is key-unique (anti-joined inserts ∪ remapped
-    // registry rows) — skip the fold window
-    MergeSink.mergeInto(spark, target,
-      entityDeriveUpdates(batch, idCol, nameCol, indexOpt), "key_id",
-      Seq("name", "entity_id"), updatesUnique = true)
-  }
-
-  /** [[entityIngest]] against the MANIFEST-POINTER registry — AND the
-    * multi-writer form: the whole touched-subgraph derivation runs
-    * inside the merge's CAS retry seam (`recomputeUpdates`, re-derived
-    * per publish attempt against the pinned snapshot, with
-    * `conflictRepoint = false` because the ed<=1 cross probe reads
-    * every bucket's names), so two racing registrars converge to
-    * sequential semantics under any interleave — [[neardupIngestCore]]'s
-    * q236 discipline applied to the fuzzy-key family. Gate: q237. */
+    * under any arrival order and any re-delivery pattern.
+    *
+    * Layout: the MANIFEST-POINTER registry, and the multi-writer form:
+    * the whole touched-subgraph derivation runs inside the merge's CAS
+    * retry seam (`recomputeUpdates`, re-derived per publish attempt
+    * against the pinned snapshot, with `conflictRepoint = false` because
+    * the ed<=1 cross probe reads every bucket's names), so two racing
+    * registrars converge to sequential semantics under any interleave —
+    * [[neardupIngestCore]]'s q236 discipline applied to the fuzzy-key
+    * family. Gates: q127/q129 (the induction), q237 (contention). */
   def entityIngestManifested(spark: SparkSession, target: String,
                              batch: DataFrame, idCol: String,
                              nameCol: String, nBuckets: Int,
@@ -1087,11 +1009,11 @@ object MergeQueries {
   }
 
   /** The entity induction's touched-subgraph derivation as a pure
-    * function of the registry snapshot — shared by the swap layout
-    * (derived once) and the manifested CAS seam (re-derived per publish
-    * attempt). `scopeCols`: pairs never cross scopes (the q229
-    * discipline applied to the fuzzy-key family — deletion-variant
-    * buckets, and their quadratic candidate term, stay scope-sized). */
+    * function of the registry snapshot, re-derived per publish attempt
+    * inside the manifested CAS seam. `scopeCols`: pairs never cross
+    * scopes (the q229 discipline applied to the fuzzy-key family —
+    * deletion-variant buckets, and their quadratic candidate term, stay
+    * scope-sized). */
   private def entityDeriveUpdates(batch: DataFrame, idCol: String,
                                   nameCol: String,
                                   indexOpt: Option[DataFrame],
@@ -1183,8 +1105,8 @@ object MergeQueries {
   }
 
   /** q127 gate: the q65/q68 day-split + re-delivery harness applied to
-    * [[entityIngest]] over supplier names; the final registry's
-    * (key_id, name, entity_id) must equal batch ed<=1 clustering of ALL
+    * [[entityIngestManifested]] over supplier names; the final
+    * registry's (key_id, name, entity_id) must equal batch ed<=1 clustering of ALL
     * supplier names row-for-row. The fixture's sequential names chain
     * into one giant component (every two keys differing in one digit
     * link directly), so the gate's stress is TRANSITIVE-CHAIN closure
@@ -1202,8 +1124,9 @@ object MergeQueries {
         sup.filter(col("s_suppkey") <= cut),
         sup.filter(col("s_suppkey") > cut)
           .union(sup.filter(col("s_suppkey") % 5 === 0)))
-        .foreach(day => entityIngest(spark, target, day, "s_suppkey", "s_name"))
-      Parquets.read(spark, target)
+        .foreach(day => entityIngestManifested(spark, target, day,
+          "s_suppkey", "s_name", nBuckets = 8))
+      graft.sinks.ManifestMergeSink.readManifested(spark, target)
         .select(col("key_id"), col("name"), col("entity_id"))
         .orderBy(col("key_id"))
         .localCheckpoint(true) // materialize before the scratch dir dies
@@ -1245,10 +1168,11 @@ object MergeQueries {
         StructField("id", LongType), StructField("name", StringType)))
       StreamingFold.drain(StreamingFold.files(spark, recordSchema, srcDir),
           s"$base/ckpt", "stream_entity") { (batch, _) =>
-        val st = entityIngest(spark, registry, batch, "id", "name")
+        val st = entityIngestManifested(spark, registry, batch, "id", "name",
+          nBuckets = 8)
         Seq("matched" -> st.nMatched, "upserted" -> st.nUpserted)
       }
-      Parquets.read(spark, registry)
+      graft.sinks.ManifestMergeSink.readManifested(spark, registry)
         .select(col("key_id"), col("name"), col("entity_id"))
         .orderBy(col("key_id"))
         .localCheckpoint(true) // materialize before the scratch dir dies
@@ -1905,8 +1829,9 @@ object MergeQueries {
       |  WHERE doc_id % 3 != 0)
       |ORDER BY sect, v""".stripMargin
 
-  /** [[dedupIngest]] against the MANIFEST-POINTER snapshot
-    * ([[graft.sinks.ManifestMergeSink]]) — the default layout:
+  /** The q65 ingest step (see [[dedupIngestBucketed]]) against the
+    * MANIFEST-POINTER snapshot ([[graft.sinks.ManifestMergeSink]]) — the
+    * default layout:
     * bounded touched-bucket IO, and publish is ONE commit-file create
     * (no renames — object-store-safe, and safe under concurrent writers
     * via the commit log's CAS). The anti-join probe prunes to the

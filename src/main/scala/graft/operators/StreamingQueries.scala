@@ -499,7 +499,7 @@ object StreamingQueries {
     * Structured Streaming job. The corpus arrives as a parquet FILE
     * stream (one file per trigger, so each staged arrival file is its
     * own micro-batch) and every micro-batch runs
-    * [[MergeQueries.neardupIngest]] through `foreachBatch` against the
+    * [[MergeQueries.neardupIngestManifested]] through `foreachBatch` against the
     * persistent signature index — the same batch-only-sink bridge as
     * q46 ([[graft.streaming.StreamingFold]]). The second arrival file
     * RE-DELIVERS every 5th document (at-least-once upstream), and

@@ -2038,7 +2038,7 @@ object TrainingData {
       // intra-batch duplicates must not consume top-k slots: a batch
       // carrying >= k-1 better-keyed rows PLUS one duplicate would
       // silently evict a true global top-k member before the id-level
-      // dedup below ever sees it (the discipline entityIngest and
+      // dedup below ever sees it (the discipline entityDeriveUpdates and
       // neardupIngestCore already apply via dropDuplicates("id"))
       .dropDuplicates(idCol)
     val top = keyed.orderBy(col("qk").asc, col(idCol).asc).limit(k)

@@ -28,36 +28,10 @@ import org.apache.spark.sql.SparkSession
 object StreamConf {
   val StreamParts = 8
 
-  def withShuffle[T](spark: SparkSession, n: Int = StreamParts)(body: => T): T = {
+  def withShuffle[T](spark: SparkSession)(body: => T): T = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    spark.conf.set("spark.sql.shuffle.partitions", StreamParts.toString)
     try body
     finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Spark's bundled RocksDB state-store provider. */
-  val RocksDbProvider: String =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Run a streaming gate's body with the RocksDB state-store provider
-    * (restored after — the withShuffle discipline on session-global
-    * mutation). Why it exists: the DEFAULT HDFS-backed provider keeps
-    * every store's working set as JVM objects in executor memory, so a
-    * streaming dedup/session state larger than the heap dies — RocksDB
-    * spills state to local disk and caps memory, which is the provider
-    * a 100 TB ingest's `dropDuplicatesWithinWatermark` /
-    * `flatMapGroupsWithState` paths must run on. The conf is captured
-    * when a query STARTS (same contract as [[withShuffle]]), so the
-    * wrapper must cover the `start()`. EventStreamsSpec proves result
-    * parity across both providers on the stateful paths. */
-  def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, RocksDbProvider)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.functions.TextFunctions._
@@ -133,7 +134,9 @@ class DedupSpec extends SparkSpec {
     val rows = (1 to 200).map(i =>
       (i.toLong, (1 to (1 + rng.nextInt(30))).map(_ =>
         words(rng.nextInt(words.size))).distinct))
-    val df = rows.toDF("id", "toks").filter(size(col("toks")) > 0)
+    val df = (rows ++ Seq(1001L -> Seq("alpha", null, "beta"),
+        1002L -> Seq[String](null)))
+      .toDF("id", "toks").filter(size(col("toks")) > 0)
     import org.apache.spark.sql.graft.ColumnBridge
     val fused = df.select(col("id"), ColumnBridge.column(
         graft.expressions.SimhashSig(ColumnBridge.expression(col("toks"))))
@@ -151,6 +154,35 @@ class DedupSpec extends SparkSpec {
       .filter(col("f_lo") =!= col("r_lo") || col("f_hi") =!= col("r_hi"))
       .count()
     assert(diff == 0, "fused signature must be bit-identical to the pipeline")
+    // null tokens vote like a zero hash on both sides
+    assert(fused.join(ref, "id").filter(col("id") >= 1001L).count() == 2)
+    // a null token array has no signature
+    val nullSig = Seq(1L -> (null: Seq[String])).toDF("id", "toks")
+      .select(ColumnBridge.column(
+        graft.expressions.SimhashSig(ColumnBridge.expression(col("toks")))))
+      .collect()(0)
+    assert(nullSig.isNullAt(0))
+  }
+
+  /** The fused minhash forms and their HOF references on null input:
+    * null elements are value-identical; a NULL array is the one pinned
+    * divergence — the fused form gives NULL (no signature), the HOF
+    * form `numHashes` nulls (see [[graft.expressions.Md5Fused]]). */
+  private def assertNullRows(fused: (Column, Int) => Column,
+                             hof: (Column, Int) => Column): Unit = {
+    val df = Seq(1L -> Seq("a b", null, "x"), 2L -> Seq[String](null, null),
+        3L -> (null: Seq[String])).toDF("id", "elems")
+    val both = df.select(col("id"), fused(col("elems"), 16).as("fused"),
+        hof(col("elems"), 16).as("ref"))
+      .orderBy(col("id")).collect()
+    for (r <- both.take(2))
+      assert(r.getSeq[Any](1) == r.getSeq[Any](2), s"null element row ${r.getLong(0)}")
+    assert(both(0).getSeq[Any](1).forall(_ != null), "null elements are skipped")
+    assert(both(1).getSeq[Any](1).size == 16)
+    val nullArray = both(2)
+    assert(nullArray.isNullAt(1), "fused: a NULL array gives a NULL signature")
+    assert(nullArray.getSeq[Any](2) == Seq.fill(16)(null),
+      "HOF: a NULL array gives numHashes nulls")
   }
 
   test("fused md5-chunked minhash equals the HOF transform pipeline") {
@@ -170,6 +202,8 @@ class DedupSpec extends SparkSpec {
     val empty = both.filter(col("id") === 999L)
       .select(col("fused")).collect()(0).getSeq[Any](0)
     assert(empty.size == 16 && empty.forall(_ == null))
+    assertNullRows(TextFunctions.minhashSignatureMd5Chunked,
+      TextFunctions.minhashSignatureMd5ChunkedHof)
   }
 
   test("fused xx minhash equals the two-level xxhash64 HOF pipeline") {
@@ -185,6 +219,8 @@ class DedupSpec extends SparkSpec {
       TextFunctions.minhashSignatureXxHof(col("elems"), 16).as("ref"))
     val bad = both.filter(!(col("fused") <=> col("ref"))).count()
     assert(bad == 0, "fused xx minhash must be value-identical to the HOF form")
+    assertNullRows(TextFunctions.minhashSignatureXx,
+      TextFunctions.minhashSignatureXxHof)
   }
 
   test("Rabin-Karp winnowing: reference values, edit robustness, guards, SQL") {

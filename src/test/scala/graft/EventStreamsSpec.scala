@@ -345,52 +345,4 @@ class EventStreamsSpec extends SparkSpec {
       }
     } finally q.stop()
   }
-
-  test("RocksDB state store: dedup and custom state match the default provider") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // the q57/q36 state paths (dropDuplicatesWithinWatermark +
-    // flatMapGroupsWithState) under the RocksDB provider — state larger
-    // than executor memory needs it at 100 TB; results must be
-    // provider-independent
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(confKey) // SQL default, not None
-    graft.streaming.StreamConf.withRocksDb(spark) {
-      assert(spark.conf.get(confKey) == graft.streaming.StreamConf.RocksDbProvider)
-      val in = MemoryStream[Event]
-      val q = EventStreams.dedupEvents(in.toDF(), lateness = "1 hour")
-        .writeStream.format("memory").queryName("rocks_dedup")
-        .outputMode(OutputMode.Append).start()
-      try {
-        // the provider the running query actually captured, not just conf
-        in.addData(ev(1, 10), ev(1, 12), ev(2, 20))
-        q.processAllAvailable()
-        in.addData(ev(1, 25), ev(3, 30))
-        q.processAllAvailable()
-        assert(q.lastProgress.stateOperators.nonEmpty)
-        val ids = spark.table("rocks_dedup").collect()
-          .map(_.getAs[Long]("event_id"))
-        assert(ids.sorted.toSeq == Seq(1L, 2L, 3L),
-          "each id must survive exactly once under RocksDB")
-      } finally q.stop()
-
-      val in2 = MemoryStream[Event]
-      val q2 = EventStreams.runningUserTotals(in2.toDS())
-        .writeStream.format("memory").queryName("rocks_totals")
-        .outputMode(OutputMode.Update).start()
-      try {
-        in2.addData(ev(1, 0, user = 1L, value = 2.0),
-          ev(2, 1, user = 2L, value = 3.0))
-        q2.processAllAvailable()
-        in2.addData(ev(3, 2, user = 1L, value = 5.0))
-        q2.processAllAvailable()
-        val latest = spark.table("rocks_totals").as[UserTotals].collect()
-          .groupBy(_.user_id).map { case (u, rs) => u -> rs.maxBy(_.n_events) }
-        assert(latest(1L).n_events == 2L && latest(1L).total_value == 7.0)
-        assert(latest(2L).n_events == 1L && latest(2L).total_value == 3.0)
-      } finally q2.stop()
-    }
-    // and the session conf is restored for every later gate
-    assert(spark.conf.getOption(confKey) == prevProvider)
-  }
 }

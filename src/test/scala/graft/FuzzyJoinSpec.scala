@@ -85,7 +85,8 @@ class FuzzyJoinSpec extends SparkSpec {
 
   private def registry(target: String): Set[(Long, String, Long)] = {
     import spark.implicits._
-    spark.read.parquet(target).select(col("key_id"), col("name"), col("entity_id"))
+    graft.sinks.ManifestMergeSink.readManifested(spark, target)
+      .select(col("key_id"), col("name"), col("entity_id"))
       .as[(Long, String, Long)].collect().toSet
   }
 
@@ -96,10 +97,12 @@ class FuzzyJoinSpec extends SparkSpec {
     val day1 = Seq(5L -> "abc", 9L -> "ayz", 42L -> "zzzzz").toDF("id", "name")
     val day2 = Seq(7L -> "abz", 9L -> "ayz" /* re-delivery */).toDF("id", "name")
     withRegistry { target =>
-      operators.MergeQueries.entityIngest(spark, target, day1, "id", "name")
+      operators.MergeQueries.entityIngestManifested(spark, target, day1, "id", "name",
+        nBuckets = 4)
       assert(registry(target) == Set(
         (5L, "abc", 5L), (9L, "ayz", 9L), (42L, "zzzzz", 42L)))
-      operators.MergeQueries.entityIngest(spark, target, day2, "id", "name")
+      operators.MergeQueries.entityIngestManifested(spark, target, day2, "id", "name",
+        nBuckets = 4)
       assert(registry(target) == Set(
         (5L, "abc", 5L), (9L, "ayz", 5L), (7L, "abz", 5L), (42L, "zzzzz", 42L)))
     }
@@ -112,8 +115,8 @@ class FuzzyJoinSpec extends SparkSpec {
     def runAs(batches: Seq[Seq[(Long, String)]]): Set[(Long, String, Long)] = {
       var out: Set[(Long, String, Long)] = Set.empty
       withRegistry { target =>
-        batches.foreach(b => operators.MergeQueries.entityIngest(
-          spark, target, b.toDF("id", "name"), "id", "name"))
+        batches.foreach(b => operators.MergeQueries.entityIngestManifested(
+          spark, target, b.toDF("id", "name"), "id", "name", nBuckets = 4))
         out = registry(target)
       }
       out

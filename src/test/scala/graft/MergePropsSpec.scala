@@ -133,11 +133,13 @@ class MergePropsSpec extends SparkSpec {
       val dayA = Seq((50L, "h1"), (60L, "h2")).toDF("doc_id", "content_hash")
       val dayB = Seq((10L, "h1"), (70L, "h3"), (75L, "h3"))
         .toDF("doc_id", "content_hash")
-      val s1 = operators.MergeQueries.dedupIngest(spark, target, dayA)
+      val s1 = operators.MergeQueries.dedupIngestManifested(spark, target, dayA,
+        nBuckets = 4)
       assert(s1.nUpserted == 2L && s1.nMatched == 0L)
-      val s2 = operators.MergeQueries.dedupIngest(spark, target, dayB)
+      val s2 = operators.MergeQueries.dedupIngestManifested(spark, target, dayB,
+        nBuckets = 4)
       assert(s2.nUpserted == 1L, "only the never-seen hash h3 may insert")
-      val idx = spark.read.parquet(target)
+      val idx = graft.sinks.ManifestMergeSink.readManifested(spark, target)
         .select("content_hash", "doc_id").as[(String, Long)].collect().toMap
       assert(idx == Map("h1" -> 50L, "h2" -> 60L, "h3" -> 70L),
         s"first arrival must survive (h3 dedups within its batch): $idx")
@@ -158,10 +160,10 @@ class MergePropsSpec extends SparkSpec {
       // first, then % 3 = 2, then % 3 = 0 — so later days repeatedly
       // undercut indexed survivors with smaller ids (the remap path)
       Seq(1, 2, 0).foreach { day =>
-        MergeQueries.neardupIngest(spark, target,
-          docs.filter(col("doc_id") % 3 === day), "doc_id", "text")
+        MergeQueries.neardupIngestManifested(spark, target,
+          docs.filter(col("doc_id") % 3 === day), "doc_id", "text", nBuckets = 8)
       }
-      val got = spark.read.parquet(target)
+      val got = graft.sinks.ManifestMergeSink.readManifested(spark, target)
         .select("doc_id", "survivor_id").as[(Long, Long)].collect().toMap
       // batch reference: whole-corpus pairs + CC, singletons survive as self
       val comp = Dedup.connectedComponents(
@@ -338,11 +340,11 @@ class MergePropsSpec extends SparkSpec {
       assert(seen.size == 2,
         s"expected 2 micro-batches, got ${seen.size}: $seen")
       days.foreach(d =>
-        MergeQueries.neardupIngest(spark, direct, d, "doc_id", "text"))
+        MergeQueries.neardupIngestManifested(spark, direct, d, "doc_id", "text", 16))
       // the stream's index is the MANIFESTED layout (the default target)
       val got = graft.sinks.ManifestMergeSink.readManifested(spark, target)
         .select("doc_id", "survivor_id").as[(Long, Long)].collect().toSet
-      val want = spark.read.parquet(direct)
+      val want = graft.sinks.ManifestMergeSink.readManifested(spark, direct)
         .select("doc_id", "survivor_id").as[(Long, Long)].collect().toSet
       assert(got == want,
         s"stream-fed index must equal the direct batch-API index; diff=${
@@ -383,13 +385,15 @@ class MergePropsSpec extends SparkSpec {
       def day(ids: Long*) =
         spark.createDataFrame(ids.map(id => (id, texts(id)))).toDF("doc_id", "text")
       // day 1: two mutually-far docs -> two singleton clusters
-      MergeQueries.neardupIngest(spark, target, day(10L, 20L), "doc_id", "text")
-      val before = spark.read.parquet(target)
+      MergeQueries.neardupIngestManifested(spark, target, day(10L, 20L),
+        "doc_id", "text", nBuckets = 4)
+      val before = graft.sinks.ManifestMergeSink.readManifested(spark, target)
         .select("doc_id", "survivor_id").as[(Long, Long)].collect().toMap
       assert(before == Map(10L -> 10L, 20L -> 20L), s"expected singletons: $before")
       // day 2: the bridge joins both clusters -> one component, min id 10
-      MergeQueries.neardupIngest(spark, target, day(30L), "doc_id", "text")
-      val after = spark.read.parquet(target)
+      MergeQueries.neardupIngestManifested(spark, target, day(30L),
+        "doc_id", "text", nBuckets = 4)
+      val after = graft.sinks.ManifestMergeSink.readManifested(spark, target)
         .select("doc_id", "survivor_id").as[(Long, Long)].collect().toMap
       assert(after == Map(10L -> 10L, 20L -> 10L, 30L -> 10L),
         s"bridge must merge clusters and remap survivor 20 -> 10: $after")

@@ -55,6 +55,52 @@ class ObsConfigSpec extends SparkSpec {
     assert(defaults.benchOnly.isEmpty)
     assert(GraftConfig.fromEnv(Map("GRAFT_BENCH_ONLY" -> "q1_agg, q29_winnow,,"))
       .benchOnly == Set("q1_agg", "q29_winnow"))
+    // the entry point's own core default applies only when neither name is set
+    assert(GraftConfig.fromEnv(Map.empty, defaultCpus = 4).cpus == 4)
+    assert(GraftConfig.fromEnv(Map("GRAFT_CPUS" -> "6"), defaultCpus = 4).cpus == 6)
+    assert(GraftConfig.fromEnv(Map("SPARK_GRAFT_CPUS" -> "2"), defaultCpus = 4).cpus == 2)
+    // GRAFT_ wins over the legacy name; an explicit bench output is marked set
+    assert(GraftConfig.fromEnv(Map("GRAFT_CPUS" -> "3", "SPARK_GRAFT_CPUS" -> "5")).cpus == 3)
+    assert(!defaults.benchOutSet && defaults.benchMode == "cold")
+    val out = GraftConfig.fromEnv(Map("SPARK_GRAFT_BENCH_OUT" -> "/x.json"))
+    assert(out.benchOutSet && out.benchOut == "/x.json")
+  }
+
+  test("a GraftSession.builder session carries the fixed engine settings") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.sparkContext.getConf.get("spark.shuffle.sort.bypassMergeThreshold") == "2")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096")
+    assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "64k")
+    assert(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold") == "1024")
+  }
+
+  test("generate, release and bench JSON lines stay valid with a quote and a backslash") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    val mapper = new ObjectMapper()
+    val nasty = "a \"b\"\\c"
+    val gen = mapper.readTree(graft.jobs.GenerateDataJob.doneLine(10L, 2, nasty))
+    assert(gen.get("path").asText == nasty && gen.get("rows").asLong == 10L &&
+      gen.get("files").asInt == 2)
+    val rule = mapper.readTree(graft.jobs.ReleaseJob.contractLine(nasty, 3L, pass = false))
+    assert(rule.get("rule").asText == nasty && rule.get("violations").asLong == 3L &&
+      !rule.get("pass").asBoolean)
+    val rel = mapper.readTree(graft.jobs.ReleaseJob.committedLine(7L, Seq(nasty, "ok")))
+    assert(rel.get("version").asLong == 7L &&
+      rel.get("advisory_failures").get(0).asText == nasty &&
+      rel.get("advisory_failures").get(1).asText == "ok")
+    val bench = mapper.readTree(Bench.metricLine(Seq(
+        Bench.QueryResult(nasty, Some(1.5), 1, Seq(1.5, 2.0), 250L),
+        Bench.QueryResult("q2_dead", None, 3, Nil, 0L)),
+      reps = 3, mode = "cold", nWarmed = 0, sfDir = nasty))
+    assert(bench.get("sf").asText == nasty && bench.get("order").asText == "lex")
+    assert(bench.get("value").asDouble == 1.5 && bench.get("mode").asText == "cold")
+    assert(bench.get("queries").get(nasty).asDouble == 1.5 &&
+      bench.get("queries").get("q2_dead").isNull)
+    assert(bench.get("failed").get(0).asText == "q2_dead" &&
+      bench.get("flaky").get(nasty).asInt == 1)
+    assert(bench.get("run_pos").get("q2_dead").asInt == 1 &&
+      bench.get("gc_sec").get(nasty).asDouble == 0.25 &&
+      bench.get("reps_sec").get(nasty).get(1).asDouble == 2.0)
   }
 
   test("tolerant mode: a failing merge logs and returns zero counts (mongo.py:148-159)") {

@@ -213,9 +213,10 @@ class PlanAuditSpec extends SparkSpec {
     val t = "graft_plan_audit_nd_idx"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     try {
-      operators.MergeQueries.neardupIngestBucketed(spark, t,
-        Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
-          .toDF("doc_id", "text"), "doc_id", "text", nBuckets = 8)
+      operators.MergeQueries.neardupIngestSigsBucketed(spark, t,
+        operators.Dedup.simhashSignatures(
+          Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
+            .toDF("doc_id", "text"), "doc_id", "text"), nBuckets = 8)
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
