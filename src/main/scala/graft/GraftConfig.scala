@@ -27,10 +27,11 @@ final case class GraftConfig(
                                // stable prepends a FULL untimed warm pass
                                // (every selected query once, discarded) so
                                // codegen/JIT and heap steady-state land
-                               // before any clock starts; two consecutive
-                               // stable runs agree within ±5% total where
-                               // cold runs spread ±8% (the r17 424-492s
-                               // round-over-round caveat)
+                               // before any clock starts. Measured at sf0.1
+                               // (SCALE.md "Round 18: bench reproducibility"):
+                               // stable runs 2↔3 agreed within 3.2% total,
+                               // runs 1↔2 differed by 7.6%; cold runs spread
+                               // 424-492 s round over round in r17
 
 object GraftConfig {
   /** `defaultCpus`: the entry point's core count when neither

@@ -504,88 +504,6 @@ object Ivf {
     (Seq.empty, Seq.empty) // unreachable
   }
 
-  /** COMPACT the index's append history: every list whose mapped dirs
-    * hold more files than its byte-derived target
-    * (`ceil(bytes / targetBytes)`, min 1 — [[graft.sinks.Compaction]]'s
-    * rule) is read (mapping-pruned), rewritten at the target count into
-    * one new dir, and repointed in ONE commit; lists already at their
-    * target keep their exact dirs (byte-identical — spec-pinned).
-    * Nightly [[ingest]] appends a dir per batch per touched list, so
-    * this is the maintenance pass that keeps per-probe file counts flat
-    * under years of batches — rename-free and atomic across all
-    * compacted lists, unlike the per-directory swap compaction the
-    * legacy layouts use. Returns (compacted list ids, files before,
-    * files after). */
-  def compactIndex(spark: SparkSession, path: String,
-                   targetBytes: Long,
-                   maxRetries: Int = 20): (Seq[Int], Long, Long) = {
-    require(targetBytes > 0, s"targetBytes=$targetBytes must be positive")
-    val fs = fsOf(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    var attempt = 0
-    while (true) {
-      val (seq, st) = requireHead(spark, path)
-      def filesOf(dirs: Seq[String]) = dirs.flatMap { d =>
-        val p = new org.apache.hadoop.fs.Path(s"$path/$d")
-        if (!fs.exists(p)) Seq.empty
-        else fs.listStatus(p).filter { s =>
-          val n = s.getPath.getName
-          s.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }.toSeq
-      }
-      val stats = st.parts.map { case (l, dirs) =>
-        val fls = filesOf(dirs)
-        (l, fls.length, fls.map(_.getLen).sum)
-      }
-      val before = stats.map(_._2.toLong).sum
-      val flagged = stats.collect {
-        case (l, nf, bytes)
-          if nf > math.max(1L, (bytes + targetBytes - 1) / targetBytes) => l
-      }.toSeq.sorted
-      if (flagged.isEmpty) return (Seq.empty, before, before)
-      val gen = s"g-${tok()}"
-      // ONE read + ONE partitionBy write for every flagged list (the
-      // per-list read/repartition/write loop paid a schema-inference
-      // job, an exchange job, and a write job PER LIST — ~3 jobs × 47
-      // lists measured on q213). Per-list file-count targets survive:
-      // rows hash-distribute over (list_id, slot) with slot < that
-      // list's byte-derived target, so each list lands in at most
-      // `desired` files; the slot key is derived deterministically from
-      // the row content (guide §2.5 — never rand() under retries).
-      val ss = spark; import ss.implicits._
-      val desiredOf = stats.collect { case (l, _, bytes) if flagged.contains(l) =>
-        l -> math.max(1L, (bytes + targetBytes - 1) / targetBytes)
-      }.toSeq.toDF("list_id", "slots")
-      val data = graft.sinks.DirManifest.read(spark, path, st, Some(flagged))
-      val slotted = data
-        .join(broadcast(desiredOf), Seq("list_id"))
-        .withColumn("slot",
-          pmod(xxhash64(data.columns.map(col): _*), col("slots")))
-        .drop("slots")
-      slotted
-        .repartition(col("list_id"), col("slot"))
-        .drop("slot")
-        .write.mode("overwrite").partitionBy("list_id")
-        .parquet(s"$path/$gen")
-      val newParts = st.parts ++
-        flagged.map(l => l -> Seq(s"$gen/list_id=$l"))
-      try {
-        graft.sinks.DirManifest.commitCas(fs, root, seq,
-          graft.sinks.DirManifest.DmState(newParts, st.extra))
-        val after = newParts.map { case (_, dirs) =>
-          filesOf(dirs).length.toLong
-        }.sum
-        return (flagged.map(_.toInt), before, after)
-      } catch {
-        case e: graft.sinks.CommitLog.CommitConflictException =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/$gen"), true)
-          attempt += 1
-          if (attempt >= maxRetries) throw e
-      }
-    }
-    (Seq.empty, 0L, 0L) // unreachable
-  }
-
   /** Sweep generations/baselines no retained commit references —
     * [[graft.sinks.DirManifest.vacuum]] with the index's dir prefixes. */
   def vacuumIndex(spark: SparkSession, path: String,
@@ -613,7 +531,7 @@ object Ivf {
     *
     * Scale: per-batch cost is one assignment pass over the batch + one
     * pruned anti-join; the corpus-sized index is only ever APPENDED to
-    * (a new generation dir per batch; [[compactIndex]] keeps file
+    * (a new generation dir per batch; [[graft.sinks.DirManifest.compact]] keeps file
     * counts flat). Concurrency: the anti-join is derived against
     * exactly the head the publish CAS-checks, and a conflict re-derives
     * from the winner's head — two racing ingests can never land the
@@ -1354,11 +1272,11 @@ object Ivf {
 
   /** q213: INDEX COMPACTION under the gate — nightly [[ingest]] appends
     * one generation dir per batch per touched list, so a year of
-    * batches is the classic small-file problem applied to the index
-    * ([[graft.sinks.Compaction]]'s motivation, on the manifest layout).
+    * batches is the classic small-file problem applied to the index.
     * Harness: build on a third of the corpus, ingest the rest as two
-    * waves (every list accumulates up to three dirs), then
-    * [[compactIndex]]. Certificates:
+    * waves (every list accumulates up to three dirs), then the engine's
+    * one compaction, [[graft.sinks.DirManifest.compact]] over the
+    * `list_id` cells. Certificates:
     *  - `n_vectors` + `contents_match` (oracle anchor + q71's exact
     *    compare): compaction changes LAYOUT only — every (id, v,
     *    list_id) survives exactly once;
@@ -1366,8 +1284,8 @@ object Ivf {
     *    list collapsed to ONE dir, and the total data file count
     *    strictly fell;
     *  - `untouched_identical`: lists at their file target keep their
-    *    exact dirs and files (byte-identical — the q80/q165 skip
-    *    contract on the manifest layout).
+    *    exact dirs and files (byte-identical — the q80/q215 skip
+    *    contract).
     * Publish is ONE commit across all compacted lists — no rename, no
     * window where a probe sees half a compaction. */
   def q213IvfCompact(spark: SparkSession, dir: String): DataFrame = {
@@ -1388,8 +1306,10 @@ object Ivf {
           "id", "v"))
       val mappingBefore = mappingOf(spark, idxPath.toString)
       val fpBefore = listDirFingerprints(spark, idxPath.toString)
-      val (compacted, filesBefore, filesAfter) =
-        compactIndex(spark, idxPath.toString, targetBytes = 1L << 30)
+      val graft.sinks.DirManifest.CompactStats(compactedIds, filesBefore,
+        filesAfter) = graft.sinks.DirManifest.compact(spark,
+          idxPath.toString, "list_id", targetBytes = 1L << 30)
+      val compacted = compactedIds.map(_.toInt)
       val mappingAfter = mappingOf(spark, idxPath.toString)
       val fpAfter = listDirFingerprints(spark, idxPath.toString)
       val compactedOk = compacted.nonEmpty &&

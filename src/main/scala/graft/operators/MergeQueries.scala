@@ -1197,40 +1197,40 @@ object MergeQueries {
       |ORDER BY key_id""".stripMargin
 
   /** q80: small-file COMPACTION of an ingest-fragmented snapshot
-    * ([[graft.sinks.Compaction.compactPartitioned]]). The gate builds
-    * the pathology the operator exists for — 8 arrival batches appended
-    * to a 4-bucket partitioned layout leave 8 files per `pb=` directory
-    * (the q65/q73 nightly-ingest residue) — compacts to 1 file per
-    * directory, and emits the snapshot ROW-LEVEL from the REOPENED
-    * compacted layout: any row lost, duplicated, or corrupted by the
-    * rewrite/swap fails the hash against the oracle's straight fixture
-    * scan. The pass's file accounting (8→1 per dir, skip-idempotence,
-    * untouched-dir byte-identity) is pinned in CompactionSpec. */
+    * ([[graft.sinks.DirManifest.compact]]). The gate builds the
+    * pathology the operator exists for — 8 arrival batches appended as
+    * manifest generations into a 4-bucket `pb` layout leave 8 dirs per
+    * cell (the q65/q73 nightly-ingest residue) — compacts every cell to
+    * 1 file in one commit, and emits the snapshot ROW-LEVEL from the
+    * committed head: any row lost, duplicated, or corrupted by the
+    * rewrite fails the hash against the oracle's straight fixture scan.
+    * The pass's file accounting (one commit, skip-idempotence,
+    * untouched-cell byte-identity, byte-target splits) is pinned in
+    * CompactionSpec. */
   def q80Compaction(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sinks.Compaction
+    import graft.sinks.DirManifest
     val nBuckets = 4
     val base = java.nio.file.Files.createTempDirectory("graft_q80_")
     val path = s"$base/snapshot"
+    val fs = new org.apache.hadoop.fs.Path(base.toString)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), md5(col("text")).as("content_hash"))
         .withColumn("pb", pmod(xxhash64(col("doc_id")), lit(nBuckets.toLong)))
         .localCheckpoint(true) // 8 batch writes below re-read this frame
       for (b <- 0L until 8L)
-        docs.filter(pmod(col("doc_id"), lit(8L)) === b)
-          .write.mode("append").partitionBy("pb").parquet(path)
-      val stats = Compaction.compactPartitioned(spark, path, targetBytes = 64L << 20)
-      require(stats.nCompacted == nBuckets && stats.filesAfter == nBuckets,
+        DirManifest.writeCommit(docs.filter(pmod(col("doc_id"), lit(8L)) === b),
+          path, "pb", append = true)
+      val stats = DirManifest.compact(spark, path, "pb", targetBytes = 64L << 20)
+      require(stats.compacted.size == nBuckets && stats.filesAfter == nBuckets,
         s"compaction did not converge: $stats")
-      Parquets.read(spark, path)
+      val (_, st) = DirManifest.requireHead(fs, new org.apache.hadoop.fs.Path(path))
+      DirManifest.read(spark, path, st)
         .select(col("doc_id"), col("lang"), col("content_hash"))
         .orderBy(col("doc_id"))
         .localCheckpoint(true) // materialize before the scratch dir is deleted
-    } finally {
-      val fs = new org.apache.hadoop.fs.Path(base.toString)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base.toString), true)
-    }
+    } finally fs.delete(new org.apache.hadoop.fs.Path(base.toString), true)
   }
 
   val q80CompactionSql: String =

@@ -407,149 +407,16 @@ object Sharding {
   /** What a targeted OPTIMIZE pass did: the health-flagged file ids it
     * rewrote (after transitive closure over receiving files) and the
     * file ids its rewrite produced. Empty `rewritten` = the layout was
-    * healthy and NOTHING was touched (byte-identical — the q80
-    * skip-idempotence contract). */
+    * healthy and NOTHING was touched (no commit, every cell keeps its
+    * exact dirs — the q80 skip-idempotence contract). */
   final case class OptimizeStats(flagged: Seq[Long], rewritten: Seq[Long],
                                  produced: Seq[Long])
 
-  /** TARGETED incremental OPTIMIZE — the operator [[layoutHealth]]'s
-    * report schedules: rewrite ONLY the overlap-flagged files of a
-    * z-ordered `partitionBy(file_id)` layout, re-cutting their rows by
-    * the pure equal-width z function (`file_id = zkey·nFiles div
-    * zSpace`), and leave every clean file untouched on disk
-    * (byte-identical — pinned in ShardingSpec). q138/q155 re-cluster by
-    * rewriting the ENTIRE layout; at 100 TB a full nightly re-layout is
-    * not a plan, and the monitor already names exactly which files
-    * overlap — this is the Delta/Iceberg `OPTIMIZE` analog built on
-    * q80-compaction's skip-aware per-directory swap pattern
-    * ([[graft.sinks.Compaction]]).
-    *
-    * Correctness of the flagged set: rewritten rows may only land in a
-    * file id whose z range they overlap — so a clean file can receive
-    * rows ONLY if some flagged file's range overlaps its range, which
-    * would have flagged it. The one exception is a GAP: a flagged row
-    * whose cut id names an existing file whose ACTUAL row range does
-    * not overlap the incoming row (cut ranges are wider than actual
-    * ranges). The transitive closure below catches exactly that case —
-    * any existing un-flagged file that would RECEIVE rows is promoted
-    * into the rewrite set (its rows must merge with the incoming ones,
-    * not be clobbered), and closure re-checks the promoted files' own
-    * targets. Clustered files cut to themselves, so the closure
-    * terminates in practice after one promotion round (bounded by
-    * |files| regardless).
-    *
-    * Scale: the health report is footer-stats metadata (|files| rows);
-    * the flagged set and closure are driver-side set algebra over
-    * ≤ |files| longs (the touched-bucket budget of
-    * [[graft.sinks.ManifestMergeSink.mergeIntoManifested]]); data I/O is
-    * proportional to the flagged files' bytes, never the layout's. The
-    * per-directory delete+rename swap is [[graft.sinks.Compaction]]'s;
-    * the swap is atomic per directory, not
-    * across directories — a crash mid-swap re-converges on re-run
-    * because the re-cut is a pure function of the surviving rows. */
-  def optimizeFlagged(spark: SparkSession, path: String, nFiles: Int,
-                      zSpace: Long): OptimizeStats = {
-    require(nFiles >= 1 && zSpace >= 1, s"nFiles=$nFiles zSpace=$zSpace")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dirOf(id: Long) = new org.apache.hadoop.fs.Path(root, s"file_id=$id")
-    val existing = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("file_id="))
-      .map(_.getPath.getName.stripPrefix("file_id=").toLong).toSet
-    val health = layoutHealth(
-      Parquets.read(spark, path).select(col("zkey"), col("file_id")))
-    val flagged = health.filter(col("overlap_cnt") > 0)
-      .select(col("file_id").cast("long"))
-      .collect().map(_.getLong(0)).toSet // ≤ |files| — footer-stats scale
-    if (flagged.isEmpty) return OptimizeStats(Nil, Nil, Nil)
-    // transitive closure over receiving files (see scaladoc): promote any
-    // existing file a rewrite-set row would land in
-    def cutIdsOf(ids: Set[Long]): Set[Long] =
-      Parquets.read(spark, path)
-        .filter(col("file_id").isin(ids.toSeq.map(java.lang.Long.valueOf): _*))
-        .select(expr(s"zkey * $nFiles div $zSpace").as("cid"))
-        .distinct().collect().map(_.getLong(0)).toSet
-    var rewrite = flagged
-    var frontier = flagged
-    while (frontier.nonEmpty) {
-      frontier = (cutIdsOf(frontier) intersect existing) diff rewrite
-      rewrite ++= frontier
-    }
-    val rows = Parquets.read(spark, path)
-      .filter(col("file_id").isin(rewrite.toSeq.map(java.lang.Long.valueOf): _*))
-      .drop("file_id")
-      .withColumn("file_id", expr(s"zkey * $nFiles div $zSpace"))
-    val tmp = new org.apache.hadoop.fs.Path(path + ".__optimize_tmp")
-    fs.delete(tmp, true)
-    rows.repartition(col("file_id"))
-      .sortWithinPartitions(col("file_id"), col("zkey"))
-      .write.mode("overwrite").partitionBy("file_id").parquet(tmp.toString)
-    // swap: the rewrite set's rows all live in the temp layout now —
-    // drop their old dirs, move the produced dirs in
-    rewrite.foreach(id => fs.delete(dirOf(id), true))
-    val produced = fs.listStatus(tmp)
-      .filter(_.getPath.getName.startsWith("file_id="))
-      .map { st =>
-        val dest = new org.apache.hadoop.fs.Path(root, st.getPath.getName)
-        fs.delete(dest, true)
-        require(fs.rename(st.getPath, dest),
-          s"optimize swap failed: could not move ${st.getPath} to $dest")
-        st.getPath.getName.stripPrefix("file_id=").toLong
-      }.toSeq
-    fs.delete(tmp, true)
-    OptimizeStats(flagged.toSeq.sorted, rewrite.toSeq.sorted, produced.sorted)
-  }
-
-  // q165's day-2 z cap: appended rows are confined to the lower quarter
+  // q215's day-2 z cap: appended rows are confined to the lower quarter
   // of the z space so the appended file straddles only the low-z files
   // — the flagged set is a strict subset and the untouched-files claim
   // is non-vacuous (pinned in ShardingSpec).
   private[operators] val OptZCap = (1 << (2 * ZBits)) / 4
-
-  /** q165: TARGETED OPTIMIZE through the layout lifecycle — day 1
-    * z-clustered (q138's layout over the ≤-cut half), day 2 appended as
-    * ONE unclustered low-z file (`file_id = ZFiles`, rows capped at
-    * [[OptZCap]]), then [[optimizeFlagged]]: only the appended file and
-    * the low-z files it straddles rewrite; every other file stays
-    * byte-identical on disk (ShardingSpec pins bytes, flagged-subset,
-    * post-health ≡ full re-cluster, and no-op idempotence on a healthy
-    * layout). The gate is row-level through the PHYSICAL path (q138's
-    * precedent): the optimized layout reopens via partition discovery
-    * and every (doc_id, qb, lb, zkey, file_id) must equal the oracle's
-    * pure-function recomputation over day1 ∪ day2∩cap — which IS the
-    * full re-cluster assignment, so health ≡ re-clustered follows
-    * row-for-row. */
-  def q165OptimizeFlagged(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q165_")
-    try {
-      val m = qualityLengthBuckets(spark, dir)
-        .localCheckpoint(true) // cut once, reused by both days
-      val cut = m.agg(max(col("doc_id"))).head().getLong(0) / 2
-      val path = s"$base/layout"
-      def write(df: DataFrame, mode: String): Unit =
-        df.repartition(col("file_id"))
-          .sortWithinPartitions(col("file_id"), col("zkey"), col("doc_id"))
-          .write.mode(mode).partitionBy("file_id").parquet(path)
-      // day 1: clustered
-      write(zOrderLayout(m.filter(col("doc_id") <= cut), "doc_id", "qb", "lb",
-        ZFiles), "overwrite")
-      // day 2: ONE unclustered appended file, low-z rows only
-      write(m.filter(col("doc_id") > cut)
-        .withColumn("zkey", zOrderKey(col("qb"), col("lb"), ZBits))
-        .filter(col("zkey") < OptZCap)
-        .withColumn("file_id", lit(ZFiles.toLong)), "append")
-      optimizeFlagged(spark, path, ZFiles, 1L << (2 * ZBits))
-      Parquets.read(spark, path)
-        .select(col("doc_id"), col("qb"), col("lb"), col("zkey"),
-          col("file_id").cast("long").as("file_id"))
-        .orderBy(col("file_id"), col("zkey"), col("doc_id"))
-        .localCheckpoint(true) // materialize before the layout dir dies
-    } finally {
-      val fs = new org.apache.hadoop.fs.Path(base.toString)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base.toString), true)
-    }
-  }
 
   val q165OptimizeFlaggedSql: String =
     s"""WITH $qualityLengthBucketsSql,
@@ -564,8 +431,8 @@ object Sharding {
        |FROM keep ORDER BY file_id, zkey, doc_id""".stripMargin
 
   // ---------------------------------------------------------------------
-  // The z-layout on the COMMIT-LOG manifest (graft.sinks.DirManifest):
-  // the same file_id cells, published rename-free
+  // The z-layout lives on the COMMIT-LOG manifest (graft.sinks.DirManifest):
+  // file_id cells, every write and rewrite published in one commit
   // ---------------------------------------------------------------------
 
   /** Write a z-cut frame (carrying `file_id`) as a manifest generation
@@ -573,34 +440,11 @@ object Sharding {
     * day-1 cluster); `append = true` adds the new dirs to their cells'
     * dir lists (the day-2 arrival file). */
   def zWriteManifested(spark: SparkSession, path: String, df: DataFrame,
-                       append: Boolean): Unit = {
-    import graft.sinks.DirManifest
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gen = s"g-${java.util.UUID.randomUUID().toString.take(8)}"
-    df.repartition(col("file_id"))
-      .sortWithinPartitions(col("file_id"), col("zkey"))
-      .write.mode("overwrite").partitionBy("file_id").parquet(s"$path/$gen")
-    val written = DirManifest.writtenParts(fs, root, gen, "file_id")
-    var attempt = 0
-    while (attempt < 20) {
-      val head = DirManifest.head(fs, root)
-      val seq = head.map(_._1).getOrElse(0L)
-      val base =
-        if (append) head.map(_._2.parts).getOrElse(Map.empty[Long, Seq[String]])
-        else Map.empty[Long, Seq[String]]
-      val parts = base ++ written.map { case (f, d) =>
-        f -> (base.getOrElse(f, Seq.empty) :+ d)
-      }
-      try {
-        DirManifest.commitCas(fs, root, seq, DirManifest.DmState(parts))
-        return
-      } catch {
-        case e: graft.sinks.CommitLog.CommitConflictException =>
-          attempt += 1; if (attempt >= 20) throw e
-      }
-    }
-  }
+                       append: Boolean): Unit =
+    graft.sinks.DirManifest.writeCommit(
+      df.repartition(col("file_id"))
+        .sortWithinPartitions(col("file_id"), col("zkey")),
+      path, "file_id", append)
 
   /** The manifested layout as a frame (file_id reconstructed through the
     * per-generation discovery read). */
@@ -608,18 +452,44 @@ object Sharding {
     import graft.sinks.DirManifest
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (_, st) = DirManifest.head(fs, root).getOrElse(
-      throw new IllegalArgumentException(s"no committed z layout at $path"))
-    DirManifest.read(spark, path, st)
+    DirManifest.read(spark, path, DirManifest.requireHead(fs, root)._2)
   }
 
-  /** [[optimizeFlagged]] on the manifest layout — same flagged set, same
-    * transitive closure, same pure re-cut, but the publish is ONE
-    * commit-file create repointing every rewritten cell at once: atomic
-    * ACROSS the rewrite set (the per-directory swap is atomic per dir
-    * only — its honest crash caveat disappears here), rename-free, and
-    * loud under a concurrent committer (re-measured and re-run). Clean
-    * cells keep their exact dirs — byte-identical, spec-pinned. */
+  /** TARGETED incremental OPTIMIZE — the operator [[layoutHealth]]'s
+    * report schedules: rewrite ONLY the overlap-flagged cells of a
+    * z-ordered manifest layout ([[zWriteManifested]]), re-cutting their
+    * rows by the pure equal-width z function (`file_id = zkey·nFiles
+    * div zSpace`), and leave every clean cell on its exact dirs
+    * (byte-identical — pinned in ShardingSpec). q138/q155 re-cluster by
+    * rewriting the ENTIRE layout; at 100 TB a full nightly re-layout is
+    * not a plan, and the monitor already names exactly which files
+    * overlap — this is the Delta/Iceberg `OPTIMIZE` analog.
+    *
+    * Correctness of the flagged set: rewritten rows may only land in a
+    * file id whose z range they overlap — so a clean cell can receive
+    * rows ONLY if some flagged cell's range overlaps its range, which
+    * would have flagged it. The one exception is a GAP: a flagged row
+    * whose cut id names an existing cell whose ACTUAL row range does
+    * not overlap the incoming row (cut ranges are wider than actual
+    * ranges). The transitive closure below catches exactly that case —
+    * any existing un-flagged cell that would RECEIVE rows is promoted
+    * into the rewrite set (its rows must merge with the incoming ones,
+    * not be clobbered), and closure re-checks the promoted cells' own
+    * targets. Clustered cells cut to themselves, so the closure
+    * terminates in practice after one promotion round (bounded by
+    * |files| regardless).
+    *
+    * Publish: ONE commit-file create repointing every rewritten cell at
+    * once — atomic ACROSS the rewrite set, rename-free, and loud under
+    * a concurrent committer (re-measured and re-run). A crash before
+    * the commit leaves an orphan generation that [[graft.sinks.DirManifest.vacuum]]
+    * sweeps; readers never see a half-rewritten layout.
+    *
+    * Scale: the health report is footer-stats metadata (|files| rows);
+    * the flagged set and closure are driver-side set algebra over
+    * ≤ |files| longs (the touched-bucket budget of
+    * [[graft.sinks.ManifestMergeSink.mergeIntoManifested]]); data I/O is
+    * proportional to the flagged cells' bytes, never the layout's. */
   def optimizeFlaggedManifested(spark: SparkSession, path: String,
                                 nFiles: Int, zSpace: Long,
                                 maxRetries: Int = 20): OptimizeStats = {
@@ -629,8 +499,7 @@ object Sharding {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     var attempt = 0
     while (true) {
-      val (seq, st) = DirManifest.head(fs, root).getOrElse(
-        throw new IllegalArgumentException(s"no committed z layout at $path"))
+      val (seq, st) = DirManifest.requireHead(fs, root)
       val existing = st.parts.keySet
       val health = layoutHealth(
         DirManifest.read(spark, path, st).select(col("zkey"), col("file_id")))
@@ -638,7 +507,7 @@ object Sharding {
         .select(col("file_id").cast("long"))
         .collect().map(_.getLong(0)).toSet // ≤ |files| — footer-stats scale
       if (flagged.isEmpty) return OptimizeStats(Nil, Nil, Nil)
-      // transitive closure over receiving files (optimizeFlagged's doc):
+      // transitive closure over receiving cells (see the scaladoc):
       // promote any existing cell a rewrite-set row would land in
       def cutIdsOf(ids: Set[Long]): Set[Long] =
         DirManifest.read(spark, path, st, Some(ids.toSeq))
@@ -675,14 +544,17 @@ object Sharding {
     OptimizeStats(Nil, Nil, Nil) // unreachable
   }
 
-  /** q215: q165's TARGETED-OPTIMIZE lifecycle through the MANIFEST
-    * layout — day 1 z-clustered, day 2 appended as one unclustered
-    * low-z cell, then [[optimizeFlaggedManifested]]: the same row-level
-    * oracle as q165 (the optimized layout must equal the pure-function
-    * full re-cluster row for row), with the publish now ONE commit
-    * across every rewritten cell instead of per-directory renames.
-    * Clean cells' dirs stay byte-identical (ShardingSpec pins file
-    * fingerprints through the mapping). */
+  /** q215: the TARGETED-OPTIMIZE lifecycle — day 1 z-clustered (q138's
+    * layout over the ≤-cut half), day 2 appended as ONE unclustered
+    * low-z cell (`file_id = ZFiles`, rows capped at [[OptZCap]]), then
+    * [[optimizeFlaggedManifested]]: only the appended cell and the low-z
+    * cells it straddles rewrite, in ONE commit; every other cell keeps
+    * its exact dirs (ShardingSpec pins the mapping, the flagged subset,
+    * the closure and no-op idempotence). The gate is row-level: every
+    * (doc_id, qb, lb, zkey, file_id) of the committed head must equal
+    * the oracle's pure-function recomputation over day1 ∪ day2∩cap —
+    * which IS the full re-cluster assignment. The `q165_optimize_flagged`
+    * name runs this body too: its oracle is the same text. */
   def q215OptimizeManifested(spark: SparkSession, dir: String): DataFrame = {
     val base = java.nio.file.Files.createTempDirectory("graft_q215_")
     try {
@@ -714,44 +586,38 @@ object Sharding {
 
   val q215OptimizeManifestedSql: String = q165OptimizeFlaggedSql
 
-  /** [[writeStatsLayout]] on the manifest: one generation partitioned by
-    * file_id (rows sorted within each cell), one commit publishing the
-    * full mapping, and the `_stats` zone-map manifest refreshed from
-    * the mapping-reconstructed frame. */
+  /** Write a layout carrying `file_id` AND its [[statsManifest]]: one
+    * generation partitioned by file_id (rows sorted within each cell),
+    * one commit publishing the full mapping, then the `_stats` zone-map
+    * manifest computed from the REOPENED head (what the footers
+    * actually contain, not what the writer intended — a lost cell shows
+    * up as a missing manifest row, not a phantom one). */
   def writeStatsLayoutManifested(df: DataFrame, sortCols: Seq[String],
                                  statsCols: Seq[String], path: String): Unit = {
-    import graft.sinks.DirManifest
-    val spark = df.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gen = s"g-${java.util.UUID.randomUUID().toString.take(8)}"
-    df.repartition(col("file_id"))
-      .sortWithinPartitions(("file_id" +: sortCols).map(col): _*)
-      .write.mode("overwrite").partitionBy("file_id").parquet(s"$path/$gen")
-    val parts = DirManifest.writtenParts(fs, root, gen, "file_id")
-      .map { case (f, d) => f -> Seq(d) }.toMap
-    var attempt = 0
-    while (attempt < 20) {
-      val seq = DirManifest.head(fs, root).map(_._1).getOrElse(0L)
-      try {
-        DirManifest.commitCas(fs, root, seq, DirManifest.DmState(parts))
-        refreshStatsManifestFrom(zReadManifested(spark, path), path, statsCols)
-        return
-      } catch {
-        case e: graft.sinks.CommitLog.CommitConflictException =>
-          attempt += 1; if (attempt >= 20) throw e
-      }
-    }
+    graft.sinks.DirManifest.writeCommit(
+      df.repartition(col("file_id"))
+        .sortWithinPartitions(("file_id" +: sortCols).map(col): _*),
+      path, "file_id", append = false)
+    refreshStatsManifestFrom(zReadManifested(df.sparkSession, path), path,
+      statsCols)
   }
 
-  /** q216: q169's DATA-SKIPPING lifecycle through the MANIFEST layout —
-    * the ingest-day layout written as one commit, the zone-map manifest
-    * refreshed from the mapping, and the 4-day `ts` window answered via
+  /** q216: DATA SKIPPING through the physical path — `events` written
+    * as manifest cells with `file_id = (day-1) div 4` (the ingest-day
+    * layout) in one commit, its `_stats` zone maps computed from the
+    * committed head, then a 4-day `ts` window answered via
     * [[skippingScanManifested]]: the zone-map test picks the surviving
     * file ids and the data read prunes AT THE MAPPING (pruned-out
-    * cells' dirs are never listed — one step past the partition-filter
-    * prune). Oracle IS q169's verbatim: rows row-level exact plus the
-    * recomputed file economics (files_read, files_total, pruned_ok). */
+    * cells' dirs are never listed). The gate is row-level exact on the
+    * window's events AND on the file economics: the oracle recomputes
+    * every file's min/max ts from the same pure day assignment, applies
+    * the same zone-map test, and must agree on `files_read` (2),
+    * `files_total` (8), and `pruned_ok` — no literal booleans. The
+    * predicate column (`ts`) is NOT the partition key: the zone maps
+    * prune on the correlation between event time and ingest day,
+    * exactly the case footer stats serve and a partition filter alone
+    * cannot express. The `q169_skipping_scan` name runs this body too:
+    * its oracle is the same text. */
   def q216SkippingManifested(spark: SparkSession, dir: String): DataFrame = {
     val base = java.nio.file.Files.createTempDirectory("graft_q216_")
     try {
@@ -829,35 +695,15 @@ object Sharding {
 
   private def statsPath(path: String) = s"$path/_stats"
 
-  /** Write a `partitionBy(file_id)` layout AND its [[statsManifest]] in
-    * one pass each: data first, then the manifest computed from the
-    * REOPENED files (what the footers actually contain, not what the
-    * writer intended — a lost partition shows up as a missing manifest
-    * row, not a phantom one). The manifest lands at `$path/_stats` as
-    * one file (it is |files| rows). */
-  def writeStatsLayout(df: DataFrame, fileCol: String, sortCols: Seq[String],
-                       statsCols: Seq[String], path: String): Unit = {
-    df.repartition(col(fileCol))
-      .sortWithinPartitions((fileCol +: sortCols).map(col): _*)
-      .write.mode("overwrite").partitionBy(fileCol).parquet(path)
-    refreshStatsManifest(df.sparkSession, path, statsCols)
-  }
-
-  /** Recompute `_stats` from the layout's current files — the manifest
-    * must FOLLOW every rewrite (compaction, targeted optimize): stale
-    * zone maps don't lose rows ([[skippingScan]] re-filters inside the
-    * surviving files) but they stop pruning, and a manifest row for a
-    * deleted file id would prune a phantom. One |files|-row aggregate;
-    * [[graft.jobs.MaintainJob]] runs this as its step 3b whenever a
-    * maintenance pass touched data. */
-  def refreshStatsManifest(spark: SparkSession, path: String,
-                           statsCols: Seq[String]): Unit =
-    refreshStatsManifestFrom(Parquets.read(spark, path), path, statsCols)
-
-  /** [[refreshStatsManifest]] with the layout given as a frame — the
-    * form the manifested layout uses ([[zReadManifested]] reconstructs
-    * file_id through the mapping; a bare parquet read of a manifest
-    * root would sweep generation dirs as data). */
+  /** Recompute `_stats` from the layout given as a frame (the head read
+    * through [[zReadManifested]], which reconstructs file_id through the
+    * mapping; a bare parquet read of a manifest root would sweep
+    * generation dirs as data). The manifest must FOLLOW every rewrite:
+    * stale zone maps don't lose rows ([[skippingScanManifested]]
+    * re-filters inside the surviving cells) but they stop pruning, and
+    * a manifest row for a deleted file id would prune a phantom.
+    * [[graft.jobs.MaintainJob]] runs this whenever its optimize touched
+    * data. One |files|-row aggregate, written as one file. */
   def refreshStatsManifestFrom(layout: DataFrame, path: String,
                                statsCols: Seq[String]): Unit =
     statsManifest(layout, "file_id", statsCols)
@@ -874,36 +720,17 @@ object Sharding {
     * economics the manifest bought (`filesRead` of `filesTotal`). */
   final case class SkipScan(rows: DataFrame, filesRead: Long, filesTotal: Long)
 
-  /** MANIFEST-PRUNED RANGE SCAN — the consumer of [[writeStatsLayout]]:
-    * one metadata read of `_stats` decides which files can possibly
-    * hold `lo ≤ c ≤ hi` (`max_c ≥ lo ∧ min_c ≤ hi` — the zone-map
-    * test), and ONLY those partitions are opened (`file_id IN (…)` on
-    * the partition column prunes at planning time — pinned in
-    * ShardingSpec via the scan's selected-partition count). The row
-    * predicate still applies inside the surviving files, so the scan is
-    * exact regardless of how loose the zone maps are; the manifest only
-    * ever removes provably-empty files. Driver-side state is the pruned
-    * id list — ≤ |files| longs, the [[optimizeFlagged]] budget. */
-  def skippingScan(spark: SparkSession, path: String, predCol: String,
-                   lo: Column, hi: Column): SkipScan = {
-    val stats = Parquets.read(spark, statsPath(path))
-      .select(col("file_id"), col(s"min_$predCol"), col(s"max_$predCol"))
-      .localCheckpoint(true) // one metadata read feeds both counts
-    val filesTotal = stats.count()
-    val keep = stats
-      .filter(col(s"max_$predCol") >= lo && col(s"min_$predCol") <= hi)
-      .select(col("file_id")).collect().map(_.getLong(0)).toSeq
-    val rows = Parquets.read(spark, path)
-      .filter(col("file_id").isin(keep.map(java.lang.Long.valueOf): _*))
-      .filter(col(predCol) >= lo && col(predCol) <= hi)
-    SkipScan(rows, keep.size.toLong, filesTotal)
-  }
-
-  /** [[skippingScan]] over a MANIFESTED layout: the same one-metadata-
-    * read zone-map test picks the surviving file ids, and the data read
-    * prunes AT THE MAPPING ([[graft.sinks.DirManifest.read]] of exactly
-    * those cells' dirs) — the pruned-out cells' dirs are never even
-    * listed, one step stronger than the partition-filter prune. */
+  /** MANIFEST-PRUNED RANGE SCAN — the consumer of
+    * [[writeStatsLayoutManifested]]: one metadata read of `_stats`
+    * decides which cells can possibly hold `lo ≤ c ≤ hi` (`max_c ≥ lo ∧
+    * min_c ≤ hi` — the zone-map test), and the data read prunes AT THE
+    * MAPPING ([[graft.sinks.DirManifest.read]] of exactly those cells'
+    * dirs) — the pruned-out cells' dirs are never even listed (pinned in
+    * ShardingSpec via the scan's opened dirs). The row predicate still
+    * applies inside the surviving cells, so the scan is exact however
+    * loose the zone maps are; the manifest only ever removes
+    * provably-empty cells. Driver-side state is the pruned id list —
+    * ≤ |files| longs. */
   def skippingScanManifested(spark: SparkSession, path: String,
                              predCol: String, lo: Column,
                              hi: Column): SkipScan = {
@@ -917,8 +744,7 @@ object Sharding {
       .select(col("file_id")).collect().map(_.getLong(0)).toSeq
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (_, st) = DirManifest.head(fs, root).getOrElse(
-      throw new IllegalArgumentException(s"no committed z layout at $path"))
+    val (_, st) = DirManifest.requireHead(fs, root)
     val mapped = keep.filter(st.parts.contains)
     val rows =
       if (mapped.isEmpty)
@@ -928,51 +754,13 @@ object Sharding {
     SkipScan(rows, keep.size.toLong, filesTotal)
   }
 
-  // q169 parameters: events laid out by ingest day (4 days per file —
+  // q216 parameters: events laid out by ingest day (4 days per file —
   // the nightly-append layout a stream sink produces), stats on the
   // event timestamp, and a 4-day window query that the manifest must
   // prune to exactly the 2 files whose day ranges intersect it.
   private[operators] val SkipDaysPerFile = 4
   private[operators] val SkipLo = "2024-01-10 00:00:00"
   private[operators] val SkipHi = "2024-01-13 23:59:59.999999"
-
-  /** q169: DATA SKIPPING through the physical path — `events` written
-    * `partitionBy(file_id)` with `file_id = (day-1) div 4` (the
-    * ingest-day layout), its `_stats` manifest written beside it, then
-    * a 4-day `ts` window answered via [[skippingScan]]. The gate is
-    * row-level exact on the window's events AND on the file economics:
-    * the oracle recomputes every file's min/max ts from the same pure
-    * day assignment, applies the same zone-map test, and must agree on
-    * `files_read` (2), `files_total` (8), and `pruned_ok` — no literal
-    * booleans, every anchor recomputed. The predicate column (`ts`) is
-    * NOT the partition key: the manifest prunes on correlation between
-    * event time and ingest day, exactly the case footer stats serve and
-    * a partition filter alone cannot express. */
-  def q169SkippingScan(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_q169_")
-    try {
-      val path = s"$base/layout"
-      val ev = Tables.events(spark, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-        .withColumn("file_id", expr(s"(dayofmonth(ts) - 1) div $SkipDaysPerFile"))
-      writeStatsLayout(ev, "file_id", Seq("ts", "event_id"),
-        Seq("ts", "user_id"), path)
-      val scan = skippingScan(spark, path, "ts",
-        lit(SkipLo).cast("timestamp"), lit(SkipHi).cast("timestamp"))
-      scan.rows
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-          col("file_id").cast("long").as("file_id"))
-        .withColumn("files_read", lit(scan.filesRead))
-        .withColumn("files_total", lit(scan.filesTotal))
-        .withColumn("pruned_ok", lit(scan.filesRead < scan.filesTotal))
-        .orderBy(col("event_id"))
-        .localCheckpoint(true) // materialize before the layout dir dies
-    } finally {
-      val fs = new org.apache.hadoop.fs.Path(base.toString)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base.toString), true)
-    }
-  }
 
   val q169SkippingScanSql: String =
     s"""WITH e AS (SELECT event_id, ts, user_id, event_type,

@@ -3,16 +3,18 @@ package graft.sinks
 import graft.Parquets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, pmod, xxhash64}
 
 /** COMMIT-LOG-BACKED PARTITION MANIFEST — the generic form of
   * [[ManifestMergeSink]]'s layout for stores whose unit of rewrite is a
   * PARTITION-VALUE DIRECTORY rather than a hash bucket: the IVF index's
-  * `list_id=` lists ([[graft.operators.Ivf]]) and the z-order layout's
-  * `file_id=` cells ([[graft.operators.Sharding]]). Both previously
-  * published through directory renames (atomic per dir, NOT across
-  * dirs, meaningless on an object store, last-writer-wins under
-  * concurrency — the [[MergeSink.atomicSwap]] trade); here the same
-  * bounded data plane publishes through the [[CommitLog]]:
+  * `list_id=` lists ([[graft.operators.Ivf]]), the z-order layout's
+  * `file_id=` cells ([[graft.operators.Sharding]]) and q80's `pb=`
+  * arrival cells; it also owns the engine's one compaction
+  * ([[compact]]). A per-directory delete+rename publish is atomic per
+  * dir, NOT across dirs, meaningless on an object store, and loses rows
+  * on a crash between the delete and the rename; here the same bounded
+  * data plane publishes through the [[CommitLog]]:
   *
   *  - `$root/g-<tok>/<part>=<v>/` immutable parquet dirs — every write
   *    lands as a new generation; nothing ever moves;
@@ -90,6 +92,11 @@ object DirManifest {
     CommitLog.head(fs, root, isValid)
       .map { case (seq, c) => (seq, parse(c)) }
 
+  /** The committed head; throws when nothing is committed at `root`. */
+  def requireHead(fs: FileSystem, root: Path): (Long, DmState) =
+    head(fs, root).getOrElse(throw new IllegalArgumentException(
+      s"no committed manifest at $root"))
+
   /** CAS-publish `st` on top of `expectedHead` (0 = empty log); throws
     * [[CommitLog.CommitConflictException]] when another writer won —
     * re-derive against the new head and retry. */
@@ -138,6 +145,138 @@ object DirManifest {
         val name = st.getPath.getName
         (name.stripPrefix(s"$partCol=").toLong, s"$gen/$name")
       }.toSeq.sortBy(_._1)
+  }
+
+  private def newGen(): String =
+    s"g-${java.util.UUID.randomUUID().toString.take(8)}"
+
+  private def fsOf(spark: SparkSession, root: Path): FileSystem =
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Write `df` as ONE new generation partitioned by `partCol`, then
+    * CAS-publish it: `append` adds each written dir to its value's dir
+    * list on top of the head (appends accumulate; extra pointers carry
+    * over), otherwise the written dirs replace the whole mapping. The
+    * caller arranges the rows (distribution, in-cell order). A conflict
+    * re-reads the head and re-publishes — the generation is written
+    * once; after `maxRetries` conflicts the generation is deleted and
+    * the conflict rethrown. Returns the written (value, dir) pairs. */
+  def writeCommit(df: DataFrame, root: String, partCol: String,
+                  append: Boolean,
+                  maxRetries: Int = 20): Seq[(Long, String)] = {
+    val rootP = new Path(root)
+    val fs = fsOf(df.sparkSession, rootP)
+    val gen = newGen()
+    df.write.mode("overwrite").partitionBy(partCol).parquet(s"$root/$gen")
+    val written = writtenParts(fs, rootP, gen, partCol)
+    var attempt = 0
+    while (true) {
+      val h = head(fs, rootP)
+      val base =
+        if (append) h.map(_._2).getOrElse(DmState(Map.empty))
+        else DmState(Map.empty)
+      val parts = base.parts ++ written.map { case (v, d) =>
+        v -> (base.parts.getOrElse(v, Seq.empty) :+ d)
+      }
+      try {
+        commitCas(fs, rootP, h.map(_._1).getOrElse(0L),
+          DmState(parts, base.extra))
+        return written
+      } catch {
+        case e: CommitLog.CommitConflictException =>
+          attempt += 1
+          if (attempt >= maxRetries) {
+            fs.delete(new Path(rootP, gen), true)
+            throw e
+          }
+      }
+    }
+    written // unreachable
+  }
+
+  /** What a [[compact]] pass did: the partition values it rewrote and
+    * the data-file count across every mapped dir before and after. */
+  final case class CompactStats(compacted: Seq[Long], filesBefore: Long,
+                                filesAfter: Long)
+
+  /** COMPACT the append history: every partition value whose mapped dirs
+    * hold more data files than its byte-derived target
+    * (`ceil(bytes / targetBytes)`, min 1) is read (mapping-pruned),
+    * rewritten at the target count into one new dir, and repointed in
+    * ONE commit; values already at their target keep their exact dirs
+    * (byte-identical — CompactionSpec pins it). Appends add a dir per
+    * batch per touched value (IVF [[graft.operators.Ivf.ingest]], q80's
+    * arrival batches), so this is the maintenance pass that keeps
+    * per-probe file counts flat under years of batches — rename-free
+    * and atomic across every compacted value. A conflict deletes the
+    * losing generation and re-derives against the new head. The
+    * reference never compacts: it leaves one file per batch (SURVEY
+    * §2A item 3). */
+  def compact(spark: SparkSession, root: String, partCol: String,
+              targetBytes: Long, maxRetries: Int = 20): CompactStats = {
+    require(targetBytes > 0, s"targetBytes=$targetBytes must be positive")
+    val rootP = new Path(root)
+    val fs = fsOf(spark, rootP)
+    def targetOf(bytes: Long) = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
+    var attempt = 0
+    while (true) {
+      val (seq, st) = requireHead(fs, rootP)
+      def filesOf(dirs: Seq[String]) = dirs.flatMap { d =>
+        val p = new Path(rootP, d)
+        if (!fs.exists(p)) Seq.empty
+        else fs.listStatus(p).filter { s =>
+          val n = s.getPath.getName
+          s.isFile && !n.startsWith("_") && !n.startsWith(".")
+        }.toSeq
+      }
+      val stats = st.parts.map { case (v, dirs) =>
+        val fls = filesOf(dirs)
+        v -> (fls.length.toLong, fls.map(_.getLen).sum)
+      }
+      val before = stats.values.map(_._1).sum
+      val flagged = stats.collect {
+        case (v, (nf, bytes)) if nf > targetOf(bytes) => v
+      }.toSeq.sorted
+      if (flagged.isEmpty) return CompactStats(Seq.empty, before, before)
+      val gen = newGen()
+      // ONE read + ONE partitionBy write for every flagged value (a
+      // per-value read/repartition/write loop paid a schema job, an
+      // exchange job and a write job PER VALUE — ~3 jobs × 47 lists
+      // measured on q213). Each flagged value owns `target` consecutive
+      // shuffle partitions starting at its offset; a row lands in slot
+      // `xxhash64(row) mod target` of its value (deterministic from the
+      // content — never rand() under retries), and the partition id is
+      // taken as given (no AQE coalescing, no hash collisions), so no
+      // two slots share a task: a value lands in one file per non-empty
+      // slot, never more than its target.
+      val ss = spark; import ss.implicits._
+      val targets = flagged.map(v => targetOf(stats(v)._2))
+      val offsets = targets.scanLeft(0L)(_ + _)
+      val slotsOf = flagged.indices
+        .map(i => (flagged(i), targets(i), offsets(i)))
+        .toDF(partCol, "__slots", "__offset")
+      val data = read(spark, root, st, Some(flagged))
+      data.join(broadcast(slotsOf), Seq(partCol))
+        .withColumn("__pid", (col("__offset") +
+          pmod(xxhash64(data.columns.map(col): _*), col("__slots"))).cast("int"))
+        .repartitionById(offsets.last.toInt, col("__pid"))
+        .drop("__pid", "__slots", "__offset")
+        .write.mode("overwrite").partitionBy(partCol)
+        .parquet(s"$root/$gen")
+      val newParts = st.parts ++
+        flagged.map(v => v -> Seq(s"$gen/$partCol=$v"))
+      try {
+        commitCas(fs, rootP, seq, DmState(newParts, st.extra))
+        val after = newParts.values.map(filesOf(_).length.toLong).sum
+        return CompactStats(flagged, before, after)
+      } catch {
+        case e: CommitLog.CommitConflictException =>
+          fs.delete(new Path(rootP, gen), true)
+          attempt += 1
+          if (attempt >= maxRetries) throw e
+      }
+    }
+    CompactStats(Seq.empty, 0L, 0L) // unreachable
   }
 
   /** Sweep generation/pointer dirs no RETAINED commit references and

@@ -153,18 +153,26 @@ class ShardingSpec extends SparkSpec {
       "the 1-D layout cannot prune on b/c/d at all — the property N-D z-order buys")
   }
 
-  // --- targeted OPTIMIZE (q165) -------------------------------------------
+  // --- targeted OPTIMIZE (q215) -------------------------------------------
 
-  /** Per-file byte fingerprints of a partitionBy(file_id) layout: the
-    * data-file (name, length, md5-of-bytes) set per directory. */
-  private def dirBytes(path: String): Map[Long, Set[(String, Long, String)]] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("file_id="))
-      .map { d =>
-        val id = d.getPath.getName.stripPrefix("file_id=").toLong
-        val files = fs.listStatus(d.getPath)
+  private def rootOf(path: String) = new org.apache.hadoop.fs.Path(path)
+
+  private def fsOf(path: String) =
+    rootOf(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def mapping(path: String): Map[Long, Seq[String]] =
+    graft.sinks.DirManifest.requireHead(fsOf(path), rootOf(path))._2.parts
+
+  private def commits(path: String): Int =
+    graft.sinks.CommitLog.seqs(fsOf(path), rootOf(path)).size
+
+  /** Per-cell byte fingerprints of a manifested z-layout: the data-file
+    * (path, length, md5-of-bytes) set across each cell's mapped dirs. */
+  private def cellBytes(path: String): Map[Long, Set[(String, Long, String)]] = {
+    val fs = fsOf(path)
+    mapping(path).map { case (id, dirs) =>
+      id -> dirs.flatMap { d =>
+        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/$d"))
           .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
             !st.getPath.getName.startsWith("."))
           .map { st =>
@@ -172,149 +180,79 @@ class ShardingSpec extends SparkSpec {
             val buf = new Array[Byte](st.getLen.toInt)
             try in.readFully(0, buf) finally in.close()
             val dig = java.security.MessageDigest.getInstance("MD5").digest(buf)
-            (st.getPath.getName, st.getLen, dig.map("%02x".format(_)).mkString)
-          }.toSet
-        id -> files
-      }.toMap
+            (s"$d/${st.getPath.getName}", st.getLen, dig.map("%02x".format(_)).mkString)
+          }
+      }.toSet
+    }
   }
 
-  /** Degraded-layout fixture: 16 z-clustered files over a 256×256 bucket
-    * grid + one appended unclustered file confined to the low-z quarter.
-    * Returns (path, appended id). */
+  private def withBase(prefix: String)(body: java.nio.file.Path => Unit): Unit = {
+    val base = java.nio.file.Files.createTempDirectory(prefix)
+    try body(base)
+    finally fsOf(base.toString).delete(rootOf(base.toString), true)
+  }
+
+  /** Degraded-layout fixture on the manifest: 16 z-clustered cells over a
+    * 256×256 bucket grid + one appended unclustered cell confined to the
+    * low-z quarter. Returns the layout path. */
   private def degradedLayout(base: java.nio.file.Path): String = {
     val nFiles = 16
+    val path = s"$base/layout"
     val grid = (for (a <- 0L until 64L; b <- 0L until 64L) yield (a * 4, b * 4))
       .toDF("qb", "lb")
-    val laid = grid
       .withColumn("zkey", Sharding.zOrderKey(col("qb"), col("lb"), 8))
       .withColumn("file_id", expr(s"zkey * $nFiles div ${1L << 16}"))
-    val path = s"$base/layout"
-    laid.repartition(col("file_id"))
-      .sortWithinPartitions(col("file_id"), col("zkey"))
-      .write.mode("overwrite").partitionBy("file_id").parquet(path)
-    // the nightly residue: an unclustered file of low-z rows (offset
+    Sharding.zWriteManifested(spark, path, grid, append = false)
+    // the nightly residue: an unclustered cell of low-z rows (offset
     // buckets so the rows are NEW, not duplicates of the grid)
-    val appended = (for (a <- 0L until 16L; b <- 0L until 16L) yield (a * 4 + 1, b * 4 + 1))
+    val appended = (for (a <- 0L until 16L; b <- 0L until 16L)
+        yield (a * 4 + 1, b * 4 + 1))
       .toDF("qb", "lb")
       .withColumn("zkey", Sharding.zOrderKey(col("qb"), col("lb"), 8))
       .filter(col("zkey") < (1L << 14)) // low quarter of the z space
       .withColumn("file_id", lit(nFiles.toLong))
-    appended.repartition(col("file_id"))
-      .write.mode("append").partitionBy("file_id").parquet(path)
+    Sharding.zWriteManifested(spark, path, appended, append = true)
     path
   }
 
-  test("optimizeFlagged rewrites only the flagged subset, byte-identical elsewhere") {
-    val base = java.nio.file.Files.createTempDirectory("graft_opt_spec_")
-    try {
+  test("optimizeFlaggedManifested: one commit across the rewrite set, clean cells keep their dirs") {
+    withBase("graft_opt_mani_") { base =>
       val nFiles = 16
       val path = degradedLayout(base)
-      val before = dirBytes(path)
+      val before = mapping(path)
+      val bytesBefore = cellBytes(path)
       // getAs[Number].longValue: the discovered partition column is INT,
       // and erased getAs[Long] would smuggle Integers into the map
-      val health0 = Sharding.layoutHealth(spark.read.parquet(path)
+      val health0 = Sharding.layoutHealth(Sharding.zReadManifested(spark, path)
           .select(col("zkey"), col("file_id")))
         .collect().map(r => r.getAs[Number]("file_id").longValue ->
           r.getAs[Number]("overlap_cnt").longValue).toMap
       val flaggedIds = health0.filter(_._2 > 0).keySet
-      assert(health0(nFiles.toLong) > 0, "appended file must be flagged")
+      assert(health0(nFiles.toLong) > 0, "appended cell must be flagged")
       assert(flaggedIds.size < health0.size,
-        s"flagged set must be a STRICT subset (got all ${health0.size} files)")
-
-      // the operator's data read prunes to the flagged directories at the
-      // source (the touched-bucket discipline) — pin the scan shape
-      val scan = spark.read.parquet(path)
-        .filter(col("file_id").isin(flaggedIds.toSeq.map(java.lang.Long.valueOf): _*))
-        .queryExecution.executedPlan.toString
-      assert(scan.contains("PartitionFilters: [file_id"),
-        s"optimize reads must prune to flagged dirs:\n$scan")
-
-      val stats = Sharding.optimizeFlagged(spark, path, nFiles, 1L << 16)
-      assert(stats.flagged.toSet == flaggedIds, "operator flags = monitor flags")
-      val after = dirBytes(path)
-      // untouched files byte-identical; appended dir gone; rewritten dirs differ
-      (before.keySet -- stats.rewritten).foreach { id =>
-        assert(after(id) == before(id), s"untouched file $id must be byte-identical")
-      }
-      assert(!after.contains(nFiles.toLong), "appended residue dir must be gone")
-
-      // re-measured health ≡ a full re-cluster: every overlap 0, and the
-      // row-level assignment equals the pure-function re-cut of all rows
-      val health1 = Sharding.layoutHealth(spark.read.parquet(path)
-          .select(col("zkey"), col("file_id")))
-        .collect()
-      assert(health1.forall(_.getAs[Long]("overlap_cnt") == 0L),
-        "optimized layout must be overlap-free")
-      val reopened = spark.read.parquet(path)
-        .select(col("qb"), col("lb"), col("zkey"), col("file_id").cast("long").as("file_id"))
-      val expected = reopened.drop("file_id")
-        .withColumn("file_id", expr(s"zkey * $nFiles div ${1L << 16}"))
-      assert(reopened.exceptAll(expected).isEmpty && expected.exceptAll(reopened).isEmpty,
-        "optimized assignment must equal the full re-cluster's pure cut")
-    } finally {
-      val fs = new org.apache.hadoop.fs.Path(base.toString)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base.toString), true)
-    }
-  }
-
-  test("optimizeFlagged on a healthy layout is a byte-identical no-op") {
-    val base = java.nio.file.Files.createTempDirectory("graft_opt_noop_")
-    try {
-      val nFiles = 16
-      val path = degradedLayout(base)
-      Sharding.optimizeFlagged(spark, path, nFiles, 1L << 16)
-      val before = dirBytes(path)
-      val stats2 = Sharding.optimizeFlagged(spark, path, nFiles, 1L << 16)
-      assert(stats2.flagged.isEmpty && stats2.rewritten.isEmpty && stats2.produced.isEmpty,
-        "healthy layout must not flag anything")
-      assert(dirBytes(path) == before,
-        "second optimize must leave every file byte-identical (q80's skip gate)")
-    } finally {
-      val fs = new org.apache.hadoop.fs.Path(base.toString)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base.toString), true)
-    }
-  }
-
-  test("optimizeFlaggedManifested: one commit across the rewrite set, clean cells keep their dirs") {
-    val base = java.nio.file.Files.createTempDirectory("graft_opt_mani_")
-    try {
-      val nFiles = 16
-      val path = s"$base/layout"
-      // the degradedLayout fixture through the manifest write path
-      val grid = (for (a <- 0L until 64L; b <- 0L until 64L) yield (a * 4, b * 4))
-        .toDF("qb", "lb")
-        .withColumn("zkey", Sharding.zOrderKey(col("qb"), col("lb"), 8))
-        .withColumn("file_id", expr(s"zkey * $nFiles div ${1L << 16}"))
-      Sharding.zWriteManifested(spark, path, grid, append = false)
-      val appended = (for (a <- 0L until 16L; b <- 0L until 16L)
-          yield (a * 4 + 1, b * 4 + 1))
-        .toDF("qb", "lb")
-        .withColumn("zkey", Sharding.zOrderKey(col("qb"), col("lb"), 8))
-        .filter(col("zkey") < (1L << 14))
-        .withColumn("file_id", lit(nFiles.toLong))
-      Sharding.zWriteManifested(spark, path, appended, append = true)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def mapping() = graft.sinks.DirManifest
-        .head(fs, new org.apache.hadoop.fs.Path(path)).get._2.parts
-      val before = mapping()
-      val commitsBefore = graft.sinks.CommitLog
-        .seqs(fs, new org.apache.hadoop.fs.Path(path)).size
+        s"flagged set must be a STRICT subset (got all ${health0.size} cells)")
+      val commitsBefore = commits(path)
       val stats = Sharding.optimizeFlaggedManifested(spark, path, nFiles, 1L << 16)
-      assert(stats.flagged.nonEmpty &&
-        stats.rewritten.toSet.subsetOf(before.keySet + nFiles.toLong))
+      assert(stats.flagged.toSet == flaggedIds, "operator flags = monitor flags")
+      assert(stats.rewritten.toSet.subsetOf(before.keySet + nFiles.toLong))
       // ONE commit published the whole rewrite — atomic across cells
-      assert(graft.sinks.CommitLog
-        .seqs(fs, new org.apache.hadoop.fs.Path(path)).size == commitsBefore + 1)
-      val after = mapping()
+      assert(commits(path) == commitsBefore + 1)
+      val after = mapping(path)
+      val bytesAfter = cellBytes(path)
       (before.keySet -- stats.rewritten).foreach { id =>
         assert(after.get(id).contains(before(id)),
           s"clean cell $id must keep its exact dirs")
+        assert(bytesAfter.get(id) == bytesBefore.get(id),
+          s"clean cell $id must be byte-identical")
       }
       assert(!after.contains(nFiles.toLong), "appended residue cell must be gone")
-      // row-level: the optimized layout equals the pure full re-cut
+      // re-measured health ≡ a full re-cluster: every overlap 0, and the
+      // row-level assignment equals the pure-function re-cut of all rows
+      val health1 = Sharding.layoutHealth(Sharding.zReadManifested(spark, path)
+          .select(col("zkey"), col("file_id")))
+        .collect()
+      assert(health1.forall(_.getAs[Number]("overlap_cnt").longValue == 0L),
+        "optimized layout must be overlap-free")
       val reopened = Sharding.zReadManifested(spark, path)
         .select(col("qb"), col("lb"), col("zkey"),
           col("file_id").cast("long").as("file_id"))
@@ -322,100 +260,100 @@ class ShardingSpec extends SparkSpec {
         .withColumn("file_id", expr(s"zkey * $nFiles div ${1L << 16}"))
       assert(reopened.exceptAll(expected).isEmpty &&
         expected.exceptAll(reopened).isEmpty)
-      // idempotence: a healthy manifested layout is a no-op, zero commits
+      // idempotence: a healthy layout is a no-op — nothing flagged, zero
+      // commits, every cell keeps its exact dirs and file bytes
       val again = Sharding.optimizeFlaggedManifested(spark, path, nFiles, 1L << 16)
-      assert(again.flagged.isEmpty && mapping() == after)
-    } finally {
-      val fs = new org.apache.hadoop.fs.Path(base.toString)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base.toString), true)
+      assert(again.flagged.isEmpty && again.rewritten.isEmpty && again.produced.isEmpty,
+        "healthy layout must not flag anything")
+      assert(commits(path) == commitsBefore + 1, "a no-op pass must not commit")
+      assert(mapping(path) == after)
+      assert(cellBytes(path) == bytesAfter,
+        "second optimize must leave every file byte-identical (q80's skip gate)")
     }
   }
 
   test("optimizeFlagged closure promotes a clean receiving file instead of clobbering it") {
-    // the gap case the closure exists for: an appended file whose z range
-    // does NOT overlap a clean file's ACTUAL range, but whose rows CUT
-    // into that file's id — without the closure the swap would replace
-    // the clean dir with only the incoming rows
-    val base = java.nio.file.Files.createTempDirectory("graft_opt_gap_")
-    try {
+    // the gap case the closure exists for: an appended cell whose z range
+    // does NOT overlap a clean cell's ACTUAL range, but whose rows CUT
+    // into that cell's id — without the closure the rewrite would
+    // repoint the clean cell at only the incoming rows
+    withBase("graft_opt_gap_") { base =>
       val nFiles = 4
       val path = s"$base/layout"
-      // file 0 covers cut range [0, 16384): give it actual rows only in
-      // [0, 100]; files 1..3 dense in their own ranges
+      // cell 0 covers cut range [0, 16384): give it actual rows only in
+      // [0, 100]; cells 1..3 dense in their own ranges
       val clustered = ((0L to 100L) ++ (16384L until 16484L) ++
         (32768L until 32868L) ++ (49152L until 49252L))
         .toDF("zkey")
         .withColumn("file_id", expr(s"zkey * $nFiles div ${1L << 16}"))
-      clustered.repartition(col("file_id"))
-        .write.mode("overwrite").partitionBy("file_id").parquet(path)
-      // appended rows {16600, 32800}: the file's z range [16600, 32800]
-      // INTERSECTS file 2's actual range (32800 ∈ [32768, 32868)) — so
-      // the appended file and file 2 flag — but SKIPS OVER file 1's
-      // actual range [16384, 16484), so file 1 is NOT flagged even
-      // though row 16600 cuts into file 1's id: the gap case
+      Sharding.zWriteManifested(spark, path, clustered, append = false)
+      // appended rows {16600, 32800}: the cell's z range [16600, 32800]
+      // INTERSECTS cell 2's actual range (32800 ∈ [32768, 32868)) — so
+      // the appended cell and cell 2 flag — but SKIPS OVER cell 1's
+      // actual range [16384, 16484), so cell 1 is NOT flagged even
+      // though row 16600 cuts into cell 1's id: the gap case
       val appended = Seq(16600L, 32800L).toDF("zkey")
         .withColumn("file_id", lit(nFiles.toLong))
-      appended.repartition(col("file_id"))
-        .write.mode("append").partitionBy("file_id").parquet(path)
-      val health = Sharding.layoutHealth(spark.read.parquet(path)
+      Sharding.zWriteManifested(spark, path, appended, append = true)
+      val health = Sharding.layoutHealth(Sharding.zReadManifested(spark, path)
           .select(col("zkey"), col("file_id")))
-        .collect().map(r => r.getAs[Long]("file_id") -> r.getAs[Long]("overlap_cnt")).toMap
-      assert(health(1L) == 0L, "fixture: receiving file must NOT be health-flagged")
+        .collect().map(r => r.getAs[Number]("file_id").longValue ->
+          r.getAs[Number]("overlap_cnt").longValue).toMap
+      assert(health(1L) == 0L, "fixture: receiving cell must NOT be health-flagged")
       assert(health(nFiles.toLong) > 0L && health(2L) > 0L,
-        "fixture: appended file and file 2 must flag")
+        "fixture: appended cell and cell 2 must flag")
 
-      val stats = Sharding.optimizeFlagged(spark, path, nFiles, 1L << 16)
-      assert(!stats.flagged.contains(1L), "monitor must not have flagged file 1")
+      val stats = Sharding.optimizeFlaggedManifested(spark, path, nFiles, 1L << 16)
+      assert(!stats.flagged.contains(1L), "monitor must not have flagged cell 1")
       assert(stats.rewritten.contains(1L),
-        "closure must promote the receiving file into the rewrite set")
-      val file1 = spark.read.parquet(path).filter(col("file_id") === 1)
+        "closure must promote the receiving cell into the rewrite set")
+      val file1 = Sharding.zReadManifested(spark, path).filter(col("file_id") === 1)
         .select(col("zkey")).as[Long].collect().toSet
       assert(file1 == ((16384L until 16484L).toSet + 16600L),
-        "receiving file must hold BOTH its old rows and the incoming one")
-      // files 0 and 3 never entered the rewrite set
+        "receiving cell must hold BOTH its old rows and the incoming one")
+      // cells 0 and 3 never entered the rewrite set
       assert(!stats.rewritten.contains(0L) && !stats.rewritten.contains(3L))
-    } finally {
-      val fs = new org.apache.hadoop.fs.Path(base.toString)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base.toString), true)
     }
   }
 
   test("skippingScan opens ONLY manifest-selected partitions and loses no row") {
-    val base = java.nio.file.Files.createTempDirectory("graft_skip_spec_")
-    try {
+    withBase("graft_skip_spec_") { base =>
       val path = s"$base/layout"
-      // 8 files, file i holding metric range [i·100, i·100+99]
+      // 8 cells, cell i holding metric range [i·100, i·100+99]
       val df = (0L until 800L).toDF("id")
         .withColumn("metric", col("id"))
         .withColumn("file_id", expr("id div 100"))
-      Sharding.writeStatsLayout(df, "file_id", Seq("id"), Seq("metric"), path)
+      Sharding.writeStatsLayoutManifested(df, Seq("id"), Seq("metric"), path)
 
-      val scan = Sharding.skippingScan(spark, path, "metric", lit(150L), lit(420L))
+      val scan = Sharding.skippingScanManifested(spark, path, "metric",
+        lit(150L), lit(420L))
       assert(scan.filesTotal == 8L)
-      assert(scan.filesRead == 4L, s"files 1..4 intersect [150,420]: $scan")
+      assert(scan.filesRead == 4L, s"cells 1..4 intersect [150,420]: $scan")
       // no-loss: pruned result ≡ brute-force filter over the full layout
-      val brute = spark.read.parquet(path)
+      val brute = Sharding.zReadManifested(spark, path)
         .filter(col("metric") >= 150 && col("metric") <= 420).select(col("id"))
       val got = scan.rows.select(col("id"))
       assert(got.exceptAll(brute).isEmpty && brute.exceptAll(got).isEmpty)
-      // PHYSICAL pin: the scan's file source selected exactly filesRead
-      // partition directories — the pruning is plan-time, not a filter
-      // after an 8-file read
-      val parts = scan.rows.queryExecution.executedPlan.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.selectedPartitions.partitionCount
-      }
-      assert(parts == Seq(4), s"selected partitions must equal filesRead: $parts")
+      // PHYSICAL pin: the scan's file sources open exactly the filesRead
+      // cells' mapped dirs — the pruning is at the mapping, not a filter
+      // after an 8-cell read
+      def openedDirs(rows: org.apache.spark.sql.DataFrame): Set[String] =
+        rows.queryExecution.executedPlan.collectLeaves().collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.relation.location.rootPaths.map(_.toString)
+        }.flatten.toSet
+      val m = mapping(path)
+      val want = (1L to 4L).flatMap(m).map(d => rootOf(s"$path/$d")
+        .makeQualified(fsOf(path).getUri, fsOf(path).getWorkingDirectory)
+        .toString).toSet
+      assert(openedDirs(scan.rows) == want,
+        s"opened dirs must be the filesRead cells' dirs: ${openedDirs(scan.rows)}")
 
-      // empty-range scan: zero files opened, zero rows, still exact
-      val none = Sharding.skippingScan(spark, path, "metric", lit(5000L), lit(6000L))
+      // empty-range scan: zero cells, zero files opened, zero rows
+      val none = Sharding.skippingScanManifested(spark, path, "metric",
+        lit(5000L), lit(6000L))
       assert(none.filesRead == 0L && none.rows.isEmpty)
-    } finally {
-      val fs = new org.apache.hadoop.fs.Path(base.toString)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base.toString), true)
+      assert(openedDirs(none.rows).isEmpty, "an empty window must open no file")
     }
   }
 
