@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.mapred.JobConf
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -7,9 +11,11 @@ import graft.expressions.{DotProduct, NfcNormalize, SimhashWord, SortedIntersect
 
 /** Session extensions (the public Catalyst plug-in point): registers the
   * engine's native expressions as SQL functions so `spark.sql("SELECT
-  * graft_dot(a, b) ...")` resolves like a built-in. Installed by
-  * [[GraftSession]] via `Builder.withExtensions`, or by config
-  * `spark.sql.extensions=graft.GraftExtensions`. */
+  * graft_dot(a, b) ...")` resolves like a built-in, and trims the
+  * SparkContext's Hadoop configuration to what the engine reads
+  * ([[GraftExtensions.leanHadoopConf]]) whenever a session state is
+  * built. Installed by [[GraftSession]] via `Builder.withExtensions`, or
+  * by config `spark.sql.extensions=graft.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   /** Integer-literal argument extraction shared by the winnow builders
@@ -23,6 +29,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // the parser is built eagerly, once per session state; handing back
+    // Spark's own parser costs no query anything
+    ext.injectParser { (session, parser) =>
+      GraftExtensions.leanHadoopConf(session.sparkContext.hadoopConfiguration)
+      parser
+    }
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
@@ -71,5 +83,43 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(args.length == 1, "graft_simhash_word(hashArray)")
         SimhashWord(args(0))
       }))
+  }
+}
+
+object GraftExtensions {
+
+  /** Drop from `conf` every key whose only source is Hadoop's bundled
+    * yarn-default.xml, or mapred-default.xml except the
+    * `mapreduce.output.*` and `*committer*` keys a parquet write reads.
+    *
+    * Every write task carries the session's Hadoop configuration
+    * (Spark's `WriteJobDescription` ships it as a
+    * `SerializableConfiguration`), and so does every file scan's
+    * broadcast. With the bundled defaults it holds about 1,100 keys and
+    * serializes to ~110 KB; the driver serializes it into each write
+    * stage and each task deserializes it, 10–50 ms per stage that no
+    * batch size changes. YARN and MapReduce keys are read by neither
+    * Spark SQL nor the engine; a key dropped here reads as its code
+    * default wherever a Hadoop class still asks for it.
+    *
+    * Kept: every core-default.xml key (filesystem wiring such as
+    * `fs.AbstractFileSystem.<scheme>.impl` has no code default), and
+    * every key Spark, the engine or the user set. `JobConf`'s static
+    * initializer registers the MapReduce and YARN default files, which
+    * reloads every `Configuration` made with defaults and would bring
+    * the keys back, so it runs before the trim. */
+  private[graft] def leanHadoopConf(conf: Configuration): Unit = {
+    new JobConf(false)
+    def onlyFrom(k: String): Option[String] =
+      Option(conf.getPropertySources(k)).collect { case Array(src) => src }
+    val drop = conf.iterator.asScala.map(_.getKey).filter { k =>
+      onlyFrom(k) match {
+        case Some("yarn-default.xml") => true
+        case Some("mapred-default.xml") =>
+          !(k.startsWith("mapreduce.output.") || k.contains("committer"))
+        case _ => false
+      }
+    }.toList
+    drop.foreach(conf.unset)
   }
 }

@@ -1,7 +1,7 @@
 package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.{GraftConfig, GraftSession, Jsons}
+import graft.{GraftConfig, GraftSession, Jsons, Parquets}
 import graft.obs.StageMetrics
 import graft.sinks.MergeSink
 import graft.sources.SyntheticSource
@@ -58,7 +58,7 @@ object BulkUpdateJob {
   private[graft] def statements(spark: SparkSession, updatesPath: String,
                                 numPartitions: Option[Int],
                                 orderCol: Option[String]): DataFrame = {
-    val raw = spark.read.schema(SyntheticSource.schema).parquet(updatesPath)
+    val raw = Parquets.withSchema(spark, SyntheticSource.schema, Seq(updatesPath))
     val updates = numPartitions.fold(raw)(n => raw.repartition(n, raw(SyntheticSource.idColumn)))
     Statements.widen(updates, SyntheticSource.idColumn,
       SyntheticSource.payloadFields, passthrough = orderCol.toSeq)

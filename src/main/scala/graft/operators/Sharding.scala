@@ -747,8 +747,7 @@ object Sharding {
     val (_, st) = DirManifest.requireHead(fs, root)
     val mapped = keep.filter(st.parts.contains)
     val rows =
-      if (mapped.isEmpty)
-        zReadManifested(spark, path).filter(lit(false)) // schema, no rows
+      if (mapped.isEmpty) DirManifest.emptyRead(spark, path, st)
       else DirManifest.read(spark, path, st, Some(mapped))
         .filter(col(predCol) >= lo && col(predCol) <= hi)
     SkipScan(rows, keep.size.toLong, filesTotal)

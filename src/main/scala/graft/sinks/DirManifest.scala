@@ -3,7 +3,7 @@ package graft.sinks
 import graft.Parquets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, pmod, xxhash64}
+import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, xxhash64}
 
 /** COMMIT-LOG-BACKED PARTITION MANIFEST — the generic form of
   * [[ManifestMergeSink]]'s layout for stores whose unit of rewrite is a
@@ -128,9 +128,21 @@ object DirManifest {
     val first = Parquets.read(spark, ds0.map(d => s"$root/$d"),
       Map("basePath" -> s"$root/$g0"))
     byGen.tail.map { case (gen, ds) =>
-      spark.read.option("basePath", s"$root/$gen").schema(first.schema)
-        .parquet(ds.map(d => s"$root/$d"): _*)
+      Parquets.withSchema(spark, first.schema, ds.map(d => s"$root/$d"),
+        Map("basePath" -> s"$root/$gen"))
     }.foldLeft(first)(_ unionByName _)
+  }
+
+  /** [[read]]'s frame with no rows, from one listing of one dir: the
+    * first mapped dir, whose generation's first footer is the one that
+    * pins [[read]]'s schema. An empty selection's frame without a listing
+    * of every cell. */
+  def emptyRead(spark: SparkSession, root: String, st: DmState): DataFrame = {
+    val dirs = st.parts.values.flatten
+    require(dirs.nonEmpty, s"no mapped dirs at $root")
+    val first = dirs.min
+    Parquets.read(spark, Seq(s"$root/$first"),
+      Map("basePath" -> s"$root/${first.split('/').head}")).filter(lit(false))
   }
 
   /** The partition-value subdirectories a write produced under

@@ -2,7 +2,9 @@ package graft.sinks
 
 import java.util.UUID
 
+import graft.Parquets
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -326,23 +328,25 @@ object ManifestMergeSink {
     pmod(xxhash64(c), lit(nBuckets.toLong))
 
   private def readDirs(spark: SparkSession, target: String,
-                       st: ManifestState, buckets: Seq[Long]): DataFrame = {
+                       st: ManifestState, buckets: Seq[Long]): DataFrame =
+    openDirs(spark, target, st, buckets)._1
+
+  /** The named buckets' dirs opened once, schema-pinned, with the footer
+    * of their first data file: the evidence [[MergeSink.dictionaryOptions]]
+    * learns from when a merge replaces those dirs. */
+  private def openDirs(spark: SparkSession, target: String, st: ManifestState,
+                       buckets: Seq[Long]): (DataFrame, Option[ParquetMetadata]) = {
     val dirs = buckets.flatMap(st.mapping.get)
       .map(d => new Path(new Path(target), d).toString)
     if (dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st.schema)
-    else spark.read.schema(st.schema).parquet(dirs: _*)
+      (spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st.schema), None)
+    else Parquets.open(spark, dirs, schema = Some(st.schema), footer = true) match {
+      case Some(o) => (o.df, o.footer)
+      // every mapped dir empty or missing: Spark's own answer
+      case None => (Parquets.withSchema(spark, st.schema, dirs), None)
+    }
   }
-
-  /** [[MergeSink.dictionaryOptions]] for a merge generation, learned from
-    * the dirs it replaces: the touched buckets' dirs in `st`. */
-  private def dictionaryOptions(spark: SparkSession, root: Path,
-                                st: Option[ManifestState], touched: Seq[Long],
-                                key: String): Map[String, String] =
-    MergeSink.dictionaryOptions(spark.sparkContext.hadoopConfiguration,
-      st.toSeq.flatMap(s => touched.sorted.flatMap(s.mapping.get)).map(new Path(root, _)),
-      key)
 
   /** Read the whole snapshot with its committed schema (files written
     * before an evolution read null for the evolved columns — parquet's
@@ -452,8 +456,7 @@ object ManifestMergeSink {
     // and is skipped, one exchange fewer per attempt
     def folded(df: DataFrame): DataFrame =
       if (updatesUnique) MergeSink.normalizeUnique(df, key, fields)
-      else MergeSink.collapseUpdates(
-        df.filter(col(key).isNotNull), key, fields, orderCol)
+      else MergeSink.collapseUpdates(df, key, fields, orderCol)
     // localCheckpoint: probed for buckets, then merged. LAZY: an
     // absorbed replay (streaming restart) must no-op on the metadata
     // read alone, without paying the batch's read/shuffle/cache
@@ -484,12 +487,12 @@ object ManifestMergeSink {
         else folded(recomputeUpdates(st)).localCheckpoint(true)
       // one exchange-free job (Sparks.distinctLongs) — ≤ nBuckets values
       val touched = graft.Sparks.distinctLongs(uniqCur, pb(col(key), n))
-      val targetDf = st match {
-        case Some(s) => readDirs(spark, target, s, touched)
-        case None => MergeSink.emptyTarget(spark, uniqCur, key, fields,
-          updatedAtCol)
+      val (targetDf, replaced) = st match {
+        case Some(s) => openDirs(spark, target, s, touched)
+        case None => (MergeSink.emptyTarget(spark, uniqCur, key, fields,
+          updatedAtCol), None)
       }
-      val (merged, obs) = MergeSink.mergePlanObserved(targetDf, uniqCur, key,
+      val (merged, obs) = MergeSink.observedMerge(targetDf, uniqCur, key,
         MergeSink.evolvedFields(targetDf, key, fields, updatedAtCol),
         updatedAtCol)
       val gdir = s"g-${tok()}"
@@ -505,7 +508,7 @@ object ManifestMergeSink {
       // has a fragmented layout to repair.
       val toWrite = merged.withColumn("pb", pb(col(key), n))
       (if (distributeByBucket) toWrite.repartition(col("pb")) else toWrite)
-        .write.options(dictionaryOptions(spark, root, st, touched, key))
+        .write.options(MergeSink.dictionaryOptions(replaced, key))
         .mode("overwrite").partitionBy("pb")
         .parquet(new Path(root, gdir).toString)
       val mySchema = merged.schema
@@ -700,14 +703,15 @@ object ManifestMergeSink {
           .union(delKeys.select(pb(col(key), n).as("pb"))), col("pb"))
       val obsBefore = Observation()
       val obsAfter = Observation()
-      val targetDf = (st match {
-        case Some(s) => readDirs(spark, target, s, touched)
-        case None => MergeSink.emptyTarget(spark, uniq, key, fields,
-          "updatedAt")
-      }).observe(obsBefore, count(lit(1)).as("n"))
+      val (replacedDf, replaced) = st match {
+        case Some(s) => openDirs(spark, target, s, touched)
+        case None => (MergeSink.emptyTarget(spark, uniq, key, fields,
+          "updatedAt"), None)
+      }
+      val targetDf = replacedDf.observe(obsBefore, count(lit(1)).as("n"))
         .join(delKeys, Seq(key), "left_anti")
         .observe(obsAfter, count(lit(1)).as("n"))
-      val (merged, obs) = MergeSink.mergePlanObserved(targetDf, uniq, key,
+      val (merged, obs) = MergeSink.observedMerge(targetDf, uniq, key,
         MergeSink.evolvedFields(targetDf, key, fields, "updatedAt"),
         "updatedAt")
       val gdir = s"g-${tok()}"
@@ -720,7 +724,7 @@ object ManifestMergeSink {
       // each bucket's rows land in exactly one file.
       merged.withColumn("pb", pb(col(key), n))
         .repartition(col("pb"))
-        .write.options(dictionaryOptions(spark, root, st, touched, key))
+        .write.options(MergeSink.dictionaryOptions(replaced, key))
         .mode("overwrite").partitionBy("pb")
         .parquet(new Path(root, gdir).toString)
       val written = fs.listStatus(new Path(root, gdir))
@@ -884,8 +888,8 @@ object ManifestMergeSink {
     val withPb = StructType(st.schema.fields :+ StructField("pb", LongType))
     val rows = st.mapping.values.toSeq.groupBy(_.split('/').head)
       .toSeq.sortBy(_._1).map { case (gen, ds) =>
-        spark.read.option("basePath", s"$target/$gen").schema(withPb)
-          .parquet(ds.map(d => s"$target/$d"): _*)
+        Parquets.withSchema(spark, withPb, ds.map(d => s"$target/$d"),
+          Map("basePath" -> s"$target/$gen"))
       }.reduce(_ unionByName _)
       .groupBy(col("pb")).agg(count(lit(1)).as("rows"))
       .withColumnRenamed("pb", "bucket")
@@ -958,8 +962,8 @@ object ManifestMergeSink {
         StructField("pb", LongType))
       val data = flagged.map(st.mapping).groupBy(_.split('/').head)
         .toSeq.sortBy(_._1).map { case (gen, ds) =>
-          spark.read.option("basePath", s"$target/$gen").schema(withPb)
-            .parquet(ds.map(d => s"$target/$d"): _*)
+          Parquets.withSchema(spark, withPb, ds.map(d => s"$target/$d"),
+            Map("basePath" -> s"$target/$gen"))
         }.reduce(_ unionByName _)
       val gdir = s"g-${tok()}"
       data.repartition(col("pb"))

@@ -6,10 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import graft.Parquets
 import graft.expressions.ReferencedTimestamp
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetOutputFormat}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.ParquetOutputFormat
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.expressions.Window
@@ -71,34 +70,35 @@ object MergeSink {
     * on the rows, not on their arrival order.
     *
     * ONE sort, whatever the field count: the order is plain columns (the
-    * fields, or `orderCol` staged once as `__ord`), and every field's
-    * `last(f, ignoreNulls)` over the unbounded frame plus the `row_number`
-    * that picks one row per key are computed in one `select` over one
-    * partition/order spec — one Exchange on the key, one Sort, one Window.
-    * (Spark re-aliases an inline order expression such as `struct(fields)`
-    * per window expression, and windows ordered by different aliases
-    * cannot share a sort.) The merge join reuses the key partitioning and
-    * the key-prefixed sort order (plan-audited).
+    * fields, or `orderCol`), and every field's `last(f, ignoreNulls)` over
+    * the unbounded frame plus the `row_number` that picks one row per key
+    * are computed in one `select` over one partition/order spec — one
+    * Exchange on the key, one Sort, one Window. (Spark re-aliases an
+    * inline order expression such as `struct(fields)` per window
+    * expression, and windows ordered by different aliases cannot share a
+    * sort.) The merge join reuses the key partitioning and the
+    * key-prefixed sort order (plan-audited).
+    *
+    * Two Dataset steps: the window `select` and one filter that keeps the
+    * first row of each key and drops a null key (guard ladder). The
+    * result keeps the `__rn` column, 1 on every row; the merge never
+    * reads it.
     *
     * Ties in `orderCol`: every field is read in the same order of the
     * tied rows, so the fold equals sequential application in one order of
     * them; which order that is stays unspecified. */
   def collapseUpdates(updates: DataFrame, key: String, fields: Seq[String],
                       orderCol: Option[String] = None): DataFrame = {
-    val staged = updates.select(
-      col(key) +: fields.map(col) ++: orderCol.map(c => col(c).as("__ord")).toSeq: _*)
-    val ord =
-      if (orderCol.isDefined) Seq("__ord") else if (fields.nonEmpty) fields else Seq(key)
+    val ord = orderCol.map(Seq(_)).getOrElse(if (fields.nonEmpty) fields else Seq(key))
     val byOrd = Window.partitionBy(col(key)).orderBy(ord.map(col(_).asc): _*)
     val whole = byOrd.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     // every row of a key carries the same folded values (unbounded
     // frame), so the first row in sort order is as good as any
-    staged
+    updates
       .select(col(key) +:
         fields.map(f => last(col(f), ignoreNulls = true).over(whole).as(f)) :+
         row_number().over(byOrd).as("__rn"): _*)
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+      .filter(col("__rn") === 1 && col(key).isNotNull)
   }
 
   /** [[collapseUpdates]]'s fast path for callers whose update set is
@@ -152,8 +152,10 @@ object MergeSink {
     *    building it;
     *  - every column whose chunks in the generation being replaced have
     *    no dictionary page: parquet-mr itself fell back to PLAIN there.
-    *    The evidence is one footer, of the first data file (by name) in
-    *    the first of `previous` that has one.
+    *    The evidence is one footer: the one [[graft.Parquets.open]] read
+    *    when it opened the replaced generation as the merge's target (its
+    *    first data file by sorted path), so the rule costs no listing and
+    *    no file open of its own.
     * Building a dictionary only to abandon it was a third of the
     * executor samples of a 2,000-row upsert into an 80k-row snapshot of
     * UUID keys and random floats. A column loses its dictionary here
@@ -168,18 +170,9 @@ object MergeSink {
     * outside the merge path (a compaction, a rebucket) re-learns it.
     * Options take the form `parquet.enable.dictionary#<col>`, parquet-mr's
     * per-column setting. */
-  private[graft] def dictionaryOptions(hconf: Configuration, previous: Seq[Path],
+  private[graft] def dictionaryOptions(previous: Option[ParquetMetadata],
                                       key: String): Map[String, String] = {
-    def isData(name: String) = !name.startsWith("_") && !name.startsWith(".")
-    val oneFile = previous.iterator.flatMap { dir =>
-      val fs = dir.getFileSystem(hconf)
-      if (!fs.exists(dir)) None
-      else fs.listStatus(dir).filter(st => st.isFile && isData(st.getPath.getName))
-        .sortBy(_.getPath.getName).headOption
-    }.nextOption()
-    val plain = oneFile.toSeq.flatMap { st =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, hconf))
-      val footer = try reader.getFooter finally reader.close()
+    val plain = previous.toSeq.flatMap { footer =>
       footer.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
         .groupBy(_.getPath.toDotString)
         .collect { case (c, chunks) if !chunks.exists(_.hasDictionaryPage) => c }
@@ -188,11 +181,17 @@ object MergeSink {
   }
 
   /** The full-outer key join every merge form runs: the target aliased
-    * `t`, the updates aliased `u` with null keys dropped (guard ladder). */
+    * `t`, the updates aliased `u`, as one Dataset (the aliases are plan
+    * nodes, not Datasets of their own). `updates` must hold no null key:
+    * [[collapseUpdates]] and [[normalizeUnique]] drop them, and the
+    * public forms below drop them first. */
   private def joinSides(target: DataFrame, updates: DataFrame,
                         key: String): DataFrame =
-    target.alias("t").join(updates.filter(col(key).isNotNull).alias("u"),
+    ColumnBridge.aliasedJoin(target, "t", updates, "u",
       col(s"t.$key") === col(s"u.$key"), "full_outer")
+
+  private def keyed(updates: DataFrame, key: String): DataFrame =
+    updates.filter(col(key).isNotNull)
 
   /** The merged row over [[joinSides]]: the key, the presence-aware
     * per-field merge (see [[evolvedFields]]), and the stamp on touched
@@ -241,7 +240,7 @@ object MergeSink {
   def mergePlan(target: DataFrame, updates: DataFrame, key: String,
                 fields: Seq[String], updatedAtCol: String = "updatedAt",
                 now: Column = stampNow()): DataFrame =
-    joinSides(target, updates, key)
+    joinSides(target, keyed(updates, key), key)
       .select(mergedRow(target, updates, key, fields, updatedAtCol, now): _*)
 
   /** Merged snapshot + statement-level counts in ONE pass: the full-outer
@@ -253,7 +252,15 @@ object MergeSink {
     * action has run on the returned frame. */
   def mergePlanObserved(target: DataFrame, updates: DataFrame, key: String,
                         fields: Seq[String], updatedAtCol: String = "updatedAt",
-                        now: Column = stampNow()): (DataFrame, Observation) = {
+                        now: Column = stampNow()): (DataFrame, Observation) =
+    observedMerge(target, keyed(updates, key), key, fields, updatedAtCol, now)
+
+  /** [[mergePlanObserved]] over updates that hold no null key (the output
+    * of [[collapseUpdates]] or [[normalizeUnique]]): three Dataset steps,
+    * the join, the observation and the merged row. */
+  private[sinks] def observedMerge(target: DataFrame, updates: DataFrame, key: String,
+                                   fields: Seq[String], updatedAtCol: String = "updatedAt",
+                                   now: Column = stampNow()): (DataFrame, Observation) = {
     val obs = Observation()
     val counts = countColumns(target, updates, key, fields)
     val observed = joinSides(target, updates, key)
@@ -277,7 +284,7 @@ object MergeSink {
     * reference the tests compare the observed counts against. */
   def mergeStats(target: DataFrame, updates: DataFrame, key: String,
                  fields: Seq[String]): MergeStats = {
-    val row = joinSides(target, updates, key)
+    val row = joinSides(target, keyed(updates, key), key)
       .select(countColumns(target, updates, key, fields): _*)
       .collect()(0)
     MergeStats(row.getLong(0), row.getLong(1), row.getLong(2))
@@ -302,35 +309,36 @@ object MergeSink {
     * swap via filesystem renames (metadata-only; no data rewrite on swap).
     * A missing/empty target behaves as an empty collection — everything
     * upserts (reference: a fresh Mongo collection).
-    * Returns the reference-shaped counts. */
+    * Returns the reference-shaped counts.
+    *
+    * The target is listed once: [[graft.Parquets.open]] gives the frame
+    * and the footer [[dictionaryOptions]] learns from, and finding no
+    * data file is what makes the target empty. */
   def mergeInto(spark: SparkSession, targetPath: String, updates: DataFrame,
                 key: String, fields: Seq[String],
                 orderCol: Option[String] = None,
                 updatedAtCol: String = "updatedAt",
                 updatesUnique: Boolean = false): MergeStats = {
-    val hconf = spark.sparkContext.hadoopConfiguration
     val path = new Path(targetPath)
-    val fs = path.getFileSystem(hconf)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(targetPath + ".__merge_tmp")
+    val bak = new Path(targetPath + ".__merge_bak")
 
-    recoverSwap(fs, path, new Path(targetPath + ".__merge_bak"))
+    val exists = recoverSwap(fs, path, bak)
     val unique =
       if (updatesUnique) normalizeUnique(updates, key, fields)
-      else collapseUpdates(updates.filter(col(key).isNotNull), key, fields, orderCol)
-    val target =
-      if (fs.exists(path) && fs.listStatus(path).nonEmpty)
-        Parquets.read(spark, targetPath)
-      else emptyTarget(spark, unique, key, fields, updatedAtCol)
+      else collapseUpdates(updates, key, fields, orderCol)
+    val opened = if (exists) Parquets.open(spark, Seq(targetPath), footer = true) else None
+    val target = opened.fold(emptyTarget(spark, unique, key, fields, updatedAtCol))(_.df)
 
     // One join execution total: the parquet write materializes the merge,
     // and the counts come back as observed metrics of that same action.
     // Field set = target payload ∪ update fields (schema evolution).
-    val (merged, obs) = mergePlanObserved(target, unique, key,
+    val (merged, obs) = observedMerge(target, unique, key,
       evolvedFields(target, key, fields, updatedAtCol), updatedAtCol)
 
-    val tmp = new Path(targetPath + ".__merge_tmp")
-    val bak = new Path(targetPath + ".__merge_bak")
     fs.delete(tmp, true); fs.delete(bak, true)
-    merged.write.options(dictionaryOptions(hconf, Seq(path), key))
+    merged.write.options(dictionaryOptions(opened.flatMap(_.footer), key))
       .mode("overwrite").parquet(tmp.toString)
     atomicSwap(fs, tmp, path, bak)
     statsOf(obs)
@@ -347,13 +355,14 @@ object MergeSink {
     * when the target is absent (a crash after the second rename but
     * before the bak cleanup leaves BOTH — then the new state is
     * committed and `bak` is just garbage for the next swap's delete).
-    * Call this before any exists/read of a swap-managed path. */
-  private[graft] def recoverSwap(fs: FileSystem, path: Path, bak: Path): Unit = {
-    if (!fs.exists(path) && fs.exists(bak)) {
+    * Call this before any exists/read of a swap-managed path; it returns
+    * whether `path` exists once recovered. */
+  private[graft] def recoverSwap(fs: FileSystem, path: Path, bak: Path): Boolean =
+    fs.exists(path) || (fs.exists(bak) && {
       require(fs.rename(bak, path),
         s"swap recovery failed: could not restore $bak to $path")
-    }
-  }
+      true
+    })
 
   /** Two-rename snapshot swap with automatic rollback: `path` → `bak`,
     * then `tmp` → `path`. If the SECOND rename fails, the target would be
@@ -397,11 +406,11 @@ object MergeSink {
                         updatesUnique: Boolean = false): MergeStats = {
     val unique =
       if (updatesUnique) normalizeUnique(updates, key, fields)
-      else collapseUpdates(updates.filter(col(key).isNotNull), key, fields, orderCol)
+      else collapseUpdates(updates, key, fields, orderCol)
     val target =
       if (spark.catalog.tableExists(table)) spark.table(table)
       else emptyTarget(spark, unique, key, fields, updatedAtCol)
-    val (merged, obs) = mergePlanObserved(target, unique, key,
+    val (merged, obs) = observedMerge(target, unique, key,
       evolvedFields(target, key, fields, updatedAtCol), updatedAtCol)
     val tmp = s"${table}__merge_tmp"
     val bak = s"${table}__merge_bak"
@@ -438,10 +447,10 @@ object MergeSink {
     def pd(c: Column): Column = pmod(xxhash64(c), lit(nParts.toLong))
     val unique =
       (if (updatesUnique) normalizeUnique(updates, key, fields)
-       else collapseUpdates(updates.filter(col(key).isNotNull), key,
-         fields, orderCol)).localCheckpoint(true) // probed for dirs, then merged
+       else collapseUpdates(updates, key, fields, orderCol))
+        .localCheckpoint(true) // probed for dirs, then merged
     if (!spark.catalog.tableExists(table)) {
-      val (merged, obs) = mergePlanObserved(
+      val (merged, obs) = observedMerge(
         emptyTarget(spark, unique, key, fields, updatedAtCol),
         unique, key, fields, updatedAtCol)
       merged.withColumn("pd", pd(col(key)))
@@ -454,7 +463,7 @@ object MergeSink {
     val target = spark.table(table)
       .filter(col("pd").isin(touched.map(java.lang.Long.valueOf): _*))
       .drop("pd") // recomputed from the key on write
-    val (merged, obs) = mergePlanObserved(target, unique, key,
+    val (merged, obs) = observedMerge(target, unique, key,
       evolvedFields(target, key, fields, updatedAtCol), updatedAtCol)
     // schema evolution on the catalog layout: new update columns are
     // declared via ALTER TABLE ADD COLUMNS (metadata-only — the catalog
@@ -462,8 +471,7 @@ object MergeSink {
     // read null for the added column; untouched directories are never
     // rewritten), and the insert aligns to the table's column order
     // because insertInto matches POSITIONALLY
-    val newCols = unique.columns
-      .filterNot(c => c == key || spark.table(table).columns.contains(c))
+    val newCols = fields.filterNot(spark.table(table).columns.contains)
     newCols.foreach { c =>
       spark.sql(s"ALTER TABLE $table ADD COLUMNS ($c ${unique.schema(c).dataType.sql})")
     }

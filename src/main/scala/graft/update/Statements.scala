@@ -2,6 +2,7 @@ package graft.update
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Upsert-statement construction — the reference's only expression-
   * evaluation step (reference: src/func/mongo.py:28-100).
@@ -29,7 +30,7 @@ object Statements {
   def widen(updates: DataFrame, idColumn: String, fields: Seq[String],
             passthrough: Seq[String] = Nil): DataFrame = {
     require(fields.nonEmpty, "empty field list — nothing to $set (mongo.py:52-57)")
-    val cast = fields.map(f => col(f).cast("double"))
+    val cast = fields.map(f => col(f).cast(DoubleType))
     val extra = passthrough.distinct.filterNot(c => c == idColumn || fields.contains(c))
     updates
       .filter(col(idColumn).isNotNull &&                     // missing key → drop (mongo.py:46-50)

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sinks.{ManifestMergeSink, MergeSink}
 
@@ -39,24 +39,8 @@ class MergeReuseSpec extends SparkSpec {
       .delete(new Path(base.toString), true)
   }
 
-  /** Column path → whether every chunk of it, in every data file under
-    * `dir` (recursively), has a dictionary page. */
-  private def dictionaryPages(dir: String): Map[String, Boolean] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(dir).getFileSystem(hconf)
-    val files = fs.listFiles(new Path(dir), true)
-    val chunks = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
-      .filter(st => st.getPath.getName.endsWith(".parquet"))
-      .flatMap { st =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, hconf))
-        try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
-        finally reader.close()
-      }.toSeq
-    assert(chunks.nonEmpty, s"no parquet chunk under $dir")
-    chunks.groupBy(_.getPath.toDotString).map { case (c, cs) =>
-      c -> cs.forall(_.hasDictionaryPage)
-    }
-  }
+  private def dictionaryPages(dir: String): Map[String, Boolean] =
+    MergeReuseSpec.dictionaryPages(spark, dir)
 
   test("a second same-shaped mergeInto compiles no class") {
     withDir("graft_merge_compile_") { dir =>
@@ -79,15 +63,16 @@ class MergeReuseSpec extends SparkSpec {
   test("merge generations skip only the dictionaries parquet-mr abandons") {
     withDir("graft_merge_dict_") { dir =>
       val target = s"$dir/state"
-      val hconf = spark.sparkContext.hadoopConfiguration
+      // the footer the merge's own open of the target reads
+      def replaced(p: String) = Parquets.open(spark, Seq(p), footer = true).flatMap(_.footer)
       MergeSink.mergeInto(spark, target, batch(dir, "b0", 0, 4000, 1), key, fields)
       // learned from the first generation: the key and the random features
       // had no dictionary page, the one-valued stamp had one
       val want = (key +: fields)
         .map(c => s"parquet.enable.dictionary#$c" -> "false").toMap
-      assert(MergeSink.dictionaryOptions(hconf, Seq(new Path(target)), key) == want)
+      assert(MergeSink.dictionaryOptions(replaced(target), key) == want)
       // a first write has only the key to go on
-      assert(MergeSink.dictionaryOptions(hconf, Seq(new Path(s"$dir/none")), key) ==
+      assert(MergeSink.dictionaryOptions(replaced(s"$dir/none"), key) ==
         Map(s"parquet.enable.dictionary#$key" -> "false"))
       MergeSink.mergeInto(spark, target, batch(dir, "b1", 3000, 2000, 2), key, fields)
       val pages = dictionaryPages(target)
@@ -148,6 +133,28 @@ class MergeReuseSpec extends SparkSpec {
         for (f <- fields; p <- pages) assert(!p(f), s"$layout: $f must stay PLAIN")
         for (p <- pages) assert(p("updatedAt"), s"$layout: updatedAt keeps its dictionary")
       }
+    }
+  }
+}
+
+object MergeReuseSpec {
+
+  /** Column path → whether every chunk of it, in every data file under
+    * `dir` (recursively), has a dictionary page. */
+  def dictionaryPages(spark: SparkSession, dir: String): Map[String, Boolean] = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(dir).getFileSystem(hconf)
+    val files = fs.listFiles(new Path(dir), true)
+    val chunks = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .filter(st => st.getPath.getName.endsWith(".parquet"))
+      .flatMap { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, hconf))
+        try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        finally reader.close()
+      }.toSeq
+    assert(chunks.nonEmpty, s"no parquet chunk under $dir")
+    chunks.groupBy(_.getPath.toDotString).map { case (c, cs) =>
+      c -> cs.forall(_.hasDictionaryPage)
     }
   }
 }

@@ -11,15 +11,20 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 import graft.sinks.MergeSink
 
 /** [[Parquets.read]] is `spark.read.parquet` minus the schema-inference
-  * job: same schema, same rows, zero Spark jobs to resolve the schema.
-  * Also guards the engine's sources against a new schema-less read. */
+  * job and the second listing: same schema, same rows, zero Spark jobs to
+  * resolve the schema, each leaf file listed once. [[Parquets.withSchema]]
+  * is `spark.read.schema(s).parquet` from the same one listing. Also
+  * guards the engine's sources against a parquet read that bypasses them
+  * and a footer open that re-parses Hadoop's bundled XML defaults. */
 class ParquetsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -60,6 +65,37 @@ class ParquetsSpec extends SparkSpec {
   }
 
   private def tmp(prefix: String): JPath = Files.createTempDirectory(prefix)
+
+  /** `body`'s value and how many leaf files the listings it ran found. */
+  private def filesListed[T](body: => T): (T, Long) = {
+    val before = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+    val r = body
+    (r, HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - before)
+  }
+
+  private def relation(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+    }.getOrElse(fail(s"no file relation in ${df.queryExecution.analyzed}"))
+
+  /** [[Parquets.withSchema]] equals Spark's schema-pinned read: schema,
+    * partition columns and their types, rows, `inputFiles` and the
+    * relation itself; and it lists each leaf file once. */
+  private def assertSameAsPinned(paths: Seq[String], schema: StructType,
+                                 options: Map[String, String] = Map.empty): DataFrame = {
+    val theirs = spark.read.options(options).schema(schema).parquet(paths: _*)
+    val (ours, listed) = filesListed(Parquets.withSchema(spark, schema, paths, options))
+    assert(ours.schema == theirs.schema, s"schema differs at $paths")
+    assert(relation(ours).partitionSchema == relation(theirs).partitionSchema,
+      s"partition columns differ at $paths")
+    assert(rows(ours) == rows(theirs), s"rows differ at $paths")
+    assert(ours.inputFiles.sorted.toSeq == theirs.inputFiles.sorted.toSeq,
+      s"input files differ at $paths")
+    assert(relation(ours) == relation(theirs), s"relation differs at $paths")
+    assert(listed == ours.inputFiles.length,
+      s"one open of $paths listed $listed files for ${ours.inputFiles.length} leaves")
+    ours
+  }
 
   private def dataFiles(dir: JPath): Seq[JPath] =
     Files.list(dir).toArray.map(_.asInstanceOf[JPath])
@@ -161,6 +197,59 @@ class ParquetsSpec extends SparkSpec {
     }
   }
 
+  test("the explicit-schema open equals spark.read.schema(s).parquet: plain and partitionBy dirs") {
+    val plain = tmp("graft_parquets_pinned_").resolve("t").toString
+    spark.range(30).select(col("id"), (col("id") * 2).as("v")).repartition(3)
+      .write.parquet(plain)
+    assertSameAsPinned(Seq(plain), spark.read.parquet(plain).schema)
+    // a narrower and a reordered schema are decoded, not re-inferred
+    assertSameAsPinned(Seq(plain), new StructType().add("v", LongType).add("id", LongType))
+
+    val parted = tmp("graft_parquets_pinned_part_").resolve("t").toString
+    spark.range(40).select(col("id"), (col("id") % 3).cast("int").as("p"))
+      .write.partitionBy("p").parquet(parted)
+    val df = assertSameAsPinned(Seq(parted), new StructType().add("id", LongType))
+    assert(df.schema("p").dataType == IntegerType)
+    // a pinned partition-column type overrides discovery, as in Spark
+    assertSameAsPinned(Seq(parted),
+      new StructType().add("id", LongType).add("p", LongType))
+  }
+
+  test("the explicit-schema open equals Spark's on a basePath multi-generation read and skips hidden files") {
+    val root = tmp("graft_parquets_pinned_gen_")
+    Seq("g-1", "g-2").zipWithIndex.foreach { case (g, i) =>
+      spark.range(i * 20, i * 20 + 20).select(col("id"), (col("id") % 2).as("b"))
+        .write.partitionBy("b").parquet(root.resolve(g).toString)
+    }
+    val schema = new StructType().add("id", LongType).add("b", LongType)
+    // one generation per open, basePath at the generation, as DirManifest reads
+    Seq("g-1", "g-2").foreach { g =>
+      assertSameAsPinned(Seq(s"$root/$g/b=0", s"$root/$g/b=1"), schema,
+        Map("basePath" -> s"$root/$g"))
+    }
+    val dir = root.resolve("g-1").resolve("b=0")
+    assert(Files.list(root.resolve("g-1")).toArray.map(_.toString).exists(_.endsWith("_SUCCESS")))
+    Seq(".part-00000.parquet.crc", "_SUCCESS.tmp", ".hidden.parquet")
+      .foreach(n => Files.write(dir.resolve(n), "not parquet".getBytes("UTF-8")))
+    assertSameAsPinned(Seq(dir.toString), new StructType().add("id", LongType))
+    assertSameAsPinned(Seq(root.resolve("g-1").toString), schema)
+  }
+
+  test("one open lists each leaf file once and returns the footer it read") {
+    val dir = tmp("graft_parquets_once_").resolve("t").toString
+    spark.range(50).repartition(5).write.parquet(dir)
+    val (df, listed) = filesListed(Parquets.read(spark, dir))
+    assert(df.inputFiles.length == 5 && listed == 5,
+      s"a schema-less open listed $listed files for 5 leaves")
+    val (opened, listed2) = filesListed(Parquets.open(spark, Seq(dir), footer = true))
+    assert(listed2 == 5, s"an open with its footer listed $listed2 files for 5 leaves")
+    val footer = opened.flatMap(_.footer).getOrElse(fail("no footer from the open"))
+    assert(footer.getFileMetaData.getSchema.getFieldCount == 1)
+    assert(footer.getBlocks.size == 1)
+    // no leaf file: None, and read hands over to Spark for its exception
+    assert(Parquets.open(spark, Seq(s"$dir/none")).isEmpty)
+  }
+
   test("a glob and mergeSchema fall back to Spark's own read") {
     val dir = s"$sf01/region.parquet"
     assert(Parquets.read(spark, Seq(s"$sf01/regio*.parquet")).schema ==
@@ -169,16 +258,58 @@ class ParquetsSpec extends SparkSpec {
       spark.read.option("mergeSchema", "true").parquet(dir).schema)
   }
 
-  // --- regression guard: no schema-less parquet read outside the helper ---
+  // --- regression guard: every parquet open goes through the helper ---
 
-  /** `.parquet(` calls whose receiver chain ends in a batch or streaming
-    * `read` with no `.schema(...)` after it, as (line, chain text). */
-  private def schemaLessReads(source: String): Seq[(Int, String)] = {
-    val s = source.split("\n", -1).map { line =>
+  /** `source` with comment lines and trailing line comments blanked. */
+  private def code(source: String): String =
+    source.split("\n", -1).map { line =>
       val t = line.trim
       if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) ""
       else line.replaceAll("\\s//.*$", "")
     }.mkString("\n")
+
+  /** `.parquet(` calls whose receiver chain ends in a batch or streaming
+    * `read` with no `.schema(...)` after it, as (line, chain text). */
+  private def schemaLessReads(source: String): Seq[(Int, String)] =
+    parquetReads(source).collect {
+      case (line, text, chain) if !chain.contains("schema") => (line, text)
+    }
+
+  /** `.parquet(` calls whose receiver chain ends in a batch `read`, with
+    * or without a schema: each lists the paths apart from the one
+    * listing [[Parquets]] makes. */
+  private def batchReads(source: String): Seq[(Int, String)] =
+    parquetReads(source).collect {
+      case (line, text, chain) if chain.headOption.contains("read") => (line, text)
+    }
+
+  /** `ParquetFileReader.open(` with one argument: it builds a fresh Hadoop
+    * `Configuration`, which re-parses the bundled XML defaults. */
+  private def oneArgFooterOpens(source: String): Seq[(Int, String)] = {
+    val s = code(source)
+    "ParquetFileReader\\.open\\(".r.findAllMatchIn(s).toSeq.flatMap { m =>
+      var depth = 1
+      var commas = 0
+      var j = m.end
+      while (j < s.length && depth > 0) {
+        s(j) match {
+          case '(' | '[' | '{' => depth += 1
+          case ')' | ']' | '}' => depth -= 1
+          case ',' if depth == 1 => commas += 1
+          case _ =>
+        }
+        j += 1
+      }
+      if (commas == 0)
+        Some((s.substring(0, m.start).count(_ == '\n') + 1, s.substring(m.start, j)))
+      else None
+    }
+  }
+
+  /** `.parquet(` calls whose receiver chain holds a batch or streaming
+    * `read`, as (line, chain text, chain names from that `read` on). */
+  private def parquetReads(source: String): Seq[(Int, String, List[String])] = {
+    val s = code(source)
     def skipSpace(from: Int): Int = { var j = from; while (j >= 0 && s(j).isWhitespace) j -= 1; j }
     "\\.parquet\\(".r.findAllMatchIn(s).toSeq.flatMap { m =>
       var names = List.empty[String]
@@ -199,8 +330,9 @@ class ParquetsSpec extends SparkSpec {
         if (k >= 0 && s(k) == '.') j = k - 1 else more = false
       }
       val io = names.lastIndexWhere(Set("read", "readStream", "write", "writeStream"))
-      if (io >= 0 && names(io).startsWith("read") && !names.drop(io).contains("schema"))
-        Some((s.substring(0, m.start).count(_ == '\n') + 1, s.substring(start, m.end)))
+      if (io >= 0 && names(io).startsWith("read"))
+        Some((s.substring(0, m.start).count(_ == '\n') + 1, s.substring(start, m.end),
+          names.drop(io)))
       else None
     }
   }
@@ -217,18 +349,45 @@ class ParquetsSpec extends SparkSpec {
     assert(schemaLessReads("  * plain `spark.read.parquet(p)` in a doc").isEmpty)
   }
 
-  test("no schema-inferring parquet read in src/main/scala outside Parquets") {
+  test("the guard's scanner flags batch parquet reads and one-argument footer opens, and only those") {
+    assert(batchReads("spark.read.schema(s).parquet(p)").size == 1)
+    assert(batchReads("spark.read.option(\"basePath\", b)\n  .schema(s).parquet(ps: _*)").size == 1)
+    assert(batchReads("docs.sparkSession.read.parquet(p)").size == 1)
+    assert(batchReads("spark.readStream.schema(s).parquet(p)").isEmpty)
+    assert(batchReads("df.write.mode(\"overwrite\").parquet(p)").isEmpty)
+    assert(batchReads("  * `spark.read.schema(s).parquet(p)` in a doc").isEmpty)
+    assert(oneArgFooterOpens("ParquetFileReader.open(HadoopInputFile.fromStatus(st, hconf))").size == 1)
+    assert(oneArgFooterOpens("val r = ParquetFileReader.open(\n  in)").size == 1)
+    assert(oneArgFooterOpens("ParquetFileReader.open(in, HadoopReadOptions.builder(c).build())").isEmpty)
+    assert(oneArgFooterOpens("ParquetFileReader.open(f(a, b), opts)").isEmpty)
+    assert(oneArgFooterOpens("// ParquetFileReader.open(in)").isEmpty)
+  }
+
+  private def mainSources: Seq[File] = {
     val root = new File("src/main/scala")
     assert(root.isDirectory, s"run from the repo root (cwd ${new File(".").getAbsolutePath})")
     def files(d: File): Seq[File] =
       d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val hits = files(root).filter(_.getName.endsWith(".scala"))
-      .filterNot(_.getName == "Parquets.scala")
-      .flatMap { f =>
-        schemaLessReads(new String(Files.readAllBytes(f.toPath), "UTF-8"))
-          .map { case (line, text) => (f.getPath, line, text) }
-      }
-    assert(hits.isEmpty, "route these through graft.Parquets.read:\n" +
-      hits.map { case (p, l, t) => s"$p:$l: $t" }.mkString("\n"))
+    files(root).filter(_.getName.endsWith(".scala"))
+  }
+
+  private def hitsIn(sources: Seq[File])(scan: String => Seq[(Int, String)]): Seq[String] =
+    sources.flatMap { f =>
+      scan(new String(Files.readAllBytes(f.toPath), "UTF-8"))
+        .map { case (line, text) => s"${f.getPath}:$line: $text" }
+    }
+
+  test("no schema-inferring parquet read in src/main/scala outside Parquets") {
+    val hits = hitsIn(mainSources.filterNot(_.getName == "Parquets.scala"))(schemaLessReads)
+    assert(hits.isEmpty, "route these through graft.Parquets.read:\n" + hits.mkString("\n"))
+  }
+
+  test("no batch parquet read and no one-argument footer open in src/main/scala outside Parquets") {
+    val reads = hitsIn(mainSources.filterNot(_.getName == "Parquets.scala"))(batchReads)
+    assert(reads.isEmpty, "route these through graft.Parquets.read or withSchema:\n" +
+      reads.mkString("\n"))
+    val opens = hitsIn(mainSources)(oneArgFooterOpens)
+    assert(opens.isEmpty, "pass the session's configuration (ParquetFooterReader.readFooter " +
+      "or HadoopReadOptions):\n" + opens.mkString("\n"))
   }
 }

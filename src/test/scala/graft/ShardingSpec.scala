@@ -1,10 +1,33 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.sql.functions._
 import graft.operators.Sharding
 
 class ShardingSpec extends SparkSpec {
   import spark.implicits._
+
+  /** `body`'s value and the WARN-or-worse messages logged while it ran. */
+  private def warningsDuring[T](body: => T): (T, Seq[String]) = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    capture.start()
+    root.addAppender(capture)
+    try { val r = body; (r, seen.asScala.toSeq) }
+    finally { root.removeAppender(capture); capture.stop() }
+  }
 
   test("shard assignment is deterministic and growth-stable") {
     val docs = (1L to 400L).toDF("doc_id")
@@ -349,11 +372,23 @@ class ShardingSpec extends SparkSpec {
       assert(openedDirs(scan.rows) == want,
         s"opened dirs must be the filesRead cells' dirs: ${openedDirs(scan.rows)}")
 
-      // empty-range scan: zero cells, zero files opened, zero rows
-      val none = Sharding.skippingScanManifested(spark, path, "metric",
-        lit(5000L), lit(6000L))
+      // empty-range scan: zero cells, zero files opened, zero rows; its
+      // schema comes from one cell dir, not a listing of every cell
+      val filesPerDir = m.values.flatten.map { d =>
+        fsOf(path).listStatus(rootOf(s"$path/$d")).count(_.getPath.getName.endsWith(".parquet"))
+      }
+      val listedBefore = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+      val (none, warnings) = warningsDuring(Sharding.skippingScanManifested(spark, path,
+        "metric", lit(5000L), lit(6000L)))
+      val listed = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - listedBefore
+      assert(listed <= 1 + filesPerDir.max,
+        s"an empty window listed $listed files: `_stats` (1) and at most one cell dir " +
+          s"(${filesPerDir.max}) of ${filesPerDir.sum}")
       assert(none.filesRead == 0L && none.rows.isEmpty)
+      assert(none.rows.schema == scan.rows.schema)
       assert(openedDirs(none.rows).isEmpty, "an empty window must open no file")
+      assert(!warnings.exists(_.contains("All paths were ignored")),
+        s"reading `_stats` must not go through a path Spark ignores: $warnings")
     }
   }
 
