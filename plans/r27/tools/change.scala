@@ -1,13 +1,15 @@
+// The round as MergeSink.mergeInto builds it: the fold without its last
+// projection (foldUpdates), the one-listing open, mergePlanObserved.
 val dict = method(MergeSink, "dictionaryOptions")
-val observed = method(MergeSink, "observedMerge")
+val fold = MergeSink.getClass.getDeclaredMethods.find(_.getName == "foldUpdates").get
+fold.setAccessible(true)
 val rows = (0 until 60).map { i =>
   val batch = f"$in/batch_${i % 20}%04d"
   val (upd, t1) = timed(stm.invoke(BulkUpdateJob, s, batch, None, None).asInstanceOf[DataFrame])
-  val (uniq, t2) = timed(MergeSink.collapseUpdates(upd, key, fields, None))
+  val (uniq, t2) = timed(fold.invoke(MergeSink, upd, key, fields, None).asInstanceOf[DataFrame])
   val (opened, t3) = timed(Parquets.open(s, Seq(target), footer = true).get)
   val tgt = opened.df
-  val (merged, t4) = timed(observed.invoke(MergeSink, tgt, uniq, key, evolved(tgt), "updatedAt",
-    MergeSink.stampNow()).asInstanceOf[(DataFrame, AnyRef)]._1)
+  val (merged, t4) = timed(MergeSink.mergePlanObserved(tgt, uniq, key, evolved(tgt))._1)
   val (_, t5) = timed(dict.invoke(MergeSink, opened.footer, key))
   val (_, t6) = timed(merged.queryExecution.optimizedPlan)
   val (_, t7) = timed(merged.queryExecution.executedPlan)

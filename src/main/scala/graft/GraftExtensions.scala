@@ -3,6 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.hdfs.HdfsConfiguration
 import org.apache.hadoop.mapred.JobConf
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -29,8 +30,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // the parser is built eagerly, once per session state; handing back
-    // Spark's own parser costs no query anything
+    // SparkSessionExtensions has no hook that runs when a session state
+    // is built; the parser builder is the one builder Spark calls then
+    // (eagerly, once per session state), and handing back Spark's own
+    // parser costs no query anything
     ext.injectParser { (session, parser) =>
       GraftExtensions.leanHadoopConf(session.sparkContext.hadoopConfiguration)
       parser
@@ -104,12 +107,19 @@ object GraftExtensions {
     *
     * Kept: every core-default.xml key (filesystem wiring such as
     * `fs.AbstractFileSystem.<scheme>.impl` has no code default), and
-    * every key Spark, the engine or the user set. `JobConf`'s static
-    * initializer registers the MapReduce and YARN default files, which
-    * reloads every `Configuration` made with defaults and would bring
-    * the keys back, so it runs before the trim. */
+    * every key Spark, the engine or the user set.
+    *
+    * Registering a new default resource reloads every `Configuration`
+    * made with defaults, which would bring the dropped keys back
+    * without a sign. Two classes register some on first use: `JobConf`
+    * (the MapReduce and YARN default files) and `HdfsConfiguration`
+    * (hdfs-default.xml and hdfs-site.xml, the first time an `hdfs://`
+    * filesystem is made). Both are initialized before the trim, so the
+    * configuration stays lean whichever filesystem a job creates first;
+    * where hdfs-default.xml is on the classpath its keys are kept. */
   private[graft] def leanHadoopConf(conf: Configuration): Unit = {
     new JobConf(false)
+    HdfsConfiguration.init()
     def onlyFrom(k: String): Option[String] =
       Option(conf.getPropertySources(k)).collect { case Array(src) => src }
     val drop = conf.iterator.asScala.map(_.getKey).filter { k =>

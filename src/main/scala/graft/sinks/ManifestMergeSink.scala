@@ -492,7 +492,7 @@ object ManifestMergeSink {
         case None => (MergeSink.emptyTarget(spark, uniqCur, key, fields,
           updatedAtCol), None)
       }
-      val (merged, obs) = MergeSink.observedMerge(targetDf, uniqCur, key,
+      val (merged, obs) = MergeSink.mergePlanObserved(targetDf, uniqCur, key,
         MergeSink.evolvedFields(targetDf, key, fields, updatedAtCol),
         updatedAtCol)
       val gdir = s"g-${tok()}"
@@ -711,7 +711,7 @@ object ManifestMergeSink {
       val targetDf = replacedDf.observe(obsBefore, count(lit(1)).as("n"))
         .join(delKeys, Seq(key), "left_anti")
         .observe(obsAfter, count(lit(1)).as("n"))
-      val (merged, obs) = MergeSink.observedMerge(targetDf, uniq, key,
+      val (merged, obs) = MergeSink.mergePlanObserved(targetDf, uniq, key,
         MergeSink.evolvedFields(targetDf, key, fields, "updatedAt"),
         "updatedAt")
       val gdir = s"g-${tok()}"

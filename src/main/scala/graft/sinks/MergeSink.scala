@@ -79,16 +79,25 @@ object MergeSink {
     * sort.) The merge join reuses the key partitioning and the
     * key-prefixed sort order (plan-audited).
     *
-    * Two Dataset steps: the window `select` and one filter that keeps the
-    * first row of each key and drops a null key (guard ladder). The
-    * result keeps the `__rn` column, 1 on every row; the merge never
-    * reads it.
+    * Rows with a null key are dropped (guard ladder). The result is the
+    * key and the fields, the same shape as [[normalizeUnique]].
     *
     * Ties in `orderCol`: every field is read in the same order of the
     * tied rows, so the fold equals sequential application in one order of
     * them; which order that is stays unspecified. */
   def collapseUpdates(updates: DataFrame, key: String, fields: Seq[String],
-                      orderCol: Option[String] = None): DataFrame = {
+                      orderCol: Option[String] = None): DataFrame =
+    foldUpdates(updates, key, fields, orderCol).drop("__rn")
+
+  /** [[collapseUpdates]] without its last projection, for a merge that
+    * reads the result once, where the projection would be one more
+    * Dataset to analyze per round: two Dataset steps, the window `select`
+    * and one filter that keeps the first row of each key and drops a
+    * null key. The result also carries `__rn`, 1 on every row, which the
+    * merged row never reads. A caller that stores the frame (a
+    * `localCheckpoint`) takes [[collapseUpdates]]. */
+  private def foldUpdates(updates: DataFrame, key: String, fields: Seq[String],
+                          orderCol: Option[String]): DataFrame = {
     val ord = orderCol.map(Seq(_)).getOrElse(if (fields.nonEmpty) fields else Seq(key))
     val byOrd = Window.partitionBy(col(key)).orderBy(ord.map(col(_).asc): _*)
     val whole = byOrd.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -181,13 +190,12 @@ object MergeSink {
   }
 
   /** The full-outer key join every merge form runs: the target aliased
-    * `t`, the updates aliased `u`, as one Dataset (the aliases are plan
-    * nodes, not Datasets of their own). `updates` must hold no null key:
-    * [[collapseUpdates]] and [[normalizeUnique]] drop them, and the
-    * public forms below drop them first. */
+    * `t`, the updates aliased `u`. `updates` must hold no null key:
+    * [[collapseUpdates]] and [[normalizeUnique]] drop them, and
+    * [[mergePlan]] and [[mergeStats]] drop them first. */
   private def joinSides(target: DataFrame, updates: DataFrame,
                         key: String): DataFrame =
-    ColumnBridge.aliasedJoin(target, "t", updates, "u",
+    target.alias("t").join(updates.alias("u"),
       col(s"t.$key") === col(s"u.$key"), "full_outer")
 
   private def keyed(updates: DataFrame, key: String): DataFrame =
@@ -249,18 +257,14 @@ object MergeSink {
     * — the round-1 implementation executed the join twice (once for a
     * stats collect, once for the data write), doubling the dominant
     * shuffle. Call [[statsOf]] on the returned Observation AFTER an
-    * action has run on the returned frame. */
+    * action has run on the returned frame.
+    *
+    * `updates` must be unique per key and hold no null key: the output of
+    * [[collapseUpdates]] or [[normalizeUnique]], which both drop null
+    * keys, so the merge applies that guard once, not again here. */
   def mergePlanObserved(target: DataFrame, updates: DataFrame, key: String,
                         fields: Seq[String], updatedAtCol: String = "updatedAt",
-                        now: Column = stampNow()): (DataFrame, Observation) =
-    observedMerge(target, keyed(updates, key), key, fields, updatedAtCol, now)
-
-  /** [[mergePlanObserved]] over updates that hold no null key (the output
-    * of [[collapseUpdates]] or [[normalizeUnique]]): three Dataset steps,
-    * the join, the observation and the merged row. */
-  private[sinks] def observedMerge(target: DataFrame, updates: DataFrame, key: String,
-                                   fields: Seq[String], updatedAtCol: String = "updatedAt",
-                                   now: Column = stampNow()): (DataFrame, Observation) = {
+                        now: Column = stampNow()): (DataFrame, Observation) = {
     val obs = Observation()
     val counts = countColumns(target, updates, key, fields)
     val observed = joinSides(target, updates, key)
@@ -327,14 +331,14 @@ object MergeSink {
     val exists = recoverSwap(fs, path, bak)
     val unique =
       if (updatesUnique) normalizeUnique(updates, key, fields)
-      else collapseUpdates(updates, key, fields, orderCol)
+      else foldUpdates(updates, key, fields, orderCol)
     val opened = if (exists) Parquets.open(spark, Seq(targetPath), footer = true) else None
     val target = opened.fold(emptyTarget(spark, unique, key, fields, updatedAtCol))(_.df)
 
     // One join execution total: the parquet write materializes the merge,
     // and the counts come back as observed metrics of that same action.
     // Field set = target payload ∪ update fields (schema evolution).
-    val (merged, obs) = observedMerge(target, unique, key,
+    val (merged, obs) = mergePlanObserved(target, unique, key,
       evolvedFields(target, key, fields, updatedAtCol), updatedAtCol)
 
     fs.delete(tmp, true); fs.delete(bak, true)
@@ -406,11 +410,11 @@ object MergeSink {
                         updatesUnique: Boolean = false): MergeStats = {
     val unique =
       if (updatesUnique) normalizeUnique(updates, key, fields)
-      else collapseUpdates(updates, key, fields, orderCol)
+      else foldUpdates(updates, key, fields, orderCol)
     val target =
       if (spark.catalog.tableExists(table)) spark.table(table)
       else emptyTarget(spark, unique, key, fields, updatedAtCol)
-    val (merged, obs) = observedMerge(target, unique, key,
+    val (merged, obs) = mergePlanObserved(target, unique, key,
       evolvedFields(target, key, fields, updatedAtCol), updatedAtCol)
     val tmp = s"${table}__merge_tmp"
     val bak = s"${table}__merge_bak"
@@ -450,7 +454,7 @@ object MergeSink {
        else collapseUpdates(updates, key, fields, orderCol))
         .localCheckpoint(true) // probed for dirs, then merged
     if (!spark.catalog.tableExists(table)) {
-      val (merged, obs) = observedMerge(
+      val (merged, obs) = mergePlanObserved(
         emptyTarget(spark, unique, key, fields, updatedAtCol),
         unique, key, fields, updatedAtCol)
       merged.withColumn("pd", pd(col(key)))
@@ -463,7 +467,7 @@ object MergeSink {
     val target = spark.table(table)
       .filter(col("pd").isin(touched.map(java.lang.Long.valueOf): _*))
       .drop("pd") // recomputed from the key on write
-    val (merged, obs) = observedMerge(target, unique, key,
+    val (merged, obs) = mergePlanObserved(target, unique, key,
       evolvedFields(target, key, fields, updatedAtCol), updatedAtCol)
     // schema evolution on the catalog layout: new update columns are
     // declared via ALTER TABLE ADD COLUMNS (metadata-only — the catalog
@@ -471,7 +475,8 @@ object MergeSink {
     // read null for the added column; untouched directories are never
     // rewritten), and the insert aligns to the table's column order
     // because insertInto matches POSITIONALLY
-    val newCols = fields.filterNot(spark.table(table).columns.contains)
+    val newCols = unique.columns
+      .filterNot(c => c == key || spark.table(table).columns.contains(c))
     newCols.foreach { c =>
       spark.sql(s"ALTER TABLE $table ADD COLUMNS ($c ${unique.schema(c).dataType.sql})")
     }

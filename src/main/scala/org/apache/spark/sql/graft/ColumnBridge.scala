@@ -1,10 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.JoinType
-import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, SubqueryAlias}
-import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge for the engine's native Catalyst
@@ -15,18 +12,6 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** `left.alias(l).join(right.alias(r), on, joinType)` as one Dataset:
-    * the aliases become plan nodes under the join instead of two
-    * Datasets of their own, each analyzed when it is made. */
-  def aliasedJoin(left: DataFrame, l: String, right: DataFrame, r: String,
-                  on: Column, joinType: String): DataFrame = {
-    val session = left.sparkSession.asInstanceOf[classic.SparkSession]
-    def plan(df: DataFrame) = df.asInstanceOf[classic.DataFrame].logicalPlan
-    classic.Dataset.ofRows(session,
-      Join(SubqueryAlias(l, plan(left)), SubqueryAlias(r, plan(right)),
-        JoinType(joinType), Some(session.expression(on)), JoinHint.NONE))
-  }
 
   /** True when no Dataset-level persist is registered — the probe behind
     * the "operators release their caches" tests (CacheManager is

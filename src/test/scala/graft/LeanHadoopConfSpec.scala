@@ -5,6 +5,8 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.hdfs.HdfsConfiguration
+import org.apache.hadoop.mapred.JobConf
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -69,6 +71,15 @@ class LeanHadoopConfSpec extends SparkSpec {
     }
     assert(rows == 5)
     assertLean(spark, "after a StreamingFold.drain")
+  }
+
+  test("stays lean when the HDFS and MapReduce configuration classes are used") {
+    // each registers default resources on first use, and a registration
+    // reloads every Configuration made with defaults
+    HdfsConfiguration.init()
+    new HdfsConfiguration()
+    new JobConf()
+    assertLean(spark, "after HdfsConfiguration and JobConf")
   }
 
   test("a mergeInto round writes the same rows and dictionary pages as under the full configuration") {

@@ -88,11 +88,14 @@ class MergeSinkSpec extends SparkSpec {
     val b = spark.read.parquet(s"$dir/unique")
       .drop("updatedAt").orderBy("k").collect().toSeq
     assert(a == b)
-    // normalizeUnique drops null keys and projects key+fields, exactly
-    // like the fold path's shape contract
-    val norm = MergeSink.normalizeUnique(
-      df(Seq((null, 9.0, 9.0), ("a", 5.0, null))), "k", fields).collect()
-    assert(norm.length == 1 && norm.head.getAs[String]("k") == "a")
+    // normalizeUnique and collapseUpdates share one shape contract: null
+    // keys dropped, key+fields projected
+    val withNull = df(Seq((null, 9.0, 9.0), ("a", 5.0, null)))
+    val norm = MergeSink.normalizeUnique(withNull, "k", fields)
+    val coll = MergeSink.collapseUpdates(withNull, "k", fields)
+    assert(norm.columns.toSeq == "k" +: fields && coll.columns.toSeq == "k" +: fields)
+    for (rows <- Seq(norm.collect(), coll.collect()))
+      assert(rows.length == 1 && rows.head.getAs[String]("k") == "a")
   }
 
   test("stats: matched/modified/upserted counts (mongo.py:140-145)") {
