@@ -217,19 +217,11 @@ object CurateJob {
     // the vacuum margin passes
     val root = new org.apache.hadoop.fs.Path(outDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    var done = false
-    while (!done) {
+    CommitLog.retrying {
       val head = DirManifest.head(fs, root)
       val st = head.map(_._2).getOrElse(DirManifest.DmState(Map.empty))
-      try {
-        DirManifest.commitCas(fs, root, head.map(_._1).getOrElse(0L),
-          st.copy(extra = st.extra ++ Outputs.map(n => n -> s"$gen/$n")))
-        done = true
-      } catch {
-        case e: CommitLog.CommitConflictException =>
-          attempt += 1; if (attempt >= 20) throw e
-      }
+      DirManifest.commitCas(fs, root, head.map(_._1).getOrElse(0L),
+        st.copy(extra = st.extra ++ Outputs.map(n => n -> s"$gen/$n")))
     }
     // sweep superseded runs — with an AGE GRACE, because this vacuum
     // runs beside possibly racing nightly runs: a concurrent run's

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Parquets, Tables}
 import graft.functions.VectorFunctions._
+import graft.sinks.CommitLog
 
 /** IVF (inverted-file) approximate nearest neighbors — the coarse-
   * quantizer scale path next to the SRP-LSH variant in
@@ -122,7 +123,10 @@ object Ivf {
     * corpus size. At 100 TB this write is the one-time index build cost.
     * Re-writing an existing index replaces its whole mapping (the drift
     * baseline pointer drops with it — a stale baseline would mis-measure
-    * the new layout; call [[snapshotListMeans]] after). */
+    * the new layout; call [[snapshotListMeans]] after). The generation
+    * is written once: a lost CAS re-reads the head and re-appends (the
+    * payload does not depend on the head), and the generation is deleted
+    * only when [[CommitLog.retrying]] gives up. */
   def writeIndex(index: Index, path: String): Unit = {
     val spark = index.assigned.sparkSession
     val fs = fsOf(spark, path)
@@ -140,34 +144,14 @@ object Ivf {
     val parts = graft.sinks.DirManifest
       .writtenParts(fs, root, gen, "list_id")
       .map { case (l, d) => l -> Seq(d) }.toMap
-    retryCas(spark, path, gen) { seq =>
-      graft.sinks.DirManifest.commitCas(fs, root, seq,
-        graft.sinks.DirManifest.DmState(parts))
-    }
-  }
-
-  /** Full-replace publishes (writeIndex/refit/compact) reconcile
-    * contention by re-reading the head seq and re-appending — their
-    * payload does not depend on the losing head's content, so the retry
-    * is metadata-only; the conflict is still LOUD after `maxRetries`.
-    * The losing generation dir is deleted if the publish never lands. */
-  private def retryCas(spark: SparkSession, path: String, gen: String,
-                       maxRetries: Int = 20)(publish: Long => Long): Long = {
-    val fs = fsOf(spark, path)
-    var attempt = 0
-    while (true) {
-      val seq = headState(spark, path).map(_._1).getOrElse(0L)
-      try return publish(seq)
-      catch {
-        case e: graft.sinks.CommitLog.CommitConflictException =>
-          attempt += 1
-          if (attempt >= maxRetries) {
-            fs.delete(new org.apache.hadoop.fs.Path(s"$path/$gen"), true)
-            throw e
-          }
+    CommitLog.onConflict(
+        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$gen"), true)) {
+      CommitLog.retrying {
+        graft.sinks.DirManifest.commitCas(fs, root,
+          headState(spark, path).map(_._1).getOrElse(0L),
+          graft.sinks.DirManifest.DmState(parts))
       }
     }
-    -1L // unreachable
   }
 
   /** The committed index as a frame, list_id reconstructed through
@@ -291,11 +275,10 @@ object Ivf {
     * Returns the new model (callers persist it however they persist the
     * original build's). */
   def refit(spark: SparkSession, path: String, nlist: Int, seed: Long = 42L,
-            fitSampleRows: Int = 100000, maxRetries: Int = 20): KMeansModel = {
+            fitSampleRows: Int = 100000): KMeansModel = {
     val fs = fsOf(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
-    var attempt = 0
-    while (true) {
+    CommitLog.retrying {
       val (seq, _) = requireHead(spark, path)
       val cur = readIndexFrame(spark, path).drop("list_id")
       val feat = cur.withColumn("features", array_to_vector(col("v")))
@@ -322,21 +305,17 @@ object Ivf {
       listMeansFrame(graft.sinks.DirManifest.read(spark, path,
           graft.sinks.DirManifest.DmState(parts)))
         .coalesce(1).write.mode("overwrite").parquet(s"$path/$meansDir")
-      try {
+      // a lost slot: a concurrent ingest landed rows this rebuild never
+      // saw — the whole derivation is stale; discard and re-run
+      CommitLog.onConflict {
+        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$gen"), true)
+        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$meansDir"), true)
+      } {
         graft.sinks.DirManifest.commitCas(fs, root, seq,
           graft.sinks.DirManifest.DmState(parts, Map("means" -> meansDir)))
-        return model
-      } catch {
-        case e: graft.sinks.CommitLog.CommitConflictException =>
-          // a concurrent ingest landed rows this rebuild never saw —
-          // the whole derivation is stale; discard and re-run
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/$gen"), true)
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/$meansDir"), true)
-          attempt += 1
-          if (attempt >= maxRetries) throw e
       }
+      model
     }
-    null // unreachable
   }
 
   /** The per-list mean frame (list_id, pos, m): one narrow pass with
@@ -366,17 +345,22 @@ object Ivf {
     * commits. [[refitLocalized]] measures displacement against THIS
     * snapshot — against the fitted centroid it would be polluted by
     * the centroid-vs-mean gap any sampled, tolerance-terminated
-    * k-means leaves even with zero drift. */
+    * k-means leaves even with zero drift. Like [[writeIndex]] the dir is
+    * written once: a lost CAS re-reads the head and re-points, and the
+    * dir is deleted only when [[CommitLog.retrying]] gives up. */
   def snapshotListMeans(spark: SparkSession, path: String): Unit = {
     val fs = fsOf(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
     val meansDir = s"m-${tok()}"
     listMeansFrame(readIndexFrame(spark, path))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/$meansDir")
-    retryCas(spark, path, meansDir) { seq =>
-      val (_, st) = requireHead(spark, path)
-      graft.sinks.DirManifest.commitCas(fs, root, seq,
-        st.copy(extra = st.extra + ("means" -> meansDir)))
+    CommitLog.onConflict(
+        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$meansDir"), true)) {
+      CommitLog.retrying {
+        val (seq, st) = requireHead(spark, path)
+        graft.sinks.DirManifest.commitCas(fs, root, seq,
+          st.copy(extra = st.extra + ("means" -> meansDir)))
+      }
     }
   }
 
@@ -417,14 +401,12 @@ object Ivf {
     * Returns the refreshed centers and the drifted list ids. */
   def refitLocalized(spark: SparkSession, path: String,
                      centers: Seq[(Int, Array[Double])],
-                     epsilon: Double,
-                     maxRetries: Int = 20): (Seq[(Int, Array[Double])], Seq[Int]) = {
+                     epsilon: Double): (Seq[(Int, Array[Double])], Seq[Int]) = {
     import spark.implicits._
     require(epsilon > 0.0, s"epsilon=$epsilon")
     val fs = fsOf(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
-    var attempt = 0
-    while (true) {
+    CommitLog.retrying {
       val (seq, st) = requireHead(spark, path)
       val meansDir0 = st.extra.getOrElse("means",
         throw new IllegalStateException(
@@ -438,70 +420,69 @@ object Ivf {
       val drifted = current.keys.toSeq.sorted.filter { l =>
         baseline.get(l).forall(b => l2(current(l), b) > epsilon)
       }
-      if (drifted.isEmpty) return (centers, Seq.empty)
-      val newCenters = centers.map { case (l, c) =>
-        l -> (if (drifted.contains(l)) current(l) else c)
-      }
-      // re-assign the drifted region among the refreshed drifted centers:
-      // a tiny broadcast centroid table × the mapping-pruned drifted scan
-      val dc = drifted.map(l => (l, current(l))).toDF("new_list", "c")
-        .withColumn("cn2", dot(col("c"), col("c")))
-      val rowsD = graft.sinks.DirManifest.read(spark, path, st,
-          Some(drifted.map(_.toLong)))
-        .drop("list_id")
-      val w = Window.partitionBy(col("id"))
-        .orderBy(col("d2").asc, col("new_list").asc) // deterministic ties
-      val reassigned = rowsD.crossJoin(broadcast(dc))
-        // argmin ||v - c||² ≡ argmin (|c|² - 2 v·c) — |v|² is constant per row
-        .withColumn("d2", col("cn2") - lit(2.0) * dot(col("v"), col("c")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .drop("d2", "rn", "c", "cn2")
-        .withColumnRenamed("new_list", "list_id")
-      val gen = s"g-${tok()}"
-      reassigned.repartition(col("list_id")).write.mode("overwrite").partitionBy("list_id")
-        .parquet(s"$path/$gen")
-      val written = graft.sinks.DirManifest
-        .writtenParts(fs, root, gen, "list_id").toMap
-      // drifted lists repoint to their single new dir; a drifted list
-      // whose rows all re-assigned elsewhere leaves the mapping
-      val newParts = (st.parts -- drifted.map(_.toLong)) ++
-        drifted.map(_.toLong).collect {
-          case l if written.contains(l) => l -> Seq(written(l))
+      if (drifted.isEmpty) (centers, Seq.empty)
+      else {
+        val newCenters = centers.map { case (l, c) =>
+          l -> (if (drifted.contains(l)) current(l) else c)
         }
-      // refresh the baseline for the drifted lists only (undrifted lists
-      // carry their existing baseline forward — no corpus-sized pass;
-      // the drifted re-read is pruned to exactly the new dirs)
-      val keptBaseline = baseline.toSeq
-        .filter(e => current.contains(e._1) && !drifted.contains(e._1))
-        .flatMap { case (l, arr) =>
-          arr.zipWithIndex.map { case (m, p) => (l, p, m) }
-        }
-        .toDF("list_id", "pos", "m")
-      val refreshed =
-        if (written.isEmpty) keptBaseline
-        else keptBaseline.unionByName(listMeansFrame(
-          Parquets.read(spark, written.values.map(d => s"$path/$d").toSeq,
-            Map("basePath" -> s"$path/$gen"))))
-      val meansDir = s"m-${tok()}"
-      refreshed.coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/$meansDir")
-      try {
-        graft.sinks.DirManifest.commitCas(fs, root, seq,
-          graft.sinks.DirManifest.DmState(newParts,
-            st.extra + ("means" -> meansDir)))
-        return (newCenters, drifted)
-      } catch {
-        case e: graft.sinks.CommitLog.CommitConflictException =>
-          // a concurrent commit moved the corpus under the measurement —
-          // discard this round's dirs and re-measure from the new head
+        // re-assign the drifted region among the refreshed drifted centers:
+        // a tiny broadcast centroid table × the mapping-pruned drifted scan
+        val dc = drifted.map(l => (l, current(l))).toDF("new_list", "c")
+          .withColumn("cn2", dot(col("c"), col("c")))
+        val rowsD = graft.sinks.DirManifest.read(spark, path, st,
+            Some(drifted.map(_.toLong)))
+          .drop("list_id")
+        val w = Window.partitionBy(col("id"))
+          .orderBy(col("d2").asc, col("new_list").asc) // deterministic ties
+        val reassigned = rowsD.crossJoin(broadcast(dc))
+          // argmin ||v - c||² ≡ argmin (|c|² - 2 v·c) — |v|² is constant per row
+          .withColumn("d2", col("cn2") - lit(2.0) * dot(col("v"), col("c")))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1)
+          .drop("d2", "rn", "c", "cn2")
+          .withColumnRenamed("new_list", "list_id")
+        val gen = s"g-${tok()}"
+        reassigned.repartition(col("list_id")).write.mode("overwrite").partitionBy("list_id")
+          .parquet(s"$path/$gen")
+        val written = graft.sinks.DirManifest
+          .writtenParts(fs, root, gen, "list_id").toMap
+        // drifted lists repoint to their single new dir; a drifted list
+        // whose rows all re-assigned elsewhere leaves the mapping
+        val newParts = (st.parts -- drifted.map(_.toLong)) ++
+          drifted.map(_.toLong).collect {
+            case l if written.contains(l) => l -> Seq(written(l))
+          }
+        // refresh the baseline for the drifted lists only (undrifted lists
+        // carry their existing baseline forward — no corpus-sized pass;
+        // the drifted re-read is pruned to exactly the new dirs)
+        val keptBaseline = baseline.toSeq
+          .filter(e => current.contains(e._1) && !drifted.contains(e._1))
+          .flatMap { case (l, arr) =>
+            arr.zipWithIndex.map { case (m, p) => (l, p, m) }
+          }
+          .toDF("list_id", "pos", "m")
+        val refreshed =
+          if (written.isEmpty) keptBaseline
+          else keptBaseline.unionByName(listMeansFrame(
+            Parquets.read(spark, written.values.map(d => s"$path/$d").toSeq,
+              Map("basePath" -> s"$path/$gen"))))
+        val meansDir = s"m-${tok()}"
+        refreshed.coalesce(1).write.mode("overwrite")
+          .parquet(s"$path/$meansDir")
+        // a lost slot: a concurrent commit moved the corpus under the
+        // measurement — discard this round's dirs and re-measure from the
+        // new head
+        CommitLog.onConflict {
           fs.delete(new org.apache.hadoop.fs.Path(s"$path/$gen"), true)
           fs.delete(new org.apache.hadoop.fs.Path(s"$path/$meansDir"), true)
-          attempt += 1
-          if (attempt >= maxRetries) throw e
+        } {
+          graft.sinks.DirManifest.commitCas(fs, root, seq,
+            graft.sinks.DirManifest.DmState(newParts,
+              st.extra + ("means" -> meansDir)))
+        }
+        (newCenters, drifted)
       }
     }
-    (Seq.empty, Seq.empty) // unreachable
   }
 
   /** Sweep generations/baselines no retained commit references —
@@ -541,7 +522,6 @@ object Ivf {
   def ingest(spark: SparkSession, path: String, model: KMeansModel,
              batch: DataFrame, idCol: String, vecCol: String,
              planes: Option[Array[Array[Double]]] = None,
-             maxRetries: Int = 20,
              beforePublish: () => Unit = () => ()): Long = {
     val fs = fsOf(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
@@ -573,8 +553,7 @@ object Ivf {
     val touched = assigned.select("list_id").distinct()
       .collect().map(_.getInt(0)).toSeq
     var hookPending = true
-    var attempt = 0
-    while (true) {
+    CommitLog.retrying {
       val (seq, st) = requireHead(spark, path)
       // anti-join against THIS head's touched lists (a fixed quantizer
       // sends a re-delivered id back to its original list, so no match
@@ -591,27 +570,23 @@ object Ivf {
         fresh.repartition(col("list_id")).write.mode("overwrite").partitionBy("list_id")
           .parquet(s"$path/$gen")
       if (hookPending) { hookPending = false; beforePublish() }
-      if (nFresh == 0) return 0L // full re-delivery: nothing to publish
-      val written = graft.sinks.DirManifest
-        .writtenParts(fs, root, gen, "list_id")
-      val newParts = st.parts ++ written.map { case (l, d) =>
-        l -> (st.parts.getOrElse(l, Seq.empty) :+ d)
+      if (nFresh > 0) {
+        val written = graft.sinks.DirManifest
+          .writtenParts(fs, root, gen, "list_id")
+        val newParts = st.parts ++ written.map { case (l, d) =>
+          l -> (st.parts.getOrElse(l, Seq.empty) :+ d)
+        }
+        // a lost slot: a concurrent writer committed first and may have
+        // landed some of our ids, so this batch's anti-join may be stale —
+        // discard the generation and re-derive from the new head
+        CommitLog.onConflict(
+            fs.delete(new org.apache.hadoop.fs.Path(s"$path/$gen"), true)) {
+          graft.sinks.DirManifest.commitCas(fs, root, seq,
+            graft.sinks.DirManifest.DmState(newParts, st.extra))
+        }
       }
-      try {
-        graft.sinks.DirManifest.commitCas(fs, root, seq,
-          graft.sinks.DirManifest.DmState(newParts, st.extra))
-        return nFresh
-      } catch {
-        case e: graft.sinks.CommitLog.CommitConflictException =>
-          // a concurrent writer committed first: this batch's anti-join
-          // may be stale (the winner may have landed some of our ids) —
-          // discard the generation and re-derive from the new head
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/$gen"), true)
-          attempt += 1
-          if (attempt >= maxRetries) throw e
-      }
+      nFresh // 0 on a full re-delivery: nothing to publish
     }
-    -1L // unreachable
   }
 
   private val K = 10

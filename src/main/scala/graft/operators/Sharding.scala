@@ -491,14 +491,12 @@ object Sharding {
     * [[graft.sinks.ManifestMergeSink.mergeIntoManifested]]); data I/O is
     * proportional to the flagged cells' bytes, never the layout's. */
   def optimizeFlaggedManifested(spark: SparkSession, path: String,
-                                nFiles: Int, zSpace: Long,
-                                maxRetries: Int = 20): OptimizeStats = {
+                                nFiles: Int, zSpace: Long): OptimizeStats = {
     require(nFiles >= 1 && zSpace >= 1, s"nFiles=$nFiles zSpace=$zSpace")
-    import graft.sinks.DirManifest
+    import graft.sinks.{CommitLog, DirManifest}
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    while (true) {
+    CommitLog.retrying {
       val (seq, st) = DirManifest.requireHead(fs, root)
       val existing = st.parts.keySet
       val health = layoutHealth(
@@ -506,42 +504,39 @@ object Sharding {
       val flagged = health.filter(col("overlap_cnt") > 0)
         .select(col("file_id").cast("long"))
         .collect().map(_.getLong(0)).toSet // ≤ |files| — footer-stats scale
-      if (flagged.isEmpty) return OptimizeStats(Nil, Nil, Nil)
-      // transitive closure over receiving cells (see the scaladoc):
-      // promote any existing cell a rewrite-set row would land in
-      def cutIdsOf(ids: Set[Long]): Set[Long] =
-        DirManifest.read(spark, path, st, Some(ids.toSeq))
-          .select(expr(s"zkey * $nFiles div $zSpace").as("cid"))
-          .distinct().collect().map(_.getLong(0)).toSet
-      var rewrite = flagged
-      var frontier = flagged
-      while (frontier.nonEmpty) {
-        frontier = (cutIdsOf(frontier) intersect existing) diff rewrite
-        rewrite ++= frontier
-      }
-      val rows = DirManifest.read(spark, path, st, Some(rewrite.toSeq))
-        .drop("file_id")
-        .withColumn("file_id", expr(s"zkey * $nFiles div $zSpace"))
-      val gen = s"g-${java.util.UUID.randomUUID().toString.take(8)}"
-      rows.repartition(col("file_id"))
-        .sortWithinPartitions(col("file_id"), col("zkey"))
-        .write.mode("overwrite").partitionBy("file_id").parquet(s"$path/$gen")
-      val written = DirManifest.writtenParts(fs, root, gen, "file_id")
-      val newParts = (st.parts -- rewrite) ++
-        written.map { case (f, d) => f -> Seq(d) }
-      try {
-        DirManifest.commitCas(fs, root, seq,
-          DirManifest.DmState(newParts, st.extra))
-        return OptimizeStats(flagged.toSeq.sorted, rewrite.toSeq.sorted,
+      if (flagged.isEmpty) OptimizeStats(Nil, Nil, Nil)
+      else {
+        // transitive closure over receiving cells (see the scaladoc):
+        // promote any existing cell a rewrite-set row would land in
+        def cutIdsOf(ids: Set[Long]): Set[Long] =
+          DirManifest.read(spark, path, st, Some(ids.toSeq))
+            .select(expr(s"zkey * $nFiles div $zSpace").as("cid"))
+            .distinct().collect().map(_.getLong(0)).toSet
+        var rewrite = flagged
+        var frontier = flagged
+        while (frontier.nonEmpty) {
+          frontier = (cutIdsOf(frontier) intersect existing) diff rewrite
+          rewrite ++= frontier
+        }
+        val rows = DirManifest.read(spark, path, st, Some(rewrite.toSeq))
+          .drop("file_id")
+          .withColumn("file_id", expr(s"zkey * $nFiles div $zSpace"))
+        val gen = s"g-${java.util.UUID.randomUUID().toString.take(8)}"
+        rows.repartition(col("file_id"))
+          .sortWithinPartitions(col("file_id"), col("zkey"))
+          .write.mode("overwrite").partitionBy("file_id").parquet(s"$path/$gen")
+        val written = DirManifest.writtenParts(fs, root, gen, "file_id")
+        val newParts = (st.parts -- rewrite) ++
+          written.map { case (f, d) => f -> Seq(d) }
+        CommitLog.onConflict(
+            fs.delete(new org.apache.hadoop.fs.Path(s"$path/$gen"), true)) {
+          DirManifest.commitCas(fs, root, seq,
+            DirManifest.DmState(newParts, st.extra))
+        }
+        OptimizeStats(flagged.toSeq.sorted, rewrite.toSeq.sorted,
           written.map(_._1).sorted)
-      } catch {
-        case e: graft.sinks.CommitLog.CommitConflictException =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/$gen"), true)
-          attempt += 1
-          if (attempt >= maxRetries) throw e
       }
     }
-    OptimizeStats(Nil, Nil, Nil) // unreachable
   }
 
   /** q215: the TARGETED-OPTIMIZE lifecycle — day 1 z-clustered (q138's

@@ -64,6 +64,33 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
   *    atomic with the content (S3 `If-None-Match: *`), partial residue
   *    cannot exist and the grace never engages.
   *
+  * Retry contract: every client publishes through ONE loop,
+  * [[retrying]]. An attempt reads the head, derives, and CAS-appends;
+  * a lost slot starts the next attempt, at most [[MaxAttempts]] in all,
+  * and the conflict that ends the last one is rethrown. What a lost
+  * attempt leaves on disk is the client's to tidy:
+  *
+  *  - RE-DERIVE clients (the compactions and `optimizeFlaggedManifested`,
+  *    the purges, `rebucketManifested`, `applyChangesManifested`, the
+  *    IVF refits and ingest, the `LedgeredState`/`SnapshotState` folds)
+  *    built their generation from the head they lost against, so each
+  *    attempt deletes its own losing generation before the next attempt
+  *    re-derives ([[onConflict]] inside the [[retrying]] body);
+  *  - WRITE-ONCE clients (`DirManifest.writeCommit`, `Ivf.writeIndex`,
+  *    `Ivf.snapshotListMeans`) wrote data that does not depend on the
+  *    head, so a lost attempt only re-reads the head and re-appends;
+  *    their generation is deleted once, when they give up
+  *    ([[onConflict]] around [[retrying]]).
+  *    `VersionCatalog.commit` and `CurateJob` never delete theirs: an
+  *    unpublished dir is an orphan the next vacuum sweeps;
+  *  - `TableGroup.publishPins` and `VersionCatalog.vacuum` write nothing
+  *    before the CAS, so a lost attempt leaves nothing to tidy.
+  *
+  * `mergeIntoManifested` is both: a loser whose winner touched
+  * disjoint buckets re-appends the same generation (write-once), one
+  * whose inputs changed deletes it and re-merges (re-derive); either
+  * way the lost attempt counts against the same [[MaxAttempts]].
+  *
   * Scale: O(commits) tiny metadata files, read = one listing + one
   * small file; nothing here is corpus-shaped. Sinks that accumulate
   * very long histories can sweep fully-superseded files in their
@@ -76,6 +103,57 @@ object CommitLog {
     * reconcile, and publish again. */
   final class CommitConflictException(msg: String)
     extends RuntimeException(msg)
+
+  /** How many attempts [[retrying]] makes before it rethrows: the one
+    * retry limit of every commit client. A lost attempt costs a head
+    * read (plus a re-derivation for re-derive clients), so twenty
+    * bounds a loser's extra work while covering any realistic burst of
+    * concurrent writers on one log; a writer that loses twenty races
+    * in a row is starved, and surfacing that beats spinning. */
+  val MaxAttempts = 20
+
+  /** Run `body` — one attempt: read the head, derive, CAS-append —
+    * until it returns. A [[CommitConflictException]] raised anywhere in
+    * `body` is a lost attempt and starts the next one; the conflict
+    * that ends attempt [[MaxAttempts]] is rethrown. Any other exception
+    * ends the loop at once, unretried. */
+  def retrying[A](body: => A): A = {
+    var attempt = 0
+    var result = Option.empty[A]
+    while (result.isEmpty)
+      try result = Some(body)
+      catch {
+        case e: CommitConflictException =>
+          attempt += 1
+          if (attempt >= MaxAttempts) throw e
+      }
+    result.get
+  }
+
+  /** Run `body`; when it loses a slot, run `tidy` (delete what the lost
+    * attempt wrote) and rethrow the conflict. Inside a [[retrying]] body
+    * it tidies every lost attempt; around [[retrying]] it tidies once,
+    * when the loop gives up. */
+  def onConflict[A](tidy: => Unit)(body: => A): A =
+    try body
+    catch { case e: CommitConflictException => tidy; throw e }
+
+  private val End = "END"
+
+  /** A commit's text: the client's format `header`, its `body` lines and
+    * the `END` sentinel a truncated write lacks. */
+  def frame(header: String, body: Seq[String]): String =
+    (header +: body :+ End).mkString("\n")
+
+  /** The body lines of a commit [[frame]]d under `header`; None for
+    * another format or a truncated write. Each client checks its own
+    * body lines. */
+  def unframe(header: String, content: String): Option[Seq[String]] = {
+    val ls = content.linesIterator.toSeq
+    if (ls.headOption.contains(header) && ls.lastOption.contains(End))
+      Some(ls.drop(1).dropRight(1))
+    else None
+  }
 
   private[graft] val Dir = "_commits"
 

@@ -54,29 +54,24 @@ object DirManifest {
                            extra: Map[String, String] = Map.empty)
 
   private val Header = "graft-dirmanifest-v1"
-  private val End = "END"
 
-  private[graft] def isValid(content: String): Boolean = {
-    val ls = content.linesIterator.toSeq
-    ls.headOption.contains(Header) && ls.lastOption.contains(End) &&
-      ls.drop(1).dropRight(1).forall { l =>
-        l.split('\t') match {
-          case Array("P", p, d) => p.toLongOption.isDefined && d.nonEmpty
-          case Array("X", k, v) => k.nonEmpty && v.nonEmpty
-          case _ => false
-        }
+  private[graft] def isValid(content: String): Boolean =
+    CommitLog.unframe(Header, content).exists(_.forall { l =>
+      l.split('\t') match {
+        case Array("P", p, d) => p.toLongOption.isDefined && d.nonEmpty
+        case Array("X", k, v) => k.nonEmpty && v.nonEmpty
+        case _ => false
       }
-  }
+    })
 
-  private def render(st: DmState): String =
-    (Header +:
-      (st.parts.toSeq.sortBy(_._1).flatMap { case (p, dirs) =>
+  private[graft] def render(st: DmState): String =
+    CommitLog.frame(Header,
+      st.parts.toSeq.sortBy(_._1).flatMap { case (p, dirs) =>
         dirs.map(d => s"P\t$p\t$d")
-      } ++ st.extra.toSeq.sortBy(_._1).map { case (k, v) => s"X\t$k\t$v" }) :+
-      End).mkString("\n")
+      } ++ st.extra.toSeq.sortBy(_._1).map { case (k, v) => s"X\t$k\t$v" })
 
   private def parse(content: String): DmState = {
-    val body = content.linesIterator.toSeq.drop(1).dropRight(1)
+    val body = CommitLog.unframe(Header, content).get
     val parts = body.collect { case l if l.startsWith("P\t") =>
       val Array(_, p, d) = l.split('\t'); (p.toLong, d)
     }
@@ -171,39 +166,30 @@ object DirManifest {
     * over), otherwise the written dirs replace the whole mapping. The
     * caller arranges the rows (distribution, in-cell order). A conflict
     * re-reads the head and re-publishes — the generation is written
-    * once; after `maxRetries` conflicts the generation is deleted and
-    * the conflict rethrown. Returns the written (value, dir) pairs. */
+    * once; when [[CommitLog.retrying]] gives up the generation is
+    * deleted and the conflict rethrown. Returns the written (value, dir)
+    * pairs. */
   def writeCommit(df: DataFrame, root: String, partCol: String,
-                  append: Boolean,
-                  maxRetries: Int = 20): Seq[(Long, String)] = {
+                  append: Boolean): Seq[(Long, String)] = {
     val rootP = new Path(root)
     val fs = fsOf(df.sparkSession, rootP)
     val gen = newGen()
     df.write.mode("overwrite").partitionBy(partCol).parquet(s"$root/$gen")
     val written = writtenParts(fs, rootP, gen, partCol)
-    var attempt = 0
-    while (true) {
-      val h = head(fs, rootP)
-      val base =
-        if (append) h.map(_._2).getOrElse(DmState(Map.empty))
-        else DmState(Map.empty)
-      val parts = base.parts ++ written.map { case (v, d) =>
-        v -> (base.parts.getOrElse(v, Seq.empty) :+ d)
-      }
-      try {
+    CommitLog.onConflict(fs.delete(new Path(rootP, gen), true)) {
+      CommitLog.retrying {
+        val h = head(fs, rootP)
+        val base =
+          if (append) h.map(_._2).getOrElse(DmState(Map.empty))
+          else DmState(Map.empty)
+        val parts = base.parts ++ written.map { case (v, d) =>
+          v -> (base.parts.getOrElse(v, Seq.empty) :+ d)
+        }
         commitCas(fs, rootP, h.map(_._1).getOrElse(0L),
           DmState(parts, base.extra))
-        return written
-      } catch {
-        case e: CommitLog.CommitConflictException =>
-          attempt += 1
-          if (attempt >= maxRetries) {
-            fs.delete(new Path(rootP, gen), true)
-            throw e
-          }
       }
     }
-    written // unreachable
+    written
   }
 
   /** What a [[compact]] pass did: the partition values it rewrote and
@@ -225,22 +211,21 @@ object DirManifest {
     * reference never compacts: it leaves one file per batch (SURVEY
     * §2A item 3). */
   def compact(spark: SparkSession, root: String, partCol: String,
-              targetBytes: Long, maxRetries: Int = 20): CompactStats = {
+              targetBytes: Long): CompactStats = {
     require(targetBytes > 0, s"targetBytes=$targetBytes must be positive")
     val rootP = new Path(root)
     val fs = fsOf(spark, rootP)
     def targetOf(bytes: Long) = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
-    var attempt = 0
-    while (true) {
+    def filesOf(dirs: Seq[String]) = dirs.flatMap { d =>
+      val p = new Path(rootP, d)
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).filter { s =>
+        val n = s.getPath.getName
+        s.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.toSeq
+    }
+    CommitLog.retrying {
       val (seq, st) = requireHead(fs, rootP)
-      def filesOf(dirs: Seq[String]) = dirs.flatMap { d =>
-        val p = new Path(rootP, d)
-        if (!fs.exists(p)) Seq.empty
-        else fs.listStatus(p).filter { s =>
-          val n = s.getPath.getName
-          s.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }.toSeq
-      }
       val stats = st.parts.map { case (v, dirs) =>
         val fls = filesOf(dirs)
         v -> (fls.length.toLong, fls.map(_.getLen).sum)
@@ -249,46 +234,42 @@ object DirManifest {
       val flagged = stats.collect {
         case (v, (nf, bytes)) if nf > targetOf(bytes) => v
       }.toSeq.sorted
-      if (flagged.isEmpty) return CompactStats(Seq.empty, before, before)
-      val gen = newGen()
-      // ONE read + ONE partitionBy write for every flagged value (a
-      // per-value read/repartition/write loop paid a schema job, an
-      // exchange job and a write job PER VALUE — ~3 jobs × 47 lists
-      // measured on q213). Each flagged value owns `target` consecutive
-      // shuffle partitions starting at its offset; a row lands in slot
-      // `xxhash64(row) mod target` of its value (deterministic from the
-      // content — never rand() under retries), and the partition id is
-      // taken as given (no AQE coalescing, no hash collisions), so no
-      // two slots share a task: a value lands in one file per non-empty
-      // slot, never more than its target.
-      val ss = spark; import ss.implicits._
-      val targets = flagged.map(v => targetOf(stats(v)._2))
-      val offsets = targets.scanLeft(0L)(_ + _)
-      val slotsOf = flagged.indices
-        .map(i => (flagged(i), targets(i), offsets(i)))
-        .toDF(partCol, "__slots", "__offset")
-      val data = read(spark, root, st, Some(flagged))
-      data.join(broadcast(slotsOf), Seq(partCol))
-        .withColumn("__pid", (col("__offset") +
-          pmod(xxhash64(data.columns.map(col): _*), col("__slots"))).cast("int"))
-        .repartitionById(offsets.last.toInt, col("__pid"))
-        .drop("__pid", "__slots", "__offset")
-        .write.mode("overwrite").partitionBy(partCol)
-        .parquet(s"$root/$gen")
-      val newParts = st.parts ++
-        flagged.map(v => v -> Seq(s"$gen/$partCol=$v"))
-      try {
-        commitCas(fs, rootP, seq, DmState(newParts, st.extra))
+      if (flagged.isEmpty) CompactStats(Seq.empty, before, before)
+      else {
+        val gen = newGen()
+        // ONE read + ONE partitionBy write for every flagged value (a
+        // per-value read/repartition/write loop paid a schema job, an
+        // exchange job and a write job PER VALUE — ~3 jobs × 47 lists
+        // measured on q213). Each flagged value owns `target` consecutive
+        // shuffle partitions starting at its offset; a row lands in slot
+        // `xxhash64(row) mod target` of its value (deterministic from the
+        // content — never rand() under retries), and the partition id is
+        // taken as given (no AQE coalescing, no hash collisions), so no
+        // two slots share a task: a value lands in one file per non-empty
+        // slot, never more than its target.
+        val ss = spark; import ss.implicits._
+        val targets = flagged.map(v => targetOf(stats(v)._2))
+        val offsets = targets.scanLeft(0L)(_ + _)
+        val slotsOf = flagged.indices
+          .map(i => (flagged(i), targets(i), offsets(i)))
+          .toDF(partCol, "__slots", "__offset")
+        val data = read(spark, root, st, Some(flagged))
+        data.join(broadcast(slotsOf), Seq(partCol))
+          .withColumn("__pid", (col("__offset") +
+            pmod(xxhash64(data.columns.map(col): _*), col("__slots"))).cast("int"))
+          .repartitionById(offsets.last.toInt, col("__pid"))
+          .drop("__pid", "__slots", "__offset")
+          .write.mode("overwrite").partitionBy(partCol)
+          .parquet(s"$root/$gen")
+        val newParts = st.parts ++
+          flagged.map(v => v -> Seq(s"$gen/$partCol=$v"))
+        CommitLog.onConflict(fs.delete(new Path(rootP, gen), true)) {
+          commitCas(fs, rootP, seq, DmState(newParts, st.extra))
+        }
         val after = newParts.values.map(filesOf(_).length.toLong).sum
-        return CompactStats(flagged, before, after)
-      } catch {
-        case e: CommitLog.CommitConflictException =>
-          fs.delete(new Path(rootP, gen), true)
-          attempt += 1
-          if (attempt >= maxRetries) throw e
+        CompactStats(flagged, before, after)
       }
     }
-    CompactStats(Seq.empty, 0L, 0L) // unreachable
   }
 
   /** Sweep generation/pointer dirs no RETAINED commit references and

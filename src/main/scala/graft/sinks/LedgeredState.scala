@@ -58,34 +58,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object LedgeredState {
 
   private val Header = "graft-ledgered-v1"
-  private val End = "END"
 
-  private final case class State(batches: Set[String],
+  private[graft] final case class State(batches: Set[String],
                                  parts: Map[String, String])
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def isValid(content: String): Boolean = {
-    val ls = content.linesIterator.toSeq
-    ls.headOption.contains(Header) && ls.lastOption.contains(End) &&
-      ls.drop(1).dropRight(1).forall { l =>
-        l.split('\t') match {
-          case Array("B", b) => b.nonEmpty
-          case Array("P", p, d) => p.nonEmpty && d.nonEmpty
-          case _ => false
-        }
+  private def isValid(content: String): Boolean =
+    CommitLog.unframe(Header, content).exists(_.forall { l =>
+      l.split('\t') match {
+        case Array("B", b) => b.nonEmpty
+        case Array("P", p, d) => p.nonEmpty && d.nonEmpty
+        case _ => false
       }
-  }
+    })
 
-  private def render(st: State): String =
-    (Header +:
-      (st.batches.toSeq.sorted.map(b => s"B\t$b") ++
-        st.parts.toSeq.sortBy(_._1).map { case (p, d) => s"P\t$p\t$d" }) :+
-      End).mkString("\n")
+  private[graft] def render(st: State): String =
+    CommitLog.frame(Header,
+      st.batches.toSeq.sorted.map(b => s"B\t$b") ++
+        st.parts.toSeq.sortBy(_._1).map { case (p, d) => s"P\t$p\t$d" })
 
   private def parse(content: String): State = {
-    val body = content.linesIterator.toSeq.drop(1).dropRight(1)
+    val body = CommitLog.unframe(Header, content).get
     State(
       body.collect { case l if l.startsWith("B\t") => l.drop(2) }.toSet,
       body.collect { case l if l.startsWith("P\t") =>
@@ -155,9 +150,9 @@ object LedgeredState {
 
   /** Write `parts` as a generation and CAS-publish at `seq + 1`; sweep
     * past the retention margin on success. Throws
-    * [[CommitLog.CommitConflictException]] on a lost slot (the
-    * generation dir is left for the next sweep — the caller retries
-    * with a FRESH derivation). */
+    * [[CommitLog.CommitConflictException]] on a lost slot, after
+    * deleting the losing generation dir (the caller retries with a
+    * FRESH derivation). */
   private def writeAndPublish(spark: SparkSession, path: String, seq: Long,
                               prev: Option[State], batchId: String,
                               parts: Seq[(String, DataFrame)],
@@ -198,11 +193,8 @@ object LedgeredState {
     val next = State(
       prev.map(_.batches).getOrElse(Set.empty) + batchId,
       parts.map { case (name, _) => name -> s"$gen/$name" }.toMap)
-    try CommitLog.tryAppend(fs, root, seq, render(next), isValid)
-    catch {
-      case e: CommitLog.CommitConflictException =>
-        fs.delete(new Path(root, gen), true) // losing derivation's residue
-        throw e
+    CommitLog.onConflict(fs.delete(new Path(root, gen), true)) {
+      CommitLog.tryAppend(fs, root, seq, render(next), isValid)
     }
     // sweep commits below the retention margin, then every generation
     // dir no surviving commit references — superseded beyond the
@@ -245,26 +237,19 @@ object LedgeredState {
     * duplicate delivery of the SAME batch resolves to one fold).
     * `beforePublish` is the q203/q209/q214 contention seam. */
   def commitFold(spark: SparkSession, path: String, batchId: String,
-                 maxRetries: Int = 20,
                  beforePublish: () => Unit = () => (),
                  retainCommits: Int = 2)(
                  derive: SnapshotReader => Seq[(String, DataFrame)]): Boolean = {
     var hookPending = true
-    var attempt = 0
-    while (true) {
+    CommitLog.retrying {
       val (seq, prev) = headState(spark, path)
-      if (prev.exists(_.batches.contains(batchId))) return false
-      val parts = derive(new SnapshotReader(spark, path, prev))
-      if (hookPending) { hookPending = false; beforePublish() }
-      try {
+      if (prev.exists(_.batches.contains(batchId))) false
+      else {
+        val parts = derive(new SnapshotReader(spark, path, prev))
+        if (hookPending) { hookPending = false; beforePublish() }
         writeAndPublish(spark, path, seq, prev, batchId, parts, retainCommits)
-        return true
-      } catch {
-        case e: CommitLog.CommitConflictException =>
-          attempt += 1
-          if (attempt >= maxRetries) throw e
+        true
       }
     }
-    false // unreachable
   }
 }

@@ -75,7 +75,6 @@ object ManifestMergeSink {
                                  txns: Map[String, Long] = Map.empty)
 
   private val Header = "graft-merge-manifest-v1"
-  private val End = "END"
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -94,10 +93,8 @@ object ManifestMergeSink {
         "an empty or tabbed id renders a line isValid rejects, failing " +
         "only AFTER the generation dir was written)")
 
-  private[sinks] def isValid(content: String): Boolean = {
-    val ls = content.linesIterator.toSeq
-    ls.headOption.contains(Header) && ls.lastOption.contains(End) && {
-      val body = ls.drop(1).dropRight(1)
+  private[sinks] def isValid(content: String): Boolean =
+    CommitLog.unframe(Header, content).exists { body =>
       body.count(_.startsWith("S\t")) == 1 &&
         body.count(_.startsWith("N\t")) == 1 &&
         body.forall { l =>
@@ -110,16 +107,15 @@ object ManifestMergeSink {
           }
         }
     }
-  }
 
-  private def render(st: ManifestState): String =
-    (Seq(Header, s"S\t${st.schema.json}", s"N\t${st.nBuckets}") ++
-      st.mapping.toSeq.sortBy(_._1).map { case (b, d) => s"B\t$b\t$d" } ++
-      st.txns.toSeq.sorted.map { case (id, b) => s"T\t$id\t$b" } :+
-      End).mkString("\n")
+  private[graft] def render(st: ManifestState): String =
+    CommitLog.frame(Header,
+      Seq(s"S\t${st.schema.json}", s"N\t${st.nBuckets}") ++
+        st.mapping.toSeq.sortBy(_._1).map { case (b, d) => s"B\t$b\t$d" } ++
+        st.txns.toSeq.sorted.map { case (id, b) => s"T\t$id\t$b" })
 
   private def parse(content: String): ManifestState = {
-    val body = content.linesIterator.toSeq.drop(1).dropRight(1)
+    val body = CommitLog.unframe(Header, content).get
     val schema = body.collectFirst { case l if l.startsWith("S\t") =>
       org.apache.spark.sql.types.DataType.fromJson(l.drop(2))
         .asInstanceOf[StructType]
@@ -392,9 +388,10 @@ object ManifestMergeSink {
   /** Merge `updates` into the manifest snapshot at `target` — same
     * semantics and counts as every [[MergeSink]] layout, published
     * through one commit-file create. Retries contention per the
-    * disjoint/overlap rule above; after `maxRetries` losses the last
-    * conflict propagates (loudly — the caller decides whether to back
-    * off and re-run).
+    * disjoint/overlap rule above; a repoint and a re-merge each count as
+    * one lost attempt of [[CommitLog.retrying]], and when it gives up the
+    * landed generation is deleted and the last conflict propagates
+    * (loudly — the caller decides whether to back off and re-run).
     *
     * `recomputeUpdates` (optional): a snapshot-state → update-set
     * function for callers whose update set is DERIVED from the snapshot
@@ -436,7 +433,6 @@ object ManifestMergeSink {
                           fields: Seq[String], nBuckets: Int,
                           orderCol: Option[String] = None,
                           updatedAtCol: String = "updatedAt",
-                          maxRetries: Int = 20,
                           beforePublish: () => Unit = () => (),
                           recomputeUpdates: Option[ManifestState] => DataFrame = null,
                           txn: Option[(String, Long)] = None,
@@ -469,135 +465,142 @@ object ManifestMergeSink {
     // and before its first publish attempt, so a spec can interleave a
     // competing committer deterministically
     var hookPending = true
-    var attempt = 0
-    while (true) {
+    // this writer's generation while it is written but unpublished: a
+    // lost publish leaves it for the next attempt to repoint or drop
+    var landed: Option[Landed] = None
+    def drop(l: Landed): Unit = {
+      fs.delete(new Path(root, l.gdir), true)
+      landed = None
+    }
+    def publish(l: Landed, pubSeq: Long,
+                pubState: Option[ManifestState]): MergeSink.MergeStats = {
+      val baseMapping = pubState.map(_.mapping).getOrElse(Map.empty)
+      val baseSchema = pubState.map(_.schema.fields.toSeq)
+        .getOrElse(Seq.empty)
+      val unionSchema = StructType(baseSchema ++
+        l.schema.fields.filterNot(f => baseSchema.exists(_.name == f.name)))
+      val newMapping = baseMapping ++
+        l.touched.map(b => b -> s"${l.gdir}/pb=$b")
+      val newTxns = pubState.map(_.txns).getOrElse(Map.empty) ++ txn
+      CommitLog.tryAppend(fs, root, pubSeq,
+        render(ManifestState(unionSchema, l.n, newMapping, newTxns)),
+        isValid)
+      MergeSink.statsOf(l.obs)
+    }
+    def mergeAndPublish(): MergeSink.MergeStats = {
       val head = headState(spark, target)
       val seq = head.map(_._1).getOrElse(0L)
       val st = head.map(_._2)
-      if (absorbed(st)) return MergeSink.MergeStats(0L, 0L, 0L)
-      checkSpanFence(st, txn, txnFence, target)
-      // `nBuckets` sizes the FIRST commit only; once a snapshot exists
-      // the head's count is authoritative, so a writer configured before
-      // a rebucket night keeps working instead of throwing (the bucket
-      // count stays immutable per snapshot VERSION — rebucketManifested
-      // is the only operation that changes it, in its own commit)
-      val n = st.map(_.nBuckets).getOrElse(nBuckets)
-      val uniqCur =
-        if (recomputeUpdates == null) uniq
-        else folded(recomputeUpdates(st)).localCheckpoint(true)
-      // one exchange-free job (Sparks.distinctLongs) — ≤ nBuckets values
-      val touched = graft.Sparks.distinctLongs(uniqCur, pb(col(key), n))
-      val (targetDf, replaced) = st match {
-        case Some(s) => openDirs(spark, target, s, touched)
-        case None => (MergeSink.emptyTarget(spark, uniqCur, key, fields,
-          updatedAtCol), None)
+      if (absorbed(st)) MergeSink.MergeStats(0L, 0L, 0L)
+      else {
+        checkSpanFence(st, txn, txnFence, target)
+        // `nBuckets` sizes the FIRST commit only; once a snapshot exists
+        // the head's count is authoritative, so a writer configured before
+        // a rebucket night keeps working instead of throwing (the bucket
+        // count stays immutable per snapshot VERSION — rebucketManifested
+        // is the only operation that changes it, in its own commit)
+        val n = st.map(_.nBuckets).getOrElse(nBuckets)
+        val uniqCur =
+          if (recomputeUpdates == null) uniq
+          else folded(recomputeUpdates(st)).localCheckpoint(true)
+        // one exchange-free job (Sparks.distinctLongs) — ≤ nBuckets values
+        val touched = graft.Sparks.distinctLongs(uniqCur, pb(col(key), n))
+        val (targetDf, replaced) = st match {
+          case Some(s) => openDirs(spark, target, s, touched)
+          case None => (MergeSink.emptyTarget(spark, uniqCur, key, fields,
+            updatedAtCol), None)
+        }
+        val (merged, obs) = MergeSink.mergePlanObserved(targetDf, uniqCur, key,
+          MergeSink.evolvedFields(targetDf, key, fields, updatedAtCol),
+          updatedAtCol)
+        val gdir = s"g-${tok()}"
+        // hash-distribute by the bucket column before the partitioned
+        // write (guide §6; Iceberg's write.distribution-mode=hash): the
+        // merge join leaves rows partitioned by KEY hash, so every write
+        // task would otherwise hold rows of most buckets and spray one
+        // small file per (task, bucket) — tasks × buckets files whose
+        // footer/open cost every later bucket read re-pays. Repartitioned,
+        // each bucket's rows land in exactly one file.
+        // `distributeByBucket = false` is the q221 gate's escape hatch: it
+        // reproduces the legacy tasks×buckets fan-out so compaction still
+        // has a fragmented layout to repair.
+        val toWrite = merged.withColumn("pb", pb(col(key), n))
+        (if (distributeByBucket) toWrite.repartition(col("pb")) else toWrite)
+          .write.options(MergeSink.dictionaryOptions(replaced, key))
+          .mode("overwrite").partitionBy("pb")
+          .parquet(new Path(root, gdir).toString)
+        val l = Landed(gdir, n, touched,
+          touched.map(b => b -> st.flatMap(_.mapping.get(b))).toMap,
+          merged.schema, obs)
+        landed = Some(l)
+        if (hookPending) { hookPending = false; beforePublish() }
+        publish(l, seq, st)
       }
-      val (merged, obs) = MergeSink.mergePlanObserved(targetDf, uniqCur, key,
-        MergeSink.evolvedFields(targetDf, key, fields, updatedAtCol),
-        updatedAtCol)
-      val gdir = s"g-${tok()}"
-      // hash-distribute by the bucket column before the partitioned
-      // write (guide §6; Iceberg's write.distribution-mode=hash): the
-      // merge join leaves rows partitioned by KEY hash, so every write
-      // task would otherwise hold rows of most buckets and spray one
-      // small file per (task, bucket) — tasks × buckets files whose
-      // footer/open cost every later bucket read re-pays. Repartitioned,
-      // each bucket's rows land in exactly one file.
-      // `distributeByBucket = false` is the q221 gate's escape hatch: it
-      // reproduces the legacy tasks×buckets fan-out so compaction still
-      // has a fragmented layout to repair.
-      val toWrite = merged.withColumn("pb", pb(col(key), n))
-      (if (distributeByBucket) toWrite.repartition(col("pb")) else toWrite)
-        .write.options(MergeSink.dictionaryOptions(replaced, key))
-        .mode("overwrite").partitionBy("pb")
-        .parquet(new Path(root, gdir).toString)
-      val mySchema = merged.schema
-      val touchedAtRead = touched.map(b =>
-        b -> st.flatMap(_.mapping.get(b))).toMap
-      if (hookPending) { hookPending = false; beforePublish() }
+    }
 
-      // publish loop: metadata-only retries while winners stay disjoint
-      var pubSeq = seq
-      var pubState = st
-      var done = false
-      var stats: MergeSink.MergeStats = null
-      while (!done) {
-        val baseMapping = pubState.map(_.mapping).getOrElse(Map.empty)
-        val baseSchema = pubState.map(_.schema.fields.toSeq)
-          .getOrElse(Seq.empty)
-        val unionSchema = StructType(baseSchema ++
-          mySchema.fields.filterNot(f => baseSchema.exists(_.name == f.name)))
-        val newMapping = baseMapping ++
-          touched.map(b => b -> s"$gdir/pb=$b")
-        val newTxns = pubState.map(_.txns).getOrElse(Map.empty) ++ txn
-        try {
-          CommitLog.tryAppend(fs, root, pubSeq,
-            render(ManifestState(unionSchema, n, newMapping, newTxns)),
-            isValid)
-          stats = MergeSink.statsOf(obs)
-          done = true
-        } catch {
-          case e: CommitLog.CommitConflictException =>
-            attempt += 1
-            if (attempt >= maxRetries) {
-              fs.delete(new Path(root, gdir), true)
-              throw e
-            }
+    CommitLog.onConflict(landed.foreach(drop)) {
+      CommitLog.retrying {
+        landed match {
+          case None => mergeAndPublish()
+          case Some(l) =>
+            // the last publish lost the slot: judge the winner's head
             val newHead = headState(spark, target)
             val nh = newHead.map(_._2)
             // a racing replay of THIS batch already landed (duplicate
             // restart): this instance's work is redundant — no-op
-            if (absorbed(nh)) {
-              fs.delete(new Path(root, gdir), true)
-              return MergeSink.MergeStats(0L, 0L, 0L)
-            }
-            // a concurrent same-pipeline instance advanced the
-            // watermark past our span's origin: even a disjoint-bucket
-            // repoint would publish stale-span data under the newer
-            // mark — surface it for a recompute, never a repoint
-            try checkSpanFence(nh, txn, txnFence, target)
-            catch { case fe: StaleSpanException =>
-              fs.delete(new Path(root, gdir), true); throw fe }
-            // a winner that evolved a same-named column to a DIFFERENT
-            // type is never disjoint: a name-only schema union would
-            // repoint this writer's parquet under the winner's type and
-            // schema-pinned reads would fail at read time instead of
-            // publish — treat it as an overlap (re-merge reads the
-            // winner's schema; a genuine type clash then fails loudly
-            // at the merge plan's coalesce, at publish time)
-            val typesAgree = nh.forall(s => mySchema.fields.forall(f =>
-              s.schema.fields.find(_.name == f.name)
-                .forall(_.dataType == f.dataType)))
-            // inputs unchanged ⇔ the winner left every bucket I read
-            // alone AND agrees on the bucket count (a first-commit race
-            // can disagree — then the outer re-read fails loudly)
-            val myInputsUnchanged = typesAgree &&
-              nh.forall(_.nBuckets == n) &&
-              touchedAtRead.forall { case (b, d) =>
-                nh.flatMap(_.mapping.get(b)) == d
+            if (absorbed(nh)) { drop(l); MergeSink.MergeStats(0L, 0L, 0L) }
+            else {
+              // a concurrent same-pipeline instance advanced the
+              // watermark past our span's origin: even a disjoint-bucket
+              // repoint would publish stale-span data under the newer
+              // mark — surface it for a recompute, never a repoint
+              try checkSpanFence(nh, txn, txnFence, target)
+              catch { case fe: StaleSpanException => drop(l); throw fe }
+              // a winner that evolved a same-named column to a DIFFERENT
+              // type is never disjoint: a name-only schema union would
+              // repoint this writer's parquet under the winner's type and
+              // schema-pinned reads would fail at read time instead of
+              // publish — treat it as an overlap (re-merge reads the
+              // winner's schema; a genuine type clash then fails loudly
+              // at the merge plan's coalesce, at publish time)
+              val typesAgree = nh.forall(s => l.schema.fields.forall(f =>
+                s.schema.fields.find(_.name == f.name)
+                  .forall(_.dataType == f.dataType)))
+              // inputs unchanged ⇔ the winner left every bucket I read
+              // alone AND agrees on the bucket count (a first-commit race
+              // can disagree — then the re-merge's read fails loudly)
+              val myInputsUnchanged = typesAgree &&
+                nh.forall(_.nBuckets == l.n) &&
+                l.touchedAtRead.forall { case (b, d) =>
+                  nh.flatMap(_.mapping.get(b)) == d
+                }
+              // conflictRepoint=false: the caller's recomputeUpdates reads
+              // state BEYOND its output's touched buckets (whole-index
+              // derivations — near-dup / entity inductions probe every
+              // bucket's content), so a winner in a disjoint bucket still
+              // changes the derivation's input: every conflict must
+              // re-derive, never repoint
+              if (conflictRepoint && myInputsUnchanged)
+                // winner(s) touched disjoint buckets: my merge result is
+                // still exact — repoint against the new head, data as-is
+                publish(l, newHead.map(_._1).getOrElse(0L), nh)
+              else {
+                // overlap: my inputs changed — discard and re-merge
+                drop(l)
+                mergeAndPublish()
               }
-            // conflictRepoint=false: the caller's recomputeUpdates reads
-            // state BEYOND its output's touched buckets (whole-index
-            // derivations — near-dup / entity inductions probe every
-            // bucket's content), so a winner in a disjoint bucket still
-            // changes the derivation's input: every conflict must
-            // re-derive, never repoint
-            if (conflictRepoint && myInputsUnchanged) {
-              // winner(s) touched disjoint buckets: my merge result is
-              // still exact — repoint against the new head, data as-is
-              pubSeq = newHead.map(_._1).getOrElse(0L)
-              pubState = nh
-            } else {
-              // overlap: my inputs changed — discard and re-merge
-              fs.delete(new Path(root, gdir), true)
-              done = true // break to the outer re-merge loop
             }
         }
       }
-      if (stats != null) return stats
     }
-    null // unreachable
   }
+
+  /** A [[mergeIntoManifested]] generation written but not yet published:
+    * its dir, bucket count and touched buckets, the mapping it read for
+    * those buckets, the merged schema, and the merge's counts. */
+  private final case class Landed(gdir: String, n: Int, touched: Seq[Long],
+                                  touchedAtRead: Map[Long, Option[String]],
+                                  schema: StructType, obs: Observation)
 
   final case class ApplyStats(merge: MergeSink.MergeStats, nDeleted: Long)
 
@@ -664,7 +667,6 @@ object ManifestMergeSink {
                              fields: Seq[String], nBuckets: Int,
                              changeCol: String = "_change",
                              txn: Option[(String, Long)] = None,
-                             maxRetries: Int = 20,
                              txnFence: Option[Long] = None,
                              updatesUnique: Boolean = false): ApplyStats = {
     require(nBuckets >= 1, s"nBuckets=$nBuckets must be positive")
@@ -687,75 +689,74 @@ object ManifestMergeSink {
     lazy val delKeys = changes
       .filter(col(changeCol) === "delete" && col(key).isNotNull)
       .select(col(key)).distinct().localCheckpoint(true)
-    var attempt = 0
-    while (true) {
+    CommitLog.retrying {
       val head = headState(spark, target)
       val seq = head.map(_._1).getOrElse(0L)
       val st = head.map(_._2)
-      if (absorbed(st)) return ApplyStats(MergeSink.MergeStats(0L, 0L, 0L), 0L)
-      checkSpanFence(st, txn, txnFence, target)
-      // first-commit sizing only — the head's count is authoritative
-      // once a snapshot exists (see mergeIntoManifested)
-      val n = st.map(_.nBuckets).getOrElse(nBuckets)
-      // one exchange-free job (Sparks.distinctLongs) — ≤ nBuckets values
-      val touched = graft.Sparks.distinctLongs(
-        uniq.select(pb(col(key), n).as("pb"))
-          .union(delKeys.select(pb(col(key), n).as("pb"))), col("pb"))
-      val obsBefore = Observation()
-      val obsAfter = Observation()
-      val (replacedDf, replaced) = st match {
-        case Some(s) => openDirs(spark, target, s, touched)
-        case None => (MergeSink.emptyTarget(spark, uniq, key, fields,
-          "updatedAt"), None)
-      }
-      val targetDf = replacedDf.observe(obsBefore, count(lit(1)).as("n"))
-        .join(delKeys, Seq(key), "left_anti")
-        .observe(obsAfter, count(lit(1)).as("n"))
-      val (merged, obs) = MergeSink.mergePlanObserved(targetDf, uniq, key,
-        MergeSink.evolvedFields(targetDf, key, fields, "updatedAt"),
-        "updatedAt")
-      val gdir = s"g-${tok()}"
-      // hash-distribute by the bucket column before the partitioned
-      // write (guide §6; Iceberg's write.distribution-mode=hash): the
-      // merge join leaves rows partitioned by KEY hash, so every write
-      // task would otherwise hold rows of most buckets and spray one
-      // small file per (task, bucket) — tasks × buckets files whose
-      // footer/open cost every later bucket read re-pays. Repartitioned,
-      // each bucket's rows land in exactly one file.
-      merged.withColumn("pb", pb(col(key), n))
-        .repartition(col("pb"))
-        .write.options(MergeSink.dictionaryOptions(replaced, key))
-        .mode("overwrite").partitionBy("pb")
-        .parquet(new Path(root, gdir).toString)
-      val written = fs.listStatus(new Path(root, gdir))
-        .filter(_.getPath.getName.startsWith("pb="))
-        .map(_.getPath.getName.stripPrefix("pb=").toLong).toSet
-      val baseMapping = st.map(_.mapping).getOrElse(Map.empty)
-      val baseSchema = st.map(_.schema.fields.toSeq).getOrElse(Seq.empty)
-      val mySchema = merged.schema
-      val unionSchema = StructType(baseSchema ++
-        mySchema.fields.filterNot(f => baseSchema.exists(_.name == f.name)))
-      val newMapping = (baseMapping -- touched) ++
-        touched.filter(written).map(b => b -> s"$gdir/pb=$b")
-      val newTxns = st.map(_.txns).getOrElse(Map.empty) ++ txn
-      try {
-        CommitLog.tryAppend(fs, root, seq,
-          render(ManifestState(unionSchema, n, newMapping, newTxns)),
-          isValid)
-        return ApplyStats(MergeSink.statsOf(obs),
+      // a racing duplicate of the same txn is caught here on the retry
+      if (absorbed(st)) ApplyStats(MergeSink.MergeStats(0L, 0L, 0L), 0L)
+      else {
+        checkSpanFence(st, txn, txnFence, target)
+        // first-commit sizing only — the head's count is authoritative
+        // once a snapshot exists (see mergeIntoManifested)
+        val n = st.map(_.nBuckets).getOrElse(nBuckets)
+        // one exchange-free job (Sparks.distinctLongs) — ≤ nBuckets values
+        val touched = graft.Sparks.distinctLongs(
+          uniq.select(pb(col(key), n).as("pb"))
+            .union(delKeys.select(pb(col(key), n).as("pb"))), col("pb"))
+        val obsBefore = Observation()
+        val obsAfter = Observation()
+        val (replacedDf, replaced) = st match {
+          case Some(s) => openDirs(spark, target, s, touched)
+          case None => (MergeSink.emptyTarget(spark, uniq, key, fields,
+            "updatedAt"), None)
+        }
+        val targetDf = replacedDf.observe(obsBefore, count(lit(1)).as("n"))
+          .join(delKeys, Seq(key), "left_anti")
+          .observe(obsAfter, count(lit(1)).as("n"))
+        val (merged, obs) = MergeSink.mergePlanObserved(targetDf, uniq, key,
+          MergeSink.evolvedFields(targetDf, key, fields, "updatedAt"),
+          "updatedAt")
+        val gdir = s"g-${tok()}"
+        // hash-distribute by the bucket column before the partitioned
+        // write (guide §6; Iceberg's write.distribution-mode=hash): the
+        // merge join leaves rows partitioned by KEY hash, so every write
+        // task would otherwise hold rows of most buckets and spray one
+        // small file per (task, bucket) — tasks × buckets files whose
+        // footer/open cost every later bucket read re-pays. Repartitioned,
+        // each bucket's rows land in exactly one file.
+        merged.withColumn("pb", pb(col(key), n))
+          .repartition(col("pb"))
+          .write.options(MergeSink.dictionaryOptions(replaced, key))
+          .mode("overwrite").partitionBy("pb")
+          .parquet(new Path(root, gdir).toString)
+        val baseMapping = st.map(_.mapping).getOrElse(Map.empty)
+        val baseSchema = st.map(_.schema.fields.toSeq).getOrElse(Seq.empty)
+        val mySchema = merged.schema
+        val unionSchema = StructType(baseSchema ++
+          mySchema.fields.filterNot(f => baseSchema.exists(_.name == f.name)))
+        // a bucket emptied by deletes is not written: it leaves the mapping
+        val newMapping = (baseMapping -- touched) ++
+          DirManifest.writtenParts(fs, root, gdir, "pb")
+            .filter(bd => touched.contains(bd._1))
+        val newTxns = st.map(_.txns).getOrElse(Map.empty) ++ txn
+        publishOrDrop(fs, root, gdir, seq,
+          ManifestState(unionSchema, n, newMapping, newTxns))
+        ApplyStats(MergeSink.statsOf(obs),
           obsBefore.get("n").asInstanceOf[Long] -
             obsAfter.get("n").asInstanceOf[Long])
-      } catch {
-        case e: CommitLog.CommitConflictException =>
-          fs.delete(new Path(root, gdir), true)
-          attempt += 1
-          if (attempt >= maxRetries) throw e
-        // the loop re-reads the head: a racing duplicate of the same
-        // txn is caught by the absorbed check at the top
       }
     }
-    null // unreachable
   }
+
+  /** CAS-publish `st` on top of `seq`; a lost slot deletes this attempt's
+    * generation `gdir` before the conflict propagates (the next attempt
+    * re-derives into a fresh one). */
+  private def publishOrDrop(fs: FileSystem, root: Path, gdir: String,
+                            seq: Long, st: ManifestState): Long =
+    CommitLog.onConflict(fs.delete(new Path(root, gdir), true)) {
+      CommitLog.tryAppend(fs, root, seq, render(st), isValid)
+    }
 
   /** DELETE every row whose `key` is in `keys` — the manifest layout's
     * right-to-be-forgotten. Copy-on-write: touched buckets' survivors
@@ -764,52 +765,41 @@ object ManifestMergeSink {
     * stay byte-identical. Contention always re-runs from the new head
     * (purge must see the winner's rows). Idempotent under replay. */
   def purgeManifested(spark: SparkSession, target: String, keys: DataFrame,
-                      key: String,
-                      maxRetries: Int = 20): PurgeStats = {
+                      key: String): PurgeStats = {
     val root = new Path(target)
     val fs = fsOf(spark, root)
     val uniq = keys.select(col(key)).filter(col(key).isNotNull)
       .distinct().localCheckpoint(true)
-    var attempt = 0
-    while (true) {
+    CommitLog.retrying {
       val (seq, st) = headState(spark, target).getOrElse(
         throw new IllegalArgumentException(
           s"no committed manifest snapshot at $target"))
       val touched = graft.Sparks.distinctLongs(uniq, pb(col(key), st.nBuckets))
         .filter(st.mapping.contains)
-      if (touched.isEmpty) return PurgeStats(0L, 0L, 0)
-      val obsBefore = Observation()
-      val obsAfter = Observation()
-      val kept = readDirs(spark, target, st, touched)
-        .observe(obsBefore, count(lit(1)).as("n"))
-        .join(broadcast(uniq), Seq(key), "left_anti")
-        .observe(obsAfter, count(lit(1)).as("n"))
-      val gdir = s"g-${tok()}"
-      kept.withColumn("pb", pb(col(key), st.nBuckets))
-        .write.mode("overwrite").partitionBy("pb")
-        .parquet(new Path(root, gdir).toString)
-      // partitionBy writes only non-empty buckets: survivors repoint,
-      // emptied buckets leave the mapping
-      val written = fs.listStatus(new Path(root, gdir))
-        .filter(_.getPath.getName.startsWith("pb="))
-        .map(_.getPath.getName.stripPrefix("pb=").toLong).toSet
-      val newMapping = (st.mapping -- touched) ++
-        touched.filter(written).map(b => b -> s"$gdir/pb=$b")
-      try {
-        CommitLog.tryAppend(fs, root, seq,
-          render(ManifestState(st.schema, st.nBuckets, newMapping,
-            st.txns)), isValid)
-        return PurgeStats(
+      if (touched.isEmpty) PurgeStats(0L, 0L, 0)
+      else {
+        val obsBefore = Observation()
+        val obsAfter = Observation()
+        val kept = readDirs(spark, target, st, touched)
+          .observe(obsBefore, count(lit(1)).as("n"))
+          .join(broadcast(uniq), Seq(key), "left_anti")
+          .observe(obsAfter, count(lit(1)).as("n"))
+        val gdir = s"g-${tok()}"
+        kept.withColumn("pb", pb(col(key), st.nBuckets))
+          .write.mode("overwrite").partitionBy("pb")
+          .parquet(new Path(root, gdir).toString)
+        // partitionBy writes only non-empty buckets: survivors repoint,
+        // emptied buckets leave the mapping
+        val newMapping = (st.mapping -- touched) ++
+          DirManifest.writtenParts(fs, root, gdir, "pb")
+            .filter(bd => touched.contains(bd._1))
+        publishOrDrop(fs, root, gdir, seq,
+          ManifestState(st.schema, st.nBuckets, newMapping, st.txns))
+        PurgeStats(
           obsBefore.get("n").asInstanceOf[Long],
           obsAfter.get("n").asInstanceOf[Long], touched.length)
-      } catch {
-        case e: CommitLog.CommitConflictException =>
-          fs.delete(new Path(root, gdir), true)
-          attempt += 1
-          if (attempt >= maxRetries) throw e
       }
     }
-    null // unreachable
   }
 
   /** REBUCKET — partition evolution for the merge snapshot: rewrite the
@@ -829,39 +819,28 @@ object ManifestMergeSink {
     * published commit seq (or the current head if already at
     * `newBuckets` — the no-op is free). */
   def rebucketManifested(spark: SparkSession, target: String, key: String,
-                         newBuckets: Int, maxRetries: Int = 20): Long = {
+                         newBuckets: Int): Long = {
     require(newBuckets >= 1, s"newBuckets=$newBuckets must be positive")
     val root = new Path(target)
     val fs = fsOf(spark, root)
-    var attempt = 0
-    while (true) {
+    CommitLog.retrying {
       val (seq, st) = headState(spark, target).getOrElse(
         throw new IllegalArgumentException(
           s"no committed manifest snapshot at $target"))
-      if (st.nBuckets == newBuckets) return seq
-      require(st.schema.fieldNames.contains(key),
-        s"key $key is not in the snapshot schema")
-      val data = readDirs(spark, target, st, st.mapping.keys.toSeq.sorted)
-      val gdir = s"g-${tok()}"
-      data.withColumn("pb", pb(col(key), newBuckets))
-        .write.mode("overwrite").partitionBy("pb")
-        .parquet(new Path(root, gdir).toString)
-      val written = fs.listStatus(new Path(root, gdir))
-        .filter(_.getPath.getName.startsWith("pb="))
-        .map(_.getPath.getName.stripPrefix("pb=").toLong).toSet
-      val newMapping = written.map(b => b -> s"$gdir/pb=$b").toMap
-      try {
-        return CommitLog.tryAppend(fs, root, seq,
-          render(ManifestState(st.schema, newBuckets, newMapping,
-            st.txns)), isValid)
-      } catch {
-        case e: CommitLog.CommitConflictException =>
-          fs.delete(new Path(root, gdir), true)
-          attempt += 1
-          if (attempt >= maxRetries) throw e
+      if (st.nBuckets == newBuckets) seq
+      else {
+        require(st.schema.fieldNames.contains(key),
+          s"key $key is not in the snapshot schema")
+        val data = readDirs(spark, target, st, st.mapping.keys.toSeq.sorted)
+        val gdir = s"g-${tok()}"
+        data.withColumn("pb", pb(col(key), newBuckets))
+          .write.mode("overwrite").partitionBy("pb")
+          .parquet(new Path(root, gdir).toString)
+        val newMapping = DirManifest.writtenParts(fs, root, gdir, "pb").toMap
+        publishOrDrop(fs, root, gdir, seq,
+          ManifestState(st.schema, newBuckets, newMapping, st.txns))
       }
     }
-    0L // unreachable
   }
 
   /** BUCKET HEALTH — the layout-health pattern (q164) for merge
@@ -935,7 +914,6 @@ object ManifestMergeSink {
     * stats WITHOUT committing — the nightly no-op is free. */
   def compactManifested(spark: SparkSession, target: String,
                         maxFilesPerBucket: Int = 1,
-                        maxRetries: Int = 20,
                         beforePublish: () => Unit = () => ()): CompactStats = {
     require(maxFilesPerBucket >= 1,
       s"maxFilesPerBucket=$maxFilesPerBucket must be positive")
@@ -946,8 +924,7 @@ object ManifestMergeSink {
         .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
         .toLong
     var hookPending = true
-    var attempt = 0
-    while (true) {
+    CommitLog.retrying {
       val (seq, st) = headState(spark, target).getOrElse(
         throw new IllegalArgumentException(
           s"no committed manifest snapshot at $target"))
@@ -955,41 +932,32 @@ object ManifestMergeSink {
       val before = counts.values.sum
       val flagged = counts.filter(_._2 > maxFilesPerBucket)
         .keys.toSeq.sorted
-      if (flagged.isEmpty) return CompactStats(0, before, before)
-      // pb travels as a real column (per-generation basePath discovery —
-      // the DirManifest read), so one job rewrites every flagged bucket
-      val withPb = StructType(st.schema.fields :+
-        StructField("pb", LongType))
-      val data = flagged.map(st.mapping).groupBy(_.split('/').head)
-        .toSeq.sortBy(_._1).map { case (gen, ds) =>
-          Parquets.withSchema(spark, withPb, ds.map(d => s"$target/$d"),
-            Map("basePath" -> s"$target/$gen"))
-        }.reduce(_ unionByName _)
-      val gdir = s"g-${tok()}"
-      data.repartition(col("pb"))
-        .write.mode("overwrite").partitionBy("pb")
-        .parquet(new Path(root, gdir).toString)
-      val written = fs.listStatus(new Path(root, gdir))
-        .filter(_.getPath.getName.startsWith("pb="))
-        .map(_.getPath.getName.stripPrefix("pb=").toLong).toSet
-      val newMapping = (st.mapping -- flagged) ++
-        flagged.filter(written).map(b => b -> s"$gdir/pb=$b")
-      if (hookPending) { hookPending = false; beforePublish() }
-      try {
-        CommitLog.tryAppend(fs, root, seq,
-          render(ManifestState(st.schema, st.nBuckets, newMapping,
-            st.txns)), isValid)
+      if (flagged.isEmpty) CompactStats(0, before, before)
+      else {
+        // pb travels as a real column (per-generation basePath discovery —
+        // the DirManifest read), so one job rewrites every flagged bucket
+        val withPb = StructType(st.schema.fields :+
+          StructField("pb", LongType))
+        val data = flagged.map(st.mapping).groupBy(_.split('/').head)
+          .toSeq.sortBy(_._1).map { case (gen, ds) =>
+            Parquets.withSchema(spark, withPb, ds.map(d => s"$target/$d"),
+              Map("basePath" -> s"$target/$gen"))
+          }.reduce(_ unionByName _)
+        val gdir = s"g-${tok()}"
+        data.repartition(col("pb"))
+          .write.mode("overwrite").partitionBy("pb")
+          .parquet(new Path(root, gdir).toString)
+        val written = DirManifest.writtenParts(fs, root, gdir, "pb")
+          .filter(bd => flagged.contains(bd._1))
+        val newMapping = (st.mapping -- flagged) ++ written
+        if (hookPending) { hookPending = false; beforePublish() }
+        publishOrDrop(fs, root, gdir, seq,
+          ManifestState(st.schema, st.nBuckets, newMapping, st.txns))
         val after = before - flagged.map(counts).sum +
-          flagged.filter(written).map(b => filesIn(newMapping(b))).sum
-        return CompactStats(flagged.size, before, after)
-      } catch {
-        case e: CommitLog.CommitConflictException =>
-          fs.delete(new Path(root, gdir), true)
-          attempt += 1
-          if (attempt >= maxRetries) throw e
+          written.map(bd => filesIn(bd._2)).sum
+        CompactStats(flagged.size, before, after)
       }
     }
-    null // unreachable
   }
 
   /** Sweep generation dirs no RETAINED commit references (crashed or

@@ -36,22 +36,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SnapshotState {
 
   private val Header = "graft-snapshot-v1"
-  private val End = "END"
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def isValid(content: String): Boolean = {
-    val ls = content.linesIterator.toSeq
-    ls.headOption.contains(Header) && ls.lastOption.contains(End) &&
-      ls.size == 3 && ls(1).startsWith("D\t") && ls(1).drop(2).nonEmpty
-  }
+  private def isValid(content: String): Boolean =
+    CommitLog.unframe(Header, content).exists {
+      case Seq(l) => l.startsWith("D\t") && l.drop(2).nonEmpty
+      case _ => false
+    }
 
-  private def render(dir: String): String =
-    Seq(Header, s"D\t$dir", End).mkString("\n")
+  private[graft] def render(dir: String): String =
+    CommitLog.frame(Header, Seq(s"D\t$dir"))
 
   private def parse(content: String): String =
-    content.linesIterator.toSeq(1).drop(2)
+    CommitLog.unframe(Header, content).get.head.drop(2)
 
   /** Fail LOUDLY on the retired `$path/state` two-rename layout instead
     * of silently reading it as fresh (the [[LedgeredState]] precedent):
@@ -88,40 +87,33 @@ object SnapshotState {
     * caller's fold already is. After the publish, generations older
     * than the retention margin are swept. */
   def fold(spark: SparkSession, path: String,
-           retainCommits: Int = 2, maxRetries: Int = 20)(
+           retainCommits: Int = 2)(
            f: Option[DataFrame] => DataFrame): Unit = {
     require(retainCommits >= 1, s"retainCommits=$retainCommits")
     val root = new Path(path)
     val fs = fsOf(spark, root)
-    var attempt = 0
-    while (true) {
+    CommitLog.retrying {
       val (seq, cur) = headDir(spark, path)
       val next = f(cur.map(d =>
         Parquets.read(spark, new Path(root, d).toString)))
       val gen = s"g-${UUID.randomUUID().toString.take(8)}"
       next.write.mode("overwrite").parquet(new Path(root, gen).toString)
-      try {
+      // a lost slot means another writer folded first: this derivation
+      // is stale — discard it and re-fold from the winner's state
+      CommitLog.onConflict(fs.delete(new Path(root, gen), true)) {
         CommitLog.tryAppend(fs, root, seq, render(gen), isValid)
-        // retention sweep: commits below the margin, then gens no
-        // surviving commit references (incl. crash residue)
-        val keepFrom = (seq + 1) - (retainCommits - 1)
-        CommitLog.sweep(fs, root, keepFrom)
-        val live = CommitLog.seqs(fs, root)
-          .flatMap(s => CommitLog.read(fs, root, s).filter(isValid))
-          .map(parse).toSet + gen
-        fs.listStatus(root)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("g-"))
-          .filterNot(st => live(st.getPath.getName))
-          .foreach(st => fs.delete(st.getPath, true))
-        return
-      } catch {
-        case e: CommitLog.CommitConflictException =>
-          // another writer folded first: this derivation is stale —
-          // discard and re-fold from the winner's state
-          fs.delete(new Path(root, gen), true)
-          attempt += 1
-          if (attempt >= maxRetries) throw e
       }
+      // retention sweep: commits below the margin, then gens no
+      // surviving commit references (incl. crash residue)
+      val keepFrom = (seq + 1) - (retainCommits - 1)
+      CommitLog.sweep(fs, root, keepFrom)
+      val live = CommitLog.seqs(fs, root)
+        .flatMap(s => CommitLog.read(fs, root, s).filter(isValid))
+        .map(parse).toSet + gen
+      fs.listStatus(root)
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("g-"))
+        .filterNot(st => live(st.getPath.getName))
+        .foreach(st => fs.delete(st.getPath, true))
     }
   }
 }

@@ -62,25 +62,21 @@ object TableGroup {
   final case class GroupState(pins: Map[String, Long])
 
   private val Header = "graft-tablegroup-v1"
-  private val End = "END"
 
-  private[sinks] def isValid(content: String): Boolean = {
-    val ls = content.linesIterator.toSeq
-    ls.headOption.contains(Header) && ls.lastOption.contains(End) &&
-      ls.drop(1).dropRight(1).forall { l =>
-        l.split('\t') match {
-          case Array("P", t, s) => t.nonEmpty && s.toLongOption.isDefined
-          case _ => false
-        }
+  private[sinks] def isValid(content: String): Boolean =
+    CommitLog.unframe(Header, content).exists(_.forall { l =>
+      l.split('\t') match {
+        case Array("P", t, s) => t.nonEmpty && s.toLongOption.isDefined
+        case _ => false
       }
-  }
+    })
 
-  private def render(st: GroupState): String =
-    (Header +: st.pins.toSeq.sorted.map { case (t, s) => s"P\t$t\t$s" } :+
-      End).mkString("\n")
+  private[graft] def render(st: GroupState): String =
+    CommitLog.frame(Header,
+      st.pins.toSeq.sorted.map { case (t, s) => s"P\t$t\t$s" })
 
   private def parse(content: String): GroupState =
-    GroupState(content.linesIterator.toSeq.drop(1).dropRight(1).map { l =>
+    GroupState(CommitLog.unframe(Header, content).get.map { l =>
       val Array(_, t, s) = l.split('\t'); t -> s.toLong
     }.toMap)
 
@@ -142,7 +138,7 @@ object TableGroup {
     * metadata-only, no child work re-runs. `beforePublish` is the
     * injectable contention seam (the ManifestMergeSink precedent). */
   def publishPins(spark: SparkSession, root: String,
-                  updates: Map[String, Long], maxRetries: Int = 20,
+                  updates: Map[String, Long],
                   beforePublish: () => Unit = () => ()): Long = {
     require(updates.nonEmpty, "a transaction must pin at least one table")
     updates.keys.foreach(t =>
@@ -154,8 +150,7 @@ object TableGroup {
     val r = new Path(root)
     val fs = fsOf(spark, r)
     var hookPending = true
-    var attempt = 0
-    while (true) {
+    CommitLog.retrying {
       val head = headPins(spark, root)
       val seq = head.map(_._1).getOrElse(0L)
       val base = head.map(_._2.pins).getOrElse(Map.empty)
@@ -163,17 +158,9 @@ object TableGroup {
         t -> math.max(s, base.getOrElse(t, 0L))
       }
       if (hookPending) { hookPending = false; beforePublish() }
-      if (merged == base) return seq // fully absorbed — nothing to flip
-      try {
-        return CommitLog.tryAppend(fs, r, seq, render(GroupState(merged)),
-          isValid)
-      } catch {
-        case e: CommitLog.CommitConflictException =>
-          attempt += 1
-          if (attempt >= maxRetries) throw e
-      }
+      if (merged == base) seq // fully absorbed — nothing to flip
+      else CommitLog.tryAppend(fs, r, seq, render(GroupState(merged)), isValid)
     }
-    0L // unreachable
   }
 
   /** Sweep superseded ROOT commits, keeping the head plus `keepLast`

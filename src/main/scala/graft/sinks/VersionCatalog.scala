@@ -66,28 +66,24 @@ object VersionCatalog {
   final case class Entry(version: Long, dir: String)
 
   private val Header = "graft-catalog-v1"
-  private val End = "END"
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def isValid(content: String): Boolean = {
-    val ls = content.linesIterator.toSeq
-    ls.headOption.contains(Header) && ls.lastOption.contains(End) &&
-      ls.drop(1).dropRight(1).forall { l =>
-        l.split('\t') match {
-          case Array(v, d) => v.toLongOption.isDefined && d.nonEmpty
-          case _ => false
-        }
+  private def isValid(content: String): Boolean =
+    CommitLog.unframe(Header, content).exists(_.forall { l =>
+      l.split('\t') match {
+        case Array(v, d) => v.toLongOption.isDefined && d.nonEmpty
+        case _ => false
       }
-  }
+    })
 
-  private def render(entries: Seq[Entry]): String =
-    (Header +: entries.sortBy(_.version)
-      .map(e => s"${e.version}\t${e.dir}") :+ End).mkString("\n")
+  private[graft] def render(entries: Seq[Entry]): String =
+    CommitLog.frame(Header,
+      entries.sortBy(_.version).map(e => s"${e.version}\t${e.dir}"))
 
   private def parse(content: String): Seq[Entry] =
-    content.linesIterator.toSeq.drop(1).dropRight(1).map { l =>
+    CommitLog.unframe(Header, content).get.map { l =>
       val Array(v, d) = l.split('\t')
       Entry(v.toLong, d)
     }
@@ -124,11 +120,8 @@ object VersionCatalog {
     val fs = fsOf(spark, root)
     val dir = s"d-${tok()}"
     df.write.mode("overwrite").parquet(new Path(root, dir).toString)
-    try commitDirCas(spark, path, dir, expectedHead)
-    catch {
-      case e: CommitLog.CommitConflictException =>
-        fs.delete(new Path(root, dir), true) // tidy the losing write
-        throw e
+    CommitLog.onConflict(fs.delete(new Path(root, dir), true)) {
+      commitDirCas(spark, path, dir, expectedHead)
     }
   }
 
@@ -157,29 +150,20 @@ object VersionCatalog {
     * the dir as an orphan mid-flight). Data lands before the commit
     * file publishes it, so a crash anywhere leaves the catalog on the
     * previous commit. */
-  def commit(spark: SparkSession, path: String, df: DataFrame,
-             maxRetries: Int = 20): Long = {
+  def commit(spark: SparkSession, path: String, df: DataFrame): Long = {
     val root = new Path(path)
     val fs = fsOf(spark, root)
     var dir = s"d-${tok()}"
     df.write.mode("overwrite").parquet(new Path(root, dir).toString)
-    var attempt = 0
-    while (true) {
+    CommitLog.retrying {
       if (!fs.exists(new Path(root, dir))) {
         // a concurrent vacuum swept our in-flight dir as an orphan —
         // rewrite under a fresh token before publishing
         dir = s"d-${tok()}"
         df.write.mode("overwrite").parquet(new Path(root, dir).toString)
       }
-      val (seq, _) = headState(spark, path)
-      try return commitDirCas(spark, path, dir, seq)
-      catch {
-        case e: CommitLog.CommitConflictException =>
-          attempt += 1
-          if (attempt >= maxRetries) throw e
-      }
+      commitDirCas(spark, path, dir, headState(spark, path)._1)
     }
-    -1L // unreachable
   }
 
   private def entryOf(spark: SparkSession, path: String, n: Long): Entry = {
@@ -216,48 +200,43 @@ object VersionCatalog {
     * bounded by the retention window, never by history length. Returns
     * (version, nPurged) per retained version. */
   def purge(spark: SparkSession, path: String, keys: DataFrame,
-            key: String, maxRetries: Int = 20): Seq[(Long, Long)] = {
+            key: String): Seq[(Long, Long)] = {
     val root = new Path(path)
     val fs = fsOf(spark, root)
     // localCheckpoint: probed once per retained version
     val uniq = keys.select(col(key)).filter(col(key).isNotNull)
       .distinct().localCheckpoint(true)
-    var attempt = 0
-    while (true) {
+    CommitLog.retrying {
       val (seq, entries) = headState(spark, path)
-      if (entries.isEmpty) return Seq.empty // nothing committed: a no-op,
-      // not a first (empty) commit
-      val rewritten = entries.sortBy(_.version).map { e =>
-        val obsBefore = Observation()
-        val obsAfter = Observation()
-        val kept = Parquets.read(spark, new Path(root, e.dir).toString)
-          .observe(obsBefore, count(lit(1)).as("n"))
-          .join(broadcast(uniq), Seq(key), "left_anti")
-          .observe(obsAfter, count(lit(1)).as("n"))
-        val newDir = s"d-${tok()}"
-        kept.write.mode("overwrite")
-          .parquet(new Path(root, newDir).toString)
-        val nPurged = obsBefore.get("n").asInstanceOf[Long] -
-          obsAfter.get("n").asInstanceOf[Long]
-        (e, Entry(e.version, newDir), nPurged)
-      }
-      try {
-        CommitLog.tryAppend(fs, root, seq,
-          render(rewritten.map(_._2)), isValid)
+      // nothing committed: a no-op, not a first (empty) commit
+      if (entries.isEmpty) Seq.empty
+      else {
+        val rewritten = entries.sortBy(_.version).map { e =>
+          val obsBefore = Observation()
+          val obsAfter = Observation()
+          val kept = Parquets.read(spark, new Path(root, e.dir).toString)
+            .observe(obsBefore, count(lit(1)).as("n"))
+            .join(broadcast(uniq), Seq(key), "left_anti")
+            .observe(obsAfter, count(lit(1)).as("n"))
+          val newDir = s"d-${tok()}"
+          kept.write.mode("overwrite")
+            .parquet(new Path(root, newDir).toString)
+          val nPurged = obsBefore.get("n").asInstanceOf[Long] -
+            obsAfter.get("n").asInstanceOf[Long]
+          (e, Entry(e.version, newDir), nPurged)
+        }
+        CommitLog.onConflict(rewritten.foreach { case (_, nw, _) =>
+          fs.delete(new Path(root, nw.dir), true) // losing rewrite
+        }) {
+          CommitLog.tryAppend(fs, root, seq, render(rewritten.map(_._2)),
+            isValid)
+        }
         rewritten.foreach { case (old, _, _) =>
           fs.delete(new Path(root, old.dir), true)
         }
-        return rewritten.map { case (old, _, n) => old.version -> n }
-      } catch {
-        case e: CommitLog.CommitConflictException =>
-          rewritten.foreach { case (_, nw, _) =>
-            fs.delete(new Path(root, nw.dir), true) // losing rewrite
-          }
-          attempt += 1
-          if (attempt >= maxRetries) throw e
+        rewritten.map { case (old, _, n) => old.version -> n }
       }
     }
-    Seq.empty // unreachable
   }
 
   /** Drop every version except the newest `retainLast`, plus any orphan
@@ -270,38 +249,29 @@ object VersionCatalog {
     * [[commit]] survives a concurrent sweep by re-writing its data, but
     * schedule vacuums away from heavy write contention. Returns the
     * vacuumed version numbers. */
-  def vacuum(spark: SparkSession, path: String, retainLast: Int,
-             maxRetries: Int = 20): Seq[Long] = {
+  def vacuum(spark: SparkSession, path: String, retainLast: Int): Seq[Long] = {
     require(retainLast >= 1, s"retainLast=$retainLast must keep at least one")
     val root = new Path(path)
     val fs = fsOf(spark, root)
-    var attempt = 0
-    while (true) {
+    CommitLog.retrying {
       val (seq, entries) = headState(spark, path)
       val sorted = entries.sortBy(_.version)
       val dropped = sorted.dropRight(retainLast)
       val kept = sorted.takeRight(retainLast)
-      try {
-        val newSeq =
-          if (dropped.nonEmpty)
-            CommitLog.tryAppend(fs, root, seq, render(kept), isValid)
-          else seq
-        dropped.foreach(e => fs.delete(new Path(root, e.dir), true))
-        // orphan sweep: data dirs no head mapping row points at
-        val live = kept.map(_.dir).toSet
-        if (fs.exists(root)) fs.listStatus(root)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("d-"))
-          .filterNot(st => live(st.getPath.getName))
-          .foreach(st => fs.delete(st.getPath, true))
-        // commit-file history below the new head is fully superseded
-        CommitLog.sweep(fs, root, newSeq)
-        return dropped.map(_.version)
-      } catch {
-        case e: CommitLog.CommitConflictException =>
-          attempt += 1
-          if (attempt >= maxRetries) throw e
-      }
+      val newSeq =
+        if (dropped.nonEmpty)
+          CommitLog.tryAppend(fs, root, seq, render(kept), isValid)
+        else seq
+      dropped.foreach(e => fs.delete(new Path(root, e.dir), true))
+      // orphan sweep: data dirs no head mapping row points at
+      val live = kept.map(_.dir).toSet
+      if (fs.exists(root)) fs.listStatus(root)
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("d-"))
+        .filterNot(st => live(st.getPath.getName))
+        .foreach(st => fs.delete(st.getPath, true))
+      // commit-file history below the new head is fully superseded
+      CommitLog.sweep(fs, root, newSeq)
+      dropped.map(_.version)
     }
-    Seq.empty // unreachable
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import graft.sinks.ManifestMergeSink
+import graft.sinks.{CommitLog, ManifestMergeSink}
 
 /** CONTINUOUS replica maintenance off the change feed — the building
   * block of the q222 consumer loop and of its streamed face (q224,
@@ -47,27 +47,28 @@ object StreamingCdcApply {
     * interleaving: a key changed then REVERTED inside the concurrent
     * span is absent from our wider diff, and applying it on top of the
     * concurrent state would pin the intermediate value forever). On a
-    * fence hit we recompute the span from the fresh watermark. */
+    * fence hit we recompute the span from the fresh watermark, at most
+    * [[CommitLog.MaxAttempts]] times — the commit clients' one limit —
+    * before the last [[ManifestMergeSink.StaleSpanException]] propagates. */
   def applyOnce(spark: SparkSession, srcTable: String, replicaTable: String,
                 key: String, fields: Seq[String], nBuckets: Int,
-                pipelineId: String, maxRecomputes: Int = 20): Long = {
+                pipelineId: String): Long = {
     var tries = 0
-    while (true) {
-      val head = ManifestMergeSink.headState(spark, srcTable) match {
-        case Some((seq, _)) => seq
-        case None => return 0L // source not yet committed — nothing to do
+    var result = Option.empty[Long]
+    while (result.isEmpty)
+      result = ManifestMergeSink.headState(spark, srcTable) match {
+        case None => Some(0L) // source not yet committed — nothing to do
+        case Some((head, _)) =>
+          try Some(applyTo(spark, srcTable, replicaTable, key, fields,
+            nBuckets, pipelineId, head))
+          catch {
+            case e: ManifestMergeSink.StaleSpanException =>
+              tries += 1
+              if (tries >= CommitLog.MaxAttempts) throw e
+              None // re-read both watermarks and recompute the span
+          }
       }
-      try {
-        return applyTo(spark, srcTable, replicaTable, key, fields,
-          nBuckets, pipelineId, head)
-      } catch {
-        case e: ManifestMergeSink.StaleSpanException =>
-          tries += 1
-          if (tries >= maxRecomputes) throw e
-        // else: loop — re-read both watermarks and recompute the span
-      }
-    }
-    0L // unreachable
+    result.get
   }
 
   /** Apply the span from the replica's watermark to the EXPLICIT source

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import graft.sinks.CommitLog
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
+import graft.sinks._
 
 /** The commit log's CAS fine print under adversarial schedules — the
   * windows the sink-level specs (LedgeredState / VersionCatalog /
@@ -9,7 +11,9 @@ import graft.sinks.CommitLog
   * contract: exactly one writer wins a slot, a loser is LOUD, and an
   * in-flight writer's half-written slot is never mistaken for a crashed
   * one (the slow-writer/crashed-writer ambiguity is resolved by AGE —
-  * see [[CommitLog.DefaultReclaimGraceMs]]). */
+  * see [[CommitLog.DefaultReclaimGraceMs]]). Also pinned here: the one
+  * retry loop every client publishes through ([[CommitLog.retrying]]),
+  * and the commit formats' bytes under the shared framing. */
 class CommitLogSpec extends SparkSpec {
 
   private val valid = (s: String) => s.endsWith("\nEND")
@@ -253,6 +257,180 @@ class CommitLogSpec extends SparkSpec {
       // the owner's retry against the fresh head lands in the next slot
       assert(CommitLog.tryAppend(fs, root, 2L,
         content("stalled-owner"), valid) == 3L)
+    }
+  }
+
+  // ---- the one retry loop every commit client publishes through ----
+
+  private def conflict(msg: String) = new CommitLog.CommitConflictException(msg)
+
+  test("retrying: a body that always conflicts runs MaxAttempts times, then the last conflict propagates") {
+    var runs = 0
+    val e = intercept[CommitLog.CommitConflictException] {
+      CommitLog.retrying[Unit] { runs += 1; throw conflict(s"lost run $runs") }
+    }
+    assert(CommitLog.MaxAttempts == 20)
+    assert(runs == 20)
+    assert(e.getMessage == "lost run 20", "the LAST conflict is rethrown")
+  }
+
+  test("retrying: any other exception ends the loop on its first run, unretried") {
+    var runs = 0
+    val e = intercept[IllegalStateException] {
+      CommitLog.retrying[Unit] { runs += 1; throw new IllegalStateException("boom") }
+    }
+    assert(e.getMessage == "boom")
+    assert(runs == 1)
+  }
+
+  test("retrying: a body that conflicts twice and then succeeds returns its value") {
+    var runs = 0
+    val v = CommitLog.retrying {
+      runs += 1
+      if (runs <= 2) throw conflict(s"lost run $runs")
+      s"won on run $runs"
+    }
+    assert(v == "won on run 3")
+    assert(runs == 3)
+  }
+
+  test("onConflict tidies on a lost slot only, and inside retrying once per lost attempt") {
+    var tidied = 0
+    assert(CommitLog.onConflict(tidied += 1)(7) == 7)
+    assert(tidied == 0, "a won slot tidies nothing")
+    intercept[IllegalStateException] {
+      CommitLog.onConflict(tidied += 1)(throw new IllegalStateException("io"))
+    }
+    assert(tidied == 0, "only a conflict is a lost slot")
+    var runs = 0
+    val v = CommitLog.retrying {
+      runs += 1
+      CommitLog.onConflict(tidied += 1) {
+        if (runs <= 3) throw conflict("lost")
+        runs
+      }
+    }
+    assert(v == 4 && tidied == 3)
+  }
+
+  /** Plant a young, unparsable file in commit slot `seq`: every writer
+    * that read head `seq - 1` loses that slot (a writer that may still
+    * be streaming owns it until the reclaim grace passes). */
+  private def plantYoungResidue(fs: org.apache.hadoop.fs.FileSystem,
+                                root: Path, seq: Long): Unit = {
+    val out = fs.create(slot(root, seq), false)
+    out.write("truncated-no-sentinel".getBytes("UTF-8")); out.close()
+  }
+
+  private def gens(fs: org.apache.hadoop.fs.FileSystem, root: Path): Set[String] =
+    fs.listStatus(root).map(_.getPath.getName).filter(_.startsWith("g-")).toSet
+
+  test("a write-once client that keeps losing gives up after MaxAttempts and deletes its unpublished generation") {
+    withRoot { (fs, root) =>
+      val df = spark.range(8).withColumn("p", col("id") % 2)
+      DirManifest.writeCommit(df, root.toString, "p", append = false)
+      val before = gens(fs, root)
+      plantYoungResidue(fs, root, 2L)
+      val e = intercept[CommitLog.CommitConflictException] {
+        DirManifest.writeCommit(df, root.toString, "p", append = true)
+      }
+      assert(e.getMessage.contains("reclaim grace"), e.getMessage)
+      assert(gens(fs, root) == before, "the unpublished generation is deleted")
+      assert(DirManifest.head(fs, root).map(_._1).contains(1L))
+    }
+  }
+
+  test("mergeIntoManifested: repoints count against the same MaxAttempts; giving up deletes the landed generation") {
+    withRoot { (fs, root) =>
+      val ss = spark; import ss.implicits._
+      ManifestMergeSink.mergeIntoManifested(spark, root.toString,
+        Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "id", Seq("v"),
+        nBuckets = 2)
+      val before = gens(fs, root)
+      plantYoungResidue(fs, root, 2L)
+      // every lost publish finds the head still at seq 1 with this
+      // writer's buckets untouched — the disjoint case, so each retry is
+      // a metadata-only repoint; only the shared limit ends it
+      val e = intercept[CommitLog.CommitConflictException] {
+        ManifestMergeSink.mergeIntoManifested(spark, root.toString,
+          Seq((2L, "c")).toDF("id", "v"), "id", Seq("v"), nBuckets = 2)
+      }
+      assert(e.getMessage.contains("reclaim grace"), e.getMessage)
+      assert(gens(fs, root) == before, "the landed generation is deleted")
+      assert(ManifestMergeSink.headState(spark, root.toString).map(_._1)
+        .contains(1L))
+    }
+  }
+
+  // ---- the commit formats: one framing helper, unchanged bytes ----
+
+  test("every commit format renders byte-identical to its v1 bytes, and reads them back") {
+    // each literal is what the format's renderer wrote before the
+    // Header/END framing moved into CommitLog.frame: the on-disk
+    // formats did not change, so no migration exists or is needed
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("v", StringType), StructField("updatedAt", TimestampType)))
+    val dm = DirManifest.DmState(
+      Map(3L -> Seq("g-aaaa0001/list_id=3", "g-bbbb0002/list_id=3"),
+        0L -> Seq("g-aaaa0001/list_id=0")),
+      Map("means" -> "m-cccc0003"))
+    val tg = TableGroup.GroupState(Map("orders" -> 4L, "meta" -> 2L))
+    val vc = Seq(VersionCatalog.Entry(2L, "d-bbbb0002"),
+      VersionCatalog.Entry(1L, "d-aaaa0001"))
+    val ms = ManifestMergeSink.ManifestState(schema, 4,
+      Map(2L -> "g-bbbb0002/pb=2", 0L -> "g-aaaa0001/pb=0"), Map("p1" -> 7L))
+    val ls = LedgeredState.State(Set("b2", "b1"),
+      Map("vocab" -> "g-aaaa0001/vocab", "meta" -> "g-aaaa0001/meta"))
+    val v1DirManifest =
+      "graft-dirmanifest-v1\nP\t0\tg-aaaa0001/list_id=0\nP\t3\tg-aaaa0001/list_id=3\nP\t3\tg-bbbb0002/list_id=3\nX\tmeans\tm-cccc0003\nEND"
+    val v1TableGroup =
+      "graft-tablegroup-v1\nP\tmeta\t2\nP\torders\t4\nEND"
+    val v1VersionCatalog =
+      "graft-catalog-v1\n1\td-aaaa0001\n2\td-bbbb0002\nEND"
+    val v1ManifestMergeSink =
+      "graft-merge-manifest-v1\nS\t{\"type\":\"struct\",\"fields\":[{\"name\":\"id\",\"type\":\"long\",\"nullable\":true,\"metadata\":{}},{\"name\":\"v\",\"type\":\"string\",\"nullable\":true,\"metadata\":{}},{\"name\":\"updatedAt\",\"type\":\"timestamp\",\"nullable\":true,\"metadata\":{}}]}\nN\t4\nB\t0\tg-aaaa0001/pb=0\nB\t2\tg-bbbb0002/pb=2\nT\tp1\t7\nEND"
+    val v1LedgeredState =
+      "graft-ledgered-v1\nB\tb1\nB\tb2\nP\tmeta\tg-aaaa0001/meta\nP\tvocab\tg-aaaa0001/vocab\nEND"
+    val v1SnapshotState =
+      "graft-snapshot-v1\nD\tg-aaaa0001\nEND"
+    Seq(
+      DirManifest.render(dm) -> v1DirManifest,
+      TableGroup.render(tg) -> v1TableGroup,
+      VersionCatalog.render(vc) -> v1VersionCatalog,
+      ManifestMergeSink.render(ms) -> v1ManifestMergeSink,
+      LedgeredState.render(ls) -> v1LedgeredState,
+      SnapshotState.render("g-aaaa0001") -> v1SnapshotState
+    ).foreach { case (got, want) =>
+      assert(got.getBytes("UTF-8").sameElements(want.getBytes("UTF-8")),
+        s"rendered:\n$got\nexpected:\n$want")
+    }
+    // the v1 bytes, published as commit 1, read back through each
+    // format's own reader (which checks the framing first)
+    def committed(text: String)(check: String => Unit): Unit =
+      withRoot { (fs, root) =>
+        fs.mkdirs(new Path(root, "_commits"))
+        val out = fs.create(slot(root, 1L), false)
+        out.write(text.getBytes("UTF-8")); out.close()
+        check(root.toString)
+      }
+    committed(v1DirManifest) { r =>
+      val p = new Path(r)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(DirManifest.head(fs, p).contains(1L -> dm))
+    }
+    committed(v1TableGroup) { r =>
+      assert(TableGroup.headPins(spark, r).contains(1L -> tg))
+    }
+    committed(v1VersionCatalog) { r =>
+      assert(VersionCatalog.headState(spark, r) == (1L -> vc.sortBy(_.version)))
+    }
+    committed(v1ManifestMergeSink) { r =>
+      assert(ManifestMergeSink.headState(spark, r).contains(1L -> ms))
+    }
+    committed(v1LedgeredState) { r =>
+      assert(LedgeredState.absorbed(spark, r, "b1") &&
+        LedgeredState.absorbed(spark, r, "b2") &&
+        !LedgeredState.absorbed(spark, r, "b3"))
     }
   }
 }
