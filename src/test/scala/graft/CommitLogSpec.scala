@@ -388,7 +388,12 @@ class CommitLogSpec extends SparkSpec {
     val v1VersionCatalog =
       "graft-catalog-v1\n1\td-aaaa0001\n2\td-bbbb0002\nEND"
     val v1ManifestMergeSink =
-      "graft-merge-manifest-v1\nS\t{\"type\":\"struct\",\"fields\":[{\"name\":\"id\",\"type\":\"long\",\"nullable\":true,\"metadata\":{}},{\"name\":\"v\",\"type\":\"string\",\"nullable\":true,\"metadata\":{}},{\"name\":\"updatedAt\",\"type\":\"timestamp\",\"nullable\":true,\"metadata\":{}}]}\nN\t4\nB\t0\tg-aaaa0001/pb=0\nB\t2\tg-bbbb0002/pb=2\nT\tp1\t7\nEND"
+      "graft-merge-manifest-v1\nS\t{\"type\":\"struct\",\"fields\":[" +
+        "{\"name\":\"id\",\"type\":\"long\",\"nullable\":true,\"metadata\":{}}," +
+        "{\"name\":\"v\",\"type\":\"string\",\"nullable\":true,\"metadata\":{}}," +
+        "{\"name\":\"updatedAt\",\"type\":\"timestamp\",\"nullable\":true," +
+        "\"metadata\":{}}]}\nN\t4\nB\t0\tg-aaaa0001/pb=0\nB\t2\tg-bbbb0002/pb=2\n" +
+        "T\tp1\t7\nEND"
     val v1LedgeredState =
       "graft-ledgered-v1\nB\tb1\nB\tb2\nP\tmeta\tg-aaaa0001/meta\nP\tvocab\tg-aaaa0001/vocab\nEND"
     val v1SnapshotState =
